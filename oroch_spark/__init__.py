@@ -1,0 +1,3 @@
+from oroch_spark import _zipcache
+
+_zipcache.install()

