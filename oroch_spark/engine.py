@@ -1250,6 +1250,83 @@ def make_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
     return encode_stream
 
 
+class _BlockReader:
+    """One encoded block, read column by column — the only code that
+    knows the descriptor's per-column layout (offset ``o``, length
+    ``l``, kind ``k``, nullable ``z``; Oroch's self-describing block
+    header, `integer_group.h:62-76`). Every decode kernel and the
+    ``format("oroch")`` readers go through it.
+
+    A column the block predates (added to the table later) reads as
+    all-null — Iceberg add-column semantics. The payload is copied to
+    Python bytes once, on the first column read: a ``memoryview`` of
+    the Arrow buffer would be signed (format ``'b'``) and misread the
+    codec tag bytes."""
+
+    __slots__ = ("n", "_cols", "_payload", "_bytes")
+
+    def __init__(self, desc, payload, n):
+        if isinstance(desc, str):
+            desc = json.loads(desc)
+        self.n = int(n)
+        self._cols = {d["n"]: d for d in desc["cols"]}
+        self._payload = payload
+        self._bytes = None
+
+    def _blob(self, d) -> bytes:
+        if self._bytes is None:
+            self._bytes = self._payload.as_py()
+        return self._bytes[d["o"]:d["o"] + d["l"]]
+
+    def str_blob(self, name: str) -> Optional[bytes]:
+        """Raw blob of a non-nullable string column, for the
+        dictionary-only kernels in `strings` (None otherwise)."""
+        d = self._cols.get(name)
+        if d is None or d["k"] != K_STR or d.get("z"):
+            return None
+        return self._blob(d)
+
+    def column(self, name: str, arrow_type,
+               idxs: Optional[np.ndarray] = None) -> "pa.Array":
+        """Column ``name`` as ``arrow_type``: every row, or only the
+        rows at ``idxs`` (value-level fetch where the codec has one)."""
+        import pyarrow as pa
+
+        d = self._cols.get(name)
+        if d is None:
+            return pa.nulls(self.n if idxs is None else len(idxs),
+                            type=arrow_type)
+        if idxs is None:
+            return _decode_column(self._blob(d), d["k"], self.n,
+                                  arrow_type, nullable=bool(d.get("z")))
+        return _column_at_indices(self._blob(d), d["k"], self.n,
+                                  arrow_type, bool(d.get("z")), idxs)
+
+    def batch(self, schema: "pa.Schema",
+              idxs: Optional[np.ndarray] = None,
+              passthrough: Optional[dict] = None) -> "pa.RecordBatch":
+        """The block's rows (or rows ``idxs``) as ``schema``; fields
+        named in ``passthrough`` are BLOCK-level values replicated onto
+        every row instead of decoded columns."""
+        import pyarrow as pa
+
+        m = self.n if idxs is None else len(idxs)
+        cols = [pa.repeat(passthrough[f.name], m).cast(f.type)
+                if passthrough and f.name in passthrough
+                else self.column(f.name, f.type, idxs)
+                for f in schema]
+        return pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
+def _read_blocks(batch) -> Iterator[_BlockReader]:
+    """A reader per row of a blocks batch (``desc``/``payload``/``n``)."""
+    descs = batch.column("desc").to_pylist()
+    payloads = batch.column("payload")
+    ns = batch.column("n").to_pylist()
+    for i in range(batch.num_rows):
+        yield _BlockReader(descs[i], payloads[i], ns[i])
+
+
 def make_decode_fn(kinds: list[tuple[str, str]], arrow_schema_bytes: bytes,
                    passthrough: tuple[str, ...] = ()):
     """mapInArrow kernel: each encoded block row expands to its rows.
@@ -1271,35 +1348,10 @@ def make_decode_fn(kinds: list[tuple[str, str]], arrow_schema_bytes: bytes,
         import pyarrow as pa
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
-        wanted = set(out_schema.names) - set(passthrough)
         for batch in batches:
-            descs = batch.column("desc").to_pylist()
-            payloads = batch.column("payload")
-            ns = batch.column("n").to_pylist()
-            for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
-                payload = payloads[i].as_py()
-                n = int(ns[i])
-                by_name = {d["n"]: d for d in desc["cols"]
-                           if d["n"] in wanted}
-                cols = []
-                for field in out_schema:
-                    if field.name in by_name:
-                        d = by_name[field.name]
-                        blob = payload[d["o"]:d["o"] + d["l"]]
-                        cols.append(_decode_column(
-                            blob, d["k"], n, field.type,
-                            nullable=bool(d.get("z"))))
-                    elif field.name in wanted:
-                        # schema evolution: a column ADDED after this
-                        # block was written — null-fill (Iceberg
-                        # add-column semantics; old data has no value)
-                        cols.append(pa.nulls(n, type=field.type))
-                    else:  # block-level passthrough, replicated n times
-                        cols.append(pa.repeat(
-                            batch.column(field.name)[i], n)
-                            .cast(field.type))
-                yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+            for i, blk in enumerate(_read_blocks(batch)):
+                yield blk.batch(out_schema, passthrough={
+                    p: batch.column(p)[i] for p in passthrough})
 
     return decode_blocks
 
@@ -1521,51 +1573,6 @@ def encode_df_zorder(df: DataFrame, zcols: list[str],
     return df.mapInArrow(fn, schema=BLOCK_SCHEMA)
 
 
-def make_file_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
-                        block_rows: int, text_cols: frozenset[str],
-                        file_map: list[tuple[str, int]],
-                        arrow_batch_rows: int = 16384,
-                        bloom_cols: frozenset = frozenset(),
-                        sketch_cols: frozenset = frozenset()):
-    """Encode kernel that PULLS its input: each task row is an ``id``
-    ordinal into ``file_map``, a list of (path, bucket) pairs naming
-    staged parquet files (one bucket each), which the worker reads
-    directly via pyarrow's C++ reader. The bulk bytes never cross the
-    JVM<->Python pipe — only ordinals go in and compressed blocks come
-    out. (On a host where the pipe layer collapses under concurrency
-    this matters most; on a real cluster it is still the cheaper path:
-    arrow IPC serialization is skipped and the columnar decode happens
-    where the data is consumed.)
-
-    The input is a bare ``spark.range`` plan and the (path, bucket)
-    list rides the pickled UDF closure — serialized once per stage into
-    the broadcast task binary, NOT once per task. This keeps the driver
-    plan free of O(#files) literal arrays, whose analyze/codegen time
-    is a pure Amdahl serial term that caps scaling efficiency (measured
-    ~0.3 s plan + ~0.4 s per-job literal evaluation for 256 files)."""
-    inner = make_encode_fn(kinds, key_cols, block_rows, text_cols,
-                           bloom_cols, frozenset(), sketch_cols)
-
-    def encode_files(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        def row_batches():
-            for task in batches:
-                for i in task.column("id").to_pylist():
-                    path, bucket = file_map[i]
-                    pf = pq.ParquetFile(path)
-                    for rb in pf.iter_batches(batch_size=arrow_batch_rows):
-                        bcol = pa.array(
-                            np.full(rb.num_rows, bucket, dtype=np.int32))
-                        yield pa.RecordBatch.from_arrays(
-                            list(rb.columns) + [bcol],
-                            names=list(rb.schema.names) + ["_bucket"])
-        yield from inner(row_batches())
-
-    return encode_files
-
-
 def arrow_column_kinds(schema: "pa.Schema") -> list[tuple[str, str]]:
     """column_kinds for a pyarrow (parquet footer) schema."""
     import pyarrow as pa
@@ -1611,6 +1618,59 @@ def arrow_column_kinds(schema: "pa.Schema") -> list[tuple[str, str]]:
         else:
             raise ValueError(f"unsupported column type {field.name}: {t}")
     return out
+
+
+def _encode_files(spark, rows: list[tuple[str, int]], tasks: int,
+                  kinds, key_cols, block_rows, text_cols, bloom_cols,
+                  sketch_cols) -> DataFrame:
+    """Encode the parquet files named by ``rows``, a list of (path,
+    bucket) pairs (one bucket each), in ``tasks`` map-only tasks.
+
+    Each task PULLS its input: its rows are ``id`` ordinals into
+    ``rows``, and the worker reads those files directly via pyarrow's
+    C++ reader. The bulk bytes never cross the JVM<->Python pipe — only
+    ordinals go in and compressed blocks come out. (On a host where the
+    pipe layer collapses under concurrency this matters most; on a real
+    cluster it is still the cheaper path: arrow IPC serialization is
+    skipped and the columnar decode happens where the data is
+    consumed.)
+
+    The plan is a bare spark.range of file ORDINALS (contiguous slices
+    per task); the (path, bucket) list rides the UDF closure. Two
+    rejected alternatives, both measured against a same-structure
+    no-op job at 8 pinned cores: sc.parallelize(rows) puts a pickled
+    python RDD under the scan, so every task runs a SECOND python
+    worker before the encode runner (~2x the fixed per-task cost); a
+    Catalyst literal-array plan (element_at over F.array of 256 F.lit
+    paths) costs ~0.3 s of driver-serial analyze/codegen plus ~0.4 s
+    per-job literal evaluation — pure Amdahl serial terms that cap the
+    pinned 2-vs-8-core scaling ratio (BENCH/BASELINE.md). The closure
+    is O(#files) bytes inside the once-per-stage broadcast task binary
+    (~60 B/file: 10^5 files ~ 6 MB — fine at cluster scale)."""
+    inner = make_encode_fn(kinds, key_cols, block_rows,
+                           frozenset(text_cols or []),
+                           frozenset(bloom_cols or []), frozenset(),
+                           frozenset(sketch_cols or []))
+
+    def encode_files(batches) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        def row_batches():
+            for task in batches:
+                for i in task.column("id").to_pylist():
+                    path, bucket = rows[i]
+                    pf = pq.ParquetFile(path)
+                    for rb in pf.iter_batches(batch_size=16384):
+                        bcol = pa.array(
+                            np.full(rb.num_rows, bucket, dtype=np.int32))
+                        yield pa.RecordBatch.from_arrays(
+                            list(rb.columns) + [bcol],
+                            names=list(rb.schema.names) + ["_bucket"])
+        yield from inner(row_batches())
+
+    return spark.range(0, len(rows), 1, numPartitions=tasks) \
+        .mapInArrow(encode_files, schema=BLOCK_SCHEMA)
 
 
 def encode_parquet_maponly(spark, source: str, key_cols: list[str],
@@ -1672,26 +1732,8 @@ def encode_parquet_maponly(spark, source: str, key_cols: list[str],
     if tasks is None:
         tasks = max(1, min(len(rows),
                            spark.sparkContext.defaultParallelism * 4))
-    # The plan is a bare spark.range of file ORDINALS (contiguous
-    # slices per task); the (path, bucket) list rides the UDF closure
-    # (see make_file_encode_fn). Two rejected alternatives, both
-    # measured against a same-structure no-op job at 8 pinned cores:
-    # sc.parallelize(rows) puts a pickled python RDD under the scan,
-    # so every task runs a SECOND python worker before the encode
-    # runner (~2x the fixed per-task cost); a Catalyst literal-array
-    # plan (element_at over F.array of 256 F.lit paths) costs ~0.3 s
-    # of driver-serial analyze/codegen plus ~0.4 s per-job literal
-    # evaluation — pure Amdahl serial terms that cap the pinned
-    # 2-vs-8-core scaling ratio (BENCH/BASELINE.md). The closure is
-    # O(#files) bytes inside the once-per-stage broadcast task binary
-    # (~60 B/file: 10^5 files ~ 6 MB — fine at cluster scale).
-    fdf = spark.range(0, len(rows), 1, numPartitions=tasks)
-    fn = make_file_encode_fn(kinds, key_cols, block_rows,
-                             frozenset(text_cols or []),
-                             bloom_cols=frozenset(bloom_cols or []),
-                             sketch_cols=frozenset(sketch_cols or []),
-                             file_map=rows)
-    return fdf.mapInArrow(fn, schema=BLOCK_SCHEMA)
+    return _encode_files(spark, rows, tasks, kinds, key_cols, block_rows,
+                         text_cols, bloom_cols, sketch_cols)
 
 
 def encode_df_staged(df: DataFrame, key_cols: list[str], staging_dir: str,
@@ -1717,7 +1759,6 @@ def encode_df_staged(df: DataFrame, key_cols: list[str], staging_dir: str,
     kinds = column_kinds(df.schema)
     conv_col = key_cols[0]
     order_col = key_cols[1] if len(key_cols) > 1 else None
-    text_cols_f = frozenset(text_cols or [])
     # micros on disk so pyarrow reads timestamp[us] (INT96/nanos would
     # silently change the int64 scale the ts codec round-trips through)
     spark.conf.set("spark.sql.parquet.outputTimestampType",
@@ -1738,16 +1779,8 @@ def encode_df_staged(df: DataFrame, key_cols: list[str], staging_dir: str,
         os.path.join(staging_dir, "_bucket=*", "part-*.parquet")))
     rows = [(f, int(re.search(r"_bucket=(\d+)", f).group(1)))
             for f in files]
-    # spark.range + the file list in the UDF closure — the same
-    # pattern as encode_parquet_maponly: no pickled-RDD scan (its
-    # second Python worker measured ~2x per-task overhead) and no
-    # O(#files) literal array in the driver plan
-    fdf = spark.range(0, len(rows), 1, numPartitions=max(len(rows), 1))
-    fn = make_file_encode_fn(kinds, key_cols, block_rows, text_cols_f,
-                             bloom_cols=frozenset(bloom_cols or []),
-                             sketch_cols=frozenset(sketch_cols or []),
-                             file_map=rows)
-    return fdf.mapInArrow(fn, schema=BLOCK_SCHEMA)
+    return _encode_files(spark, rows, max(len(rows), 1), kinds, key_cols,
+                         block_rows, text_cols, bloom_cols, sketch_cols)
 
 
 def decode_df(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2649,66 +2682,31 @@ def make_lookup_fn(kinds: list[tuple[str, str]], key_col: str, value,
         import pyarrow.compute as pc
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
-        key_kind = kind_of[key_col]
+        key_str = kind_of[key_col] == K_STR
+        probes = [str(v) if key_str else int(v) for v in values]
+        probe_set = pa.array(probes,
+                             type=pa.string() if key_str else pa.int64())
         for batch in batches:
-            descs = batch.column("desc").to_pylist()
-            payloads = batch.column("payload")
-            ns = batch.column("n").to_pylist()
-            for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
-                payload = payloads[i].as_py()
-                n = int(ns[i])
-                by_name = {d["n"]: d for d in desc["cols"]}
-                key_d = by_name.get(key_col)
-                if key_d is None:
-                    # schema evolution: block predates the probe
-                    # column, so every row's value is null there —
-                    # a non-null probe can't match; zero rows
-                    continue
-                kb = payload[key_d["o"]:key_d["o"] + key_d["l"]]
-                if key_kind == K_STR:
-                    if not key_d.get("z"):
-                        # dictionary-aware (scalar and IN forms):
-                        # dict/RLE blocks match the dictionary and
-                        # never rebuild row strings
-                        idxs = sc.str_block_eq_indices(
-                            kb, n, [str(v) for v in values])
-                    else:
-                        keys = _decode_column(
-                            kb, key_kind, n, pa.string(),
-                            nullable=True)
-                        eq = pc.is_in(keys, value_set=pa.array(
-                            [str(v) for v in values], type=keys.type))
-                        idxs = np.flatnonzero(
-                            pc.fill_null(eq, False)
-                            .to_numpy(zero_copy_only=False))
+            for blk in _read_blocks(batch):
+                kb = blk.str_blob(key_col) if key_str else None
+                if kb is not None:
+                    # dictionary-aware (scalar and IN forms): dict/RLE
+                    # blocks match the dictionary and never rebuild
+                    # row strings
+                    idxs = sc.str_block_eq_indices(kb, blk.n, probes)
                 else:
-                    keys = _decode_column(kb, key_kind, n,
-                                          pa.int64(),
-                                          nullable=bool(key_d.get("z")))
                     # Arrow-side equality: a NULLABLE int64 column
                     # would to_numpy() into float64, whose 53-bit
                     # mantissa collapses distinct keys above 2^53
-                    # into false equality matches
-                    eq = pc.is_in(keys, value_set=pa.array(
-                        [int(v) for v in values], type=pa.int64()))
+                    # into false equality matches. A block predating
+                    # the probe column reads all-null: no match.
+                    keys = blk.column(key_col, probe_set.type)
+                    eq = pc.is_in(keys, value_set=probe_set)
                     idxs = np.flatnonzero(
                         pc.fill_null(eq, False)
                         .to_numpy(zero_copy_only=False))
-                if not len(idxs):
-                    continue
-                cols = []
-                for field in out_schema:
-                    d = by_name.get(field.name)
-                    if d is None:  # added after this block: null-fill
-                        cols.append(pa.nulls(len(idxs),
-                                             type=field.type))
-                        continue
-                    blob = payload[d["o"]:d["o"] + d["l"]]
-                    cols.append(_column_at_indices(
-                        blob, d["k"], n, field.type,
-                        bool(d.get("z")), idxs))
-                yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+                if len(idxs):
+                    yield blk.batch(out_schema, idxs)
 
     return lookup_blocks
 
@@ -2778,31 +2776,14 @@ def make_group_count_fn(col: str, arrow_schema_bytes: bytes):
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
         vtype = out_schema.field(0).type
         for batch in batches:
-            descs = batch.column("desc").to_pylist()
-            payloads = batch.column("payload")
-            ns = batch.column("n").to_pylist()
-            for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
-                d = next((c for c in desc["cols"] if c["n"] == col),
-                         None)
-                n = int(ns[i])
-                if d is None:
-                    # schema evolution: the column was added after
-                    # this block was written — all n rows are null
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.nulls(1, type=vtype),
-                         pa.array([n], type=pa.int64())],
-                        schema=out_schema)
-                    continue
-                blob = payloads[i].as_py()[d["o"]:d["o"] + d["l"]]
-                if d["k"] == K_STR and not d.get("z"):
-                    vals, np_cnts = sc.str_block_value_counts(blob, n)
+            for blk in _read_blocks(batch):
+                blob = blk.str_blob(col)
+                if blob is not None:
+                    vals, np_cnts = sc.str_block_value_counts(blob, blk.n)
                     vals = vals.cast(vtype)
                     cnts = pa.array(np_cnts, type=pa.int64())
                 else:
-                    arr = _decode_column(blob, d["k"], n, vtype,
-                                         nullable=bool(d.get("z")))
-                    vc = pc.value_counts(arr)
+                    vc = pc.value_counts(blk.column(col, vtype))
                     vals = vc.field("values")
                     cnts = vc.field("counts").cast(pa.int64())
                 yield pa.RecordBatch.from_arrays([vals, cnts],
@@ -2863,29 +2844,13 @@ def make_group_agg_fn(group_cols: list[str], agg_col: Optional[str],
         import pyarrow as pa
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
-        need = list(group_cols) + ([agg_col] if agg_col else [])
+        types = {c: out_schema.field(c).type for c in group_cols}
+        if agg_col:
+            types.setdefault(agg_col, pa.int64())
         for batch in batches:
-            descs = batch.column("desc").to_pylist()
-            payloads = batch.column("payload")
-            ns = batch.column("n").to_pylist()
-            for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
-                by_name = {d["n"]: d for d in desc["cols"]}
-                payload = payloads[i].as_py()
-                n = int(ns[i])
-                cols = {}
-                for c in need:
-                    d = by_name.get(c)
-                    ftype = out_schema.field(
-                        group_cols.index(c)).type \
-                        if c in group_cols else pa.int64()
-                    if d is None:  # schema evolution: column added later
-                        cols[c] = pa.nulls(n, type=ftype)
-                        continue
-                    blob = payload[d["o"]:d["o"] + d["l"]]
-                    cols[c] = _decode_column(blob, d["k"], n, ftype,
-                                             nullable=bool(d.get("z")))
-                t = pa.table(cols)
+            for blk in _read_blocks(batch):
+                t = pa.table({c: blk.column(c, ty)
+                              for c, ty in types.items()})
                 if agg_col:
                     res = t.group_by(group_cols).aggregate(
                         [(agg_col, "sum"), (agg_col, "min"),

@@ -56,11 +56,6 @@ def bit_length(u: np.ndarray) -> np.ndarray:
     return bl
 
 
-def bit_length_scalar(x: int) -> int:
-    """Python-int bit length (x >= 0)."""
-    return int(x).bit_length()
-
-
 def pack_bits(u: np.ndarray, nbits: int) -> bytes:
     """Pack each uint64 value into ``nbits`` bits, dense little-endian.
 

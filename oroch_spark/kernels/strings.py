@@ -140,10 +140,6 @@ def bytes_to_arrow(lengths: np.ndarray, data: np.ndarray) -> pa.Array:
     )
 
 
-def bytes_to_series(lengths: np.ndarray, data: np.ndarray) -> pd.Series:
-    return bytes_to_arrow(lengths, data).to_pandas()
-
-
 def _sized(blob: bytes) -> bytes:
     return ic.varint_encode_scalar(len(blob)) + blob
 

@@ -948,7 +948,7 @@ class OrochReader(DataSourceReader):
                 if nullish:
                     # exact per-block null count: nullable columns
                     # store it in the descriptor; others have none
-                    nc = int(d.get("nc", 0)) if d.get("z") else 0
+                    nc = int(d.get("nc", 0))
                     if pred.wants_null and nc == 0:
                         keep = False
                         break
@@ -970,29 +970,15 @@ class OrochReader(DataSourceReader):
                     keep = False
                     break
             if keep:
-                if desc is None:
-                    desc = json.loads(descs[i])
-                keep_rows.append((i, desc))
+                keep_rows.append((i, descs[i] if desc is None else desc))
         if not keep_rows:
             return
         payloads = pf.read_row_group(partition.row_group,
                                      columns=["payload"]) \
             .column("payload")
         for i, desc in keep_rows:
-            by_name = {d["n"]: d for d in desc["cols"]}
-            payload = payloads[i].as_py()
-            n = int(n_arr[i])
-            arrs = []
-            for field in out_schema:
-                d = by_name.get(field.name)
-                if d is None:  # schema evolution: null-fill
-                    arrs.append(pa.nulls(n, type=field.type))
-                    continue
-                blob = payload[d["o"]:d["o"] + d["l"]]
-                arrs.append(engine._decode_column(
-                    blob, d["k"], n, field.type,
-                    nullable=bool(d.get("z"))))
-            batch = pa.RecordBatch.from_arrays(arrs, schema=out_schema)
+            batch = engine._BlockReader(desc, payloads[i], n_arr[i]) \
+                .batch(out_schema)
             if preds:
                 batch = self._exact_filter(batch, preds)
             if batch.num_rows:
@@ -1094,24 +1080,9 @@ class OrochReader(DataSourceReader):
             payloads = pf.read_row_group(
                 rg, columns=["payload"]).column("payload")
             for i in keep:
-                desc = json.loads(descs[i])
-                by_name = {d["n"]: d for d in desc["cols"]}
-                payload = payloads[i].as_py()
-                n = int(ns[i])
-                arrs = []
-                for field in dec_schema:
-                    d = by_name.get(field.name)
-                    if d is None:  # schema evolution: null-fill
-                        arrs.append(pa.nulls(n, type=field.type))
-                        continue
-                    blob = payload[d["o"]:d["o"] + d["l"]]
-                    arrs.append(engine._decode_column(
-                        blob, d["k"], n, field.type,
-                        nullable=bool(d.get("z"))))
-                arrs.append(pa.repeat(pa.scalar(int(bid),
-                                                type=pa.int64()), n))
-                batches.append(pa.RecordBatch.from_arrays(
-                    arrs, schema=full_schema))
+                batches.append(engine._BlockReader(
+                    descs[i], payloads[i], ns[i]).batch(
+                    full_schema, passthrough={"__b": int(bid)}))
         if not batches:
             return
         tbl = pa.Table.from_batches(batches)
@@ -1827,24 +1798,8 @@ class OrochStreamReader(DataSourceStreamReader):
         out_schema = pa.ipc.read_schema(pa.py_buffer(self.schema_bytes))
         tbl = pq.read_table(partition.file,
                             columns=["n", "payload", "desc"])
-        ns = tbl.column("n").to_pylist()
-        descs = tbl.column("desc").to_pylist()
-        payloads = tbl.column("payload")
-        for i in range(tbl.num_rows):
-            desc = json.loads(descs[i])
-            by_name = {d["n"]: d for d in desc["cols"]}
-            payload = payloads[i].as_py()
-            arrs = []
-            for field in out_schema:
-                d = by_name.get(field.name)
-                if d is None:  # schema evolution: null-fill
-                    arrs.append(pa.nulls(int(ns[i]), type=field.type))
-                    continue
-                blob = payload[d["o"]:d["o"] + d["l"]]
-                arrs.append(engine._decode_column(
-                    blob, d["k"], int(ns[i]), field.type,
-                    nullable=bool(d.get("z"))))
-            yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
+        for blk in engine._read_blocks(tbl):
+            yield blk.batch(out_schema)
 
     def commit(self, end: dict) -> None:
         pass  # manifests are permanent; the stream checkpoint is enough
