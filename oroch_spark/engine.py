@@ -30,6 +30,8 @@ Scale design (the 10^12-turn story):
 from __future__ import annotations
 
 import base64
+import decimal as _dec
+import gc
 import json
 import os
 import re
@@ -558,7 +560,6 @@ def _encode_column(arr: "pa.Array", kind: str, text_hint: bool,
     elif kind.startswith("dec("):
         a = arr
         if nullable:
-            import decimal as _dec
             a = pc.fill_null(arr, pa.scalar(_dec.Decimal(0),
                                             type=arr.type))
         ints = _decimal_unscaled(a)
@@ -969,8 +970,7 @@ def approx_topk(blocks: DataFrame, col: str, k: int = 10,
     output value type ("str" or "int")."""
     if k > _MG_K:
         raise ValueError(f"k must be <= {_MG_K}")
-    st = _col_stats(col)
-    rows = blocks.select(st["mg"].alias("mg"))
+    rows = blocks.selectExpr(f"{_stats_sql(col)}.mg AS mg")
     part_schema = T.StructType([
         T.StructField("items", T.StringType()),
         T.StructField("rb", T.LongType()),
@@ -1842,9 +1842,38 @@ def checksum_df(df: DataFrame) -> int:
     return int(s) if s is not None else 0
 
 
-def _overlap_cond(blocks: DataFrame, lo, hi):
-    """Zone-map overlap predicate for [lo, hi] against the block bounds
-    columns. NULL bounds mean "cannot prune" (a key type with no
+def _sql_lit(v) -> str:
+    """SQL text of a Python value, safe to splice into an expression
+    string: ints as BIGINT (``5L``), strings as the cast of their UTF-8
+    bytes (``CAST(X'61' AS STRING)`` — nothing to escape, and Spark
+    folds it back to a plain literal, so a predicate on it still pushes
+    to the parquet scan), decimals as exact ``BD`` literals.
+
+    Why text: in PySpark 4 every ``Column`` method and ``F.col`` records
+    its Python call site (several py4j round trips and a stack walk
+    each), so a prune predicate built from a chain of ``Column`` calls
+    cost more driver CPU than the metadata it reads. The engine's
+    predicates, stats and aggregates are therefore each one SQL string
+    handed to ``filter``/``selectExpr``/``F.expr``."""
+    if isinstance(v, (bool, np.bool_)):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, (int, np.integer)):
+        return f"{int(v)}L"
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(v, _dec.Decimal):
+        return f"{v:f}BD"
+    raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+def _q(name: str) -> str:
+    """Backtick-quoted column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _overlap_cond(blocks: DataFrame, lo, hi) -> str:
+    """Zone-map overlap predicate (SQL) for [lo, hi] against the block
+    bounds columns. NULL bounds mean "cannot prune" (a key type with no
     pruning domain, an all-null key block, or a legacy table whose
     fallback cast nulls out) and always KEEP the block — pruning is an
     optimization, never a correctness filter. String endpoints compare
@@ -1853,59 +1882,69 @@ def _overlap_cond(blocks: DataFrame, lo, hi):
     fallback)."""
     if isinstance(lo, str):
         if "key_slo" not in blocks.columns:
-            return F.lit(True)  # legacy table: no string bounds
-        cond = (F.col("key_slo") <= hi) & (F.col("key_shi") >= lo)
-        return F.col("key_slo").isNull() | cond
+            return "TRUE"  # legacy table: no string bounds
+        return _lo_overlap("key_slo", "key_shi", lo, hi)
     lo, hi = int(lo), int(hi)
     if "key_lo" in blocks.columns:
-        cond = (F.col("key_lo") <= hi) & (F.col("key_hi") >= lo)
-        return F.col("key_lo").isNull() | cond
-    blo = F.col("key_min").try_cast("long")  # null (not error) if non-numeric
-    bhi = F.col("key_max").try_cast("long")
-    return blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
+        return _lo_overlap("key_lo", "key_hi", lo, hi)
+    # null (not error) if non-numeric
+    return _bounds_keep("try_cast(key_min AS BIGINT)",
+                        "try_cast(key_max AS BIGINT)", lo, hi)
 
 
-def _key_lit(schema_kinds: list[tuple[str, str]], key_col: str, v):
-    """Row-level literal for a key bound: the prune domain is int64
-    (epoch-micros for ts, days for date), but the decoded column keeps
-    its logical type — convert the bound to match so the exact filter
-    resolves."""
+def _lo_overlap(blo: str, bhi: str, lo, hi) -> str:
+    """SQL: bounds ``[blo, bhi]`` may overlap ``[lo, hi]``; a NULL
+    ``blo`` (no bounds) keeps the block."""
+    return (f"{blo} IS NULL OR ({blo} <= {_sql_lit(hi)} "
+            f"AND {bhi} >= {_sql_lit(lo)})")
+
+
+def _key_lit(schema_kinds: list[tuple[str, str]], key_col: str, v) -> str:
+    """Row-level literal (SQL) for a key bound: the prune domain is
+    int64 (epoch-micros for ts, days for date), but the decoded column
+    keeps its logical type — convert the bound to match so the exact
+    filter resolves."""
     kind = dict(schema_kinds)[key_col]
     if isinstance(v, str):
-        return F.lit(v)
+        return _sql_lit(v)
     if kind == K_TS:
-        return F.timestamp_micros(F.lit(int(v)))
+        return f"timestamp_micros({_sql_lit(int(v))})"
     if kind == K_DATE:
-        return F.date_from_unix_date(F.lit(int(v)))
+        return f"date_from_unix_date(CAST({_sql_lit(int(v))} AS INT))"
     if kind == K_BOOL:
-        return F.lit(bool(v))
+        return _sql_lit(bool(v))
     if kind.startswith("dec("):
-        import decimal as _dec
         p, s = kind[4:-1].split(",")
         # bounds arrive in the prune/stats domain = UNSCALED ints
-        return F.lit(_dec.Decimal(int(v)).scaleb(-int(s))) \
-                .cast(f"decimal({p},{s})")
-    return F.lit(int(v))
+        return (f"CAST({_sql_lit(_dec.Decimal(int(v)).scaleb(-int(s)))} "
+                f"AS DECIMAL({int(p)},{int(s)}))")
+    return _sql_lit(int(v))
 
 
-def _int_domain_expr(kind: str, col):
-    """Spark expression mapping a decoded logical column into its
-    int64 codec/stats domain — the inverse of :func:`_key_lit`:
+def _between(schema_kinds: list[tuple[str, str]], col: str, lo, hi) -> str:
+    """Exact row filter (SQL) ``lo <= col <= hi`` on a decoded column."""
+    return (f"{_q(col)} >= {_key_lit(schema_kinds, col, lo)} "
+            f"AND {_q(col)} <= {_key_lit(schema_kinds, col, hi)}")
+
+
+def _int_domain_expr(kind: str, col: str) -> str:
+    """SQL mapping the decoded logical column ``col`` into its int64
+    codec/stats domain — the inverse of :func:`_key_lit`:
     epoch-micros for ts, unix-date days for date, exact unscaled ints
     for dec(p,s) (p <= 18 keeps them in int64). A plain cast('long')
     would disagree with the stored stats by 10^6 for timestamps
     (seconds vs micros), truncate decimals to their scaled value, and
     fail outright for dates."""
     if kind == K_TS:
-        return F.unix_micros(col)
+        return f"unix_micros({_q(col)})"
     if kind == K_DATE:
-        return F.unix_date(col)
+        return f"unix_date({_q(col)})"
     if kind.startswith("dec("):
         s = int(kind[4:-1].split(",")[1])
         # v * 10^s is integral for scale-s decimals, so the long cast
         # is exact
-        return (col * F.lit(10 ** s)).cast("long")
-    return col.cast("long")
+        return f"CAST({_q(col)} * {_sql_lit(10 ** s)} AS BIGINT)"
+    return f"CAST({_q(col)} AS BIGINT)"
 
 
 _AGG_BAD_KINDS = (K_STR, K_F64, K_F32, K_BIN)
@@ -1946,13 +1985,11 @@ def prune_blocks_in(blocks: DataFrame, values) -> DataFrame:
     exact match does the rest)."""
     vals = sorted(set(values))
     if not vals:
-        return blocks.filter(F.lit(False))
+        return blocks.filter("FALSE")
     if len(vals) > 64:
         return blocks.filter(_overlap_cond(blocks, vals[0], vals[-1]))
-    cond = _overlap_cond(blocks, vals[0], vals[0])
-    for v in vals[1:]:
-        cond = cond | _overlap_cond(blocks, v, v)
-    return blocks.filter(cond)
+    return blocks.filter(" OR ".join(
+        f"({_overlap_cond(blocks, v, v)})" for v in vals))
 
 
 def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -1964,19 +2001,43 @@ def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     not requested), filter to the exact range. At scale this reads
     only the row groups whose key ranges overlap — the blocks-table
     analogue of partition pruning + parquet predicate pushdown."""
+    return _decode_where(prune_blocks_range(blocks, lo, hi), schema_kinds,
+                         [key_col], _between(schema_kinds, key_col, lo, hi),
+                         columns)
+
+
+def _decode_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+                  pred_cols: list[str], row_filter: str,
+                  columns: Optional[list[str]]) -> DataFrame:
+    """Decode ``blocks`` (the predicate columns plus the ``columns``
+    projection, or every column), keep the rows ``row_filter`` (SQL)
+    accepts, and trim the predicate-only columns."""
     decode_cols = columns
-    if columns is not None and key_col not in columns:
-        decode_cols = [key_col] + columns
-    dec = decode_df(prune_blocks_range(blocks, lo, hi), schema_kinds,
-                    columns=decode_cols)
-    dec = dec.filter((F.col(key_col) >= _key_lit(schema_kinds, key_col, lo))
-                     & (F.col(key_col) <= _key_lit(schema_kinds, key_col, hi)))
-    if columns is not None and key_col not in columns:
+    if columns is not None and not set(pred_cols) <= set(columns):
+        decode_cols = list(dict.fromkeys(pred_cols + list(columns)))
+    dec = decode_df(blocks, schema_kinds,
+                    columns=decode_cols).filter(row_filter)
+    if decode_cols is not columns:
         dec = dec.select(*columns)
     return dec
 
 
-def _contained_cond(blocks: DataFrame, lo, hi):
+def _bounds_keep(blo: str, bhi: str, lo, hi) -> str:
+    """SQL: stats ``[blo, bhi]`` may overlap ``[lo, hi]`` (missing
+    stats keep the block)."""
+    lo, hi = _sql_lit(lo), _sql_lit(hi)
+    return (f"{blo} IS NULL OR {bhi} IS NULL "
+            f"OR ({blo} <= {hi} AND {bhi} >= {lo})")
+
+
+def _bounds_inside(blo: str, bhi: str, lo, hi) -> str:
+    """SQL: stats ``[blo, bhi]`` PROVABLY inside ``[lo, hi]`` (missing
+    stats coalesce to FALSE)."""
+    return (f"coalesce({blo} >= {_sql_lit(lo)} "
+            f"AND {bhi} <= {_sql_lit(hi)}, FALSE)")
+
+
+def _contained_cond(blocks: DataFrame, lo, hi) -> str:
     """True iff the block's key bounds are PROVABLY inside [lo, hi]
     (every row matches, metadata alone can answer aggregates). NULL or
     missing bounds coalesce to False — the block degrades to the
@@ -1984,13 +2045,27 @@ def _contained_cond(blocks: DataFrame, lo, hi):
     without bounds columns treat every block as boundary."""
     if isinstance(lo, str):
         if "key_slo" not in blocks.columns:
-            return F.lit(False)
-        return F.coalesce((F.col("key_slo") >= lo)
-                          & (F.col("key_shi") <= hi), F.lit(False))
+            return "FALSE"
+        return _bounds_inside("key_slo", "key_shi", lo, hi)
     if "key_lo" not in blocks.columns:
-        return F.lit(False)
-    return F.coalesce((F.col("key_lo") >= int(lo))
-                      & (F.col("key_hi") <= int(hi)), F.lit(False))
+        return "FALSE"
+    return _bounds_inside("key_lo", "key_hi", int(lo), int(hi))
+
+
+_COUNT_AGG = "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_rows"
+
+
+def _metadata_count(ov: DataFrame, inside: str,
+                    schema_kinds: list[tuple[str, str]],
+                    pred_cols: list[str], row_filter: str) -> DataFrame:
+    """COUNT(*) split on metadata: blocks ``inside`` (SQL) accepts give
+    their stored row count ``n``; the rest decode ``pred_cols`` and
+    count the rows ``row_filter`` accepts. One row out: ``n_rows``."""
+    contained = ov.filter(inside).selectExpr("n AS _c")
+    boundary = (decode_df(ov.filter(f"NOT ({inside})"), schema_kinds,
+                          columns=pred_cols)
+                .filter(row_filter).selectExpr("1L AS _c"))
+    return contained.unionByName(boundary).selectExpr(_COUNT_AGG)
 
 
 def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2006,16 +2081,8 @@ def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     if not isinstance(lo, str):
         lo, hi = int(lo), int(hi)
     ov = prune_blocks_range(blocks, lo, hi)
-    inside = _contained_cond(ov, lo, hi)
-    contained = ov.filter(inside).select(F.col("n").alias("_c"))
-    partial = ov.filter(~inside)
-    boundary = (decode_df(partial, schema_kinds, columns=[key_col])
-                .filter((F.col(key_col) >= _key_lit(schema_kinds, key_col, lo))
-                        & (F.col(key_col) <= _key_lit(schema_kinds, key_col, hi)))
-                .select(F.lit(1).cast("long").alias("_c")))
-    return (contained.unionByName(boundary)
-            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
-                 .alias("n_rows")))
+    return _metadata_count(ov, _contained_cond(ov, lo, hi), schema_kinds,
+                           [key_col], _between(schema_kinds, key_col, lo, hi))
 
 
 _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
@@ -2035,6 +2102,36 @@ _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
         T.StructField("qsf", T.StringType()),  # float quantile summary
         T.StructField("mg", T.StringType()),   # heavy-hitter summary
     ])))])
+_STATS_DDL = _STATS_JSON_SCHEMA.simpleString()
+
+_RANGE_AGGS = (_COUNT_AGG, "CAST(sum(_s) AS BIGINT) AS sum_v",
+               "CAST(min(_lo) AS BIGINT) AS min_v",
+               "CAST(max(_hi) AS BIGINT) AS max_v")
+
+
+def _metadata_agg(ov: DataFrame, inside: str,
+                  schema_kinds: list[tuple[str, str]], col: str, lo, hi,
+                  agg_col: str, op: str) -> DataFrame:
+    """SUM/MIN/MAX/COUNT of ``agg_col`` split on metadata: blocks that
+    ``inside`` (SQL) accepts and that carry ``agg_col``'s (lo, hi, s)
+    stats answer from them; the rest decode (col, agg_col) and
+    aggregate the rows with ``lo <= col <= hi``. One row out:
+    (n_rows, sum_v, min_v, max_v) in the int64 codec domain."""
+    agg_kind = dict(schema_kinds)[agg_col]
+    _check_agg_kind(op, agg_kind)
+    st = _stats_sql(agg_col)
+    inside = (f"({inside}) AND ({st}.lo IS NOT NULL AND {st}.hi IS NOT NULL"
+              f" AND {st}.s IS NOT NULL)")
+    interior = ov.filter(inside).selectExpr(
+        "n AS _c", f"{st}.s AS _s", f"{st}.lo AS _lo", f"{st}.hi AS _hi")
+    v = _int_domain_expr(agg_kind, agg_col)
+    dec_cols = [col] if agg_col == col else [col, agg_col]
+    boundary = (decode_df(ov.filter(f"NOT ({inside})"), schema_kinds,
+                          columns=dec_cols)
+                .filter(_between(schema_kinds, col, lo, hi))
+                .selectExpr("1L AS _c", f"{v} AS _s", f"{v} AS _lo",
+                            f"{v} AS _hi"))
+    return interior.unionByName(boundary).selectExpr(*_RANGE_AGGS)
 
 
 def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2053,38 +2150,31 @@ def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     if not isinstance(lo, str):
         lo, hi = int(lo), int(hi)
     ov = prune_blocks_range(blocks, lo, hi)
-    stats = _col_stats(agg_col)
-    has_stats = (stats["lo"].isNotNull() & stats["hi"].isNotNull()
-                 & stats["s"].isNotNull())
-    inside = _contained_cond(ov, lo, hi) & has_stats
-    interior = ov.filter(inside).select(
-        F.col("n").alias("_c"), stats["s"].alias("_s"),
-        stats["lo"].alias("_lo"), stats["hi"].alias("_hi"))
-    partial = ov.filter(~inside)
-    agg_kind = dict(schema_kinds)[agg_col]
-    _check_agg_kind("range_agg", agg_kind)
-    v = _int_domain_expr(agg_kind, F.col(agg_col))
-    dec_cols = [key_col] if agg_col == key_col else [key_col, agg_col]
-    boundary = (decode_df(partial, schema_kinds, columns=dec_cols)
-                .filter((F.col(key_col) >= _key_lit(schema_kinds, key_col, lo))
-                        & (F.col(key_col) <= _key_lit(schema_kinds, key_col, hi)))
-                .select(F.lit(1).cast("long").alias("_c"), v.alias("_s"),
-                        v.alias("_lo"), v.alias("_hi")))
-    return (interior.unionByName(boundary).agg(
-        F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_rows"),
-        F.sum("_s").cast("long").alias("sum_v"),
-        F.min("_lo").cast("long").alias("min_v"),
-        F.max("_hi").cast("long").alias("max_v")))
+    return _metadata_agg(ov, _contained_cond(ov, lo, hi), schema_kinds,
+                         key_col, lo, hi, agg_col, "range_agg")
 
 
-def _col_stats(agg_col: str):
-    """Stats struct of ``agg_col`` from the desc JSON; null when the
-    column has no stored stats (legacy block) or is absent from the
-    block entirely (schema evolution) — F.get, not [0], so the empty
+def _stats_sql(col: str) -> str:
+    """SQL: the stats struct of ``col`` from the desc JSON; null when
+    the column has no stored stats (legacy block) or is absent from the
+    block entirely (schema evolution) — get, not [0], so the empty
     match is NULL instead of an ANSI index error."""
-    return F.get(
-        F.filter(F.from_json(F.col("desc"), _STATS_JSON_SCHEMA)["cols"],
-                 lambda c: c["n"] == F.lit(agg_col)), 0)
+    return (f"get(filter(from_json(desc, '{_STATS_DDL}').cols, "
+            f"x -> x.n = {_sql_lit(col)}), 0)")
+
+
+def _col_stats(col: str):
+    """:func:`_stats_sql` as a Column."""
+    return F.expr(_stats_sql(col))
+
+
+def _null_count_sql(col: str) -> str:
+    """SQL: a block's exact null count of ``col`` from its metadata —
+    the full row count when the column is absent, 0 when it is not
+    nullable, else the stored ``nc`` (NULL for a legacy block)."""
+    st = _stats_sql(col)
+    return (f"CASE WHEN {st} IS NULL THEN n WHEN {st}.z IS NULL THEN 0 "
+            f"ELSE {st}.nc END")
 
 
 def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2096,19 +2186,14 @@ def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     evolution) contribute their full row count — all without touching
     a payload byte. Only legacy nullable blocks lacking the stat
     decode, and then only ``col``. One row out: ``n_nulls``."""
-    st = _col_stats(col)
-    exact = (F.when(st.isNull(), F.col("n"))          # column absent
-              .when(st["z"].isNull(), F.lit(0))       # non-nullable
-              .otherwise(st["nc"]))                   # stored count
-    interior = blocks.filter(exact.isNotNull()) \
-        .select(exact.cast("long").alias("_c"))
-    legacy = blocks.filter(exact.isNull())
+    exact = _null_count_sql(col)
+    interior = blocks.filter(f"({exact}) IS NOT NULL") \
+        .selectExpr(f"CAST({exact} AS BIGINT) AS _c")
+    legacy = blocks.filter(f"({exact}) IS NULL")
     boundary = (decode_df(legacy, schema_kinds, columns=[col])
-                .filter(F.col(col).isNull())
-                .select(F.lit(1).cast("long").alias("_c")))
-    return (interior.unionByName(boundary)
-            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
-                 .alias("n_nulls")))
+                .filter(f"{_q(col)} IS NULL").selectExpr("1L AS _c"))
+    return (interior.unionByName(boundary).selectExpr(
+        "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_nulls"))
 
 
 def table_stats(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2127,30 +2212,26 @@ def table_stats(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     cols = [n for n, _ in schema_kinds] if columns is None else columns
     entries = []
     for c in cols:
-        st = _col_stats(c)
-        nulls = (F.when(st.isNull(), F.col("n"))       # column absent
-                  .when(st["z"].isNull(), F.lit(0))    # non-nullable
-                  .otherwise(st["nc"]))                # stored count
-        entries.append(F.struct(
-            F.lit(c).alias("col"), F.col("n").alias("n"),
-            nulls.alias("nulls"), st["lo"].alias("lo"),
-            st["hi"].alias("hi"), st["slo"].alias("slo"),
-            st["shi"].alias("shi")))
-    ex = blocks.select(F.explode(F.array(*entries)).alias("e")) \
+        st = _stats_sql(c)
+        entries.append(
+            f"named_struct('col', {_sql_lit(c)}, 'n', n, "
+            f"'nulls', {_null_count_sql(c)}, 'lo', {st}.lo, "
+            f"'hi', {st}.hi, 'slo', {st}.slo, 'shi', {st}.shi)")
+    ex = blocks.selectExpr(f"explode(array({', '.join(entries)})) AS e") \
         .select("e.*")
 
     def known(agg, src):
         # any block without the stat => the global value is unknown
-        return F.when(F.max(F.col(src).isNull().cast("int")) == 1,
-                      F.lit(None)).otherwise(agg)
+        return (f"CASE WHEN max(CAST({src} IS NULL AS INT)) = 1 "
+                f"THEN NULL ELSE {agg}({src}) END")
 
-    return ex.groupBy("col").agg(
-        F.sum("n").cast("long").alias("n_rows"),
-        known(F.sum("nulls"), "nulls").cast("long").alias("n_nulls"),
-        known(F.min("lo"), "lo").cast("long").alias("min_long"),
-        known(F.max("hi"), "hi").cast("long").alias("max_long"),
-        known(F.min("slo"), "slo").alias("min_str"),
-        known(F.max("shi"), "shi").alias("max_str"))
+    return ex.groupBy("col").agg(*map(F.expr, (
+        "CAST(sum(n) AS BIGINT) AS n_rows",
+        f"CAST({known('sum', 'nulls')} AS BIGINT) AS n_nulls",
+        f"CAST({known('min', 'lo')} AS BIGINT) AS min_long",
+        f"CAST({known('max', 'hi')} AS BIGINT) AS max_long",
+        f"{known('min', 'slo')} AS min_str",
+        f"{known('max', 'shi')} AS max_str")))
 
 
 def approx_distinct(blocks: DataFrame, col: str) -> DataFrame:
@@ -2162,8 +2243,7 @@ def approx_distinct(blocks: DataFrame, col: str) -> DataFrame:
     sketch (a silent fallback would quietly change the cost class).
     One row out: ``approx_ndv`` (stderr ~1.04/sqrt(2^_HLL_P) ~ 2.3%).
     """
-    st = _col_stats(col)
-    rows = blocks.select(st["hll"].alias("hll"))
+    rows = blocks.selectExpr(f"{_stats_sql(col)}.hll AS hll")
     part_schema = T.StructType([
         T.StructField("regs", T.BinaryType()),
         T.StructField("missing", T.LongType())])
@@ -2243,8 +2323,8 @@ def approx_quantile(blocks: DataFrame, col: str,
         raise ValueError(f"kind must be 'int' or 'float', not {kind!r}")
     is_f = kind == "float"
     dt, vt = ("<f8", np.float64) if is_f else ("<i8", np.int64)
-    st = _col_stats(col)
-    rows = blocks.select(st["qsf" if is_f else "qs"].alias("qs"))
+    rows = blocks.selectExpr(
+        f"{_stats_sql(col)}.{'qsf' if is_f else 'qs'} AS qs")
     part_schema = T.StructType([
         T.StructField("vals", T.BinaryType()),
         T.StructField("wts", T.BinaryType()),
@@ -2333,9 +2413,9 @@ def with_stat_columns(blocks: DataFrame, cols: list[str]) -> DataFrame:
     pushes to the parquet scan (row-group min/max stats skip whole
     groups of blocks on disk), exactly like the lead-key bounds."""
     for c in cols:
-        st = _col_stats(c)
-        blocks = (blocks.withColumn(f"{c}__lo", st["lo"])
-                        .withColumn(f"{c}__hi", st["hi"]))
+        st = _stats_sql(c)
+        blocks = (blocks.withColumn(f"{c}__lo", F.expr(f"{st}.lo"))
+                        .withColumn(f"{c}__hi", F.expr(f"{st}.hi")))
     return blocks
 
 
@@ -2358,33 +2438,23 @@ def scan_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     (slo, shi) per-column bounds (pass string ``lo``/``hi``); declared
     text/payload columns carry no bounds and degrade to a full scan."""
     blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    keep = (blo.isNull() | bhi.isNull()
-            | ((blo <= hi) & (bhi >= lo)))
-    decode_cols = columns
-    if columns is not None and col not in columns:
-        decode_cols = [col] + columns
-    dec = decode_df(blocks.filter(keep), schema_kinds,
-                    columns=decode_cols)
-    dec = dec.filter((F.col(col) >= _key_lit(schema_kinds, col, lo))
-                     & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
-    if columns is not None and col not in columns:
-        dec = dec.select(*columns)
-    return dec
+    return _decode_where(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
+                         schema_kinds, [col],
+                         _between(schema_kinds, col, lo, hi), columns)
 
 
 def _where_bounds(blocks: DataFrame, col: str, lo, hi):
-    """(blo, bhi, lo, hi) for a secondary-column range predicate:
-    lexicographic (slo, shi) stats for string bounds, per-column
-    (lo, hi) stats — or their materialized pushable twins — for the
-    integer domain."""
+    """(blo, bhi, lo, hi) for a secondary-column range predicate, the
+    bounds as SQL: lexicographic (slo, shi) stats for string bounds,
+    per-column (lo, hi) stats — or their materialized pushable twins —
+    for the integer domain."""
+    st = _stats_sql(col)
     if isinstance(lo, str):
-        st = _col_stats(col)
-        return st["slo"], st["shi"], lo, hi
+        return f"{st}.slo", f"{st}.shi", lo, hi
     lo, hi = int(lo), int(hi)
     if f"{col}__lo" in blocks.columns:  # materialized: pushable
-        return F.col(f"{col}__lo"), F.col(f"{col}__hi"), lo, hi
-    st = _col_stats(col)
-    return st["lo"], st["hi"], lo, hi
+        return _q(f"{col}__lo"), _q(f"{col}__hi"), lo, hi
+    return f"{st}.lo", f"{st}.hi", lo, hi
 
 
 def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2401,36 +2471,24 @@ def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     from metadata; on an uncorrelated column it degrades gracefully to
     the scan — never to a wrong answer."""
     blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    keep = blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
-    ov = blocks.filter(keep)
-    inside = F.coalesce((blo >= lo) & (bhi <= hi), F.lit(False))
-    contained = ov.filter(inside).select(F.col("n").alias("_c"))
-    boundary = (decode_df(ov.filter(~inside), schema_kinds,
-                          columns=[col])
-                .filter((F.col(col) >= _key_lit(schema_kinds, col, lo))
-                        & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
-                .select(F.lit(1).cast("long").alias("_c")))
-    return (contained.unionByName(boundary)
-            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
-                 .alias("n_rows")))
+    return _metadata_count(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
+                           _bounds_inside(blo, bhi, lo, hi), schema_kinds,
+                           [col], _between(schema_kinds, col, lo, hi))
 
 
 def _multi_pred(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                 preds: list[tuple]):
     """(block_keep, block_inside, row_filter, pred_cols) for an AND of
-    range predicates. keep/inside are JVM expressions over the desc
-    stats; row_filter is the exact post-decode predicate."""
-    keep = inside = row_f = None
+    range predicates. keep/inside are SQL over the desc stats;
+    row_filter is the exact post-decode predicate."""
+    keep, inside, row_f = [], [], []
     for col, lo, hi in preds:
         blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-        k = blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
-        ins = F.coalesce((blo >= lo) & (bhi <= hi), F.lit(False))
-        rf = ((F.col(col) >= _key_lit(schema_kinds, col, lo))
-              & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
-        keep = k if keep is None else keep & k
-        inside = ins if inside is None else inside & ins
-        row_f = rf if row_f is None else row_f & rf
-    return keep, inside, row_f, [c for c, _, _ in preds]
+        keep.append(f"({_bounds_keep(blo, bhi, lo, hi)})")
+        inside.append(f"({_bounds_inside(blo, bhi, lo, hi)})")
+        row_f.append(f"({_between(schema_kinds, col, lo, hi)})")
+    return (" AND ".join(keep), " AND ".join(inside), " AND ".join(row_f),
+            [c for c, _, _ in preds])
 
 
 def scan_where_multi(blocks: DataFrame,
@@ -2448,14 +2506,8 @@ def scan_where_multi(blocks: DataFrame,
     metadata filter, one decode of the surviving blocks."""
     keep, _inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
                                                   preds)
-    decode_cols = columns
-    if columns is not None:
-        decode_cols = list(dict.fromkeys(pred_cols + list(columns)))
-    dec = decode_df(blocks.filter(keep), schema_kinds,
-                    columns=decode_cols).filter(row_f)
-    if columns is not None:
-        dec = dec.select(*columns)
-    return dec
+    return _decode_where(blocks.filter(keep), schema_kinds, pred_cols,
+                         row_f, columns)
 
 
 def count_where_multi(blocks: DataFrame,
@@ -2469,19 +2521,12 @@ def count_where_multi(blocks: DataFrame,
     ``n_rows``."""
     keep, inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
                                                  preds)
-    ov = blocks.filter(keep)
-    contained = ov.filter(inside).select(F.col("n").alias("_c"))
-    boundary = (decode_df(ov.filter(~inside), schema_kinds,
-                          columns=pred_cols)
-                .filter(row_f)
-                .select(F.lit(1).cast("long").alias("_c")))
-    return (contained.unionByName(boundary)
-            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
-                 .alias("n_rows")))
+    return _metadata_count(blocks.filter(keep), inside, schema_kinds,
+                           pred_cols, row_f)
 
 
-def bloom_keep_cond(col: str, value, kind: str, field: str = "bm"):
-    """JVM predicate: keep a block unless its stored Bloom filter for
+def bloom_keep_cond(col: str, value, kind: str, field: str = "bm") -> str:
+    """JVM predicate (SQL): keep a block unless its stored Bloom filter for
     ``col`` PROVES ``value`` absent. The k probe hashes are computed
     once on the driver (same `_bloom_hash_vals` path as the build);
     each probe is pmod into the block's own filter size — exact for
@@ -2493,22 +2538,20 @@ def bloom_keep_cond(col: str, value, kind: str, field: str = "bm"):
     descriptor filter: "bm" (value Bloom) or "tbm" (token Bloom)."""
     h1 = int(_bloom_hash_vals(value, kind)[0])
     h2 = int(_mix64(np.array([h1], dtype=np.uint64))[0])
-    bm = _col_stats(col)[field]
-    bloom = F.unbase64(bm)
-    m_bits = (F.length(bloom) * F.lit(8)).cast("long")
-    hit = None
+    bm = f"{_stats_sql(col)}.{field}"
+    bloom = f"unbase64({bm})"
+    m_bits = f"CAST(length({bloom}) * 8 AS BIGINT)"
+    hits = []
     for i in range(_BLOOM_K):
         full = (h1 + i * h2) % (1 << 64)
         signed = full - (1 << 64) if full >= (1 << 63) else full
-        pos = F.pmod(F.lit(signed), m_bits)
-        byte_v = F.conv(
-            F.hex(F.substring(bloom,
-                              (F.shiftright(pos, 3) + F.lit(1)).cast("int"),
-                              F.lit(1))), 16, 10).cast("int")
-        bit = pos.bitwiseAND(F.lit(7)).cast("int")
-        c = F.getbit(byte_v.cast("long"), bit) == F.lit(1)
-        hit = c if hit is None else hit & c
-    return bm.isNull() | hit
+        pos = f"pmod({_sql_lit(signed)}, {m_bits})"
+        byte_v = (f"CAST(conv(hex(substring({bloom}, "
+                  f"CAST(shiftright({pos}, 3) + 1 AS INT), 1)), 16, 10) "
+                  f"AS INT)")
+        hits.append(f"getbit(CAST({byte_v} AS BIGINT), "
+                    f"CAST({pos} & 7 AS INT)) = 1")
+    return f"{bm} IS NULL OR ({' AND '.join(hits)})"
 
 
 def bloom_might_contain(bm_b64: Optional[str], value, kind: str) -> bool:
@@ -2551,25 +2594,17 @@ def grep_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         words = [words]
     if not words:
         raise ValueError("grep_where: need at least one word")
-    keep = row_f = None
+    keep, row_f = [], []
+    tokens = (f"split(coalesce({_q(col)}, {_sql_lit('')}), "
+              f"{_sql_lit(_TOKEN_SPLIT_RE)})")
     for w in words:
         if not re.fullmatch("[0-9A-Za-z_]+", w):
             raise ValueError(f"grep_where: probe {w!r} is not a single "
                              "word token ([0-9A-Za-z_]+)")
-        k = bloom_keep_cond(col, w, K_STR, field="tbm")
-        rf = F.array_contains(
-            F.split(F.coalesce(F.col(col), F.lit("")), _TOKEN_SPLIT_RE),
-            w)
-        keep = k if keep is None else keep & k
-        row_f = rf if row_f is None else row_f & rf
-    decode_cols = columns
-    if columns is not None and col not in columns:
-        decode_cols = [col] + columns
-    dec = decode_df(blocks.filter(keep), schema_kinds,
-                    columns=decode_cols).filter(row_f)
-    if columns is not None and col not in columns:
-        dec = dec.select(*columns)
-    return dec
+        keep.append(f"({bloom_keep_cond(col, w, K_STR, field='tbm')})")
+        row_f.append(f"array_contains({tokens}, {_sql_lit(w)})")
+    return _decode_where(blocks.filter(" AND ".join(keep)), schema_kinds,
+                         [col], " AND ".join(row_f), columns)
 
 
 def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2597,17 +2632,11 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         raise ValueError(f"lookup_where: column {col!r} kind {kind!r} "
                          "has no equality-probe domain (use a "
                          "string/integer-domain column)")
-    keep = bloom_keep_cond(col, value, kind)
-    st = _col_stats(col)
-    if kind == K_STR:
-        keep = keep & (st["slo"].isNull()
-                       | ((st["slo"] <= value) & (st["shi"] >= value)))
-        probe = str(value)
-    else:
-        v = int(value)
-        keep = keep & (st["lo"].isNull()
-                       | ((st["lo"] <= v) & (st["hi"] >= v)))
-        probe = v
+    st = _stats_sql(col)
+    probe = str(value) if kind == K_STR else int(value)
+    b = ("slo", "shi") if kind == K_STR else ("lo", "hi")
+    keep = (f"({bloom_keep_cond(col, value, kind)}) AND "
+            f"({_lo_overlap(f'{st}.{b[0]}', f'{st}.{b[1]}', probe, probe)})")
     decode_cols = columns
     if columns is not None and col not in columns:
         decode_cols = [col] + columns
@@ -2682,10 +2711,17 @@ def make_lookup_fn(kinds: list[tuple[str, str]], key_col: str, value,
         import pyarrow.compute as pc
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
-        key_str = kind_of[key_col] == K_STR
+        kind = kind_of[key_col]
+        key_str = kind == K_STR
         probes = [str(v) if key_str else int(v) for v in values]
         probe_set = pa.array(probes,
                              type=pa.string() if key_str else pa.int64())
+        if kind.startswith("dec("):
+            # probes are unscaled ints; an int64 decode of a decimal
+            # column would read its 128-bit words as garbage keys
+            p, s = (int(x) for x in kind[4:-1].split(","))
+            probe_set = pa.array([_dec.Decimal(v).scaleb(-s)
+                                  for v in probes], pa.decimal128(p, s))
         for batch in batches:
             for blk in _read_blocks(batch):
                 kb = blk.str_blob(key_col) if key_str else None
@@ -2817,9 +2853,8 @@ def group_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     reference's surface (its container has point/find access only,
     `/root/reference/oroch/integer_array.h:166-208`); the natural
     GROUP BY an analyst runs daily at 100 TB."""
-    return (_group_partial(blocks, schema_kinds, col)
-            .groupBy(col)
-            .agg(F.sum("n_rows").cast("long").alias("n_rows")))
+    return (_group_partial(blocks, schema_kinds, col).groupBy(col)
+            .agg(F.expr("CAST(sum(n_rows) AS BIGINT) AS n_rows")))
 
 
 def distinct_values(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2914,12 +2949,12 @@ def group_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                            to_arrow_schema(out_schema)
                            .serialize().to_pybytes())
     partial = blocks.mapInArrow(fn, schema=out_schema)
-    aggs = [F.sum("n_rows").cast("long").alias("n_rows")]
+    aggs = ["CAST(sum(n_rows) AS BIGINT) AS n_rows"]
     if agg_col:
-        aggs += [F.sum("sum_v").cast("long").alias("sum_v"),
-                 F.min("min_v").cast("long").alias("min_v"),
-                 F.max("max_v").cast("long").alias("max_v")]
-    return partial.groupBy(*group_cols).agg(*aggs)
+        aggs += ["CAST(sum(sum_v) AS BIGINT) AS sum_v",
+                 "CAST(min(min_v) AS BIGINT) AS min_v",
+                 "CAST(max(max_v) AS BIGINT) AS max_v"]
+    return partial.groupBy(*group_cols).agg(*map(F.expr, aggs))
 
 
 def agg_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2936,31 +2971,9 @@ def agg_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     On a predicate correlated with block order a wide range is almost
     all interior blocks — answered at desc-scan speed."""
     blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    keep = blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
-    ov = blocks.filter(keep)
-    stats = _col_stats(agg_col)
-    has_stats = (stats["lo"].isNotNull() & stats["hi"].isNotNull()
-                 & stats["s"].isNotNull())
-    inside = (F.coalesce((blo >= lo) & (bhi <= hi), F.lit(False))
-              & has_stats)
-    interior = ov.filter(inside).select(
-        F.col("n").alias("_c"), stats["s"].alias("_s"),
-        stats["lo"].alias("_lo"), stats["hi"].alias("_hi"))
-    agg_kind = dict(schema_kinds)[agg_col]
-    _check_agg_kind("agg_where", agg_kind)
-    v = _int_domain_expr(agg_kind, F.col(agg_col))
-    dec_cols = [col] if agg_col == col else [col, agg_col]
-    boundary = (decode_df(ov.filter(~inside), schema_kinds,
-                          columns=dec_cols)
-                .filter((F.col(col) >= _key_lit(schema_kinds, col, lo))
-                        & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
-                .select(F.lit(1).cast("long").alias("_c"), v.alias("_s"),
-                        v.alias("_lo"), v.alias("_hi")))
-    return (interior.unionByName(boundary).agg(
-        F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_rows"),
-        F.sum("_s").cast("long").alias("sum_v"),
-        F.min("_lo").cast("long").alias("min_v"),
-        F.max("_hi").cast("long").alias("max_v")))
+    return _metadata_agg(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
+                         _bounds_inside(blo, bhi, lo, hi), schema_kinds,
+                         col, lo, hi, agg_col, "agg_where")
 
 
 # lookup_join block-prune grid: the bucket width is the AVERAGE block
@@ -3176,6 +3189,52 @@ def lookup_join(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     return out
 
 
+def _topk_prune(blocks: DataFrame, lo: str, hi: str, k: int,
+                ascending: bool) -> DataFrame:
+    """Keep the blocks that can hold one of the top ``k`` rows by the
+    block bounds ``[lo, hi]`` (SQL), with the overlap-safe prefix rule
+    of :func:`topk_key`. The prefix walk runs over a METADATA-ONLY
+    projection (bounds + row counts; parquet column pruning keeps
+    payload bytes on disk), reduces to ONE (t, enough) row per bucket,
+    and joins back broadcast — the blocks table itself never
+    shuffles. Ascending mirrors with the bounds swapped."""
+    first, edge = (hi, lo) if ascending else (lo, hi)
+    order = "ASC" if ascending else "DESC"
+    th = (blocks.selectExpr("bucket", "n", f"{first} AS _lo")
+          .selectExpr("*", "coalesce(sum(n) OVER (PARTITION BY bucket "
+                      f"ORDER BY _lo {order} NULLS LAST ROWS BETWEEN "
+                      "UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS _prev")
+          .selectExpr("*", f"_prev < {_sql_lit(k)} AND _lo IS NOT NULL "
+                      "AS _pref")
+          .groupBy("bucket").agg(
+              F.expr(f"{'max' if ascending else 'min'}"
+                     "(CASE WHEN _pref THEN _lo END) AS _t"),
+              # fewer than k rows in the bucket => keep everything
+              F.expr("max(CASE WHEN _pref THEN _prev + n END) >= "
+                     f"{_sql_lit(k)} AS _enough")))
+    # desc: skip B iff k rows are provably above it (key_hi < t);
+    # asc: skip B iff k rows are provably below it (key_lo > t)
+    keep = (f"{edge} IS NULL OR _t IS NULL OR NOT coalesce(_enough, FALSE)"
+            f" OR {edge} {'<=' if ascending else '>='} _t")
+    return (blocks.join(F.broadcast(th), "bucket", "left").filter(keep)
+            .drop("_t", "_enough"))
+
+
+def _topk_decode(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+                 col: str, k: int, ascending: bool,
+                 columns: Optional[list[str]]) -> DataFrame:
+    """Decode ``blocks`` (``col`` plus the projection) into Spark's
+    TakeOrderedAndProject: ORDER BY ``col`` LIMIT ``k``."""
+    decode_cols = columns
+    if columns is not None and col not in columns:
+        decode_cols = [col] + columns
+    dec = decode_df(blocks, schema_kinds, columns=decode_cols)
+    out = dec.orderBy(F.asc(col) if ascending else F.desc(col)).limit(k)
+    if decode_cols is not columns:
+        out = out.select(*columns)
+    return out
+
+
 def topk_key(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
              key_col: str, k: int, ascending: bool = False,
              columns: Optional[list[str]] = None) -> DataFrame:
@@ -3190,61 +3249,12 @@ def topk_key(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     fewer than k rows) keep everything. The decode then feeds Spark's
     TakeOrderedAndProject — per-partition partial top-k, no global
     sort. (Ascending mirrors with the bounds swapped and negated.)"""
-    if dict(schema_kinds)[key_col] == K_STR:
-        lo_c, hi_c = F.col("key_slo"), F.col("key_shi")
-        have = "key_slo" in blocks.columns
-    else:
-        lo_c, hi_c = F.col("key_lo"), F.col("key_hi")
-        have = "key_lo" in blocks.columns
-    if have:
-        from pyspark.sql import Window
-
-        # The prefix walk runs over a METADATA-ONLY projection (bounds
-        # + row counts; parquet column pruning keeps payload bytes on
-        # disk), reduces to ONE (t, enough) row per bucket, and joins
-        # back broadcast — the blocks table itself never shuffles.
-        meta = blocks.select("bucket", "n", lo_c.alias("_lo"),
-                             hi_c.alias("_hi"))
-        if not ascending:
-            w = Window.partitionBy("bucket") \
-                .orderBy(F.col("_lo").desc_nulls_last())
-        else:
-            meta = blocks.select("bucket", "n", hi_c.alias("_lo"),
-                                 lo_c.alias("_hi"))
-            w = Window.partitionBy("bucket") \
-                .orderBy(F.col("_lo").asc_nulls_last())
-        prev = F.coalesce(
-            F.sum("n").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0))
-        pref_lo = F.when(F.col("_pref"), F.col("_lo"))
-        th = (meta.withColumn("_prev", prev)
-              .withColumn("_pref",
-                          (F.col("_prev") < k) & F.col("_lo").isNotNull())
-              .groupBy("bucket")
-              .agg((F.min(pref_lo) if not ascending
-                    else F.max(pref_lo)).alias("_t"),
-                   # fewer than k rows in the bucket => keep everything
-                   (F.max(F.when(F.col("_pref"),
-                                 F.col("_prev") + F.col("n"))) >= k)
-                   .alias("_enough")))
-        blocks = blocks.join(F.broadcast(th), "bucket", "left")
-        # desc: skip B iff k rows are provably above it (key_hi < t);
-        # asc: skip B iff k rows are provably below it (key_lo > t)
-        edge = lo_c if ascending else hi_c
-        keep = (edge.isNull() | F.col("_t").isNull()
-                | ~F.coalesce(F.col("_enough"), F.lit(False))
-                | (edge >= F.col("_t") if not ascending
-                   else edge <= F.col("_t")))
-        blocks = blocks.filter(keep).drop("_t", "_enough")
-    decode_cols = columns
-    if columns is not None and key_col not in columns:
-        decode_cols = [key_col] + columns
-    dec = decode_df(blocks, schema_kinds, columns=decode_cols)
-    order = F.col(key_col).asc() if ascending else F.col(key_col).desc()
-    out = dec.orderBy(order).limit(k)
-    if columns is not None and key_col not in columns:
-        out = out.select(*columns)
-    return out
+    lo, hi = ("key_slo", "key_shi") \
+        if dict(schema_kinds)[key_col] == K_STR else ("key_lo", "key_hi")
+    if lo in blocks.columns:
+        blocks = _topk_prune(blocks, lo, hi, k, ascending)
+    return _topk_decode(blocks, schema_kinds, key_col, k, ascending,
+                        columns)
 
 
 def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3258,46 +3268,9 @@ def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     block order; uncorrelated columns degrade to a full scan — never a
     wrong answer). The walk runs on a metadata projection reduced to
     one threshold row per bucket; payloads never shuffle."""
-    st = _col_stats(col)
-    meta = blocks.select("bucket", "n",
-                         (st["lo"] if not ascending
-                          else st["hi"]).alias("_lo"),
-                         (st["hi"] if not ascending
-                          else st["lo"]).alias("_hi"))
-    from pyspark.sql import Window
-
-    order = (F.col("_lo").desc_nulls_last() if not ascending
-             else F.col("_lo").asc_nulls_last())
-    w = Window.partitionBy("bucket").orderBy(order)
-    prev = F.coalesce(
-        F.sum("n").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0))
-    pref_lo = F.when(F.col("_pref"), F.col("_lo"))
-    th = (meta.withColumn("_prev", prev)
-          .withColumn("_pref",
-                      (F.col("_prev") < k) & F.col("_lo").isNotNull())
-          .groupBy("bucket")
-          .agg((F.min(pref_lo) if not ascending
-                else F.max(pref_lo)).alias("_t"),
-               (F.max(F.when(F.col("_pref"),
-                             F.col("_prev") + F.col("n"))) >= k)
-               .alias("_enough")))
-    edge = st["lo"] if ascending else st["hi"]
-    kept = blocks.join(F.broadcast(th), "bucket", "left")
-    keep = (edge.isNull() | F.col("_t").isNull()
-            | ~F.coalesce(F.col("_enough"), F.lit(False))
-            | (edge >= F.col("_t") if not ascending
-               else edge <= F.col("_t")))
-    kept = kept.filter(keep).drop("_t", "_enough")
-    decode_cols = columns
-    if columns is not None and col not in columns:
-        decode_cols = [col] + columns
-    dec = decode_df(kept, schema_kinds, columns=decode_cols)
-    order = F.col(col).asc() if ascending else F.col(col).desc()
-    out = dec.orderBy(order).limit(k)
-    if columns is not None and col not in columns:
-        out = out.select(*columns)
-    return out
+    st = _stats_sql(col)
+    kept = _topk_prune(blocks, f"{st}.lo", f"{st}.hi", k, ascending)
+    return _topk_decode(kept, schema_kinds, col, k, ascending, columns)
 
 
 def manifest_rows(blocks: DataFrame, snapshot_id: str, run_id: str) -> DataFrame:
@@ -3335,3 +3308,20 @@ def _codec_entries(desc_col):
         T.StructType([T.StructField("cols", T.ArrayType(T.StructType([
             T.StructField("c", T.StringType())])))]),
     )["cols"]["c"]
+
+
+def _freeze_worker_heap() -> None:
+    """Move everything alive after this import into the permanent
+    generation, once, in a PySpark worker that the daemon reuses.
+
+    Why: ``pyspark/daemon.py`` runs a full ``gc.collect()`` after every
+    task of a reused worker, and with the engine imported that walks
+    ~75k long-lived import objects (~50 ms of CPU) each time; frozen,
+    they are skipped. ``SPARK_REUSE_WORKER`` is set in exactly those
+    workers and never in the driver, whose heap is left alone."""
+    if os.environ.get("SPARK_REUSE_WORKER") and not gc.get_freeze_count():
+        gc.collect()
+        gc.freeze()
+
+
+_freeze_worker_heap()

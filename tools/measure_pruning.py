@@ -69,13 +69,12 @@ def main() -> None:
     blo, bhi, l2, h2 = engine._where_bounds(evb, "ts", lo, cut)
     add("scan_where (secondary col, correlated)",
         "ts in first 1% of time range", total,
-        evb.filter(blo.isNull() | bhi.isNull()
-                   | ((blo <= h2) & (bhi >= l2))).count())
+        evb.filter(engine._bounds_keep(blo, bhi, l2, h2)).count())
     add("lookup_where (Bloom, PRESENT value)",
         "props = '{\"k\": 42}' — 1% of rows, so statistically present "
         "in ~every 512-row block; keeping them all is correct", total,
-        evb.filter(engine.bloom_keep_cond("props", '{"k": 42}', "str")
-                   & F.lit(True)).count())
+        evb.filter(engine.bloom_keep_cond("props", '{"k": 42}', "str"))
+        .count())
     add("lookup_where (Bloom, ABSENT value)", "props = 'no-such'",
         total,
         evb.filter(engine.bloom_keep_cond("props", "no-such", "str"))
@@ -113,8 +112,7 @@ def main() -> None:
 
     def z_kept(blocks, col, lo, hi):
         blo, bhi, l2, h2 = engine._where_bounds(blocks, col, lo, hi)
-        return blocks.filter(blo.isNull() | bhi.isNull()
-                             | ((blo <= h2) & (bhi >= l2))).count()
+        return blocks.filter(engine._bounds_keep(blo, bhi, l2, h2)).count()
 
     add("scan_where (z-ordered, col 1 of 2)",
         "user_id in lowest 10% of rows — uncorrelated with any single "
