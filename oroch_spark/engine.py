@@ -24,8 +24,12 @@ Scale design (the 10^12-turn story):
   histogram, bytes in/out, wall) marks completion. A restarted run
   anti-joins planned buckets against the manifest and encodes only the
   remainder (see `checkpoint.py`).
-- **No collect()** anywhere in the data path; the only driver-side list
-  is the pending-bucket id list (bounded by n_buckets).
+- **No collect() of table rows** in the data path. Query plans are
+  built with three bounded planning reads: ``zorder_key``'s one
+  min/max row, ``lookup_join``'s one grid-aggregate row, and the
+  top-k threshold (at most k ``(n, bound)`` metadata rows, never a
+  payload). The resume path's pending-bucket id list is bounded by
+  n_buckets.
 """
 from __future__ import annotations
 
@@ -584,15 +588,32 @@ def _encode_column(arr: "pa.Array", kind: str, text_hint: bool,
         # columns skip stats (fill values would corrupt them) and
         # degrade to the decode path.
         lo_v, hi_v = int(ints.min()), int(ints.max())
-        # exact overflow-free sum, fully vectorized: split each value
-        # into (v >> 32) and (v & 0xFFFFFFFF); each partial int64 sum
-        # is safe for any block under 2^31 rows, and
-        # (hi_sum << 32) + lo_sum reassembles the true sum in Python's
-        # unbounded-int domain (two's-complement split identity)
-        s_v = ((int((ints >> 32).sum(dtype=np.int64)) << 32)
-               + int((ints & 0xFFFFFFFF).sum(dtype=np.int64)))
-        d["lo"], d["hi"], d["s"] = lo_v, hi_v, s_v
+        d["lo"], d["hi"], d["s"] = lo_v, hi_v, _exact_sum(ints)
     return (vblob + blob, d, width * n, desc.ref_total + len(vblob))
+
+
+def _exact_sum(ints: np.ndarray) -> int:
+    """Exact sum of int64 values as a Python int, fully vectorized:
+    split each value into (v >> 32) and (v & 0xFFFFFFFF); each partial
+    int64 sum is safe for any block under 2^31 rows, and
+    (hi_sum << 32) + lo_sum reassembles the true sum in Python's
+    unbounded-int domain (two's-complement split identity)."""
+    return ((int((ints >> 32).sum(dtype=np.int64)) << 32)
+            + int((ints & 0xFFFFFFFF).sum(dtype=np.int64)))
+
+
+# byte width of each integer-domain kind's codec values (8 otherwise:
+# i64, ts, dec(p,s))
+_INT_WIDTHS = {K_I32: 4, K_DATE: 4, K_BOOL: 1, K_I8: 1, K_I16: 2}
+
+
+def _split_validity(blob: bytes, n: int):
+    """(validity mask, value blob) of a nullable column's blob: the
+    packed little-endian bitmap prefix, then the encoded values."""
+    nb = (n + 7) // 8
+    valid = np.unpackbits(np.frombuffer(blob[:nb], dtype=np.uint8),
+                          count=n, bitorder="little").astype(bool)
+    return valid, blob[nb:]
 
 
 def _decode_column(blob: bytes, kind: str, n: int, arrow_type,
@@ -601,10 +622,7 @@ def _decode_column(blob: bytes, kind: str, n: int, arrow_type,
     import pyarrow.compute as pc
 
     if nullable:
-        nb = (n + 7) // 8
-        valid = np.unpackbits(np.frombuffer(blob[:nb], dtype=np.uint8),
-                              count=n, bitorder="little").astype(bool)
-        blob = blob[nb:]
+        valid, blob = _split_validity(blob, n)
     if kind == K_STR:
         out = sc.decode_str_block_arrow(blob, n).cast(arrow_type)
     elif kind == K_F64:
@@ -621,9 +639,7 @@ def _decode_column(blob: bytes, kind: str, n: int, arrow_type,
         out = _decimal_rebuild(ic.decode_block(blob, n, width=8),
                                arrow_type)
     else:
-        width = {K_I32: 4, K_DATE: 4, K_BOOL: 1, K_I8: 1, K_I16: 2} \
-            .get(kind, 8)
-        ints = ic.decode_block(blob, n, width=width)
+        ints = ic.decode_block(blob, n, width=_INT_WIDTHS.get(kind, 8))
         if kind == K_TS:
             out = pa.array(ints, type=pa.int64()).cast(arrow_type)
         elif kind == K_I32:
@@ -1302,6 +1318,27 @@ class _BlockReader:
         return _column_at_indices(self._blob(d), d["k"], self.n,
                                   arrow_type, bool(d.get("z")), idxs)
 
+    def codes(self, name: str) -> Optional["pa.Array"]:
+        """Column ``name`` in its comparison domain, for kernels that
+        filter and reduce a block themselves: int64 codec values for
+        integer-domain kinds (epoch-micros for ts, days for date,
+        unscaled ints for dec(p,s)), UTF-8 bytes for strings, float64
+        for floats. None when the block predates the column."""
+        import pyarrow as pa
+
+        d = self._cols.get(name)
+        if d is None:
+            return None
+        if d["k"] in (K_STR, K_F64, K_F32):
+            return self.column(name, pa.binary() if d["k"] == K_STR
+                               else pa.float64())
+        blob, valid = self._blob(d), None
+        if d.get("z"):
+            valid, blob = _split_validity(blob, self.n)
+        return pa.array(ic.decode_block(blob, self.n,
+                                        width=_INT_WIDTHS.get(d["k"], 8)),
+                        mask=None if valid is None else ~valid)
+
     def batch(self, schema: "pa.Schema",
               idxs: Optional[np.ndarray] = None,
               passthrough: Optional[dict] = None) -> "pa.RecordBatch":
@@ -1927,26 +1964,6 @@ def _between(schema_kinds: list[tuple[str, str]], col: str, lo, hi) -> str:
             f"AND {_q(col)} <= {_key_lit(schema_kinds, col, hi)}")
 
 
-def _int_domain_expr(kind: str, col: str) -> str:
-    """SQL mapping the decoded logical column ``col`` into its int64
-    codec/stats domain — the inverse of :func:`_key_lit`:
-    epoch-micros for ts, unix-date days for date, exact unscaled ints
-    for dec(p,s) (p <= 18 keeps them in int64). A plain cast('long')
-    would disagree with the stored stats by 10^6 for timestamps
-    (seconds vs micros), truncate decimals to their scaled value, and
-    fail outright for dates."""
-    if kind == K_TS:
-        return f"unix_micros({_q(col)})"
-    if kind == K_DATE:
-        return f"unix_date({_q(col)})"
-    if kind.startswith("dec("):
-        s = int(kind[4:-1].split(",")[1])
-        # v * 10^s is integral for scale-s decimals, so the long cast
-        # is exact
-        return f"CAST({_q(col)} * {_sql_lit(10 ** s)} AS BIGINT)"
-    return f"CAST({_q(col)} AS BIGINT)"
-
-
 _AGG_BAD_KINDS = (K_STR, K_F64, K_F32, K_BIN)
 
 
@@ -2052,20 +2069,128 @@ def _contained_cond(blocks: DataFrame, lo, hi) -> str:
     return _bounds_inside("key_lo", "key_hi", int(lo), int(hi))
 
 
+def _pred_domain(kind: str, lo, hi):
+    """``[lo, hi]`` in the comparison domain :meth:`_BlockReader.codes`
+    reads ``kind`` in, matching how :func:`_between` compares the
+    decoded column: strings as UTF-8 bytes, bools and f32 through the
+    column's own type. ``lo`` None (the IS NULL predicate) passes."""
+    if lo is None:
+        return None, None
+    if kind == K_STR:
+        return str(lo).encode("utf-8"), str(hi).encode("utf-8")
+    if kind in (K_F64, K_F32):
+        cast = np.float32 if kind == K_F32 else float
+        return float(cast(lo)), float(cast(hi))
+    if kind == K_BIN or kind.startswith("arr("):
+        raise ValueError(f"range predicates compare integer-domain, float "
+                         f"or string columns, not kind {kind!r}")
+    if kind == K_BOOL:
+        return int(bool(lo)), int(bool(hi))
+    return int(lo), int(hi)
+
+
+def _rows_matching(blk: _BlockReader, preds) -> np.ndarray:
+    """Row mask of ``blk`` under an AND of ``(col, lo, hi)`` predicates
+    in the comparison domain: ``lo <= col <= hi`` (a NULL never
+    matches), or ``col IS NULL`` when ``lo`` is None."""
+    import pyarrow.compute as pc
+
+    mask = np.ones(blk.n, dtype=bool)
+    for col, lo, hi in preds:
+        vals = blk.codes(col)
+        if vals is None:  # the block predates col: every row is NULL
+            if lo is not None:
+                return np.zeros(blk.n, dtype=bool)
+            continue
+        m = vals.is_null() if lo is None else pc.and_(
+            pc.greater_equal(vals, lo), pc.less_equal(vals, hi))
+        mask &= pc.fill_null(m, False).to_numpy(zero_copy_only=False)
+    return mask
+
+
+def _int64_parts(s: int) -> list[int]:
+    """``s`` as int64 addends: one when it fits, else enough that
+    Spark's sum over them overflows exactly as it would have over the
+    block's rows — an exact partial is never wrapped."""
+    parts = []
+    while not -(1 << 63) <= s < (1 << 63):
+        step = (1 << 63) - 1 if s > 0 else -(1 << 63)
+        parts.append(step)
+        s -= step
+    return [s] + parts
+
+
+_PARTIALS = ("_c", "_s", "_lo", "_hi")
+
+
+def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
+    """mapInArrow kernel: one partial row ``(_c, _s, _lo, _hi)`` per
+    block. A block the metadata answers (``_in``) passes its partial
+    through; any other block decodes only the predicate columns and
+    ``agg_col``, keeps the rows the ``(col, lo, hi)`` predicates accept
+    (:func:`_rows_matching`), and reduces them itself: the row count,
+    and the exact sum, min and max of the non-null ``agg_col`` values
+    in the int64 codec domain. Only partials cross back to the JVM,
+    never rows. A sum past int64 spills into extra ``(0, part, NULL,
+    NULL)`` rows (:func:`_int64_parts`)."""
+
+    def block_partials(batches) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        for batch in batches:
+            out = {c: batch.column(c).to_pylist() for c in _PARTIALS}
+            ins = batch.column("_in").to_pylist()
+            descs, payloads = batch.column("desc"), batch.column("payload")
+            ns = batch.column("n").to_pylist()
+            for i, inside in enumerate(ins):
+                if inside:
+                    continue
+                blk = _BlockReader(descs[i].as_py(), payloads[i], ns[i])
+                mask = _rows_matching(blk, preds)
+                c, s, lo, hi = int(mask.sum()), None, None, None
+                vals = None if agg_col is None else blk.codes(agg_col)
+                if vals is not None:
+                    sel = vals.filter(pa.array(mask)).drop_null().to_numpy()
+                    if len(sel):
+                        s, lo, hi = (_exact_sum(sel), int(sel.min()),
+                                     int(sel.max()))
+                parts = [s] if s is None else _int64_parts(s)
+                for col, v in zip(_PARTIALS, (c, parts[0], lo, hi)):
+                    out[col][i] = v
+                for p in parts[1:]:
+                    for col, v in zip(_PARTIALS, (0, p, None, None)):
+                        out[col].append(v)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out[c], type=pa.int64()) for c in _PARTIALS],
+                names=list(_PARTIALS))
+
+    return block_partials
+
+
+def _metadata_split(ov: DataFrame, inside: str,
+                    schema_kinds: list[tuple[str, str]], preds: list[tuple],
+                    agg_col: Optional[str] = None,
+                    interior: tuple[str, ...] = ("n",)) -> DataFrame:
+    """One pass over the blocks ``ov``: a partial row ``(_c, _s, _lo,
+    _hi)`` per block. Blocks ``inside`` (SQL) accepts answer from
+    metadata — the ``interior`` SQL expressions for the partial, e.g.
+    the stored row count ``n`` — and cross to Python with no payload or
+    descriptor; the rest reduce in :func:`make_partials_fn` under
+    ``preds`` (``(col, lo, hi)`` in the prune domain, ``lo`` None for
+    IS NULL). Fold with ``_COUNT_AGG`` / ``_RANGE_AGGS``."""
+    kinds = dict(schema_kinds)
+    preds = [(c, *_pred_domain(kinds[c], lo, hi)) for c, lo, hi in preds]
+    part = [f"CAST({e} AS BIGINT) AS {c}" for e, c in zip(
+        interior + ("NULL",) * (len(_PARTIALS) - len(interior)), _PARTIALS)]
+    return ov.selectExpr(
+        "n", f"coalesce({inside}, FALSE) AS _in", *part,
+        f"IF({inside}, NULL, desc) AS desc",
+        f"IF({inside}, NULL, payload) AS payload").mapInArrow(
+            make_partials_fn(preds, agg_col),
+            ", ".join(f"{c} long" for c in _PARTIALS))
+
+
 _COUNT_AGG = "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_rows"
-
-
-def _metadata_count(ov: DataFrame, inside: str,
-                    schema_kinds: list[tuple[str, str]],
-                    pred_cols: list[str], row_filter: str) -> DataFrame:
-    """COUNT(*) split on metadata: blocks ``inside`` (SQL) accepts give
-    their stored row count ``n``; the rest decode ``pred_cols`` and
-    count the rows ``row_filter`` accepts. One row out: ``n_rows``."""
-    contained = ov.filter(inside).selectExpr("n AS _c")
-    boundary = (decode_df(ov.filter(f"NOT ({inside})"), schema_kinds,
-                          columns=pred_cols)
-                .filter(row_filter).selectExpr("1L AS _c"))
-    return contained.unionByName(boundary).selectExpr(_COUNT_AGG)
 
 
 def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2081,8 +2206,8 @@ def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     if not isinstance(lo, str):
         lo, hi = int(lo), int(hi)
     ov = prune_blocks_range(blocks, lo, hi)
-    return _metadata_count(ov, _contained_cond(ov, lo, hi), schema_kinds,
-                           [key_col], _between(schema_kinds, key_col, lo, hi))
+    return _metadata_split(ov, _contained_cond(ov, lo, hi), schema_kinds,
+                           [(key_col, lo, hi)]).selectExpr(_COUNT_AGG)
 
 
 _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
@@ -2114,24 +2239,16 @@ def _metadata_agg(ov: DataFrame, inside: str,
                   agg_col: str, op: str) -> DataFrame:
     """SUM/MIN/MAX/COUNT of ``agg_col`` split on metadata: blocks that
     ``inside`` (SQL) accepts and that carry ``agg_col``'s (lo, hi, s)
-    stats answer from them; the rest decode (col, agg_col) and
-    aggregate the rows with ``lo <= col <= hi``. One row out:
+    stats answer from them; the rest reduce the rows with
+    ``lo <= col <= hi`` in the partials kernel. One row out:
     (n_rows, sum_v, min_v, max_v) in the int64 codec domain."""
-    agg_kind = dict(schema_kinds)[agg_col]
-    _check_agg_kind(op, agg_kind)
+    _check_agg_kind(op, dict(schema_kinds)[agg_col])
     st = _stats_sql(agg_col)
     inside = (f"({inside}) AND ({st}.lo IS NOT NULL AND {st}.hi IS NOT NULL"
               f" AND {st}.s IS NOT NULL)")
-    interior = ov.filter(inside).selectExpr(
-        "n AS _c", f"{st}.s AS _s", f"{st}.lo AS _lo", f"{st}.hi AS _hi")
-    v = _int_domain_expr(agg_kind, agg_col)
-    dec_cols = [col] if agg_col == col else [col, agg_col]
-    boundary = (decode_df(ov.filter(f"NOT ({inside})"), schema_kinds,
-                          columns=dec_cols)
-                .filter(_between(schema_kinds, col, lo, hi))
-                .selectExpr("1L AS _c", f"{v} AS _s", f"{v} AS _lo",
-                            f"{v} AS _hi"))
-    return interior.unionByName(boundary).selectExpr(*_RANGE_AGGS)
+    return _metadata_split(
+        ov, inside, schema_kinds, [(col, lo, hi)], agg_col,
+        ("n", f"{st}.s", f"{st}.lo", f"{st}.hi")).selectExpr(*_RANGE_AGGS)
 
 
 def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2187,13 +2304,10 @@ def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     a payload byte. Only legacy nullable blocks lacking the stat
     decode, and then only ``col``. One row out: ``n_nulls``."""
     exact = _null_count_sql(col)
-    interior = blocks.filter(f"({exact}) IS NOT NULL") \
-        .selectExpr(f"CAST({exact} AS BIGINT) AS _c")
-    legacy = blocks.filter(f"({exact}) IS NULL")
-    boundary = (decode_df(legacy, schema_kinds, columns=[col])
-                .filter(f"{_q(col)} IS NULL").selectExpr("1L AS _c"))
-    return (interior.unionByName(boundary).selectExpr(
-        "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_nulls"))
+    return _metadata_split(
+        blocks, f"({exact}) IS NOT NULL", schema_kinds, [(col, None, None)],
+        interior=(exact,)).selectExpr(
+            "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_nulls")
 
 
 def table_stats(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2471,9 +2585,9 @@ def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     from metadata; on an uncorrelated column it degrades gracefully to
     the scan — never to a wrong answer."""
     blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    return _metadata_count(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
+    return _metadata_split(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
                            _bounds_inside(blo, bhi, lo, hi), schema_kinds,
-                           [col], _between(schema_kinds, col, lo, hi))
+                           [(col, lo, hi)]).selectExpr(_COUNT_AGG)
 
 
 def _multi_pred(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2519,10 +2633,9 @@ def count_where_multi(blocks: DataFrame,
     payload decode, blocks any predicate excludes are pruned, and only
     straddlers decode (just the predicate columns). One row out:
     ``n_rows``."""
-    keep, inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
-                                                 preds)
-    return _metadata_count(blocks.filter(keep), inside, schema_kinds,
-                           pred_cols, row_f)
+    keep, inside, _row_f, _cols = _multi_pred(blocks, schema_kinds, preds)
+    return _metadata_split(blocks.filter(keep), inside, schema_kinds,
+                           preds).selectExpr(_COUNT_AGG)
 
 
 def bloom_keep_cond(col: str, value, kind: str, field: str = "bm") -> str:
@@ -2654,10 +2767,6 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     return dec
 
 
-_FETCH_WIDTHS = {K_I32: 4, K_I64: 8, K_TS: 8, K_DATE: 4, K_BOOL: 1,
-                 K_I8: 1, K_I16: 2}
-
-
 def _column_at_indices(blob: bytes, kind: str, n: int, arrow_type,
                        nullable: bool, idxs: np.ndarray) -> "pa.Array":
     """Values of one encoded column at row indices ``idxs`` — O(1)
@@ -2666,9 +2775,9 @@ def _column_at_indices(blob: bytes, kind: str, n: int, arrow_type,
     bitpck.h:203-225`), full-decode + take otherwise."""
     import pyarrow as pa
 
-    if kind in _FETCH_WIDTHS and not nullable:
-        w = _FETCH_WIDTHS[kind]
-        vals = ic.fetch_many(blob, idxs, n, width=w)
+    if kind in (K_I64, K_TS, *_INT_WIDTHS) and not nullable:
+        vals = ic.fetch_many(blob, idxs, n,
+                             width=_INT_WIDTHS.get(kind, 8))
         if kind == K_TS:
             return pa.array(vals, type=pa.int64()).cast(arrow_type)
         if kind == K_DATE:
@@ -3193,31 +3302,29 @@ def _topk_prune(blocks: DataFrame, lo: str, hi: str, k: int,
                 ascending: bool) -> DataFrame:
     """Keep the blocks that can hold one of the top ``k`` rows by the
     block bounds ``[lo, hi]`` (SQL), with the overlap-safe prefix rule
-    of :func:`topk_key`. The prefix walk runs over a METADATA-ONLY
-    projection (bounds + row counts; parquet column pruning keeps
-    payload bytes on disk), reduces to ONE (t, enough) row per bucket,
-    and joins back broadcast — the blocks table itself never
-    shuffles. Ascending mirrors with the bounds swapped."""
+    of :func:`topk_key`. The prefix that holds k rows has at most k
+    blocks, so an ORDER BY/LIMIT k over the ``(n, bound)`` projection
+    finds it — a TakeOrderedAndProject, no shuffle, and parquet column
+    pruning keeps payload bytes on disk — and the driver walks those
+    at most k rows to one threshold literal. Blocks without bounds
+    are always kept and never join the prefix; fewer than k rows in
+    bounded blocks keeps every block. Ascending mirrors with the
+    bounds swapped."""
     first, edge = (hi, lo) if ascending else (lo, hi)
-    order = "ASC" if ascending else "DESC"
-    th = (blocks.selectExpr("bucket", "n", f"{first} AS _lo")
-          .selectExpr("*", "coalesce(sum(n) OVER (PARTITION BY bucket "
-                      f"ORDER BY _lo {order} NULLS LAST ROWS BETWEEN "
-                      "UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS _prev")
-          .selectExpr("*", f"_prev < {_sql_lit(k)} AND _lo IS NOT NULL "
-                      "AS _pref")
-          .groupBy("bucket").agg(
-              F.expr(f"{'max' if ascending else 'min'}"
-                     "(CASE WHEN _pref THEN _lo END) AS _t"),
-              # fewer than k rows in the bucket => keep everything
-              F.expr("max(CASE WHEN _pref THEN _prev + n END) >= "
-                     f"{_sql_lit(k)} AS _enough")))
-    # desc: skip B iff k rows are provably above it (key_hi < t);
-    # asc: skip B iff k rows are provably below it (key_lo > t)
-    keep = (f"{edge} IS NULL OR _t IS NULL OR NOT coalesce(_enough, FALSE)"
-            f" OR {edge} {'<=' if ascending else '>='} _t")
-    return (blocks.join(F.broadcast(th), "bucket", "left").filter(keep)
-            .drop("_t", "_enough"))
+    need, t = k, None
+    for n, b in (blocks.selectExpr("n", f"{first} AS _b")
+                 .filter("_b IS NOT NULL").orderBy("_b", ascending=ascending)
+                 .limit(k).collect()):
+        need -= n
+        if need <= 0:
+            t = b
+            break
+    if t is None:
+        return blocks
+    # desc: skip B iff k rows are provably above it (edge = hi < t);
+    # asc: skip B iff k rows are provably below it (edge = lo > t)
+    return blocks.filter(f"{edge} IS NULL OR {edge} "
+                         f"{'<=' if ascending else '>='} {_sql_lit(t)}")
 
 
 def _topk_decode(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3241,8 +3348,8 @@ def topk_key(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     """ORDER BY lead key LIMIT k with zone-map pruning: decode only the
     blocks that can contribute to the top k. The prune is
     overlap-safe — it never assumes blocks are disjoint or sorted:
-    within each bucket, walk blocks by ``key_lo`` DESC and find the
-    smallest prefix whose row counts sum to >= k; every row of every
+    walk the table's blocks by ``key_lo`` DESC and find the smallest
+    prefix whose row counts sum to >= k; every row of every
     prefix block has key >= its block's key_lo >= t (t = the prefix's
     minimum key_lo), so any block with ``key_hi < t`` provably has k
     rows above it and is skipped. Degenerate layouts (nulls in bounds,
@@ -3266,8 +3373,8 @@ def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     ts" over an id-keyed table decodes only the blocks that can
     contribute (exactly as prunable as the column is correlated with
     block order; uncorrelated columns degrade to a full scan — never a
-    wrong answer). The walk runs on a metadata projection reduced to
-    one threshold row per bucket; payloads never shuffle."""
+    wrong answer). The threshold comes from at most k metadata rows;
+    nothing shuffles."""
     st = _stats_sql(col)
     kept = _topk_prune(blocks, f"{st}.lo", f"{st}.hi", k, ascending)
     return _topk_decode(kept, schema_kinds, col, k, ascending, columns)

@@ -268,16 +268,6 @@ def test_prune_plans_match_column_form(tables, kind):
          _ref_lookup_in(blocks, probes16)),
         (engine.lookup_in(blocks, kinds, col, probes100),
          _ref_lookup_in(blocks, probes100)),
-        (engine.range_count(blocks, kinds, col, lo, hi),
-         _ref_range_count(blocks, kinds, col, lo, hi)),
-        (engine.range_agg(blocks, kinds, col, lo, hi, "v"),
-         _ref_range_agg(blocks, kinds, col, lo, hi, "v")),
-        (engine.range_agg(blocks, kinds, col, lo, hi, "dc"),
-         _ref_range_agg(blocks, kinds, col, lo, hi, "dc")),
-        (engine.topk_key(blocks, kinds, col, 7),
-         _ref_topk_key(blocks, kinds, col, 7, False)),
-        (engine.topk_key(blocks, kinds, col, 7, ascending=True),
-         _ref_topk_key(blocks, kinds, col, 7, True)),
         (engine.lookup_where(blocks, kinds, "s", _sval(123)),
          _ref_lookup_where(blocks, "s", _sval(123), engine.K_STR)),
         (engine.lookup_where(blocks, kinds, "v", 369),
@@ -290,6 +280,42 @@ def test_prune_plans_match_column_form(tables, kind):
         assert g_pushed == r_pushed
     # the lead-key prune still reaches the parquet scan
     assert any("key_" in p for p in _plan(cases[0][0])[1])
+    # one pass over the blocks table where the refs union two scans:
+    # the same pushed prune, and the same answer
+    for got, ref in [
+            (engine.range_count(blocks, kinds, col, lo, hi),
+             _ref_range_count(blocks, kinds, col, lo, hi)),
+            (engine.range_agg(blocks, kinds, col, lo, hi, "v"),
+             _ref_range_agg(blocks, kinds, col, lo, hi, "v")),
+            (engine.range_agg(blocks, kinds, col, lo, hi, "dc"),
+             _ref_range_agg(blocks, kinds, col, lo, hi, "dc"))]:
+        assert set(_plan(got)[1]) == set(_plan(ref)[1])
+        assert got.collect() == ref.collect()
+    # top-k: the threshold literal pushes to the one scan, in place of
+    # the refs' per-bucket window and broadcast join; same answer
+    for asc in (False, True):
+        got = engine.topk_key(blocks, kinds, col, 7, ascending=asc)
+        assert _plan(got)[1] == _topk_threshold_filter(blocks, kind, 7, asc)
+        assert got.collect() \
+            == _ref_topk_key(blocks, kinds, col, 7, asc).collect()
+
+
+def _topk_threshold_filter(blocks, kind, k, ascending):
+    """The PushedFilters topk_key's prune must become, from a walk over
+    every bounded block's (bound, n) sorted in Python; none when the
+    key has no bounds (decimal keys)."""
+    lo, hi = ("key_slo", "key_shi") if kind == "str" \
+        else ("key_lo", "key_hi")
+    first, edge = (hi, lo) if ascending else (lo, hi)
+    need = k
+    for b, n in sorted(((r[first], r.n) for r in
+                        blocks.select(first, "n").collect()
+                        if r[first] is not None), reverse=not ascending):
+        need -= n
+        if need <= 0:
+            op = "LessThanOrEqual" if ascending else "GreaterThanOrEqual"
+            return [f"[Or(IsNull({edge}),{op}({edge},{b}))]"]
+    return ["[]"]
 
 
 @pytest.mark.parametrize("kind", list(KEYS))
@@ -310,6 +336,51 @@ def test_sql_builders_answer(tables, kind):
     assert [r.id for r in engine.topk_key(blocks, kinds, col, 3).collect()] \
         == [999, 998, 997]
     assert ids(engine.lookup_where(blocks, kinds, "s", _sval(77))) == [77]
+
+
+def _scans(df):
+    """Parquet scan nodes in ``df``'s physical plan."""
+    n, todo = 0, [df._jdf.queryExecution().sparkPlan()]
+    while todo:
+        node = todo.pop()
+        n += node.nodeName().startswith("Scan")
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return n
+
+
+def test_query_job_budget(spark, tables):
+    """Range aggregates and top-k run at most two Spark jobs each —
+    building the query included — and the metadata-split builders scan
+    the blocks table once."""
+    kinds, blocks = tables[0], tables[1]["i64"]
+    sc = spark.sparkContext
+    builders = {
+        "topk_key": lambda: engine.topk_key(blocks, kinds, "id", 7),
+        "topk_by": lambda: engine.topk_by(blocks, kinds, "v", 7,
+                                          ascending=True),
+        "range_agg": lambda: engine.range_agg(blocks, kinds, "id", 100,
+                                              650, "v"),
+        "agg_where": lambda: engine.agg_where(blocks, kinds, "v", 300,
+                                              1950, "id"),
+        "range_count": lambda: engine.range_count(blocks, kinds, "id",
+                                                  100, 650),
+    }
+    for name, build in builders.items():
+        sc.setJobGroup(f"budget-{name}", name)
+        try:
+            build().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(f"budget-{name}")
+        assert 1 <= len(jobs) <= 2, (name, jobs)
+    for df in (builders["range_agg"](), builders["agg_where"](),
+               builders["range_count"](),
+               engine.count_where(blocks, kinds, "v", 300, 1950),
+               engine.count_where_multi(blocks, kinds,
+                                        [("id", 100, 650), ("v", 0, 900)]),
+               engine.null_count(blocks, kinds, "v")):
+        assert _scans(df) == 1
 
 
 @pytest.mark.parametrize("v", [0, -5, 2 ** 63 - 1, -2 ** 63])

@@ -76,9 +76,11 @@ def main() -> None:
 
     sections.append((
         "range_agg (SUM/MIN/MAX/COUNT answered from block metadata)",
-        "Interior blocks read only the stats JSON column — no payload "
-        "bytes; boundary blocks decode two columns; the final agg is a "
-        "2-row-ish partial aggregate. NULL/absent stats degrade to the "
+        "One scan, one pass: the projection flags interior blocks and "
+        "nulls their payload and desc, so they cross to the kernel as "
+        "their stored stats alone; boundary blocks decode two columns "
+        "and reduce to one partial row inside the kernel. The final "
+        "agg folds one row per block. NULL/absent stats degrade to the "
         "decode path, never to a wrong answer.",
         plan_of(engine.range_agg(
             spark.read.parquet(bdir),
@@ -148,7 +150,8 @@ def main() -> None:
         "Blocks whose PREDICATE-column stats prove containment answer "
         "from the AGGREGATE column's stored (lo, hi, s) stats — no "
         "payload decode; only straddlers decode, and only two "
-        "columns.",
+        "columns, each reduced to one partial row in the same "
+        "kernel pass.",
         plan_of(engine.agg_where(
             spark.read.parquet(bdir),
             engine.column_kinds(events.schema), "user_id", 2, 8,
@@ -175,10 +178,11 @@ def main() -> None:
 
     sections.append((
         "topk_key (ORDER BY key LIMIT k, zone-pruned)",
-        "Only the per-bucket minimal block prefix that provably holds "
-        "the top k decodes (window over block METADATA, not rows); "
-        "TakeOrderedAndProject finishes — per-partition partial "
-        "top-k, no global sort.",
+        "Only blocks that can hold a top-k row decode: the threshold "
+        "literal, taken at planning from at most k (n, bound) metadata "
+        "rows, is a PushedFilter on the scan; TakeOrderedAndProject "
+        "finishes — per-partition partial top-k, no global sort, no "
+        "exchange.",
         plan_of(engine.topk_key(
             spark.read.parquet(bdir),
             engine.column_kinds(events.schema), "event_id", 10))))

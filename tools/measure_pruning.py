@@ -80,19 +80,9 @@ def main() -> None:
         evb.filter(engine.bloom_keep_cond("props", "no-such", "str"))
         .count())
 
-    # topk: candidate blocks after the per-bucket prefix rule
-    from pyspark.sql import Window
-    w = Window.partitionBy("bucket").orderBy(F.col("key_lo").desc())
-    prev = F.coalesce(F.sum("n").over(
-        w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0))
-    meta = evb.select("bucket", "n", "key_lo", "key_hi") \
-        .withColumn("_prev", prev)
-    th = meta.filter("_prev < 10").groupBy("bucket") \
-        .agg(F.min("key_lo").alias("_t"))
-    surv = evb.join(th, "bucket").filter(F.col("key_hi") >= F.col("_t")) \
-        .count()
+    # topk: candidate blocks after the engine's threshold prune
     add("topk_key (k=10)", "ORDER BY event_id DESC LIMIT 10", total,
-        surv)
+        engine._topk_prune(evb, "key_lo", "key_hi", 10, False).count())
 
     # --- z-order clustering (events, user_id x value) -------------------
     # Same table re-clustered by the Morton interleave of two mutually
