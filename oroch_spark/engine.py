@@ -30,6 +30,12 @@ Scale design (the 10^12-turn story):
   top-k threshold (at most k ``(n, bound)`` metadata rows, never a
   payload). The resume path's pending-bucket id list is bounded by
   n_buckets.
+- **Block index**: against a bare parquet scan of a persisted blocks
+  table, the point-query builders read its non-payload columns on the
+  driver (``_BlockIndex``, checked against the files on every use),
+  answer metadata-only queries with no Spark job and hand the payload
+  job only the blocks they keep; the top-k threshold then walks the
+  index instead of a planning read.
 """
 from __future__ import annotations
 
@@ -40,6 +46,7 @@ import json
 import os
 import re
 import time
+from dataclasses import dataclass
 from typing import Iterator, Optional
 
 import numpy as np
@@ -1973,6 +1980,277 @@ def _check_agg_kind(op: str, kind: str) -> None:
                          f"only, not kind {kind!r}")
 
 
+# ---------------------------------------------------------------------------
+# The Python prune rules and the driver-side block index
+# ---------------------------------------------------------------------------
+
+@dataclass
+class _KeyPred:
+    """Predicates on one column, normalized to a bounds envelope plus
+    an optional exact IN set (both in the prune domain): the filters
+    ``format("oroch")`` accepts, or a builder's range or probe values.
+    ``values`` doubles as the equality set."""
+    lo: Optional[object] = None
+    hi: Optional[object] = None
+    values: Optional[list] = None  # exact set (EqualTo / In)
+    neq: Optional[set] = None      # excluded set (Not(EqualTo/In))
+    raw: tuple = ()                # original literals for row filtering
+
+    @property
+    def wants_null(self) -> bool:
+        return any(op == "isnull" for op, _ in self.raw)
+
+    @property
+    def wants_notnull(self) -> bool:
+        return any(op == "notnull" for op, _ in self.raw)
+
+
+def _stats_overlap(stats_lo, stats_hi, pred: _KeyPred) -> bool:
+    """Can a container with [stats_lo, stats_hi] bounds hold any row
+    matching pred? Missing stats => True (never prune blind)."""
+    if stats_lo is None or stats_hi is None:
+        return True
+    if pred.values is not None:
+        if not pred.values:
+            return False
+        if not any(stats_lo <= v <= stats_hi for v in pred.values):
+            return False
+    if pred.lo is not None and stats_hi < pred.lo:
+        return False
+    if pred.hi is not None and stats_lo > pred.hi:
+        return False
+    if pred.neq and stats_lo == stats_hi and stats_lo in pred.neq:
+        # constant container: equal capped bounds imply lo == hi ==
+        # the stored bound exactly (floor(lo) == ceil(hi) squeezes),
+        # so every row is an excluded value. NOT(v = x) also rejects
+        # nulls, so a block with null rows still holds no match.
+        return False
+    return True
+
+
+def _stats_inside(stats_lo, stats_hi, pred: _KeyPred) -> bool:
+    """Does every value of a container with [stats_lo, stats_hi]
+    bounds match pred's range, so metadata alone answers its
+    aggregates? Missing stats => False (decode, never guess)."""
+    if stats_lo is None or stats_hi is None or pred.values is not None \
+            or pred.neq:
+        return False
+    return ((pred.lo is None or stats_lo >= pred.lo)
+            and (pred.hi is None or stats_hi <= pred.hi))
+
+
+# The block columns the index holds: all but the payload and the
+# per-block accounting.
+_INDEX_COLS = ("bucket", "block_idx", "n", "key_lo", "key_hi", "key_slo",
+               "key_shi", "desc")
+# A frame the index serves has these columns, and only block columns.
+_INDEX_NEEDS = frozenset(("bucket", "block_idx", "n", "desc", "payload"))
+_INDEX_KEEP = 4  # tables whose index stays cached at once
+_indexes: dict = {}  # ((path, ino, mtime_ns, size), ...) -> index | None
+
+
+def _scan_files(blocks: DataFrame) -> Optional[list[str]]:
+    """Local paths of the files ``blocks`` reads when it is a bare,
+    uncached parquet scan of a blocks table with no partition columns
+    (``spark.read.parquet(dir)``) — the listing Spark itself would
+    read. None for any other plan, schema or file system."""
+    from urllib.parse import unquote, urlparse
+
+    types = {f.name: f.dataType for f in BLOCK_SCHEMA.fields}
+    schema = blocks.schema
+    if not _INDEX_NEEDS <= set(schema.names) or any(
+            types.get(f.name) != f.dataType for f in schema.fields):
+        return None
+    try:
+        plan = blocks._jdf.queryExecution().withCachedData()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = plan.relation()
+        if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+                or rel.fileFormat().getClass().getSimpleName()
+                != "ParquetFileFormat"
+                or rel.partitionSchema().nonEmpty()):
+            return None
+        uris = [urlparse(u) for u in blocks.inputFiles()]
+    except Exception:  # not a classic scan: no index
+        return None
+    if any(u.scheme != "file" for u in uris):
+        return None
+    return [unquote(u.path) for u in uris]
+
+
+def _read_index(files: list[str]) -> "pa.Table":
+    """The ``_INDEX_COLS`` of every file, in order; a column a file
+    lacks reads as null, as Spark's read does (legacy files have no
+    ``key_slo``/``key_shi``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    want = _block_arrow_schema()
+    cols: dict[str, list] = {c: [] for c in _INDEX_COLS}
+    for f in files:
+        pf = pq.ParquetFile(f)
+        have = set(pf.schema_arrow.names)
+        t = pf.read(columns=[c for c in _INDEX_COLS if c in have])
+        for c in _INDEX_COLS:
+            typ = want.field(c).type
+            cols[c].append(t[c].cast(typ) if c in have
+                           else pa.nulls(t.num_rows, typ))
+    return pa.table({c: pa.chunked_array(v, type=want.field(c).type)
+                     for c, v in cols.items()})
+
+
+class _BlockIndex:
+    """The non-payload columns of a persisted blocks table, held on the
+    driver: per block its ``(bucket, block_idx)``, row count ``n``,
+    lead-key bounds and parsed descriptor. Oroch keeps a container's
+    group descriptors in process and checks them before it touches a
+    payload (`integer_array.h:192-208`); the builders do the same here.
+    They decide kept, interior and boundary blocks in Python with
+    :func:`_stats_overlap` / :func:`_stats_inside`, answer
+    metadata-only queries with no Spark job, and give the payload job
+    only the kept blocks (:meth:`narrow`).
+
+    :meth:`of` returns an index only for a bare parquet scan of a
+    blocks table (:func:`_scan_files`) whose ``(bucket, block_idx)``
+    are unique, and checks it on every use against each file's
+    ``(st_ino, st_mtime_ns, st_size)`` the way ``_zipcache`` checks
+    archives. Otherwise it returns None and the builder takes its SQL
+    path: the index only ever narrows what is read."""
+
+    __slots__ = ("n", "ids", "key", "skey", "cols")
+
+    def __init__(self, t: "pa.Table"):
+        self.n = t["n"].to_pylist()
+        self.ids = list(zip(t["bucket"].to_pylist(),
+                            t["block_idx"].to_pylist()))
+        if len(set(self.ids)) < len(self.ids) or any(None in i
+                                                      for i in self.ids):
+            # the membership filter could not single these blocks out
+            raise ValueError("block ids are not unique")
+        self.key = list(zip(t["key_lo"].to_pylist(),
+                            t["key_hi"].to_pylist()))
+        self.skey = list(zip(t["key_slo"].to_pylist(),
+                             t["key_shi"].to_pylist()))
+        self.cols = [{d["n"]: d for d in json.loads(s)["cols"]}
+                     for s in t["desc"].to_pylist()]
+
+    @classmethod
+    def of(cls, blocks: DataFrame) -> Optional["_BlockIndex"]:
+        files = _scan_files(blocks)
+        if files is None:
+            return None
+        try:  # stat before the read: a change after it rebuilds
+            key = tuple((f, st.st_ino, st.st_mtime_ns, st.st_size)
+                        for f, st in zip(files, map(os.stat, files)))
+        except OSError:
+            return None
+        if key not in _indexes:
+            try:
+                ix = cls(_read_index(files))
+            except Exception:  # unreadable or ambiguous: no index
+                ix = None
+            while len(_indexes) >= _INDEX_KEEP:
+                del _indexes[next(iter(_indexes))]
+            _indexes[key] = ix
+        return _indexes[key]
+
+    def __len__(self) -> int:
+        return len(self.n)
+
+    def bounds(self, i: int, probe) -> tuple:
+        """Block ``i``'s lead-key bounds in ``probe``'s domain: the
+        lexicographic pair for a string, else the int64 pair."""
+        return self.skey[i] if isinstance(probe, str) else self.key[i]
+
+    def stats(self, i: int, col: str, probe) -> tuple:
+        """Block ``i``'s per-column bounds of ``col`` in ``probe``'s
+        domain, (None, None) when it has none."""
+        d = self.cols[i].get(col, {})
+        return (d.get("slo"), d.get("shi")) if isinstance(probe, str) \
+            else (d.get("lo"), d.get("hi"))
+
+    def nulls(self, i: int, col: str) -> Optional[int]:
+        """Block ``i``'s exact null count of ``col`` (as
+        :func:`_null_count_sql`): every row when the block predates the
+        column, 0 when it is not nullable, else the stored ``nc`` (None
+        for a legacy block)."""
+        d = self.cols[i].get(col)
+        return self.n[i] if d is None else d.get("nc") if d.get("z") else 0
+
+    def narrow(self, blocks: DataFrame, keep: list[int]) -> DataFrame:
+        """``blocks`` cut to the blocks at positions ``keep``, by a
+        pushable ``bucket = b AND block_idx IN (...)`` filter built from
+        the Python decision (so not a second rule set)."""
+        if len(keep) == len(self):
+            return blocks
+        by_bucket: dict = {}
+        for i in keep:
+            b, j = self.ids[i]
+            by_bucket.setdefault(b, []).append(_sql_lit(j))
+        return blocks.filter(" OR ".join(
+            f"(bucket = {int(b)} AND block_idx IN ({', '.join(js)}))"
+            for b, js in sorted(by_bucket.items())) or "FALSE")
+
+    def split(self, blocks: DataFrame, keep, inside, interior,
+              schema_kinds: list[tuple[str, str]], preds: list[tuple],
+              agg_col: Optional[str] = None) -> list[tuple]:
+        """Partials ``(_c, _s, _lo, _hi)`` of the blocks ``keep(i)``
+        accepts: those ``inside(i)`` accepts from ``interior(i)`` on the
+        driver, the boundary rest from :func:`make_partials_fn` in one
+        job over just those blocks (no shuffle)."""
+        parts, boundary = [], []
+        for i in range(len(self)):
+            if keep(i):
+                if inside(i):
+                    parts.append(interior(i))
+                else:
+                    boundary.append(i)
+        if boundary:
+            parts += _metadata_split(self.narrow(blocks, boundary), "FALSE",
+                                     schema_kinds, preds, agg_col).collect()
+        return parts
+
+
+def _longs(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.LongType()) for n in names])
+
+
+def _local_df(spark, schema: T.StructType,
+              columns: Optional[list[list]] = None) -> DataFrame:
+    """A LocalRelation of ``columns`` (python lists, one per field; no
+    rows when None). Built from a pyarrow Table: a list or pandas
+    ``createDataFrame`` is a Python RDD, whose every read starts Python
+    workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = arrow.empty_table() if columns is None else pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
+def _fold_partials(spark, parts: list[tuple], aggs: bool,
+                   name: str = "n_rows") -> DataFrame:
+    """One local row from metadata-split partials: the count ``name``,
+    and with ``aggs`` the exact sum, min and max (``_RANGE_AGGS`` on
+    the driver). A sum past int64 raises, as Spark's own sum does."""
+    n = sum(p[0] or 0 for p in parts)
+    if not aggs:
+        return _local_df(spark, _longs(name), [[n]])
+    s, lo, hi = ([p[j] for p in parts if p[j] is not None]
+                 for j in (1, 2, 3))
+    s = sum(s) if s else None
+    if s is not None and not -(1 << 63) <= s < (1 << 63):
+        raise OverflowError("[ARITHMETIC_OVERFLOW] the sum overflows "
+                            "BIGINT")
+    return _local_df(spark, _longs("n_rows", "sum_v", "min_v", "max_v"),
+                     [[n], [s], [min(lo) if lo else None],
+                      [max(hi) if hi else None]])
+
+
 def prune_blocks(blocks: DataFrame, value) -> DataFrame:
     """Zone-map block skip: drop blocks whose key bounds cannot contain
     the key — the analogue of the reference's metadata-pruned ``find``
@@ -2067,6 +2345,14 @@ def _contained_cond(blocks: DataFrame, lo, hi) -> str:
     if "key_lo" not in blocks.columns:
         return "FALSE"
     return _bounds_inside("key_lo", "key_hi", int(lo), int(hi))
+
+
+def _key_inside(blocks: DataFrame, key_col: str, lo, hi) -> str:
+    """SQL: every row of the block has its lead key in [lo, hi] — the
+    bounds are inside (:func:`_contained_cond`) and no key is null (a
+    null never matches, and the bounds skip nulls)."""
+    return (f"({_contained_cond(blocks, lo, hi)}) "
+            f"AND {_stats_sql(key_col)}.z IS NULL")
 
 
 def _pred_domain(kind: str, lo, hi):
@@ -2193,6 +2479,42 @@ def _metadata_split(ov: DataFrame, inside: str,
 _COUNT_AGG = "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_rows"
 
 
+def _index_split(blocks: DataFrame, ix: _BlockIndex,
+                 schema_kinds: list[tuple[str, str]], preds: list[tuple],
+                 agg_col: Optional[str] = None,
+                 lead: bool = False) -> DataFrame:
+    """:func:`_metadata_split` decided on the block index, for an AND of
+    ``(col, lo, hi)`` range predicates checked against each column's
+    stats (the lead-key bounds with ``lead``). A block some predicate
+    excludes is dropped; a block every predicate contains, with no null
+    in a predicate column, answers on the driver from its row count
+    ``n`` and, with ``agg_col``, that
+    column's stored ``(s, lo, hi)`` (without them it is a boundary
+    block); the boundary rest reduce in one job. One local row, folded
+    as ``_COUNT_AGG`` or, with ``agg_col``, ``_RANGE_AGGS``."""
+    preds = [(c, lo, hi) if isinstance(lo, str) else (c, int(lo), int(hi))
+             for c, lo, hi in preds]
+    tests = [(c, lo, _KeyPred(lo=lo, hi=hi)) for c, lo, hi in preds]
+
+    def bounds(i, c, lo):
+        return ix.bounds(i, lo) if lead else ix.stats(i, c, lo)
+
+    def agg(i):
+        d = ix.cols[i].get(agg_col, {})
+        return d.get("s"), d.get("lo"), d.get("hi")
+
+    parts = ix.split(
+        blocks,
+        lambda i: all(_stats_overlap(*bounds(i, c, lo), p)
+                      for c, lo, p in tests),
+        lambda i: all(_stats_inside(*bounds(i, c, lo), p)
+                      and not ix.cols[i].get(c, {}).get("z")
+                      for c, lo, p in tests)
+        and (agg_col is None or None not in agg(i)),
+        lambda i: (ix.n[i], *agg(i)), schema_kinds, preds, agg_col)
+    return _fold_partials(blocks.sparkSession, parts, agg_col is not None)
+
+
 def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                 key_col: str, lo, hi) -> DataFrame:
     """COUNT(*) over a key range with aggregate pushdown to block
@@ -2205,9 +2527,14 @@ def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     parquet-scan speed."""
     if not isinstance(lo, str):
         lo, hi = int(lo), int(hi)
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        return _index_split(blocks, ix, schema_kinds, [(key_col, lo, hi)],
+                            lead=True)
     ov = prune_blocks_range(blocks, lo, hi)
-    return _metadata_split(ov, _contained_cond(ov, lo, hi), schema_kinds,
-                           [(key_col, lo, hi)]).selectExpr(_COUNT_AGG)
+    return _metadata_split(ov, _key_inside(ov, key_col, lo, hi),
+                           schema_kinds, [(key_col, lo, hi)]
+                           ).selectExpr(_COUNT_AGG)
 
 
 _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
@@ -2236,13 +2563,12 @@ _RANGE_AGGS = (_COUNT_AGG, "CAST(sum(_s) AS BIGINT) AS sum_v",
 
 def _metadata_agg(ov: DataFrame, inside: str,
                   schema_kinds: list[tuple[str, str]], col: str, lo, hi,
-                  agg_col: str, op: str) -> DataFrame:
+                  agg_col: str) -> DataFrame:
     """SUM/MIN/MAX/COUNT of ``agg_col`` split on metadata: blocks that
     ``inside`` (SQL) accepts and that carry ``agg_col``'s (lo, hi, s)
     stats answer from them; the rest reduce the rows with
     ``lo <= col <= hi`` in the partials kernel. One row out:
     (n_rows, sum_v, min_v, max_v) in the int64 codec domain."""
-    _check_agg_kind(op, dict(schema_kinds)[agg_col])
     st = _stats_sql(agg_col)
     inside = (f"({inside}) AND ({st}.lo IS NOT NULL AND {st}.hi IS NOT NULL"
               f" AND {st}.s IS NOT NULL)")
@@ -2264,11 +2590,16 @@ def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     in the int64 codec domain. At 100 TB a wide range is almost all
     interior blocks, so the answer streams from the parquet metadata
     columns at scan speed."""
+    _check_agg_kind("range_agg", dict(schema_kinds)[agg_col])
     if not isinstance(lo, str):
         lo, hi = int(lo), int(hi)
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        return _index_split(blocks, ix, schema_kinds, [(key_col, lo, hi)],
+                            agg_col, lead=True)
     ov = prune_blocks_range(blocks, lo, hi)
-    return _metadata_agg(ov, _contained_cond(ov, lo, hi), schema_kinds,
-                         key_col, lo, hi, agg_col, "range_agg")
+    return _metadata_agg(ov, _key_inside(ov, key_col, lo, hi),
+                         schema_kinds, key_col, lo, hi, agg_col)
 
 
 def _stats_sql(col: str) -> str:
@@ -2303,6 +2634,13 @@ def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     evolution) contribute their full row count — all without touching
     a payload byte. Only legacy nullable blocks lacking the stat
     decode, and then only ``col``. One row out: ``n_nulls``."""
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        parts = ix.split(
+            blocks, lambda i: True, lambda i: ix.nulls(i, col) is not None,
+            lambda i: (ix.nulls(i, col), None, None, None), schema_kinds,
+            [(col, None, None)])
+        return _fold_partials(blocks.sparkSession, parts, False, "n_nulls")
     exact = _null_count_sql(col)
     return _metadata_split(
         blocks, f"({exact}) IS NOT NULL", schema_kinds, [(col, None, None)],
@@ -2324,6 +2662,9 @@ def table_stats(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     ``decode_df`` away if a column needs them. Single metadata scan,
     one O(columns)-row exchange."""
     cols = [n for n, _ in schema_kinds] if columns is None else columns
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        return _index_table_stats(blocks.sparkSession, ix, cols)
     entries = []
     for c in cols:
         st = _stats_sql(c)
@@ -2348,6 +2689,40 @@ def table_stats(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         f"{known('max', 'shi')} AS max_str")))
 
 
+_TABLE_STATS = T.StructType([
+    T.StructField("col", T.StringType()), *_longs(
+        "n_rows", "n_nulls", "min_long", "max_long").fields,
+    T.StructField("min_str", T.StringType()),
+    T.StructField("max_str", T.StringType())])
+
+
+def _index_table_stats(spark, ix: _BlockIndex, cols: list[str]) -> DataFrame:
+    """:func:`table_stats` answered from the block index: one local row
+    per column, a global value NULL when some block lacks its stat."""
+    if not len(ix):
+        return _local_df(spark, _TABLE_STATS)
+
+    def known(vals, agg):
+        return None if None in vals else agg(vals)
+
+    rows = []
+    for c in cols:
+        ds = [cs.get(c, {}) for cs in ix.cols]
+        rows.append((c, sum(ix.n),
+                     known([ix.nulls(i, c) for i in range(len(ix))], sum),
+                     known([d.get("lo") for d in ds], min),
+                     known([d.get("hi") for d in ds], max),
+                     known([d.get("slo") for d in ds], min),
+                     known([d.get("shi") for d in ds], max)))
+    return _local_df(spark, _TABLE_STATS,
+                     [list(v) for v in zip(*rows)] if rows else None)
+
+
+def _no_sketch(col: str, missing: int) -> ValueError:
+    return ValueError(f"approx_distinct({col!r}): {missing} blocks carry "
+                      f"no HLL sketch — re-encode with sketch_cols=[{col!r}]")
+
+
 def approx_distinct(blocks: DataFrame, col: str) -> DataFrame:
     """APPROX COUNT(DISTINCT ``col``) from per-block HLL sketches alone
     (``sketch_cols`` at encode): registers merge by elementwise max —
@@ -2356,12 +2731,25 @@ def approx_distinct(blocks: DataFrame, col: str) -> DataFrame:
     O(partitions x 2 KiB). Raises at execution if any block lacks the
     sketch (a silent fallback would quietly change the cost class).
     One row out: ``approx_ndv`` (stderr ~1.04/sqrt(2^_HLL_P) ~ 2.3%).
+    With a block index the registers merge on the driver and a missing
+    sketch raises at once; no job runs.
     """
+    m = 1 << _HLL_P
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        sketches = [cs.get(col, {}).get("hll") for cs in ix.cols]
+        if None in sketches:
+            raise _no_sketch(col, sketches.count(None))
+        regs = np.zeros(m, dtype=np.uint8)
+        for s in sketches:
+            np.maximum(regs, np.frombuffer(base64.b64decode(s),
+                                           dtype=np.uint8), out=regs)
+        return _local_df(blocks.sparkSession, _longs("approx_ndv"),
+                         [[_hll_estimate(regs)]])
     rows = blocks.selectExpr(f"{_stats_sql(col)}.hll AS hll")
     part_schema = T.StructType([
         T.StructField("regs", T.BinaryType()),
         T.StructField("missing", T.LongType())])
-    m = 1 << _HLL_P
 
     def partial(batches):
         regs = np.zeros(m, dtype=np.uint8)
@@ -2385,9 +2773,7 @@ def approx_distinct(blocks: DataFrame, col: str) -> DataFrame:
                 np.maximum(regs, np.frombuffer(b, dtype=np.uint8),
                            out=regs)
         if missing:
-            raise ValueError(
-                f"approx_distinct({col!r}): {missing} blocks carry no "
-                f"HLL sketch — re-encode with sketch_cols=[{col!r}]")
+            raise _no_sketch(col, missing)
         yield pd.DataFrame({"approx_ndv": [_hll_estimate(regs)]})
 
     return (rows.mapInPandas(partial, schema=part_schema)
@@ -2584,6 +2970,9 @@ def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     event_id-keyed table) a wide predicate is answered almost entirely
     from metadata; on an uncorrelated column it degrades gracefully to
     the scan — never to a wrong answer."""
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        return _index_split(blocks, ix, schema_kinds, [(col, lo, hi)])
     blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
     return _metadata_split(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
                            _bounds_inside(blo, bhi, lo, hi), schema_kinds,
@@ -2633,6 +3022,9 @@ def count_where_multi(blocks: DataFrame,
     payload decode, blocks any predicate excludes are pruned, and only
     straddlers decode (just the predicate columns). One row out:
     ``n_rows``."""
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        return _index_split(blocks, ix, schema_kinds, preds)
     keep, inside, _row_f, _cols = _multi_pred(blocks, schema_kinds, preds)
     return _metadata_split(blocks.filter(keep), inside, schema_kinds,
                            preds).selectExpr(_COUNT_AGG)
@@ -2856,6 +3248,20 @@ def make_lookup_fn(kinds: list[tuple[str, str]], key_col: str, value,
     return lookup_blocks
 
 
+def _lookup_blocks(blocks: DataFrame, values: list, sql_prune):
+    """The blocks a lookup of ``values`` must read. The block index
+    keeps those whose lead-key bounds can hold a value, or gives None
+    when no block can, which answers the lookup with no job; with no
+    index, ``sql_prune()`` prunes."""
+    ix = _BlockIndex.of(blocks)
+    if ix is None:
+        return sql_prune()
+    pred = _KeyPred(values=values)
+    keep = [i for i in range(len(ix))
+            if _stats_overlap(*ix.bounds(i, values[0]), pred)]
+    return ix.narrow(blocks, keep) if keep else None
+
+
 def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
            key_col: str, value) -> DataFrame:
     """Point lookup against the PERSISTED blocks table (no re-encode):
@@ -2875,7 +3281,11 @@ def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     arrow_schema = to_arrow_schema(out_schema)
     fn = make_lookup_fn(schema_kinds, key_col, value,
                         arrow_schema.serialize().to_pybytes())
-    return prune_blocks(blocks, value).mapInArrow(fn, schema=out_schema)
+    kept = _lookup_blocks(blocks, [value], lambda: prune_blocks(blocks,
+                                                                value))
+    if kept is None:
+        return _local_df(blocks.sparkSession, out_schema)
+    return kept.mapInArrow(fn, schema=out_schema)
 
 
 def lookup_in(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2902,8 +3312,11 @@ def lookup_in(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     arrow_schema = to_arrow_schema(out_schema)
     fn = make_lookup_fn(schema_kinds, key_col, list(values),
                         arrow_schema.serialize().to_pybytes())
-    return prune_blocks_in(blocks, values).mapInArrow(fn,
-                                                      schema=out_schema)
+    kept = _lookup_blocks(blocks, values,
+                          lambda: prune_blocks_in(blocks, values))
+    if kept is None:
+        return _local_df(blocks.sparkSession, out_schema)
+    return kept.mapInArrow(fn, schema=out_schema)
 
 
 def make_group_count_fn(col: str, arrow_schema_bytes: bytes):
@@ -3079,10 +3492,15 @@ def agg_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     row out: (n_rows, sum_v, min_v, max_v) in the int64 codec domain.
     On a predicate correlated with block order a wide range is almost
     all interior blocks — answered at desc-scan speed."""
+    _check_agg_kind("agg_where", dict(schema_kinds)[agg_col])
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        return _index_split(blocks, ix, schema_kinds, [(col, lo, hi)],
+                            agg_col)
     blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
     return _metadata_agg(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
                          _bounds_inside(blo, bhi, lo, hi), schema_kinds,
-                         col, lo, hi, agg_col, "agg_where")
+                         col, lo, hi, agg_col)
 
 
 # lookup_join block-prune grid: the bucket width is the AVERAGE block
@@ -3298,27 +3716,48 @@ def lookup_join(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     return out
 
 
+def _topk_threshold(walk, k: int):
+    """The bound at which the ``(bound, n)`` pairs, in walk order,
+    first reach ``k`` rows; None when they hold fewer."""
+    for b, n in walk:
+        k -= n
+        if k <= 0:
+            return b
+    return None
+
+
 def _topk_prune(blocks: DataFrame, lo: str, hi: str, k: int,
-                ascending: bool) -> DataFrame:
+                ascending: bool, bounds) -> DataFrame:
     """Keep the blocks that can hold one of the top ``k`` rows by the
     block bounds ``[lo, hi]`` (SQL), with the overlap-safe prefix rule
     of :func:`topk_key`. The prefix that holds k rows has at most k
-    blocks, so an ORDER BY/LIMIT k over the ``(n, bound)`` projection
-    finds it — a TakeOrderedAndProject, no shuffle, and parquet column
-    pruning keeps payload bytes on disk — and the driver walks those
-    at most k rows to one threshold literal. Blocks without bounds
-    are always kept and never join the prefix; fewer than k rows in
-    bounded blocks keeps every block. Ascending mirrors with the
-    bounds swapped."""
+    blocks. With a block index the driver walks every block's
+    ``bounds(ix, i)`` to the threshold and keeps the blocks that reach
+    it (:func:`_stats_overlap`); without one an ORDER BY/LIMIT k over
+    the ``(n, bound)`` projection finds the prefix — a
+    TakeOrderedAndProject, no shuffle, and parquet column pruning keeps
+    payload bytes on disk — and the threshold becomes one literal
+    filter. Blocks without bounds are always kept and never join the
+    prefix; fewer than k rows in bounded blocks keeps every block.
+    Ascending mirrors with the bounds swapped."""
     first, edge = (hi, lo) if ascending else (lo, hi)
-    need, t = k, None
-    for n, b in (blocks.selectExpr("n", f"{first} AS _b")
-                 .filter("_b IS NOT NULL").orderBy("_b", ascending=ascending)
-                 .limit(k).collect()):
-        need -= n
-        if need <= 0:
-            t = b
-            break
+    ix = _BlockIndex.of(blocks)
+    if ix is not None:
+        b = [bounds(ix, i) for i in range(len(ix))]
+        t = _topk_threshold(sorted(
+            ((x[ascending], n) for x, n in zip(b, ix.n)
+             if x[ascending] is not None),
+            key=lambda p: p[0], reverse=not ascending), k)
+        if t is None:
+            return blocks
+        # desc: keep B iff it reaches up to t; asc: down to t
+        pred = _KeyPred(hi=t) if ascending else _KeyPred(lo=t)
+        return ix.narrow(blocks, [i for i, x in enumerate(b)
+                                  if _stats_overlap(*x, pred)])
+    t = _topk_threshold(blocks.selectExpr(f"{first} AS _b", "n")
+                        .filter("_b IS NOT NULL")
+                        .orderBy("_b", ascending=ascending)
+                        .limit(k).collect(), k)
     if t is None:
         return blocks
     # desc: skip B iff k rows are provably above it (edge = hi < t);
@@ -3356,10 +3795,11 @@ def topk_key(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     fewer than k rows) keep everything. The decode then feeds Spark's
     TakeOrderedAndProject — per-partition partial top-k, no global
     sort. (Ascending mirrors with the bounds swapped and negated.)"""
-    lo, hi = ("key_slo", "key_shi") \
-        if dict(schema_kinds)[key_col] == K_STR else ("key_lo", "key_hi")
+    is_str = dict(schema_kinds)[key_col] == K_STR
+    lo, hi = ("key_slo", "key_shi") if is_str else ("key_lo", "key_hi")
     if lo in blocks.columns:
-        blocks = _topk_prune(blocks, lo, hi, k, ascending)
+        blocks = _topk_prune(blocks, lo, hi, k, ascending,
+                             lambda ix, i: (ix.skey if is_str else ix.key)[i])
     return _topk_decode(blocks, schema_kinds, key_col, k, ascending,
                         columns)
 
@@ -3376,7 +3816,8 @@ def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     wrong answer). The threshold comes from at most k metadata rows;
     nothing shuffles."""
     st = _stats_sql(col)
-    kept = _topk_prune(blocks, f"{st}.lo", f"{st}.hi", k, ascending)
+    kept = _topk_prune(blocks, f"{st}.lo", f"{st}.hi", k, ascending,
+                       lambda ix, i: ix.stats(i, col, 0))
     return _topk_decode(kept, schema_kinds, col, k, ascending, columns)
 
 

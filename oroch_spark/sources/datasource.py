@@ -119,6 +119,7 @@ from pyspark.sql.datasource import (
 )
 
 from .. import engine
+from ..engine import _KeyPred, _stats_overlap
 
 SIDECAR = "_oroch_table.json"
 _BATCH_DIR = "_batches"   # streaming sink's per-batch manifests
@@ -289,26 +290,6 @@ def _domain_of(v):
     if type(v) is datetime.date:
         return (v - datetime.date(1970, 1, 1)).days
     return None  # float / naive datetime / anything ambiguous
-
-
-@dataclass
-class _KeyPred:
-    """Accepted pushed-down predicates on the lead key, normalized to a
-    bounds envelope plus an optional exact IN set (both in the prune
-    domain). ``values`` doubles as the equality set."""
-    lo: Optional[object] = None
-    hi: Optional[object] = None
-    values: Optional[list] = None  # exact set (EqualTo / In)
-    neq: Optional[set] = None      # excluded set (Not(EqualTo/In))
-    raw: tuple = ()                # original literals for row filtering
-
-    @property
-    def wants_null(self) -> bool:
-        return any(op == "isnull" for op, _ in self.raw)
-
-    @property
-    def wants_notnull(self) -> bool:
-        return any(op == "notnull" for op, _ in self.raw)
 
 
 def _translate(filters: list["Filter"], cols_ok: set[str]):
@@ -483,29 +464,6 @@ def _pred_is_str(pred: _KeyPred) -> bool:
         return any(op in ("sw", "ew", "ct", "nsw", "new", "nct")
                    for op, _ in pred.raw)
     return isinstance(probe, str)
-
-
-def _stats_overlap(stats_lo, stats_hi, pred: _KeyPred) -> bool:
-    """Can a container with [stats_lo, stats_hi] bounds hold any row
-    matching pred? Missing stats => True (never prune blind)."""
-    if stats_lo is None or stats_hi is None:
-        return True
-    if pred.values is not None:
-        if not pred.values:
-            return False
-        if not any(stats_lo <= v <= stats_hi for v in pred.values):
-            return False
-    if pred.lo is not None and stats_hi < pred.lo:
-        return False
-    if pred.hi is not None and stats_lo > pred.hi:
-        return False
-    if pred.neq and stats_lo == stats_hi and stats_lo in pred.neq:
-        # constant container: equal capped bounds imply lo == hi ==
-        # the stored bound exactly (floor(lo) == ceil(hi) squeezes),
-        # so every row is an excluded value. NOT(v = x) also rejects
-        # nulls, so a block with null rows still holds no match.
-        return False
-    return True
 
 
 # ---------------------------------------------------------------------------
@@ -1581,8 +1539,10 @@ def stream_sink_blocks(spark, path: str, as_of_batch: int | None = None):
         raise FileNotFoundError(f"no committed stream batches in {path}")
     blocks = spark.read.parquet(*[os.path.join(path, f)
                                   for f, _ in pairs])
-    fmap = spark.createDataFrame(pairs, "fname string, batch_id long") \
-        .withColumnRenamed("fname", "_file")
+    fmap = engine._local_df(spark, T.StructType([
+        T.StructField("_file", T.StringType()),
+        T.StructField("batch_id", T.LongType())]),
+        [list(c) for c in zip(*pairs)])
     return (blocks
             .withColumn("_file", F.element_at(
                 F.split(F.input_file_name(), "/"), -1))

@@ -50,7 +50,7 @@ import time
 import uuid
 from typing import Optional
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from .. import engine
 from .datasource import (
@@ -388,9 +388,9 @@ def table_changes(spark, path: str, from_batch: int,
             inc_blocks=base_blocks,
             tombstone_col=tomb_known).select(*key_cols)
     else:
-        base = spark.createDataFrame(
-            [], ", ".join(f"{c} {engine.spark_type_of(dict(kinds)[c]).simpleString()}"
-                          for c in key_cols))
+        base = engine._local_df(spark, T.StructType([
+            T.StructField(c, engine.spark_type_of(dict(kinds)[c]))
+            for c in key_cols]))
     existed = base.withColumn("_existed", F.lit(True))
     out = changed.join(existed, key_cols, "left")
     if tombstone_col and tombstone_col in dict(kinds):

@@ -1,0 +1,264 @@
+"""The driver-side block index (``engine._BlockIndex``).
+
+- a bare parquet scan of a blocks table uses it; any other frame
+  (``select("*")``, a filter, a union, a cached or unpersisted encode)
+  takes the SQL path, and every path gives the brute-force answers;
+- it is checked against the files on every use: a file rewritten in
+  place between two queries on one DataFrame gives the new answer;
+- odd layouts — a legacy file without ``key_slo``/``key_shi``, two
+  files repeating a ``(bucket, block_idx)``, old and new files in one
+  directory — give the brute-force answers;
+- metadata-only answers run no Spark job; boundary blocks and top-k
+  run one.
+"""
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from oroch_spark import engine
+
+N = 1000
+RANGES = [(150, 449), (200, 399), (5000, 6000), (-50, 2000)]
+
+
+def _sval(i):
+    return f"s{i:04d}"
+
+
+KEY = {"k": lambda i: i, "s": _sval}
+
+
+def _source(lo=0, hi=N, shift=0):
+    ks = list(range(lo, hi))
+    return pa.table({
+        "k": pa.array(ks, pa.int64()),
+        "s": pa.array([_sval(i) for i in ks]),
+        "v": pa.array([(i * 7 + shift) % 501 for i in ks], pa.int64()),
+        "u": pa.array([None if i % 10 == 3 else i * 2 for i in ks],
+                      pa.int64()),
+    })
+
+
+def _blocks(spark, t, key, **kw):
+    """The encoded blocks of ``t`` as an Arrow table: one bucket, so
+    every block holds a contiguous run of keys."""
+    return engine.encode_df(spark.createDataFrame(t), [key], n_buckets=1,
+                            block_rows=100, sketch_cols=["v"],
+                            **kw).toArrow()
+
+
+def _write(t, path, drop=()):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(t.drop_columns(list(drop)), path)
+
+
+def _brute(t, kc):
+    key = KEY[kc]
+    k = t["k"].to_pylist()
+    rows = lambda keys: sorted(i for i in k if i in keys)  # noqa: E731
+    out = {"hit": rows({123}), "miss": [],
+           "in": rows({5, 505}), "in_miss": []}
+    for lo, hi in RANGES:
+        sel = t.filter(pc.and_(pc.greater_equal(t["k"], lo),
+                               pc.less_equal(t["k"], hi)))["v"]
+        out[("count", lo, hi)] = len(sel)
+        out[("agg", lo, hi)] = (len(sel), pc.sum(sel).as_py(),
+                                pc.min(sel).as_py(), pc.max(sel).as_py())
+    v = t["v"]
+    in_v = pc.and_(pc.greater_equal(v, 100), pc.less_equal(v, 200))
+    out["cw"] = pc.sum(in_v.cast(pa.int64())).as_py()
+    sel = t.filter(in_v)["k"]
+    out["aw"] = (len(sel), pc.sum(sel).as_py(), pc.min(sel).as_py(),
+                 pc.max(sel).as_py())
+    out["cwm"] = t.filter(pc.and_(
+        pc.and_(pc.greater_equal(t["k"], 100), pc.less_equal(t["k"], 700)),
+        pc.less_equal(v, 250))).num_rows
+    out["nulls"] = t["u"].null_count
+    stats = [("k", min(k), max(k), None, None),
+             ("s", None, None, min(t["s"].to_pylist()),
+              max(t["s"].to_pylist())),
+             ("v", pc.min(v).as_py(), pc.max(v).as_py(), None, None),
+             ("u", None, None, None, None)]
+    out["stats"] = sorted((c, t.num_rows, t[c].null_count, a, b, x, y)
+                          for c, a, b, x, y in stats)
+    out["topk"] = sorted(k, reverse=True)[:7]
+    out["topk_asc"] = sorted(k)[:7]
+    out["topk_by"] = sorted(v.to_pylist(), reverse=True)[:5]
+    out["ndv"] = len(pc.unique(v))
+    return key, out
+
+
+def _answers(blocks, kinds, kc):
+    key = KEY[kc]
+    ids = lambda df: sorted(r.k for r in df.collect())  # noqa: E731
+    out = {"hit": ids(engine.lookup(blocks, kinds, kc, key(123))),
+           "miss": ids(engine.lookup(blocks, kinds, kc, key(5000))),
+           "in": ids(engine.lookup_in(blocks, kinds, kc,
+                                      [key(5), key(505), key(5000)])),
+           "in_miss": ids(engine.lookup_in(blocks, kinds, kc,
+                                           [key(5000), key(6000)]))}
+    for lo, hi in RANGES:
+        out[("count", lo, hi)] = engine.range_count(
+            blocks, kinds, kc, key(lo), key(hi)).first().n_rows
+        out[("agg", lo, hi)] = tuple(engine.range_agg(
+            blocks, kinds, kc, key(lo), key(hi), "v").first())
+    out["cw"] = engine.count_where(blocks, kinds, "v", 100, 200) \
+        .first().n_rows
+    out["aw"] = tuple(engine.agg_where(blocks, kinds, "v", 100, 200, "k")
+                      .first())
+    out["cwm"] = engine.count_where_multi(
+        blocks, kinds, [("k", 100, 700), ("v", 0, 250)]).first().n_rows
+    out["nulls"] = engine.null_count(blocks, kinds, "u").first().n_nulls
+    out["stats"] = sorted(tuple(r) for r in
+                          engine.table_stats(blocks, kinds).collect())
+    out["topk"] = [r.k for r in engine.topk_key(blocks, kinds, kc, 7)
+                   .collect()]
+    out["topk_asc"] = [r.k for r in engine.topk_key(
+        blocks, kinds, kc, 7, ascending=True).collect()]
+    out["topk_by"] = [r.v for r in engine.topk_by(blocks, kinds, "v", 5)
+                      .collect()]
+    out["ndv"] = engine.approx_distinct(blocks, "v").first().approx_ndv
+    return out
+
+
+def _check(got, want):
+    ndv, exact = got.pop("ndv"), want.pop("ndv")
+    assert abs(ndv - exact) <= 0.05 * exact
+    assert got == want
+
+
+def _kinds(spark):
+    return engine.column_kinds(spark.createDataFrame(_source(0, 1)).schema)
+
+
+@pytest.fixture(scope="module")
+def table(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("ix") / "t" / "part-0.parquet")
+    _write(_blocks(spark, _source(), "k"), path)
+    return os.path.dirname(path)
+
+
+def test_plain_scan_and_fallbacks_match_brute_force(spark, table):
+    kinds = _kinds(spark)
+    scan = spark.read.parquet(table)
+    assert engine._BlockIndex.of(scan) is not None
+    _, want = _brute(_source(), "k")
+    others = {"select": scan.select("*"),
+              "filter": scan.filter("n > 0"),
+              "union": scan.filter("block_idx < 5")
+              .union(scan.filter("block_idx >= 5")),
+              "encode": engine.encode_df(
+                  spark.createDataFrame(_source()), ["k"], n_buckets=1,
+                  block_rows=100, sketch_cols=["v"])}
+    cached = spark.read.parquet(table).cache()
+    others["cached"] = cached
+    for name, frame in {"scan": scan, **others}.items():
+        if name != "scan":
+            assert engine._BlockIndex.of(frame) is None, name
+        _check(_answers(frame, kinds, "k"), dict(want))
+    cached.unpersist()
+
+
+def _jobs(spark, run):
+    sc, group = spark.sparkContext, f"ix-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_budget_on_a_plain_scan(spark, table):
+    kinds = _kinds(spark)
+    b = spark.read.parquet(table)
+    e = engine
+    none = {
+        "approx_distinct": lambda: e.approx_distinct(b, "v"),
+        "lookup_miss": lambda: e.lookup(b, kinds, "k", 5000),
+        "lookup_in_miss": lambda: e.lookup_in(b, kinds, "k", [5000, 6000]),
+        "null_count": lambda: e.null_count(b, kinds, "u"),
+        "table_stats": lambda: e.table_stats(b, kinds),
+        "range_count": lambda: e.range_count(b, kinds, "k", 200, 399),
+        "range_agg": lambda: e.range_agg(b, kinds, "k", 200, 399, "v"),
+    }
+    one = {
+        "topk_key": lambda: e.topk_key(b, kinds, "k", 7),
+        "range_agg_boundary": lambda: e.range_agg(b, kinds, "k", 150, 449,
+                                                  "v"),
+        "lookup_hit": lambda: e.lookup(b, kinds, "k", 123),
+    }
+    for want, builders in ((0, none), (1, one)):
+        for name, build in builders.items():
+            assert _jobs(spark, lambda: build().collect()) == want, name
+
+
+def test_rewritten_file_gives_the_new_answer(spark, tmp_path):
+    kinds = _kinds(spark)
+    path = str(tmp_path / "t" / "part-0.parquet")
+    _write(_blocks(spark, _source(), "k"), path)
+    scan = spark.read.parquet(os.path.dirname(path))
+    assert engine.table_stats(scan, kinds, ["k"]).first().n_rows == N
+    assert engine.range_count(scan, kinds, "k", 200, 399).first()[0] == 200
+    assert [r.k for r in engine.lookup(scan, kinds, "k", 700).collect()] \
+        == [700]
+    # the same path, other content: half the rows and other values
+    new = _source(0, N // 2, shift=3)
+    _write(_blocks(spark, new, "k"), path)
+    _, want = _brute(new, "k")
+    assert engine.table_stats(scan, kinds, ["k"]).first().n_rows == N // 2
+    assert engine.range_count(scan, kinds, "k", 200, 399).first()[0] == 200
+    assert engine.range_count(scan, kinds, "k", 450, 1000).first()[0] \
+        == 50
+    assert engine.lookup(scan, kinds, "k", 700).collect() == []
+    assert tuple(engine.range_agg(scan, kinds, "k", -50, 2000, "v")
+                 .first()) == want[("agg", -50, 2000)]
+
+
+@pytest.mark.parametrize("layout", ["legacy", "repeated_ids", "mixed"])
+def test_odd_layouts_match_brute_force(spark, tmp_path, layout):
+    kinds = _kinds(spark)
+    root = str(tmp_path / layout)
+    legacy = ("key_slo", "key_shi")
+    if layout == "legacy":
+        _write(_blocks(spark, _source(), "s"), f"{root}/part-0.parquet",
+               drop=legacy)
+    else:
+        old = _blocks(spark, _source(0, N // 2), "s")
+        new = _blocks(spark, _source(N // 2, N), "s")
+        if layout == "mixed":  # distinct block ids, one legacy file
+            new = new.set_column(
+                new.schema.get_field_index("block_idx"), "block_idx",
+                pc.add(new["block_idx"], 100))
+        _write(old, f"{root}/part-0.parquet",
+               drop=legacy if layout == "mixed" else ())
+        _write(new, f"{root}/part-1.parquet")
+    scan = spark.read.parquet(root)
+    assert (engine._BlockIndex.of(scan) is None) \
+        == (layout == "repeated_ids")
+    _, want = _brute(_source(), "s")
+    _check(_answers(scan, kinds, "s"), want)
+
+
+def test_null_lead_keys_never_count_as_inside(spark, tmp_path):
+    """A block whose key bounds sit inside the range but whose key has
+    nulls is a boundary block: the bounds skip nulls, and a null key
+    never matches."""
+    df = spark.createDataFrame(
+        [(None if i % 5 == 0 else i, i) for i in range(100)],
+        "k long, v long")
+    kinds = engine.column_kinds(df.schema)
+    path = str(tmp_path / "nullkey")
+    engine.encode_df(df, ["k"], n_buckets=1, block_rows=50) \
+        .write.parquet(path)
+    scan = spark.read.parquet(path)
+    keys = [i for i in range(100) if i % 5]
+    for blocks in (scan, scan.select("*")):
+        assert engine.range_count(blocks, kinds, "k", -10, 1000) \
+            .first().n_rows == len(keys)
+        assert tuple(engine.range_agg(blocks, kinds, "k", -10, 1000, "v")
+                     .first()) == (len(keys), sum(keys), 1, 99)

@@ -531,3 +531,21 @@ def test_table_changes_below_compaction_horizon_raises(spark, sink):
     assert {r["k"] for r in feed.collect()} == {2}
     allfeed = dml.table_changes(spark, sink, from_batch=-1)
     assert allfeed.count() == 20  # every live key an insert
+
+
+def test_small_frames_are_local_relations(spark, sink):
+    """The sink's file-to-batch map and the empty base of a change feed
+    read from the start are pyarrow-built local relations: a list-built
+    frame is a Python RDD, and every job reading it starts Python
+    workers."""
+    feed = dml.table_changes(spark, sink, from_batch=-1)
+    for df in (ds.stream_sink_blocks(spark, sink), feed):
+        qe = df._jdf.queryExecution()
+        assert "LocalRelation" in qe.analyzed().toString()
+        plan = qe.executedPlan().toString()
+        assert "ExistingRDD" not in plan
+    plan = ds.stream_sink_blocks(spark, sink)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert {r.k: r._change_type for r in feed.collect()} \
+        == {k: "insert" for k in range(20)}

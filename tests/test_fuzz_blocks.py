@@ -13,8 +13,9 @@ invariants the reference's randomized round-trip asserts
 (`/root/reference/tests/unit/integer_group.cc:8-22`), at selector scope.
 
 Default budget is a few hundred blocks (~2 s); OROCH_FUZZ_BLOCKS=40000
-reruns the deep sweep (~8 min); deep runs totalling 100k int + 25k
-string blocks across two seeds have run clean.
+reruns the deep sweep (~8 min) and OROCH_FUZZ_BLOCKS_SEED picks another
+seed; deep runs totalling 100k int + 25k string blocks across two seeds
+have run clean.
 """
 import os
 
@@ -26,6 +27,7 @@ from oroch_spark.kernels import integers as ic
 from oroch_spark.kernels import strings as sc
 
 N_BLOCKS = int(os.environ.get("OROCH_FUZZ_BLOCKS", "600"))
+SEED = int(os.environ.get("OROCH_FUZZ_BLOCKS_SEED", "20260821"))
 
 
 def _gen_int_block(r: np.random.Generator) -> np.ndarray:
@@ -114,7 +116,7 @@ def _gen_str_block(r: np.random.Generator) -> list[str]:
 
 
 def test_int_blocks_roundtrip_budget_and_fetch():
-    r = np.random.default_rng(20260821)
+    r = np.random.default_rng(SEED)
     for i in range(N_BLOCKS):
         a = _gen_int_block(r)
         width = 8 if r.integers(0, 2) else 4
@@ -139,7 +141,7 @@ def test_int_blocks_roundtrip_budget_and_fetch():
 
 
 def test_str_blocks_roundtrip_budget_and_probe():
-    r = np.random.default_rng(99020821)
+    r = np.random.default_rng(SEED + 78_760_000)  # 99020821 by default
     for i in range(max(1, N_BLOCKS // 4)):
         vals = _gen_str_block(r)
         arr = pa.array(vals, type=pa.large_string())

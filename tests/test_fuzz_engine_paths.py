@@ -10,9 +10,13 @@ point, inverted-to-empty, and out-of-domain ranges.
 
 Op classes checked per iteration: scan_where, count_where,
 range_count, range_agg (SUM/MIN/MAX/COUNT in the codec domain),
-scan_where_multi + count_where_multi (AND of two predicates), lookup
-(hit + miss), lookup_in (batched IN), and grep_where (token-Bloom
-full-text). A null_count check runs once at the end.
+agg_where, scan_where_multi + count_where_multi (AND of two
+predicates), lookup (hit + miss), lookup_in (batched IN), topk_key +
+topk_by, and grep_where (token-Bloom full-text). null_count and
+table_stats checks run once at the end. Every check runs twice: on a
+cached encode, which takes the SQL prune path, and on the same blocks
+written to parquet and read back as a bare scan, which takes the
+driver-side block index.
 
 Default is 3 iterations (~1 min with the shared session);
 OROCH_FUZZ_ENGINE_ITERS / OROCH_FUZZ_ENGINE_SEED crank it — deep sweeps
@@ -37,7 +41,7 @@ WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
 
 
 @pytest.fixture(scope="module")
-def fixture(spark):
+def fixture(spark, tmp_path_factory):
     rng = np.random.default_rng(SEED)
     rnd = random.Random(SEED)
     n = 4000
@@ -71,6 +75,11 @@ def fixture(spark):
                               text_cols=[], bloom_cols=["s"],
                               token_bloom_cols=["txt"]).cache()
     blocks.count()
+    path = str(tmp_path_factory.mktemp("fuzz") / "blocks")
+    blocks.write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert engine._BlockIndex.of(scan) is not None
+    assert engine._BlockIndex.of(blocks) is None
     # int-domain twin for exact answers
     pdi = pd.DataFrame({
         "k": k, "u": u, "ts": ts_us, "d": d_days, "dc": dc_unscaled,
@@ -79,7 +88,7 @@ def fixture(spark):
                        dtype="Int64"),
         "txt": txt,
     })
-    yield blocks, kinds, pdi
+    yield (blocks, scan), kinds, pdi
     blocks.unpersist()
 
 
@@ -122,7 +131,12 @@ def _rand_range(rng, lo_d, hi_d):
 
 
 def test_pruned_paths_match_exact(fixture):
-    blocks, kinds, pdi = fixture
+    frames, kinds, pdi = fixture
+    for blocks in frames:
+        _pruned_paths_match_exact(blocks, kinds, pdi)
+
+
+def _pruned_paths_match_exact(blocks, kinds, pdi):
     rng = np.random.default_rng(SEED + 1)
     rnd = random.Random(SEED + 1)
     domains = {c: (int(pdi[c].min()), int(pdi[c].max()))
@@ -165,6 +179,29 @@ def test_pruned_paths_match_exact(fixture):
                 int(sel.min()) if len(sel) else None,
                 int(sel.max()) if len(sel) else None), (klo, khi, agg_col)
 
+        # agg_where: a predicate on one column, aggregates of another
+        pc_col, agg_col = rnd.sample(["u", "ts", "d", "dc", "k"], 2)
+        plo, phi = _rand_range(rng, *domains[pc_col])
+        pmask = ((pdi[pc_col] >= plo) & (pdi[pc_col] <= phi)).to_numpy()
+        row = engine.agg_where(blocks, kinds, pc_col, plo, phi, agg_col) \
+            .collect()[0]
+        sel = pdi[agg_col].to_numpy()[pmask]
+        assert tuple(row) == (int(pmask.sum()),
+                              int(sel.sum()) if len(sel) else None,
+                              int(sel.min()) if len(sel) else None,
+                              int(sel.max()) if len(sel) else None), \
+            (pc_col, plo, phi, agg_col)
+
+        # top-k by the key and by a stats column, either direction
+        k_top = int(rng.integers(1, 600))
+        asc = bool(rng.integers(0, 2))
+        got = [r["k"] for r in engine.topk_key(
+            blocks, kinds, "k", k_top, ascending=asc).collect()]
+        assert got == sorted(pdi["k"], reverse=not asc)[:k_top]
+        got = [r["u"] for r in engine.topk_by(
+            blocks, kinds, "u", k_top, ascending=asc).collect()]
+        assert got == sorted(pdi["u"], reverse=not asc)[:k_top]
+
         # AND of two predicates
         c1, c2 = rnd.sample(["k", "u", "ts", "d", "dc"], 2)
         l1, h1 = _rand_range(rng, *domains[c1])
@@ -204,8 +241,18 @@ def test_pruned_paths_match_exact(fixture):
 
 
 def test_null_count_matches_exact(fixture):
-    blocks, kinds, pdi = fixture
-    got = int(engine.null_count(blocks, kinds, "ni").collect()[0][0])
-    assert got == int(pdi["ni"].isna().sum())
-    assert int(engine.null_count(blocks, kinds, "k")
-               .collect()[0][0]) == 0
+    frames, kinds, pdi = fixture
+    for blocks in frames:
+        got = int(engine.null_count(blocks, kinds, "ni").collect()[0][0])
+        assert got == int(pdi["ni"].isna().sum())
+        assert int(engine.null_count(blocks, kinds, "k")
+                   .collect()[0][0]) == 0
+        stats = {r.col: r for r in
+                 engine.table_stats(blocks, kinds, ["k", "ni", "s"])
+                 .collect()}
+        assert stats["k"].n_rows == len(pdi)
+        assert (stats["k"].min_long, stats["k"].max_long) \
+            == (int(pdi["k"].min()), int(pdi["k"].max()))
+        assert stats["ni"].n_nulls == int(pdi["ni"].isna().sum())
+        assert (stats["s"].min_str, stats["s"].max_str) \
+            == (pdi["s"].min(), pdi["s"].max())

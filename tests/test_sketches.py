@@ -35,14 +35,19 @@ class TestApproxDistinct:
     def test_metadata_only(self, blocks, tmp_path_factory):
         _, blk = blocks
         # against a persisted table, the parquet scan prunes to the
-        # desc column alone — payload bytes never leave the file
+        # desc column alone — payload bytes never leave the file (the
+        # SQL path, taken by anything but a bare scan) — and the block
+        # index answers a bare scan from a local relation, with no scan
         d = str(tmp_path_factory.mktemp("sketch_blocks"))
         blk.write.mode("overwrite").parquet(d)
         persisted = blk.sparkSession.read.parquet(d)
-        plan = engine.approx_distinct(persisted, "user_id") \
+        plan = engine.approx_distinct(persisted.select("*"), "user_id") \
             ._jdf.queryExecution().executedPlan().toString()
         scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
         assert scan and all("payload" not in ln for ln in scan)
+        plan = engine.approx_distinct(persisted, "user_id") \
+            ._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ReadSchema" not in plan
 
     def test_missing_sketch_raises(self, blocks, spark):
         df, _ = blocks

@@ -62,28 +62,41 @@ def main() -> None:
     engine.encode_df(events, ["event_id"], n_buckets=4,
                      bloom_cols=["props"]) \
         .write.mode("overwrite").parquet(bdir)
+    # one bucket: each block holds a run of keys, so the sections on
+    # the block index have blocks to skip
+    sdir = os.path.join(tempfile.gettempdir(), "oroch_plans_sorted")
+    engine.encode_df(events, ["event_id"], n_buckets=1, block_rows=4096) \
+        .write.mode("overwrite").parquet(sdir)
     sections.append((
-        "lookup (persisted blocks: metadata prune -> key-only decode)",
-        "Zone-map filter on the TRUE min/max (key_lo, key_hi) bounds "
-        "is PushedFilters at the blocks-table scan — parquet row-group "
-        "stats skip whole groups of blocks on disk (string keys use "
-        "the lexicographic key_slo/key_shi pair; NULL bounds keep the "
-        "block); survivors reach the mapInArrow kernel, which decodes "
-        "only the key column and batch-fetches matched rows.",
+        "lookup (persisted blocks: block index -> kept blocks by id -> "
+        "key-only decode; one-bucket layout)",
+        "On a bare scan the driver-side block index tests the TRUE "
+        "min/max (key_lo, key_hi) bounds in Python and the scan reads "
+        "only the kept blocks: `bucket = b AND block_idx IN (...)` is "
+        "PushedFilters, so parquet row-group stats skip the rest on "
+        "disk (a key no block can hold runs no job at all). Any other "
+        "frame pushes the zone-map filter on the bounds instead (NULL "
+        "bounds keep the block). Survivors reach the mapInArrow "
+        "kernel, which decodes only the key column and batch-fetches "
+        "matched rows.",
         plan_of(engine.lookup(
-            spark.read.parquet(bdir),
+            spark.read.parquet(sdir),
             engine.column_kinds(events.schema), "event_id", 777))))
 
     sections.append((
         "range_agg (SUM/MIN/MAX/COUNT answered from block metadata)",
-        "One scan, one pass: the projection flags interior blocks and "
-        "nulls their payload and desc, so they cross to the kernel as "
-        "their stored stats alone; boundary blocks decode two columns "
-        "and reduce to one partial row inside the kernel. The final "
-        "agg folds one row per block. NULL/absent stats degrade to the "
-        "decode path, never to a wrong answer.",
+        "The SQL path, taken by any frame but a bare scan (here "
+        "`select(\"*\")`). One scan, one pass: the projection flags "
+        "interior blocks (bounds inside, no null key) and nulls their "
+        "payload and desc, so they cross to the kernel as their stored "
+        "stats alone; boundary blocks decode two columns and reduce to "
+        "one partial row inside the kernel. The final agg folds one "
+        "row per block. NULL/absent stats degrade to the decode path, "
+        "never to a wrong answer. On a bare scan the block index folds "
+        "interior blocks on the driver, only the boundary blocks run "
+        "(one job, no exchange) and the answer is a LocalTableScan.",
         plan_of(engine.range_agg(
-            spark.read.parquet(bdir),
+            spark.read.parquet(bdir).select("*"),
             engine.column_kinds(events.schema), "event_id", 1000, 9000,
             "user_id"))))
 
@@ -147,13 +160,14 @@ def main() -> None:
 
     sections.append((
         "agg_where (metadata aggregates under a secondary predicate)",
-        "Blocks whose PREDICATE-column stats prove containment answer "
-        "from the AGGREGATE column's stored (lo, hi, s) stats — no "
-        "payload decode; only straddlers decode, and only two "
-        "columns, each reduced to one partial row in the same "
-        "kernel pass.",
+        "The SQL path (here `select(\"*\")`; a bare scan splits on "
+        "the block index like range_agg). Blocks whose PREDICATE-column "
+        "stats prove containment answer from the AGGREGATE column's "
+        "stored (lo, hi, s) stats — no payload decode; only straddlers "
+        "decode, and only two columns, each reduced to one partial row "
+        "in the same kernel pass.",
         plan_of(engine.agg_where(
-            spark.read.parquet(bdir),
+            spark.read.parquet(bdir).select("*"),
             engine.column_kinds(events.schema), "user_id", 2, 8,
             "event_id"))))
 
@@ -177,14 +191,15 @@ def main() -> None:
             .select("event_id"), grid_min_blocks=0))))
 
     sections.append((
-        "topk_key (ORDER BY key LIMIT k, zone-pruned)",
-        "Only blocks that can hold a top-k row decode: the threshold "
-        "literal, taken at planning from at most k (n, bound) metadata "
-        "rows, is a PushedFilter on the scan; TakeOrderedAndProject "
-        "finishes — per-partition partial top-k, no global sort, no "
-        "exchange.",
+        "topk_key (ORDER BY key LIMIT k, zone-pruned; one-bucket layout)",
+        "Only blocks that can hold a top-k row decode: on a bare scan "
+        "the threshold walks the block index on the driver and the "
+        "kept blocks are read by id (PushedFilters); any other frame "
+        "takes the threshold from at most k (n, bound) metadata rows "
+        "and pushes it as one literal. TakeOrderedAndProject finishes "
+        "— per-partition partial top-k, no global sort, no exchange.",
         plan_of(engine.topk_key(
-            spark.read.parquet(bdir),
+            spark.read.parquet(sdir),
             engine.column_kinds(events.schema), "event_id", 10))))
 
     sections.append((

@@ -82,7 +82,8 @@ def main() -> None:
 
     # topk: candidate blocks after the engine's threshold prune
     add("topk_key (k=10)", "ORDER BY event_id DESC LIMIT 10", total,
-        engine._topk_prune(evb, "key_lo", "key_hi", 10, False).count())
+        engine._topk_prune(evb, "key_lo", "key_hi", 10, False,
+                           lambda ix, i: ix.key[i]).count())
 
     # --- z-order clustering (events, user_id x value) -------------------
     # Same table re-clustered by the Morton interleave of two mutually
