@@ -157,8 +157,8 @@ def _q_multi_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookup on a NON-key high-cardinality column (props) via
     the per-block Bloom filter stored in the descriptor: blocks whose
-    filter proves the value absent are skipped JVM-side before any
-    payload decode. Zone maps can't prune this shape (props is
+    filter proves the value absent are skipped on the driver's block
+    index before any payload decode. Zone maps can't prune this shape (props is
     uncorrelated with the event_id block order, so every block's
     [lo, hi] spans the domain)."""
     src = _read(spark, sf_dir, "events")

@@ -50,7 +50,6 @@ from dataclasses import dataclass
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -75,11 +74,12 @@ BLOCK_SCHEMA = T.StructType([
     T.StructField("key_min", T.StringType()),
     T.StructField("key_max", T.StringType()),
     # TRUE min/max of the LEADING key column (null when the key has no
-    # pruning domain or is all-null): plain long columns so a lookup's
-    # range predicate is a parquet PushedFilter and row-group min/max
-    # stats skip whole groups of blocks before any payload bytes are
-    # read. Integral-domain keys (ints, date, bool, ts-as-micros) fill
-    # key_lo/key_hi; string keys fill key_slo/key_shi (lexicographic).
+    # pruning domain or is all-null): plain columns, so the block index
+    # reads them without the desc JSON and ``format("oroch")``'s
+    # row-group planning skips whole groups of blocks on their parquet
+    # min/max stats before any payload bytes are read. Integral-domain
+    # keys (ints, date, bool, ts-as-micros) fill key_lo/key_hi; string
+    # keys fill key_slo/key_shi (lexicographic).
     T.StructField("key_lo", T.LongType()),
     T.StructField("key_hi", T.LongType()),
     T.StructField("key_slo", T.StringType()),
@@ -774,10 +774,10 @@ def _lead_bounds(lead: "pa.Array"):
 # spans the whole domain). A small per-block Bloom filter answers
 # "value definitely not in this block" for exactly that shape. The
 # filter is stored base64 in the block descriptor ("bm" per column)
-# and probed JVM-side (substring/conv/getbit expressions over the
-# small desc column) — no payload bytes and no Python before the
-# surviving blocks decode. False positives only cost a wasted decode;
-# false negatives cannot happen (every value, nulls filled, is hashed).
+# and probed on the driver's block index (`bloom_might_contain`) — no
+# payload bytes move before the surviving blocks decode. False
+# positives only cost a wasted decode; false negatives cannot happen
+# (every value, nulls filled, is hashed).
 
 _BLOOM_K = 6          # probes per value
 _BLOOM_MIN_BYTES = 128    # 1 Kib
@@ -985,83 +985,29 @@ def approx_topk(blocks: DataFrame, col: str, k: int = 10,
     """Approximate top-k most frequent values of ``col`` from per-block
     heavy-hitter summaries alone (``sketch_cols`` at encode) — the
     "top domains / languages / tools over 100 TB" query without
-    shuffling the column: partition partials sum O(blocks x K) counter
-    pairs, one final fold ranks. Estimates UNDERCOUNT only; rows out:
-    (value, count_lo, count_hi) with true count in [count_lo,
-    count_hi] (count_hi adds every block's residual bound). Raises at
-    execution if any block lacks the summary. ``kind`` controls the
-    output value type ("str" or "int")."""
+    shuffling the column: the driver sums the O(blocks x K) counter
+    pairs from the block index and ranks. Estimates UNDERCOUNT only;
+    rows out: (value, count_lo, count_hi) with true count in
+    [count_lo, count_hi] (count_hi adds every block's residual bound).
+    Raises at the call if any block lacks the summary. ``kind``
+    controls the output value type ("str" or "int")."""
     if k > _MG_K:
         raise ValueError(f"k must be <= {_MG_K}")
-    rows = blocks.selectExpr(f"{_stats_sql(col)}.mg AS mg")
-    part_schema = T.StructType([
-        T.StructField("items", T.StringType()),
-        T.StructField("rb", T.LongType()),
-        T.StructField("missing", T.LongType())])
-
-    def merge_series(series):
-        acc: dict[str, int] = {}
-        rb = 0
-        missing = 0
-        for s in series:
-            if s is None:
-                missing += 1
-                continue
-            d = json.loads(s)
-            rb += int(d["rb"])
-            for v, c in d["items"].items():
-                acc[v] = acc.get(v, 0) + int(c)
-        return acc, rb, missing
-
-    def partial(batches):
-        acc: dict[str, int] = {}
-        rb = 0
-        missing = 0
-        for pdf in batches:
-            a, r, miss = merge_series(pdf["mg"])
-            rb += r
-            missing += miss
-            for v, c in a.items():
-                acc[v] = acc.get(v, 0) + c
-        # keep a bounded partial: top 4K counters travel, the rest
-        # fold into the residual bound (their true counts are below
-        # the cut everywhere they were dropped)
-        keep = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))
-        if len(keep) > 4 * _MG_K:
-            rb += keep[4 * _MG_K][1]
-            keep = keep[:4 * _MG_K]
-        yield pd.DataFrame({"items": [json.dumps(dict(keep))],
-                            "rb": [rb], "missing": [missing]})
-
-    vtype = T.LongType() if kind == "int" else T.StringType()
-    out_schema = T.StructType([
-        T.StructField("value", vtype),
-        T.StructField("count_lo", T.LongType()),
-        T.StructField("count_hi", T.LongType())])
-
-    def final(batches):
-        acc: dict[str, int] = {}
-        rb = 0
-        missing = 0
-        for pdf in batches:
-            missing += int(pdf["missing"].sum())
-            rb += int(pdf["rb"].sum())
-            for s in pdf["items"]:
-                for v, c in json.loads(s).items():
-                    acc[v] = acc.get(v, 0) + int(c)
-        if missing:
-            raise ValueError(
-                f"approx_topk({col!r}): {missing} blocks carry no "
-                f"heavy-hitter summary — re-encode with "
-                f"sketch_cols=[{col!r}]")
-        top = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        vals = [int(v) if kind == "int" else v for v, _ in top]
-        yield pd.DataFrame({"value": pd.Series(vals, dtype=object),
-                            "count_lo": [c for _, c in top],
-                            "count_hi": [c + rb for _, c in top]})
-
-    return (rows.mapInPandas(partial, schema=part_schema)
-            .repartition(1).mapInPandas(final, schema=out_schema))
+    acc: dict[str, int] = {}
+    rb = 0
+    for s in _sketches(blocks, col, "mg", "approx_topk",
+                       "heavy-hitter summary"):
+        d = json.loads(s)
+        rb += int(d["rb"])
+        for v, c in d["items"].items():
+            acc[v] = acc.get(v, 0) + int(c)
+    top = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    return _local_df(blocks.sparkSession, T.StructType([
+        T.StructField("value",
+                      T.LongType() if kind == "int" else T.StringType()),
+        *_longs("count_lo", "count_hi").fields]),
+        [[int(v) if kind == "int" else v for v, _ in top],
+         [c for _, c in top], [c + rb for _, c in top]])
 
 
 def _canon_int64(arr):
@@ -1915,34 +1861,6 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _overlap_cond(blocks: DataFrame, lo, hi) -> str:
-    """Zone-map overlap predicate (SQL) for [lo, hi] against the block
-    bounds columns. NULL bounds mean "cannot prune" (a key type with no
-    pruning domain, an all-null key block, or a legacy table whose
-    fallback cast nulls out) and always KEEP the block — pruning is an
-    optimization, never a correctness filter. String endpoints compare
-    against the lexicographic key_slo/key_shi pair; integral endpoints
-    against key_lo/key_hi (with the legacy key_min/key_max cast
-    fallback)."""
-    if isinstance(lo, str):
-        if "key_slo" not in blocks.columns:
-            return "TRUE"  # legacy table: no string bounds
-        return _lo_overlap("key_slo", "key_shi", lo, hi)
-    lo, hi = int(lo), int(hi)
-    if "key_lo" in blocks.columns:
-        return _lo_overlap("key_lo", "key_hi", lo, hi)
-    # null (not error) if non-numeric
-    return _bounds_keep("try_cast(key_min AS BIGINT)",
-                        "try_cast(key_max AS BIGINT)", lo, hi)
-
-
-def _lo_overlap(blo: str, bhi: str, lo, hi) -> str:
-    """SQL: bounds ``[blo, bhi]`` may overlap ``[lo, hi]``; a NULL
-    ``blo`` (no bounds) keeps the block."""
-    return (f"{blo} IS NULL OR ({blo} <= {_sql_lit(hi)} "
-            f"AND {bhi} >= {_sql_lit(lo)})")
-
-
 def _key_lit(schema_kinds: list[tuple[str, str]], key_col: str, v) -> str:
     """Row-level literal (SQL) for a key bound: the prune domain is
     int64 (epoch-micros for ts, days for date), but the decoded column
@@ -2040,26 +1958,31 @@ def _stats_inside(stats_lo, stats_hi, pred: _KeyPred) -> bool:
 
 
 # The block columns the index holds: all but the payload and the
-# per-block accounting.
+# per-block accounting. The lead-key rules need all but ``desc`` (a few
+# KB per block with Blooms and sketches), which is loaded only on demand.
 _INDEX_COLS = ("bucket", "block_idx", "n", "key_lo", "key_hi", "key_slo",
                "key_shi", "desc")
-# A frame the index serves has these columns, and only block columns.
+_LEAD_COLS = _INDEX_COLS[:-1]
+# A bare scan the index reads from its files has these columns.
 _INDEX_NEEDS = frozenset(("bucket", "block_idx", "n", "desc", "payload"))
 _INDEX_KEEP = 4  # tables whose index stays cached at once
-_indexes: dict = {}  # ((path, ino, mtime_ns, size), ...) -> index | None
+_indexes: dict = {}  # ((path, ino, mtime_ns, size), ...) -> index
 
 
 def _scan_files(blocks: DataFrame) -> Optional[list[str]]:
     """Local paths of the files ``blocks`` reads when it is a bare,
     uncached parquet scan of a blocks table with no partition columns
-    (``spark.read.parquet(dir)``) — the listing Spark itself would
-    read. None for any other plan, schema or file system."""
+    (``spark.read.parquet(dir)``; extra stored columns, such as the
+    ``<c>__lo``/``<c>__hi`` of :func:`with_stat_columns`, are fine) —
+    the listing Spark itself would read. None for any other plan,
+    schema or file system."""
     from urllib.parse import unquote, urlparse
 
     types = {f.name: f.dataType for f in BLOCK_SCHEMA.fields}
     schema = blocks.schema
     if not _INDEX_NEEDS <= set(schema.names) or any(
-            types.get(f.name) != f.dataType for f in schema.fields):
+            types.get(f.name, f.dataType) != f.dataType
+            for f in schema.fields):
         return None
     try:
         plan = blocks._jdf.queryExecution().withCachedData()
@@ -2072,88 +1995,170 @@ def _scan_files(blocks: DataFrame) -> Optional[list[str]]:
                 or rel.partitionSchema().nonEmpty()):
             return None
         uris = [urlparse(u) for u in blocks.inputFiles()]
-    except Exception:  # not a classic scan: no index
+    except Exception:  # not a classic scan: no file listing
         return None
     if any(u.scheme != "file" for u in uris):
         return None
     return [unquote(u.path) for u in uris]
 
 
-def _read_index(files: list[str]) -> "pa.Table":
-    """The ``_INDEX_COLS`` of every file, in order; a column a file
-    lacks reads as null, as Spark's read does (legacy files have no
-    ``key_slo``/``key_shi``)."""
+def _index_table(t: "pa.Table", cols=_INDEX_COLS) -> "pa.Table":
+    """``t`` as the index columns ``cols`` in their block types; a
+    column ``t`` lacks reads as null, as Spark's read does (legacy
+    files have no ``key_slo``/``key_shi``)."""
+    import pyarrow as pa
+
+    want = _block_arrow_schema()
+    return pa.table({c: t[c].cast(want.field(c).type)
+                     if c in t.column_names
+                     else pa.nulls(t.num_rows, want.field(c).type)
+                     for c in cols})
+
+
+def _read_index(files: list[str], cols=_INDEX_COLS) -> "pa.Table":
+    """The index columns ``cols`` of every file, in order, read with
+    pyarrow."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    want = _block_arrow_schema()
-    cols: dict[str, list] = {c: [] for c in _INDEX_COLS}
+    parts = []
     for f in files:
         pf = pq.ParquetFile(f)
         have = set(pf.schema_arrow.names)
-        t = pf.read(columns=[c for c in _INDEX_COLS if c in have])
-        for c in _INDEX_COLS:
-            typ = want.field(c).type
-            cols[c].append(t[c].cast(typ) if c in have
-                           else pa.nulls(t.num_rows, typ))
-    return pa.table({c: pa.chunked_array(v, type=want.field(c).type)
-                     for c, v in cols.items()})
+        parts.append(_index_table(
+            pf.read(columns=[c for c in cols if c in have]), cols))
+    return pa.concat_tables(parts)
+
+
+def _index_frame(blocks: DataFrame, cols=_INDEX_COLS) -> DataFrame:
+    """The index columns ``cols`` that ``blocks`` has: what the collect
+    loader reads (parquet column pruning keeps payload bytes on
+    disk)."""
+    return blocks.select(*[c for c in cols if c in blocks.columns])
+
+
+# Plan nodes whose rows are the same on every read: stored files, a
+# cache and local rows; and the nodes that only pass rows through.
+_STORED_LEAVES = frozenset(("LogicalRelation", "DataSourceV2Relation",
+                            "InMemoryRelation", "LocalRelation"))
+_PASS_NODES = frozenset(("Project", "Filter", "Union", "SubqueryAlias"))
+
+
+def _stored(blocks: DataFrame) -> bool:
+    """Does every read of ``blocks`` yield the same rows? True when its
+    plan, with caches substituted, is deterministic and only projects,
+    filters, unions or aliases stored files, a cache, local rows or a
+    persisted (checkpointed) RDD. An encode is not: the order of rows
+    that tie on its key — and so which block holds which of them — is
+    the shuffle's fetch and spill-merge order, which may differ per
+    read."""
+    try:
+        plan = blocks._jdf.queryExecution().withCachedData()
+        if not plan.deterministic():
+            return False
+        todo = [plan]
+        while todo:
+            p = todo.pop()
+            name = p.getClass().getSimpleName()
+            if name in _PASS_NODES:
+                ch = p.children()
+                todo += [ch.apply(i) for i in range(ch.size())]
+            elif not (name in _STORED_LEAVES or name == "LogicalRDD"
+                      and p.rdd().getStorageLevel().isValid()):
+                return False
+        return True
+    except Exception:  # not a classic plan
+        return False
+
+
+def _indexed(blocks: DataFrame,
+             desc: bool = True) -> tuple[DataFrame, "_BlockIndex"]:
+    """``blocks`` and its index, for a builder that reads ``blocks``
+    again after the index has decided which blocks that read keeps and
+    which it answers from metadata: both reads must see the same
+    blocks. A frame whose every read does (:func:`_stored`) is used as
+    is; any other is pinned first by a lazy local checkpoint, which the
+    index collect fills and the payload read reuses (so it is computed
+    once, not twice)."""
+    if not _stored(blocks):
+        blocks = blocks.localCheckpoint(eager=False)
+    return blocks, _BlockIndex.of(blocks, desc)
 
 
 class _BlockIndex:
-    """The non-payload columns of a persisted blocks table, held on the
-    driver: per block its ``(bucket, block_idx)``, row count ``n``,
-    lead-key bounds and parsed descriptor. Oroch keeps a container's
-    group descriptors in process and checks them before it touches a
-    payload (`integer_array.h:192-208`); the builders do the same here.
-    They decide kept, interior and boundary blocks in Python with
-    :func:`_stats_overlap` / :func:`_stats_inside`, answer
-    metadata-only queries with no Spark job, and give the payload job
-    only the kept blocks (:meth:`narrow`).
+    """The non-payload columns of a blocks frame, held on the driver:
+    per block its ``(bucket, block_idx)``, row count ``n``, lead-key
+    bounds and parsed descriptor. Oroch keeps a container's group
+    descriptors in process and checks them before it touches a payload
+    (`integer_array.h:192-208`); every builder does the same here. It
+    decides kept, interior and boundary blocks in Python with the one
+    rule set — :func:`_stats_overlap`, :func:`_stats_inside` and
+    :func:`bloom_might_contain` — answers metadata-only queries with no
+    Spark job, and gives the payload job only the kept blocks
+    (:meth:`narrow`).
 
-    :meth:`of` returns an index only for a bare parquet scan of a
-    blocks table (:func:`_scan_files`) whose ``(bucket, block_idx)``
-    are unique, and checks it on every use against each file's
-    ``(st_ino, st_mtime_ns, st_size)`` the way ``_zipcache`` checks
-    archives. Otherwise it returns None and the builder takes its SQL
-    path: the index only ever narrows what is read."""
+    :meth:`of` loads it one of two ways. A bare parquet scan
+    (:func:`_scan_files`) is read with pyarrow and cached, checked on
+    every use against each file's ``(st_ino, st_mtime_ns, st_size)``
+    the way ``_zipcache`` checks archives. Any other frame is collected
+    in one Spark job and not cached. A builder that reads the payload
+    after the index takes both from :func:`_indexed`, which pins a
+    frame whose reads may differ.
 
-    __slots__ = ("n", "ids", "key", "skey", "cols")
+    A ``(bucket, block_idx)`` that repeats (or holds a null) cannot
+    single its block out, so the index only ever over-reads it:
+    :meth:`narrow` keeps every block that shares a kept id, and
+    :meth:`split` answers nothing on the driver."""
+
+    __slots__ = ("n", "ids", "key", "skey", "desc", "_cols", "repeated")
 
     def __init__(self, t: "pa.Table"):
         self.n = t["n"].to_pylist()
         self.ids = list(zip(t["bucket"].to_pylist(),
                             t["block_idx"].to_pylist()))
-        if len(set(self.ids)) < len(self.ids) or any(None in i
-                                                      for i in self.ids):
-            # the membership filter could not single these blocks out
-            raise ValueError("block ids are not unique")
+        self.repeated = len(set(self.ids)) < len(self.ids) \
+            or any(None in i for i in self.ids)
         self.key = list(zip(t["key_lo"].to_pylist(),
                             t["key_hi"].to_pylist()))
         self.skey = list(zip(t["key_slo"].to_pylist(),
                              t["key_shi"].to_pylist()))
-        self.cols = [{d["n"]: d for d in json.loads(s)["cols"]}
-                     for s in t["desc"].to_pylist()]
+        self.desc = t["desc"] if "desc" in t.column_names else None
+        self._cols = None
+
+    @property
+    def cols(self) -> list[dict]:
+        """Per block, its parsed descriptor columns by name; parsed on
+        first use, so a builder that needs only ids, ``n`` and the
+        lead-key bounds never parses one."""
+        if self._cols is None:
+            self._cols = [{d["n"]: d for d in json.loads(s)["cols"]}
+                          for s in self.desc.to_pylist()]
+            self.desc = None
+        return self._cols
 
     @classmethod
-    def of(cls, blocks: DataFrame) -> Optional["_BlockIndex"]:
+    def of(cls, blocks: DataFrame, desc: bool = True) -> "_BlockIndex":
+        """The index of ``blocks``, as this read of it sees it. Without
+        ``desc`` it holds only the ids, ``n`` and lead-key bounds (no
+        :attr:`cols`): all the lead-key rules read."""
+        cols = _INDEX_COLS if desc else _LEAD_COLS
         files = _scan_files(blocks)
-        if files is None:
-            return None
-        try:  # stat before the read: a change after it rebuilds
-            key = tuple((f, st.st_ino, st.st_mtime_ns, st.st_size)
-                        for f, st in zip(files, map(os.stat, files)))
-        except OSError:
-            return None
-        if key not in _indexes:
-            try:
-                ix = cls(_read_index(files))
-            except Exception:  # unreadable or ambiguous: no index
-                ix = None
-            while len(_indexes) >= _INDEX_KEEP:
-                del _indexes[next(iter(_indexes))]
-            _indexes[key] = ix
-        return _indexes[key]
+        if files is not None:
+            try:  # stat before the read: a change after it rebuilds
+                key = tuple((f, st.st_ino, st.st_mtime_ns, st.st_size)
+                            for f, st in zip(files, map(os.stat, files)))
+                if key not in _indexes:
+                    ix = cls(_read_index(files, cols))
+                    while len(_indexes) >= _INDEX_KEEP:
+                        del _indexes[next(iter(_indexes))]
+                    _indexes[key] = ix
+                ix = _indexes[key]
+                if desc and ix.desc is None and ix._cols is None:
+                    ix.desc = _read_index(files, ("desc",))["desc"]
+                return ix
+            except Exception:  # unreadable here: Spark reads it below
+                pass
+        return cls(_index_table(_index_frame(blocks, cols).toArrow(), cols))
 
     def __len__(self) -> int:
         return len(self.n)
@@ -2171,45 +2176,76 @@ class _BlockIndex:
             else (d.get("lo"), d.get("hi"))
 
     def nulls(self, i: int, col: str) -> Optional[int]:
-        """Block ``i``'s exact null count of ``col`` (as
-        :func:`_null_count_sql`): every row when the block predates the
-        column, 0 when it is not nullable, else the stored ``nc`` (None
-        for a legacy block)."""
+        """Block ``i``'s exact null count of ``col``: every row when
+        the block predates the column, 0 when it is not nullable, else
+        the stored ``nc`` (None for a legacy block)."""
         d = self.cols[i].get(col)
         return self.n[i] if d is None else d.get("nc") if d.get("z") else 0
+
+    def bloom(self, i: int, col: str, value, kind: str,
+              field: str = "bm") -> bool:
+        """May block ``i`` hold ``value`` in ``col`` by its stored Bloom
+        ``field`` ("bm" values, "tbm" word tokens)?"""
+        return bloom_might_contain(self.cols[i].get(col, {}).get(field),
+                                   value, kind)
+
+    def keep(self, test) -> list[int]:
+        """Positions of the blocks ``test(i)`` accepts."""
+        return [i for i in range(len(self)) if test(i)]
+
+    def where(self, tests: list[tuple], lead: bool = False) -> list[int]:
+        """Positions of the blocks that may hold a row matching every
+        ``(col, probe, _KeyPred)`` of ``tests`` (:func:`_range_tests`)
+        by ``col``'s stats, or with ``lead`` by the lead-key bounds;
+        ``probe`` picks the bounds' domain."""
+        get = (lambda i, c, v: self.bounds(i, v)) if lead else self.stats
+        return self.keep(lambda i: all(_stats_overlap(*get(i, c, v), p)
+                                       for c, v, p in tests))
 
     def narrow(self, blocks: DataFrame, keep: list[int]) -> DataFrame:
         """``blocks`` cut to the blocks at positions ``keep``, by a
         pushable ``bucket = b AND block_idx IN (...)`` filter built from
-        the Python decision (so not a second rule set)."""
-        if len(keep) == len(self):
+        the Python decision (so not a second rule set). A repeated id
+        keeps every block that carries it; a null id keeps them all."""
+        if len(keep) == len(self) or any(None in self.ids[i] for i in keep):
             return blocks
         by_bucket: dict = {}
         for i in keep:
             b, j = self.ids[i]
-            by_bucket.setdefault(b, []).append(_sql_lit(j))
+            by_bucket.setdefault(b, set()).add(j)
         return blocks.filter(" OR ".join(
-            f"(bucket = {int(b)} AND block_idx IN ({', '.join(js)}))"
+            f"(bucket = {int(b)} AND block_idx IN "
+            f"({', '.join(map(_sql_lit, sorted(js)))}))"
             for b, js in sorted(by_bucket.items())) or "FALSE")
 
-    def split(self, blocks: DataFrame, keep, inside, interior,
+    def split(self, blocks: DataFrame, keep: list[int], inside, interior,
               schema_kinds: list[tuple[str, str]], preds: list[tuple],
               agg_col: Optional[str] = None) -> list[tuple]:
-        """Partials ``(_c, _s, _lo, _hi)`` of the blocks ``keep(i)``
-        accepts: those ``inside(i)`` accepts from ``interior(i)`` on the
+        """Partials ``(_c, _s, _lo, _hi)`` of the blocks at positions
+        ``keep``: those ``inside(i)`` accepts from ``interior(i)`` on the
         driver, the boundary rest from :func:`make_partials_fn` in one
-        job over just those blocks (no shuffle)."""
+        job over just those blocks (no shuffle). With repeated ids every
+        kept block is boundary, so no block is counted twice; a pruned
+        block that rides along with a kept id matches no row."""
         parts, boundary = [], []
-        for i in range(len(self)):
-            if keep(i):
-                if inside(i):
-                    parts.append(interior(i))
-                else:
-                    boundary.append(i)
+        for i in keep:
+            if not self.repeated and inside(i):
+                parts.append(interior(i))
+            else:
+                boundary.append(i)
         if boundary:
-            parts += _metadata_split(self.narrow(blocks, boundary), "FALSE",
+            parts += _block_partials(self.narrow(blocks, boundary),
                                      schema_kinds, preds, agg_col).collect()
         return parts
+
+
+def _range_tests(preds: list[tuple]) -> list[tuple]:
+    """``(col, lo, hi)`` range predicates as the ``(col, probe,
+    _KeyPred)`` tests :meth:`_BlockIndex.where` takes: string bounds
+    test the lexicographic stats, any other the int64 ones."""
+    return [(c, lo, _KeyPred(lo=lo, hi=hi)) if isinstance(lo, str)
+            else (c, int(lo), _KeyPred(lo=int(lo), hi=int(hi)))
+            for c, lo, hi in preds]
 
 
 def _longs(*names: str) -> T.StructType:
@@ -2234,9 +2270,9 @@ def _local_df(spark, schema: T.StructType,
 
 def _fold_partials(spark, parts: list[tuple], aggs: bool,
                    name: str = "n_rows") -> DataFrame:
-    """One local row from metadata-split partials: the count ``name``,
-    and with ``aggs`` the exact sum, min and max (``_RANGE_AGGS`` on
-    the driver). A sum past int64 raises, as Spark's own sum does."""
+    """One local row from :meth:`_BlockIndex.split` partials: the
+    count ``name``, and with ``aggs`` the exact sum, min and max. A sum
+    past int64 raises, as Spark's own sum does."""
     n = sum(p[0] or 0 for p in parts)
     if not aggs:
         return _local_df(spark, _longs(name), [[n]])
@@ -2256,35 +2292,30 @@ def prune_blocks(blocks: DataFrame, value) -> DataFrame:
     the key — the analogue of the reference's metadata-pruned ``find``
     answering "not here" without touching the payload
     (`/root/reference/oroch/integer_array.h:71-136`, which prunes for
-    any key type T). The bounds are plain long/string columns, so
-    against a persisted blocks table this is a parquet PushedFilter:
-    row-group min/max stats skip whole groups of blocks before any
-    payload bytes leave disk. NULL bounds keep the block (see
-    :func:`_overlap_cond`)."""
-    return blocks.filter(_overlap_cond(blocks, value, value))
+    any key type T). The block index decides; against a persisted
+    blocks table the kept ids are a parquet PushedFilter, so row-group
+    stats skip whole groups of blocks before any payload bytes leave
+    disk. NULL bounds keep the block."""
+    return prune_blocks_in(blocks, [value])
 
 
 def prune_blocks_range(blocks: DataFrame, lo, hi) -> DataFrame:
     """Range variant of :func:`prune_blocks`: keep blocks whose bounds
-    overlap [lo, hi] — pushed to the parquet scan of a persisted
-    blocks table just like the point predicate."""
-    return blocks.filter(_overlap_cond(blocks, lo, hi))
+    overlap [lo, hi]."""
+    blocks, ix = _indexed(blocks, desc=False)
+    return ix.narrow(blocks, ix.where(_range_tests([(None, lo, hi)]),
+                                      lead=True))
 
 
 def prune_blocks_in(blocks: DataFrame, values) -> DataFrame:
     """IN-list variant: keep blocks whose bounds can contain ANY probe
-    value. Small lists (<= 64) get the exact per-value OR — each term
-    is the same pushable containment predicate as :func:`prune_blocks`
-    — longer lists fall back to the coarse [min, max] envelope (still
-    a superset: pruning never drops a matching block, the kernel's
-    exact match does the rest)."""
-    vals = sorted(set(values))
+    value (the kernel's exact match does the rest)."""
+    vals = sorted({v if isinstance(v, str) else int(v) for v in values})
     if not vals:
         return blocks.filter("FALSE")
-    if len(vals) > 64:
-        return blocks.filter(_overlap_cond(blocks, vals[0], vals[-1]))
-    return blocks.filter(" OR ".join(
-        f"({_overlap_cond(blocks, v, v)})" for v in vals))
+    blocks, ix = _indexed(blocks, desc=False)
+    return ix.narrow(blocks, ix.where(
+        [(None, vals[0], _KeyPred(values=vals))], lead=True))
 
 
 def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2315,44 +2346,6 @@ def _decode_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     if decode_cols is not columns:
         dec = dec.select(*columns)
     return dec
-
-
-def _bounds_keep(blo: str, bhi: str, lo, hi) -> str:
-    """SQL: stats ``[blo, bhi]`` may overlap ``[lo, hi]`` (missing
-    stats keep the block)."""
-    lo, hi = _sql_lit(lo), _sql_lit(hi)
-    return (f"{blo} IS NULL OR {bhi} IS NULL "
-            f"OR ({blo} <= {hi} AND {bhi} >= {lo})")
-
-
-def _bounds_inside(blo: str, bhi: str, lo, hi) -> str:
-    """SQL: stats ``[blo, bhi]`` PROVABLY inside ``[lo, hi]`` (missing
-    stats coalesce to FALSE)."""
-    return (f"coalesce({blo} >= {_sql_lit(lo)} "
-            f"AND {bhi} <= {_sql_lit(hi)}, FALSE)")
-
-
-def _contained_cond(blocks: DataFrame, lo, hi) -> str:
-    """True iff the block's key bounds are PROVABLY inside [lo, hi]
-    (every row matches, metadata alone can answer aggregates). NULL or
-    missing bounds coalesce to False — the block degrades to the
-    boundary (decode) path, never to a wrong answer. Legacy tables
-    without bounds columns treat every block as boundary."""
-    if isinstance(lo, str):
-        if "key_slo" not in blocks.columns:
-            return "FALSE"
-        return _bounds_inside("key_slo", "key_shi", lo, hi)
-    if "key_lo" not in blocks.columns:
-        return "FALSE"
-    return _bounds_inside("key_lo", "key_hi", int(lo), int(hi))
-
-
-def _key_inside(blocks: DataFrame, key_col: str, lo, hi) -> str:
-    """SQL: every row of the block has its lead key in [lo, hi] — the
-    bounds are inside (:func:`_contained_cond`) and no key is null (a
-    null never matches, and the bounds skip nulls)."""
-    return (f"({_contained_cond(blocks, lo, hi)}) "
-            f"AND {_stats_sql(key_col)}.z IS NULL")
 
 
 def _pred_domain(kind: str, lo, hi):
@@ -2411,8 +2404,7 @@ _PARTIALS = ("_c", "_s", "_lo", "_hi")
 
 def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
     """mapInArrow kernel: one partial row ``(_c, _s, _lo, _hi)`` per
-    block. A block the metadata answers (``_in``) passes its partial
-    through; any other block decodes only the predicate columns and
+    block. Each block decodes only the predicate columns and
     ``agg_col``, keeps the rows the ``(col, lo, hi)`` predicates accept
     (:func:`_rows_matching`), and reduces them itself: the row count,
     and the exact sum, min and max of the non-null ``agg_col`` values
@@ -2424,14 +2416,8 @@ def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
         import pyarrow as pa
 
         for batch in batches:
-            out = {c: batch.column(c).to_pylist() for c in _PARTIALS}
-            ins = batch.column("_in").to_pylist()
-            descs, payloads = batch.column("desc"), batch.column("payload")
-            ns = batch.column("n").to_pylist()
-            for i, inside in enumerate(ins):
-                if inside:
-                    continue
-                blk = _BlockReader(descs[i].as_py(), payloads[i], ns[i])
+            out = {c: [] for c in _PARTIALS}
+            for blk in _read_blocks(batch):
                 mask = _rows_matching(blk, preds)
                 c, s, lo, hi = int(mask.sum()), None, None, None
                 vals = None if agg_col is None else blk.codes(agg_col)
@@ -2441,10 +2427,9 @@ def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
                         s, lo, hi = (_exact_sum(sel), int(sel.min()),
                                      int(sel.max()))
                 parts = [s] if s is None else _int64_parts(s)
-                for col, v in zip(_PARTIALS, (c, parts[0], lo, hi)):
-                    out[col][i] = v
-                for p in parts[1:]:
-                    for col, v in zip(_PARTIALS, (0, p, None, None)):
+                for row in [(c, parts[0], lo, hi),
+                            *((0, p, None, None) for p in parts[1:])]:
+                    for col, v in zip(_PARTIALS, row):
                         out[col].append(v)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(out[c], type=pa.int64()) for c in _PARTIALS],
@@ -2453,65 +2438,48 @@ def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
     return block_partials
 
 
-def _metadata_split(ov: DataFrame, inside: str,
-                    schema_kinds: list[tuple[str, str]], preds: list[tuple],
-                    agg_col: Optional[str] = None,
-                    interior: tuple[str, ...] = ("n",)) -> DataFrame:
-    """One pass over the blocks ``ov``: a partial row ``(_c, _s, _lo,
-    _hi)`` per block. Blocks ``inside`` (SQL) accepts answer from
-    metadata — the ``interior`` SQL expressions for the partial, e.g.
-    the stored row count ``n`` — and cross to Python with no payload or
-    descriptor; the rest reduce in :func:`make_partials_fn` under
-    ``preds`` (``(col, lo, hi)`` in the prune domain, ``lo`` None for
-    IS NULL). Fold with ``_COUNT_AGG`` / ``_RANGE_AGGS``."""
+def _block_partials(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+                    preds: list[tuple],
+                    agg_col: Optional[str] = None) -> DataFrame:
+    """A partial row ``(_c, _s, _lo, _hi)`` per block of ``blocks``
+    from :func:`make_partials_fn`, under ``preds`` (``(col, lo, hi)``
+    in the prune domain, ``lo`` None for IS NULL)."""
     kinds = dict(schema_kinds)
     preds = [(c, *_pred_domain(kinds[c], lo, hi)) for c, lo, hi in preds]
-    part = [f"CAST({e} AS BIGINT) AS {c}" for e, c in zip(
-        interior + ("NULL",) * (len(_PARTIALS) - len(interior)), _PARTIALS)]
-    return ov.selectExpr(
-        "n", f"coalesce({inside}, FALSE) AS _in", *part,
-        f"IF({inside}, NULL, desc) AS desc",
-        f"IF({inside}, NULL, payload) AS payload").mapInArrow(
-            make_partials_fn(preds, agg_col),
-            ", ".join(f"{c} long" for c in _PARTIALS))
+    return blocks.select("n", "desc", "payload").mapInArrow(
+        make_partials_fn(preds, agg_col),
+        ", ".join(f"{c} long" for c in _PARTIALS))
 
 
-_COUNT_AGG = "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_rows"
-
-
-def _index_split(blocks: DataFrame, ix: _BlockIndex,
-                 schema_kinds: list[tuple[str, str]], preds: list[tuple],
-                 agg_col: Optional[str] = None,
+def _index_split(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+                 preds: list[tuple], agg_col: Optional[str] = None,
                  lead: bool = False) -> DataFrame:
-    """:func:`_metadata_split` decided on the block index, for an AND of
-    ``(col, lo, hi)`` range predicates checked against each column's
-    stats (the lead-key bounds with ``lead``). A block some predicate
-    excludes is dropped; a block every predicate contains, with no null
-    in a predicate column, answers on the driver from its row count
-    ``n`` and, with ``agg_col``, that
-    column's stored ``(s, lo, hi)`` (without them it is a boundary
-    block); the boundary rest reduce in one job. One local row, folded
-    as ``_COUNT_AGG`` or, with ``agg_col``, ``_RANGE_AGGS``."""
-    preds = [(c, lo, hi) if isinstance(lo, str) else (c, int(lo), int(hi))
-             for c, lo, hi in preds]
-    tests = [(c, lo, _KeyPred(lo=lo, hi=hi)) for c, lo, hi in preds]
-
-    def bounds(i, c, lo):
-        return ix.bounds(i, lo) if lead else ix.stats(i, c, lo)
+    """COUNT(*) — and with ``agg_col`` that column's exact SUM, MIN and
+    MAX in the int64 codec domain — under an AND of ``(col, lo, hi)``
+    range predicates, split on the block index: each predicate checked
+    against its column's stats (the lead-key bounds with ``lead``). A
+    block some predicate excludes is dropped; a block every predicate
+    contains, with no null in a predicate column, answers on the driver
+    from its row count ``n`` and, with ``agg_col``, that column's
+    stored ``(s, lo, hi)`` (without them it is a boundary block); the
+    boundary rest reduce in one job. One local row: ``n_rows`` (+
+    ``sum_v, min_v, max_v``)."""
+    blocks, ix = _indexed(blocks)
+    tests = _range_tests(preds)
 
     def agg(i):
         d = ix.cols[i].get(agg_col, {})
         return d.get("s"), d.get("lo"), d.get("hi")
 
     parts = ix.split(
-        blocks,
-        lambda i: all(_stats_overlap(*bounds(i, c, lo), p)
-                      for c, lo, p in tests),
-        lambda i: all(_stats_inside(*bounds(i, c, lo), p)
+        blocks, ix.where(tests, lead),
+        lambda i: all(_stats_inside(*(ix.bounds(i, v) if lead
+                                      else ix.stats(i, c, v)), p)
                       and not ix.cols[i].get(c, {}).get("z")
-                      for c, lo, p in tests)
+                      for c, v, p in tests)
         and (agg_col is None or None not in agg(i)),
-        lambda i: (ix.n[i], *agg(i)), schema_kinds, preds, agg_col)
+        lambda i: (ix.n[i], *agg(i)), schema_kinds,
+        [(c, p.lo, p.hi) for c, _, p in tests], agg_col)
     return _fold_partials(blocks.sparkSession, parts, agg_col is not None)
 
 
@@ -2521,20 +2489,11 @@ def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     metadata: blocks fully inside [lo, hi] contribute their stored row
     count ``n`` without ANY payload decode; only boundary blocks
     (range straddles the block bounds, or bounds are unknown) decode —
-    and then only the key column, via the projection path. For a wide
-    range over a big table, almost every surviving block is interior,
-    so the count is answered from the manifest-grade metadata at
-    parquet-scan speed."""
-    if not isinstance(lo, str):
-        lo, hi = int(lo), int(hi)
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        return _index_split(blocks, ix, schema_kinds, [(key_col, lo, hi)],
-                            lead=True)
-    ov = prune_blocks_range(blocks, lo, hi)
-    return _metadata_split(ov, _key_inside(ov, key_col, lo, hi),
-                           schema_kinds, [(key_col, lo, hi)]
-                           ).selectExpr(_COUNT_AGG)
+    and then only the key column. For a wide range over a big table,
+    almost every surviving block is interior, so the count is answered
+    from the block index alone."""
+    return _index_split(blocks, schema_kinds, [(key_col, lo, hi)],
+                        lead=True)
 
 
 _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
@@ -2556,26 +2515,6 @@ _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
     ])))])
 _STATS_DDL = _STATS_JSON_SCHEMA.simpleString()
 
-_RANGE_AGGS = (_COUNT_AGG, "CAST(sum(_s) AS BIGINT) AS sum_v",
-               "CAST(min(_lo) AS BIGINT) AS min_v",
-               "CAST(max(_hi) AS BIGINT) AS max_v")
-
-
-def _metadata_agg(ov: DataFrame, inside: str,
-                  schema_kinds: list[tuple[str, str]], col: str, lo, hi,
-                  agg_col: str) -> DataFrame:
-    """SUM/MIN/MAX/COUNT of ``agg_col`` split on metadata: blocks that
-    ``inside`` (SQL) accepts and that carry ``agg_col``'s (lo, hi, s)
-    stats answer from them; the rest reduce the rows with
-    ``lo <= col <= hi`` in the partials kernel. One row out:
-    (n_rows, sum_v, min_v, max_v) in the int64 codec domain."""
-    st = _stats_sql(agg_col)
-    inside = (f"({inside}) AND ({st}.lo IS NOT NULL AND {st}.hi IS NOT NULL"
-              f" AND {st}.s IS NOT NULL)")
-    return _metadata_split(
-        ov, inside, schema_kinds, [(col, lo, hi)], agg_col,
-        ("n", f"{st}.s", f"{st}.lo", f"{st}.hi")).selectExpr(*_RANGE_AGGS)
-
 
 def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
               key_col: str, lo, hi, agg_col: str) -> DataFrame:
@@ -2585,21 +2524,14 @@ def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     [lo, hi] answer from the per-column (lo, hi, s) stats stored in the
     descriptor at encode time — no payload decode at all; boundary
     blocks (or blocks whose stats are absent: nullable column, legacy
-    table, out-of-long sum) decode only (key_col, agg_col) via the
-    projection path. One row out: (n_rows, sum_v, min_v, max_v), all
-    in the int64 codec domain. At 100 TB a wide range is almost all
-    interior blocks, so the answer streams from the parquet metadata
-    columns at scan speed."""
+    table, out-of-long sum) decode only (key_col, agg_col). One row
+    out: (n_rows, sum_v, min_v, max_v), all in the int64 codec domain.
+    At 100 TB a wide range is almost all interior blocks, so the answer
+    comes from the block index with one job over the few boundary
+    blocks."""
     _check_agg_kind("range_agg", dict(schema_kinds)[agg_col])
-    if not isinstance(lo, str):
-        lo, hi = int(lo), int(hi)
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        return _index_split(blocks, ix, schema_kinds, [(key_col, lo, hi)],
-                            agg_col, lead=True)
-    ov = prune_blocks_range(blocks, lo, hi)
-    return _metadata_agg(ov, _key_inside(ov, key_col, lo, hi),
-                         schema_kinds, key_col, lo, hi, agg_col)
+    return _index_split(blocks, schema_kinds, [(key_col, lo, hi)],
+                        agg_col, lead=True)
 
 
 def _stats_sql(col: str) -> str:
@@ -2616,15 +2548,6 @@ def _col_stats(col: str):
     return F.expr(_stats_sql(col))
 
 
-def _null_count_sql(col: str) -> str:
-    """SQL: a block's exact null count of ``col`` from its metadata —
-    the full row count when the column is absent, 0 when it is not
-    nullable, else the stored ``nc`` (NULL for a legacy block)."""
-    st = _stats_sql(col)
-    return (f"CASE WHEN {st} IS NULL THEN n WHEN {st}.z IS NULL THEN 0 "
-            f"ELSE {st}.nc END")
-
-
 def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                col: str) -> DataFrame:
     """COUNT(*) WHERE ``col`` IS NULL, answered from block metadata:
@@ -2634,18 +2557,19 @@ def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     evolution) contribute their full row count — all without touching
     a payload byte. Only legacy nullable blocks lacking the stat
     decode, and then only ``col``. One row out: ``n_nulls``."""
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        parts = ix.split(
-            blocks, lambda i: True, lambda i: ix.nulls(i, col) is not None,
-            lambda i: (ix.nulls(i, col), None, None, None), schema_kinds,
-            [(col, None, None)])
-        return _fold_partials(blocks.sparkSession, parts, False, "n_nulls")
-    exact = _null_count_sql(col)
-    return _metadata_split(
-        blocks, f"({exact}) IS NOT NULL", schema_kinds, [(col, None, None)],
-        interior=(exact,)).selectExpr(
-            "CAST(coalesce(sum(_c), 0) AS BIGINT) AS n_nulls")
+    blocks, ix = _indexed(blocks)
+    parts = ix.split(
+        blocks, list(range(len(ix))), lambda i: ix.nulls(i, col) is not None,
+        lambda i: (ix.nulls(i, col), None, None, None), schema_kinds,
+        [(col, None, None)])
+    return _fold_partials(blocks.sparkSession, parts, False, "n_nulls")
+
+
+_TABLE_STATS = T.StructType([
+    T.StructField("col", T.StringType()), *_longs(
+        "n_rows", "n_nulls", "min_long", "max_long").fields,
+    T.StructField("min_str", T.StringType()),
+    T.StructField("max_str", T.StringType())])
 
 
 def table_stats(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2656,51 +2580,16 @@ def table_stats(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     the per-block (lo, hi) stats (``min_long/max_long``, int64 codec
     domain: ts = epoch-micros, date = days), string columns from the
     lexicographic (slo, shi) pair (``min_str/max_str``). A NULL result
-    means "not derivable from metadata" (declared text/payload columns,
-    float/binary/array columns, legacy blocks) — the surface never
-    silently falls back to a scan; decode-based stats are one
-    ``decode_df`` away if a column needs them. Single metadata scan,
-    one O(columns)-row exchange."""
+    means "not derivable from metadata" (some block lacks the stat:
+    declared text/payload columns, float/binary/array columns, legacy
+    blocks) — the surface never silently falls back to a scan;
+    decode-based stats are one ``decode_df`` away if a column needs
+    them. Answered on the driver from the block index, as a local
+    relation."""
     cols = [n for n, _ in schema_kinds] if columns is None else columns
     ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        return _index_table_stats(blocks.sparkSession, ix, cols)
-    entries = []
-    for c in cols:
-        st = _stats_sql(c)
-        entries.append(
-            f"named_struct('col', {_sql_lit(c)}, 'n', n, "
-            f"'nulls', {_null_count_sql(c)}, 'lo', {st}.lo, "
-            f"'hi', {st}.hi, 'slo', {st}.slo, 'shi', {st}.shi)")
-    ex = blocks.selectExpr(f"explode(array({', '.join(entries)})) AS e") \
-        .select("e.*")
-
-    def known(agg, src):
-        # any block without the stat => the global value is unknown
-        return (f"CASE WHEN max(CAST({src} IS NULL AS INT)) = 1 "
-                f"THEN NULL ELSE {agg}({src}) END")
-
-    return ex.groupBy("col").agg(*map(F.expr, (
-        "CAST(sum(n) AS BIGINT) AS n_rows",
-        f"CAST({known('sum', 'nulls')} AS BIGINT) AS n_nulls",
-        f"CAST({known('min', 'lo')} AS BIGINT) AS min_long",
-        f"CAST({known('max', 'hi')} AS BIGINT) AS max_long",
-        f"{known('min', 'slo')} AS min_str",
-        f"{known('max', 'shi')} AS max_str")))
-
-
-_TABLE_STATS = T.StructType([
-    T.StructField("col", T.StringType()), *_longs(
-        "n_rows", "n_nulls", "min_long", "max_long").fields,
-    T.StructField("min_str", T.StringType()),
-    T.StructField("max_str", T.StringType())])
-
-
-def _index_table_stats(spark, ix: _BlockIndex, cols: list[str]) -> DataFrame:
-    """:func:`table_stats` answered from the block index: one local row
-    per column, a global value NULL when some block lacks its stat."""
     if not len(ix):
-        return _local_df(spark, _TABLE_STATS)
+        return _local_df(blocks.sparkSession, _TABLE_STATS)
 
     def known(vals, agg):
         return None if None in vals else agg(vals)
@@ -2714,93 +2603,36 @@ def _index_table_stats(spark, ix: _BlockIndex, cols: list[str]) -> DataFrame:
                      known([d.get("hi") for d in ds], max),
                      known([d.get("slo") for d in ds], min),
                      known([d.get("shi") for d in ds], max)))
-    return _local_df(spark, _TABLE_STATS,
+    return _local_df(blocks.sparkSession, _TABLE_STATS,
                      [list(v) for v in zip(*rows)] if rows else None)
 
 
-def _no_sketch(col: str, missing: int) -> ValueError:
-    return ValueError(f"approx_distinct({col!r}): {missing} blocks carry "
-                      f"no HLL sketch — re-encode with sketch_cols=[{col!r}]")
+def _sketches(blocks: DataFrame, col: str, field: str, op: str,
+              what: str) -> list[str]:
+    """Every block's stored sketch ``field`` of ``col``, from the block
+    index; raises at the call if any block lacks it (a silent fallback
+    would quietly change the cost class)."""
+    found = [cs.get(col, {}).get(field)
+             for cs in _BlockIndex.of(blocks).cols]
+    if None in found:
+        raise ValueError(f"{op}({col!r}): {found.count(None)} blocks carry "
+                         f"no {what} — re-encode with sketch_cols=[{col!r}]")
+    return found
 
 
 def approx_distinct(blocks: DataFrame, col: str) -> DataFrame:
     """APPROX COUNT(DISTINCT ``col``) from per-block HLL sketches alone
-    (``sketch_cols`` at encode): registers merge by elementwise max —
-    partition partials fold the kilobyte sketches locally, one final
-    fold estimates. No payload byte is read; driver-side work is
-    O(partitions x 2 KiB). Raises at execution if any block lacks the
-    sketch (a silent fallback would quietly change the cost class).
-    One row out: ``approx_ndv`` (stderr ~1.04/sqrt(2^_HLL_P) ~ 2.3%).
-    With a block index the registers merge on the driver and a missing
-    sketch raises at once; no job runs.
-    """
-    m = 1 << _HLL_P
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        sketches = [cs.get(col, {}).get("hll") for cs in ix.cols]
-        if None in sketches:
-            raise _no_sketch(col, sketches.count(None))
-        regs = np.zeros(m, dtype=np.uint8)
-        for s in sketches:
-            np.maximum(regs, np.frombuffer(base64.b64decode(s),
-                                           dtype=np.uint8), out=regs)
-        return _local_df(blocks.sparkSession, _longs("approx_ndv"),
-                         [[_hll_estimate(regs)]])
-    rows = blocks.selectExpr(f"{_stats_sql(col)}.hll AS hll")
-    part_schema = T.StructType([
-        T.StructField("regs", T.BinaryType()),
-        T.StructField("missing", T.LongType())])
-
-    def partial(batches):
-        regs = np.zeros(m, dtype=np.uint8)
-        missing = 0
-        for pdf in batches:
-            for s in pdf["hll"]:
-                if s is None:
-                    missing += 1
-                    continue
-                r = np.frombuffer(base64.b64decode(s), dtype=np.uint8)
-                np.maximum(regs, r, out=regs)
-        yield pd.DataFrame({"regs": [regs.tobytes()],
-                            "missing": [missing]})
-
-    def final(batches):
-        regs = np.zeros(m, dtype=np.uint8)
-        missing = 0
-        for pdf in batches:
-            missing += int(pdf["missing"].sum())
-            for b in pdf["regs"]:
-                np.maximum(regs, np.frombuffer(b, dtype=np.uint8),
-                           out=regs)
-        if missing:
-            raise _no_sketch(col, missing)
-        yield pd.DataFrame({"approx_ndv": [_hll_estimate(regs)]})
-
-    return (rows.mapInPandas(partial, schema=part_schema)
-            .repartition(1).mapInPandas(final, schema="approx_ndv long"))
-
-
-def _merge_qsummaries(points: list["np.ndarray"],
-                      weights: list["np.ndarray"]
-                      ) -> tuple["np.ndarray", "np.ndarray", float]:
-    """Weighted merge of order-stat summaries, re-compressed to
-    _QS_T+1 points at even cumulative-weight ranks. Returns
-    (values, point_weights, total_weight)."""
-    v = np.concatenate(points)
-    w = np.concatenate(weights)
-    order = np.argsort(v, kind="stable")
-    v, w = v[order], w[order]
-    cw = np.cumsum(w)
-    total = float(cw[-1])
-    targets = np.linspace(0.0, total, _QS_T + 1)
-    idx = np.minimum(np.searchsorted(cw, targets, side="left"),
-                     len(v) - 1)
-    # point i sits at cumulative rank i*total/T: weight 0 for the min
-    # point, total/T for each subsequent one, so a later fold's cumsum
-    # reproduces the ranks these points were sampled at
-    out_w = np.full(_QS_T + 1, total / _QS_T, dtype=np.float64)
-    out_w[0] = 0.0
-    return v[idx], out_w, total
+    (``sketch_cols`` at encode): the registers merge by elementwise max
+    on the driver, from the block index, and one fold estimates. No
+    payload byte is read. Raises at the call if any block lacks the
+    sketch. One row out: ``approx_ndv`` (stderr ~1.04/sqrt(2^_HLL_P) ~
+    2.3%)."""
+    regs = np.zeros(1 << _HLL_P, dtype=np.uint8)
+    for s in _sketches(blocks, col, "hll", "approx_distinct", "HLL sketch"):
+        np.maximum(regs, np.frombuffer(base64.b64decode(s), dtype=np.uint8),
+                   out=regs)
+    return _local_df(blocks.sparkSession, _longs("approx_ndv"),
+                     [[_hll_estimate(regs)]])
 
 
 def approx_quantile(blocks: DataFrame, col: str,
@@ -2808,13 +2640,11 @@ def approx_quantile(blocks: DataFrame, col: str,
     """Approximate percentiles of an int-domain (``kind="int"``) or
     float (``kind="float"``) column from per-block order-statistic
     summaries (``sketch_cols`` at encode): each block stores T+1 exact
-    order stats; the merge weighs each by its block's non-null count,
-    partition partials re-compress to T+1 points, and the final fold
-    reads values at the requested cumulative ranks. Rank error is
-    bounded by ~N/T per merge level (~3% of N total at T=64) — no
-    payload byte is read. Rows out: (q, value). Raises at execution if
-    any block lacks the sketch; all-null/empty input yields NULL
-    values.
+    order stats; the driver weighs each by its block's non-null count
+    and reads values at the requested cumulative ranks. Rank error is
+    bounded by ~N/T (~3% of N at T=64) — no payload byte is read. Rows
+    out: (q, value). Raises at the call if any block lacks the sketch;
+    all-null/empty input yields NULL values.
     """
     for q in qs:
         if not 0.0 <= q <= 1.0:
@@ -2823,95 +2653,34 @@ def approx_quantile(blocks: DataFrame, col: str,
         raise ValueError(f"kind must be 'int' or 'float', not {kind!r}")
     is_f = kind == "float"
     dt, vt = ("<f8", np.float64) if is_f else ("<i8", np.int64)
-    rows = blocks.selectExpr(
-        f"{_stats_sql(col)}.{'qsf' if is_f else 'qs'} AS qs")
-    part_schema = T.StructType([
-        T.StructField("vals", T.BinaryType()),
-        T.StructField("wts", T.BinaryType()),
-        T.StructField("total", T.DoubleType()),
-        T.StructField("missing", T.LongType())])
-
-    def decode_summaries(series):
-        pts, wts = [], []
-        missing = 0
-        for s in series:
-            if s is None:
-                missing += 1
-                continue
-            a = np.frombuffer(base64.b64decode(s), dtype=dt)
-            nn = int(a[0])
-            if nn == 0:
-                continue
-            p = a[1:]
-            pts.append(p.astype(vt))
-            wts.append(np.full(len(p), nn / len(p), dtype=np.float64))
-        return pts, wts, missing
-
-    def partial(batches):
-        pts, wts = [], []
-        missing = 0
-        for pdf in batches:
-            p, w, miss = decode_summaries(pdf["qs"])
-            pts += p
-            wts += w
-            missing += miss
-        if not pts:
-            yield pd.DataFrame({"vals": [b""], "wts": [b""],
-                                "total": [0.0], "missing": [missing]})
-            return
-        v, w, total = _merge_qsummaries(pts, wts)
-        yield pd.DataFrame({"vals": [v.astype(dt).tobytes()],
-                            "wts": [w.astype("<f8").tobytes()],
-                            "total": [total], "missing": [missing]})
-
-    out_schema = T.StructType([
-        T.StructField("q", T.DoubleType()),
-        T.StructField("value",
-                      T.DoubleType() if is_f else T.LongType())])
+    pts, wts = [], []
+    for s in _sketches(blocks, col, "qsf" if is_f else "qs",
+                       "approx_quantile", "quantile sketch"):
+        a = np.frombuffer(base64.b64decode(s), dtype=dt)
+        if int(a[0]):
+            pts.append(a[1:].astype(vt))
+            wts.append(np.full(len(a) - 1, int(a[0]) / (len(a) - 1)))
     qarr = [float(q) for q in qs]
-
-    def final(batches):
-        pts, wts = [], []
-        missing = 0
-        for pdf in batches:
-            missing += int(pdf["missing"].sum())
-            for vb, wb in zip(pdf["vals"], pdf["wts"]):
-                if len(vb) == 0:
-                    continue
-                pts.append(np.frombuffer(vb, dtype=dt)
-                           .astype(vt))
-                wts.append(np.frombuffer(wb, dtype="<f8")
-                           .astype(np.float64))
-        if missing:
-            raise ValueError(
-                f"approx_quantile({col!r}): {missing} blocks carry no "
-                f"quantile sketch — re-encode with sketch_cols=[{col!r}]")
-        if not pts:
-            yield pd.DataFrame({"q": qarr,
-                                "value": [None] * len(qarr)})
-            return
-        v = np.concatenate(pts)
-        w = np.concatenate(wts)
+    vals = [None] * len(qarr)
+    if pts:
+        v, w = np.concatenate(pts), np.concatenate(wts)
         order = np.argsort(v, kind="stable")
-        v, w = v[order], w[order]
-        cw = np.cumsum(w)
-        total = cw[-1]
-        idx = np.minimum(
-            np.searchsorted(cw, np.asarray(qarr) * total, side="left"),
-            len(v) - 1)
-        yield pd.DataFrame({"q": qarr, "value": v[idx]})
-
-    return (rows.mapInPandas(partial, schema=part_schema)
-            .repartition(1).mapInPandas(final, schema=out_schema))
+        v, cw = v[order], np.cumsum(w[order])
+        idx = np.minimum(np.searchsorted(cw, np.asarray(qarr) * cw[-1],
+                                         side="left"), len(v) - 1)
+        vals = v[idx].tolist()
+    return _local_df(blocks.sparkSession, T.StructType([
+        T.StructField("q", T.DoubleType()),
+        T.StructField("value", T.DoubleType() if is_f else T.LongType())]),
+        [qarr, vals])
 
 
 def with_stat_columns(blocks: DataFrame, cols: list[str]) -> DataFrame:
     """Materialize per-column (lo, hi) descriptor stats as top-level
     columns ``<c>__lo`` / ``<c>__hi`` — call before persisting a blocks
-    table that will serve :func:`scan_where` predicates on those
-    columns. Against the persisted table the secondary zone map then
-    pushes to the parquet scan (row-group min/max stats skip whole
-    groups of blocks on disk), exactly like the lead-key bounds."""
+    table that ``format("oroch")`` will read: its row-group planning
+    prunes on those columns' parquet min/max stats, exactly like the
+    lead-key bounds."""
     for c in cols:
         st = _stats_sql(c)
         blocks = (blocks.withColumn(f"{c}__lo", F.expr(f"{st}.lo"))
@@ -2931,30 +2700,13 @@ def scan_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     predicate on e.g. ``user_id`` over an ``event_id``-keyed table
     still decodes only candidate blocks. Blocks without stats (nullable
     column, legacy table) are kept — pruning never drops a correct row.
-    The stats filter runs JVM-side on the small ``desc`` column before
-    any payload reaches the Python decode kernel.
+    The block index decides before any payload reaches the Python
+    decode kernel.
 
     String columns prune the same way via the lexicographic
     (slo, shi) per-column bounds (pass string ``lo``/``hi``); declared
     text/payload columns carry no bounds and degrade to a full scan."""
-    blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    return _decode_where(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
-                         schema_kinds, [col],
-                         _between(schema_kinds, col, lo, hi), columns)
-
-
-def _where_bounds(blocks: DataFrame, col: str, lo, hi):
-    """(blo, bhi, lo, hi) for a secondary-column range predicate, the
-    bounds as SQL: lexicographic (slo, shi) stats for string bounds,
-    per-column (lo, hi) stats — or their materialized pushable twins —
-    for the integer domain."""
-    st = _stats_sql(col)
-    if isinstance(lo, str):
-        return f"{st}.slo", f"{st}.shi", lo, hi
-    lo, hi = int(lo), int(hi)
-    if f"{col}__lo" in blocks.columns:  # materialized: pushable
-        return _q(f"{col}__lo"), _q(f"{col}__hi"), lo, hi
-    return f"{st}.lo", f"{st}.hi", lo, hi
+    return scan_where_multi(blocks, schema_kinds, [(col, lo, hi)], columns)
 
 
 def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2970,28 +2722,14 @@ def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     event_id-keyed table) a wide predicate is answered almost entirely
     from metadata; on an uncorrelated column it degrades gracefully to
     the scan — never to a wrong answer."""
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        return _index_split(blocks, ix, schema_kinds, [(col, lo, hi)])
-    blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    return _metadata_split(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
-                           _bounds_inside(blo, bhi, lo, hi), schema_kinds,
-                           [(col, lo, hi)]).selectExpr(_COUNT_AGG)
+    return _index_split(blocks, schema_kinds, [(col, lo, hi)])
 
 
-def _multi_pred(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-                preds: list[tuple]):
-    """(block_keep, block_inside, row_filter, pred_cols) for an AND of
-    range predicates. keep/inside are SQL over the desc stats;
-    row_filter is the exact post-decode predicate."""
-    keep, inside, row_f = [], [], []
-    for col, lo, hi in preds:
-        blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-        keep.append(f"({_bounds_keep(blo, bhi, lo, hi)})")
-        inside.append(f"({_bounds_inside(blo, bhi, lo, hi)})")
-        row_f.append(f"({_between(schema_kinds, col, lo, hi)})")
-    return (" AND ".join(keep), " AND ".join(inside), " AND ".join(row_f),
-            [c for c, _, _ in preds])
+def _prune_where(blocks: DataFrame, preds: list[tuple]) -> DataFrame:
+    """``blocks`` cut to the blocks whose per-column stats may hold a
+    row matching every ``(col, lo, hi)`` of ``preds``."""
+    blocks, ix = _indexed(blocks)
+    return ix.narrow(blocks, ix.where(_range_tests(preds)))
 
 
 def scan_where_multi(blocks: DataFrame,
@@ -3006,11 +2744,11 @@ def scan_where_multi(blocks: DataFrame,
     once, which is the query shape Z-ordering exists for. On a
     single-key layout it degrades to the best single predicate's
     pruning, never to a wrong answer (stat-less blocks are kept). One
-    metadata filter, one decode of the surviving blocks."""
-    keep, _inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
-                                                  preds)
-    return _decode_where(blocks.filter(keep), schema_kinds, pred_cols,
-                         row_f, columns)
+    decode of the surviving blocks."""
+    return _decode_where(
+        _prune_where(blocks, preds), schema_kinds, [c for c, _, _ in preds],
+        " AND ".join(f"({_between(schema_kinds, c, lo, hi)})"
+                     for c, lo, hi in preds), columns)
 
 
 def count_where_multi(blocks: DataFrame,
@@ -3022,48 +2760,15 @@ def count_where_multi(blocks: DataFrame,
     payload decode, blocks any predicate excludes are pruned, and only
     straddlers decode (just the predicate columns). One row out:
     ``n_rows``."""
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        return _index_split(blocks, ix, schema_kinds, preds)
-    keep, inside, _row_f, _cols = _multi_pred(blocks, schema_kinds, preds)
-    return _metadata_split(blocks.filter(keep), inside, schema_kinds,
-                           preds).selectExpr(_COUNT_AGG)
-
-
-def bloom_keep_cond(col: str, value, kind: str, field: str = "bm") -> str:
-    """JVM predicate (SQL): keep a block unless its stored Bloom filter for
-    ``col`` PROVES ``value`` absent. The k probe hashes are computed
-    once on the driver (same `_bloom_hash_vals` path as the build);
-    each probe is pmod into the block's own filter size — exact for
-    the power-of-two sizes `_bloom_build` emits, because the int64
-    wrap (2^64) is 0 mod m — then a byte extract + bit test on the
-    unbase64'd filter. Pure JVM expressions over the small desc
-    column: no payload bytes move, no Python runs, blocks without a
-    filter (legacy / not a bloom_col) are kept. ``field`` selects the
-    descriptor filter: "bm" (value Bloom) or "tbm" (token Bloom)."""
-    h1 = int(_bloom_hash_vals(value, kind)[0])
-    h2 = int(_mix64(np.array([h1], dtype=np.uint64))[0])
-    bm = f"{_stats_sql(col)}.{field}"
-    bloom = f"unbase64({bm})"
-    m_bits = f"CAST(length({bloom}) * 8 AS BIGINT)"
-    hits = []
-    for i in range(_BLOOM_K):
-        full = (h1 + i * h2) % (1 << 64)
-        signed = full - (1 << 64) if full >= (1 << 63) else full
-        pos = f"pmod({_sql_lit(signed)}, {m_bits})"
-        byte_v = (f"CAST(conv(hex(substring({bloom}, "
-                  f"CAST(shiftright({pos}, 3) + 1 AS INT), 1)), 16, 10) "
-                  f"AS INT)")
-        hits.append(f"getbit(CAST({byte_v} AS BIGINT), "
-                    f"CAST({pos} & 7 AS INT)) = 1")
-    return f"{bm} IS NULL OR ({' AND '.join(hits)})"
+    return _index_split(blocks, schema_kinds, preds)
 
 
 def bloom_might_contain(bm_b64: Optional[str], value, kind: str) -> bool:
-    """Python-side probe of a block's stored Bloom filter — the same
-    double-hash positions the JVM probe (:func:`bloom_keep_cond`)
-    tests, for callers that hold the descriptor outside a Spark plan
-    (the DataSource reader). Missing filter => True (cannot prune)."""
+    """Probe of a block's stored Bloom filter: the k double-hash
+    positions of ``value`` (same `_bloom_hash_vals` path as the build),
+    each taken mod the filter's own size. False proves ``value``
+    absent; a missing filter (legacy block, not a bloom column) gives
+    True — cannot prune."""
     if not bm_b64:
         return True
     bloom = np.frombuffer(base64.b64decode(bm_b64), dtype=np.uint8)
@@ -3099,36 +2804,39 @@ def grep_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         words = [words]
     if not words:
         raise ValueError("grep_where: need at least one word")
-    keep, row_f = [], []
+    row_f = []
     tokens = (f"split(coalesce({_q(col)}, {_sql_lit('')}), "
               f"{_sql_lit(_TOKEN_SPLIT_RE)})")
     for w in words:
         if not re.fullmatch("[0-9A-Za-z_]+", w):
             raise ValueError(f"grep_where: probe {w!r} is not a single "
                              "word token ([0-9A-Za-z_]+)")
-        keep.append(f"({bloom_keep_cond(col, w, K_STR, field='tbm')})")
         row_f.append(f"array_contains({tokens}, {_sql_lit(w)})")
-    return _decode_where(blocks.filter(" AND ".join(keep)), schema_kinds,
-                         [col], " AND ".join(row_f), columns)
+    blocks, ix = _indexed(blocks)
+    keep = ix.keep(lambda i: all(ix.bloom(i, col, w, K_STR, "tbm")
+                                 for w in words))
+    return _decode_where(ix.narrow(blocks, keep), schema_kinds, [col],
+                         " AND ".join(row_f), columns)
 
 
 def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                  col: str, value,
                  columns: Optional[list[str]] = None) -> DataFrame:
     """Point lookup on ANY column — not just the lead key — pruned by
-    the per-block Bloom filter (:func:`bloom_keep_cond`) plus, for
-    integer-domain columns, the per-column (lo, hi) zone stats. This
-    is the missing third leg of the pruning stack: zone maps handle
-    the sorted lead key (:func:`lookup`) and correlated secondary
-    ranges (:func:`scan_where`); Blooms handle equality on
-    high-cardinality columns uncorrelated with block order, where
-    every block's [lo, hi] spans the domain and zone maps prune
-    nothing. Surviving blocks run the lookup KERNEL on the probe
-    column — dictionary-coded string blocks match against the
-    dictionary alone, row strings of non-matching rows never
-    materialize (`strings.str_block_eq_indices`) — and fetch only the
-    requested columns at matched indices. ~2% false-positive probes
-    at the default sizing; never a false negative."""
+    the per-block Bloom filter (:func:`bloom_might_contain`) plus the
+    per-column zone stats. This is the missing third leg of the
+    pruning stack: zone maps handle the sorted lead key
+    (:func:`lookup`) and correlated secondary ranges
+    (:func:`scan_where`); Blooms handle equality on high-cardinality
+    columns uncorrelated with block order, where every block's
+    [lo, hi] spans the domain and zone maps prune nothing. Surviving
+    blocks run the lookup KERNEL on the probe column — dictionary-coded
+    string blocks match against the dictionary alone, row strings of
+    non-matching rows never materialize
+    (`strings.str_block_eq_indices`) — and fetch only the requested
+    columns at matched indices; when no block survives no job runs.
+    ~2% false-positive probes at the default sizing; never a false
+    negative."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     kind = dict(schema_kinds)[col]
@@ -3137,11 +2845,8 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         raise ValueError(f"lookup_where: column {col!r} kind {kind!r} "
                          "has no equality-probe domain (use a "
                          "string/integer-domain column)")
-    st = _stats_sql(col)
     probe = str(value) if kind == K_STR else int(value)
-    b = ("slo", "shi") if kind == K_STR else ("lo", "hi")
-    keep = (f"({bloom_keep_cond(col, value, kind)}) AND "
-            f"({_lo_overlap(f'{st}.{b[0]}', f'{st}.{b[1]}', probe, probe)})")
+    pred = _KeyPred(values=[probe])
     decode_cols = columns
     if columns is not None and col not in columns:
         decode_cols = [col] + columns
@@ -3150,10 +2855,16 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         else [(c, by_name[c]) for c in decode_cols]
     out_schema = T.StructType(
         [T.StructField(n, spark_type_of(k)) for n, k in sel])
-    fn = make_lookup_fn(schema_kinds, col, probe,
-                        to_arrow_schema(out_schema)
-                        .serialize().to_pybytes())
-    dec = blocks.filter(keep).mapInArrow(fn, schema=out_schema)
+    blocks, ix = _indexed(blocks)
+    keep = ix.keep(lambda i: ix.bloom(i, col, value, kind)
+                   and _stats_overlap(*ix.stats(i, col, probe), pred))
+    if not keep:
+        dec = _local_df(blocks.sparkSession, out_schema)
+    else:
+        fn = make_lookup_fn(schema_kinds, col, probe,
+                            to_arrow_schema(out_schema)
+                            .serialize().to_pybytes())
+        dec = ix.narrow(blocks, keep).mapInArrow(fn, schema=out_schema)
     if columns is not None and col not in columns:
         dec = dec.select(*columns)
     return dec
@@ -3248,18 +2959,22 @@ def make_lookup_fn(kinds: list[tuple[str, str]], key_col: str, value,
     return lookup_blocks
 
 
-def _lookup_blocks(blocks: DataFrame, values: list, sql_prune):
-    """The blocks a lookup of ``values`` must read. The block index
-    keeps those whose lead-key bounds can hold a value, or gives None
-    when no block can, which answers the lookup with no job; with no
-    index, ``sql_prune()`` prunes."""
-    ix = _BlockIndex.of(blocks)
-    if ix is None:
-        return sql_prune()
-    pred = _KeyPred(values=values)
-    keep = [i for i in range(len(ix))
-            if _stats_overlap(*ix.bounds(i, values[0]), pred)]
-    return ix.narrow(blocks, keep) if keep else None
+def _lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+            key_col: str, values: list) -> DataFrame:
+    """The rows whose lead key is one of ``values``: the blocks whose
+    bounds can hold a value run :func:`make_lookup_fn`; when no block
+    can, a local empty frame answers with no job."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out_schema = T.StructType(
+        [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds])
+    blocks, ix = _indexed(blocks, desc=False)
+    keep = ix.where([(None, values[0], _KeyPred(values=values))], lead=True)
+    if not keep:
+        return _local_df(blocks.sparkSession, out_schema)
+    fn = make_lookup_fn(schema_kinds, key_col, values,
+                        to_arrow_schema(out_schema).serialize().to_pybytes())
+    return ix.narrow(blocks, keep).mapInArrow(fn, schema=out_schema)
 
 
 def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3271,52 +2986,26 @@ def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     (`/root/reference/oroch/integer_array.h:166-208`). ``value`` may be
     an int (integer-domain keys, incl. ts-as-micros/date-as-days) or a
     str (string keys, pruned lexicographically)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if not isinstance(value, str):
-        value = int(value)
-    out_schema = T.StructType(
-        [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds])
-    arrow_schema = to_arrow_schema(out_schema)
-    fn = make_lookup_fn(schema_kinds, key_col, value,
-                        arrow_schema.serialize().to_pybytes())
-    kept = _lookup_blocks(blocks, [value], lambda: prune_blocks(blocks,
-                                                                value))
-    if kept is None:
-        return _local_df(blocks.sparkSession, out_schema)
-    return kept.mapInArrow(fn, schema=out_schema)
+    return _lookup(blocks, schema_kinds, key_col,
+                   [value if isinstance(value, str) else int(value)])
 
 
 def lookup_in(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
               key_col: str, values) -> DataFrame:
     """Batched IN-list point lookup: fetch the rows of MANY keys in one
     pass over the persisted blocks table. Pruning keeps blocks whose
-    bounds can contain any probe value (:func:`prune_blocks_in`,
-    parquet-pushable for small lists); each surviving block decodes
-    its key column ONCE and matches the whole probe set against it
-    (np.isin / Arrow is_in), so the cost is O(surviving blocks), not
-    O(keys x blocks). Extension beyond the reference's single-value
-    ``find`` (`integer_array.h:192-208`) — the shape an analyst's
-    batch entity-fetch takes at 100 TB."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    bounds can contain any probe value (:func:`prune_blocks_in`); each
+    surviving block decodes its key column ONCE and matches the whole
+    probe set against it (np.isin / Arrow is_in), so the cost is
+    O(surviving blocks), not O(keys x blocks). Extension beyond the
+    reference's single-value ``find`` (`integer_array.h:192-208`) — the
+    shape an analyst's batch entity-fetch takes at 100 TB."""
     values = [v if isinstance(v, str) else int(v) for v in values]
     if not values:
         raise ValueError("lookup_in needs at least one probe value")
     if len({type(v) for v in values}) > 1:
         raise ValueError("lookup_in probe values must share one type")
-    out_schema = T.StructType(
-        [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds])
-    arrow_schema = to_arrow_schema(out_schema)
-    fn = make_lookup_fn(schema_kinds, key_col, list(values),
-                        arrow_schema.serialize().to_pybytes())
-    kept = _lookup_blocks(blocks, values,
-                          lambda: prune_blocks_in(blocks, values))
-    if kept is None:
-        return _local_df(blocks.sparkSession, out_schema)
-    return kept.mapInArrow(fn, schema=out_schema)
+    return _lookup(blocks, schema_kinds, key_col, values)
 
 
 def make_group_count_fn(col: str, arrow_schema_bytes: bytes):
@@ -3487,20 +3176,13 @@ def agg_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     Blocks whose per-column (lo, hi) stats for the PREDICATE column
     prove every row matches answer from the AGGREGATE column's stored
     (lo, hi, s) stats with no payload decode; blocks whose stats prove
-    no row matches are pruned JVM-side; only straddling blocks (or
-    blocks missing either stat) decode — and only (col, agg_col). One
-    row out: (n_rows, sum_v, min_v, max_v) in the int64 codec domain.
-    On a predicate correlated with block order a wide range is almost
-    all interior blocks — answered at desc-scan speed."""
+    no row matches are pruned on the block index; only straddling
+    blocks (or blocks missing either stat) decode — and only (col,
+    agg_col). One row out: (n_rows, sum_v, min_v, max_v) in the int64
+    codec domain. On a predicate correlated with block order a wide
+    range is almost all interior blocks — answered from the index."""
     _check_agg_kind("agg_where", dict(schema_kinds)[agg_col])
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        return _index_split(blocks, ix, schema_kinds, [(col, lo, hi)],
-                            agg_col)
-    blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    return _metadata_agg(blocks.filter(_bounds_keep(blo, bhi, lo, hi)),
-                         _bounds_inside(blo, bhi, lo, hi), schema_kinds,
-                         col, lo, hi, agg_col)
+    return _index_split(blocks, schema_kinds, [(col, lo, hi)], agg_col)
 
 
 # lookup_join block-prune grid: the bucket width is the AVERAGE block
@@ -3516,15 +3198,6 @@ _LJ_SPAN_CAP = 64
 # so tiny tables keep the low-latency plan and the grid engages where
 # the nested loop would actually hurt (10^6+ blocks at 100 TB).
 _LJ_GRID_MIN_BLOCKS = 1024
-# planning-aggregate memo, keyed by the metadata plan's semantic hash:
-# bounds stats of an immutable blocks table don't change between
-# lookup_join calls. Staleness (same path re-read after an append) can
-# only cost prune quality, never correctness — the grid math is
-# self-consistent for ANY (origin, width): both sides bucket with the
-# same formula and the containment residual is exact. Bounded; cleared
-# wholesale when full.
-_LJ_AGG_CACHE: dict = {}
-
 
 def _str_surrogate(c: "F.Column") -> "F.Column":
     """Order-preserving int64 surrogate of a string: the first 7 UTF-8
@@ -3534,35 +3207,6 @@ def _str_surrogate(c: "F.Column") -> "F.Column":
     lo <= k <= hi — prefix collisions only widen the candidate set."""
     return F.conv(F.rpad(F.hex(F.substring(c.cast("binary"), 1, 7)),
                          14, "0"), 16, 10).cast("long")
-
-
-def _scan_rows_hint(df: DataFrame) -> Optional[int]:
-    """Driver-side row-count hint for a parquet-scan DataFrame: the sum
-    of footer row counts of its input files (exact for a bare scan, an
-    upper bound if the plan filters rows). None when the plan has no
-    parquet inputs or the footers can't be read — callers must treat
-    that as "unknown", never as zero."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    import pyarrow.parquet as pq
-
-    total = 0
-    for f in files:
-        if f.startswith("file:"):
-            f = f[len("file:"):]
-            while f.startswith("//"):
-                f = f[1:]
-        if not f.endswith(".parquet") or not os.path.exists(f):
-            return None
-        try:
-            total += pq.ParquetFile(f).metadata.num_rows
-        except Exception:
-            return None
-    return total
 
 
 def _bucketed_block_prune(blocks: DataFrame, bounds: tuple[str, str],
@@ -3578,18 +3222,29 @@ def _bucketed_block_prune(blocks: DataFrame, bounds: tuple[str, str],
     range-condition semi-join, whose nested loop over metadata rows is
     cheaper than the grid's extra exchanges. See lookup_join."""
     blo, bhi = F.col(bounds[0]), F.col(bounds[1])
-    # strategy choice first, and as cheaply as possible: when the
-    # blocks DF is a file scan, the row count comes off the parquet
-    # footers driver-side (an UPPER bound if the plan filters rows —
-    # over-choosing the grid costs latency, never correctness) and the
-    # small-table path pays NO planning job at all
-    nb_hint = _scan_rows_hint(blocks)
-    kd = F.col("_kd")
-    direct = lambda: blocks.join(
-        F.broadcast(probe.select(k_dom.alias("_kd"))),
-        blo.isNull() | ((blo <= kd) & (bhi >= kd)), "left_semi")
-    if nb_hint is not None and nb_hint < grid_min_blocks:
-        return direct()
+    # strategy and grid both come from the block index: its block
+    # count, and the origin and mean span of the bounds in the
+    # surrogate domain (string keys through the Python twin of
+    # _str_surrogate). Any (origin, width) is correct — both sides
+    # bucket with the same formula and the containment residual is
+    # exact — so they only steer how much the grid prunes.
+    ix = _BlockIndex.of(blocks, desc=False)
+    if len(ix) < grid_min_blocks:
+        kd = F.col("_kd")
+        return blocks.join(
+            F.broadcast(probe.select(k_dom.alias("_kd"))),
+            blo.isNull() | ((blo <= kd) & (bhi >= kd)), "left_semi")
+    surr = str_prefix_long if kind == K_STR else int
+    spans = [(surr(lo), surr(hi))
+             for lo, hi in (ix.skey if kind == K_STR else ix.key)
+             if lo is not None and hi is not None]
+    if not spans or max(hi for _, hi in spans) \
+            - min(lo for lo, _ in spans) >= (1 << 62):
+        # no usable bounds anywhere (or a pathological span that would
+        # overflow the shifted grid): pruning is an optimization only
+        return blocks
+    a = min(lo for lo, _ in spans)
+    w = 1 + sum(hi - lo for lo, hi in spans) // len(spans)
     if kind == K_STR:
         blo_s, bhi_s = _str_surrogate(blo), _str_surrogate(bhi)
         k_surr = _str_surrogate(k_dom)
@@ -3598,34 +3253,6 @@ def _bucketed_block_prune(blocks: DataFrame, bounds: tuple[str, str],
     meta = blocks.select(
         "bucket", "block_idx", blo.alias("_lo"), bhi.alias("_hi"),
         blo_s.alias("_los"), bhi_s.alias("_his"))
-    # memoize the planning aggregate per blocks PLAN: repeated
-    # lookup_joins against the same (e.g. persisted, footer-less)
-    # table pay the metadata job once, not per call
-    try:
-        ck = (meta._jdf.queryExecution().analyzed().semanticHash(),
-              bounds, kind)
-    except Exception:
-        ck = None
-    if ck is not None and ck in _LJ_AGG_CACHE:
-        g = _LJ_AGG_CACHE[ck]
-    else:
-        g = meta.agg(F.min("_los").alias("a"),
-                     F.max("_his").alias("b"),
-                     F.avg(F.col("_his") - F.col("_los")).alias("s"),
-                     F.count(F.lit(1)).alias("nb")).first()
-        if ck is not None:
-            if len(_LJ_AGG_CACHE) >= 64:
-                _LJ_AGG_CACHE.clear()
-            _LJ_AGG_CACHE[ck] = g
-    if g is not None and int(g["nb"] or 0) < grid_min_blocks:
-        return direct()
-    if g is None or g["a"] is None or g["b"] is None \
-            or int(g["b"]) - int(g["a"]) >= (1 << 62):
-        # no usable bounds anywhere (or a pathological span that would
-        # overflow the shifted grid): pruning is an optimization only
-        return blocks
-    a = int(g["a"])
-    w = max(1, int(g["s"]) + 1)
     bkt = lambda c: F.expr(f"(({c}) - {a}L) div {w}L")
     spanned = meta.withColumn("_b0", bkt("_los")) \
                   .withColumn("_b1", bkt("_his"))
@@ -3726,44 +3353,29 @@ def _topk_threshold(walk, k: int):
     return None
 
 
-def _topk_prune(blocks: DataFrame, lo: str, hi: str, k: int,
-                ascending: bool, bounds) -> DataFrame:
+def _topk_prune(blocks: DataFrame, k: int, ascending: bool,
+                bounds, desc: bool = True) -> DataFrame:
     """Keep the blocks that can hold one of the top ``k`` rows by the
-    block bounds ``[lo, hi]`` (SQL), with the overlap-safe prefix rule
-    of :func:`topk_key`. The prefix that holds k rows has at most k
-    blocks. With a block index the driver walks every block's
-    ``bounds(ix, i)`` to the threshold and keeps the blocks that reach
-    it (:func:`_stats_overlap`); without one an ORDER BY/LIMIT k over
-    the ``(n, bound)`` projection finds the prefix — a
-    TakeOrderedAndProject, no shuffle, and parquet column pruning keeps
-    payload bytes on disk — and the threshold becomes one literal
-    filter. Blocks without bounds are always kept and never join the
-    prefix; fewer than k rows in bounded blocks keeps every block.
-    Ascending mirrors with the bounds swapped."""
-    first, edge = (hi, lo) if ascending else (lo, hi)
-    ix = _BlockIndex.of(blocks)
-    if ix is not None:
-        b = [bounds(ix, i) for i in range(len(ix))]
-        t = _topk_threshold(sorted(
-            ((x[ascending], n) for x, n in zip(b, ix.n)
-             if x[ascending] is not None),
-            key=lambda p: p[0], reverse=not ascending), k)
-        if t is None:
-            return blocks
-        # desc: keep B iff it reaches up to t; asc: down to t
-        pred = _KeyPred(hi=t) if ascending else _KeyPred(lo=t)
-        return ix.narrow(blocks, [i for i, x in enumerate(b)
-                                  if _stats_overlap(*x, pred)])
-    t = _topk_threshold(blocks.selectExpr(f"{first} AS _b", "n")
-                        .filter("_b IS NOT NULL")
-                        .orderBy("_b", ascending=ascending)
-                        .limit(k).collect(), k)
+    block bounds ``bounds(ix, i)``, with the overlap-safe prefix rule
+    of :func:`topk_key`: the driver walks the bounded blocks of the
+    block index to the threshold where the prefix holds k rows (at most
+    k blocks) and keeps the blocks that reach it
+    (:func:`_stats_overlap`). Blocks without bounds are always kept and
+    never join the prefix; fewer than k rows in bounded blocks keeps
+    every block. Ascending mirrors with the bounds swapped. ``desc``
+    as in :meth:`_BlockIndex.of`."""
+    blocks, ix = _indexed(blocks, desc)
+    b = [bounds(ix, i) for i in range(len(ix))]
+    t = _topk_threshold(sorted(
+        ((x[ascending], n) for x, n in zip(b, ix.n)
+         if x[ascending] is not None),
+        key=lambda p: p[0], reverse=not ascending), k)
     if t is None:
         return blocks
-    # desc: skip B iff k rows are provably above it (edge = hi < t);
-    # asc: skip B iff k rows are provably below it (edge = lo > t)
-    return blocks.filter(f"{edge} IS NULL OR {edge} "
-                         f"{'<=' if ascending else '>='} {_sql_lit(t)}")
+    # desc: keep B iff it reaches up to t; asc: down to t
+    pred = _KeyPred(hi=t) if ascending else _KeyPred(lo=t)
+    return ix.narrow(blocks, [i for i, x in enumerate(b)
+                              if _stats_overlap(*x, pred)])
 
 
 def _topk_decode(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3796,12 +3408,10 @@ def topk_key(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     TakeOrderedAndProject — per-partition partial top-k, no global
     sort. (Ascending mirrors with the bounds swapped and negated.)"""
     is_str = dict(schema_kinds)[key_col] == K_STR
-    lo, hi = ("key_slo", "key_shi") if is_str else ("key_lo", "key_hi")
-    if lo in blocks.columns:
-        blocks = _topk_prune(blocks, lo, hi, k, ascending,
-                             lambda ix, i: (ix.skey if is_str else ix.key)[i])
-    return _topk_decode(blocks, schema_kinds, key_col, k, ascending,
-                        columns)
+    kept = _topk_prune(blocks, k, ascending,
+                       lambda ix, i: (ix.skey if is_str else ix.key)[i],
+                       desc=False)
+    return _topk_decode(kept, schema_kinds, key_col, k, ascending, columns)
 
 
 def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3815,8 +3425,7 @@ def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     block order; uncorrelated columns degrade to a full scan — never a
     wrong answer). The threshold comes from at most k metadata rows;
     nothing shuffles."""
-    st = _stats_sql(col)
-    kept = _topk_prune(blocks, f"{st}.lo", f"{st}.hi", k, ascending,
+    kept = _topk_prune(blocks, k, ascending,
                        lambda ix, i: ix.stats(i, col, 0))
     return _topk_decode(kept, schema_kinds, col, k, ascending, columns)
 

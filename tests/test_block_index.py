@@ -1,15 +1,21 @@
-"""The driver-side block index (``engine._BlockIndex``).
+"""The driver-side block index (``engine._BlockIndex``), the one prune
+evaluator of every builder.
 
-- a bare parquet scan of a blocks table uses it; any other frame
-  (``select("*")``, a filter, a union, a cached or unpersisted encode)
-  takes the SQL path, and every path gives the brute-force answers;
-- it is checked against the files on every use: a file rewritten in
-  place between two queries on one DataFrame gives the new answer;
+- a bare parquet scan of a blocks table is read with pyarrow and
+  cached; any other frame (``select("*")``, a filter, a union, a cached
+  or unpersisted encode) is collected in one Spark job, and every frame
+  gives the brute-force answers — a frame whose reads may differ (an
+  unpersisted encode with tied keys) is pinned, so its index and its
+  payload come from one read;
+- it is checked against the files on every use, and a collected index
+  is never reused: a file rewritten in place between two queries on
+  one DataFrame gives the new answer;
 - odd layouts — a legacy file without ``key_slo``/``key_shi``, two
   files repeating a ``(bucket, block_idx)``, old and new files in one
-  directory — give the brute-force answers;
-- metadata-only answers run no Spark job; boundary blocks and top-k
-  run one.
+  directory — give the brute-force answers, and repeated ids never
+  count a block twice;
+- metadata-only answers run no Spark job on a bare scan; boundary
+  blocks and top-k run one; any other frame adds the collect job.
 """
 import os
 import uuid
@@ -89,6 +95,12 @@ def _brute(t, kc):
     out["topk_asc"] = sorted(k)[:7]
     out["topk_by"] = sorted(v.to_pylist(), reverse=True)[:5]
     out["ndv"] = len(pc.unique(v))
+    out["aq"] = [pc.min(v).as_py(), pc.max(v).as_py()]
+    out["rs"] = rows(set(range(150, 181)))
+    out["sw"] = sorted(t.filter(pc.and_(pc.greater_equal(v, 100),
+                                        pc.less_equal(v, 120)))["k"]
+                       .to_pylist())
+    out["lw"] = sorted(t.filter(pc.equal(v, 250))["k"].to_pylist())
     return key, out
 
 
@@ -122,6 +134,12 @@ def _answers(blocks, kinds, kc):
     out["topk_by"] = [r.v for r in engine.topk_by(blocks, kinds, "v", 5)
                       .collect()]
     out["ndv"] = engine.approx_distinct(blocks, "v").first().approx_ndv
+    out["aq"] = [r.value for r in
+                 engine.approx_quantile(blocks, "v", [0.0, 1.0]).collect()]
+    out["rs"] = ids(engine.range_scan(blocks, kinds, kc, key(150),
+                                      key(180)))
+    out["sw"] = ids(engine.scan_where(blocks, kinds, "v", 100, 120))
+    out["lw"] = ids(engine.lookup_where(blocks, kinds, "v", 250))
     return out
 
 
@@ -157,10 +175,59 @@ def test_plain_scan_and_fallbacks_match_brute_force(spark, table):
     cached = spark.read.parquet(table).cache()
     others["cached"] = cached
     for name, frame in {"scan": scan, **others}.items():
-        if name != "scan":
-            assert engine._BlockIndex.of(frame) is None, name
+        assert engine._BlockIndex.of(frame) is not None, name
         _check(_answers(frame, kinds, "k"), dict(want))
     cached.unpersist()
+
+
+def test_frame_whose_reads_differ_is_read_once(spark):
+    """Keys that tie across block boundaries: which block holds which
+    tied row is the order the encode's sort sees them in, which for an
+    unpersisted encode is the shuffle's fetch and spill-merge order and
+    may change between reads. Here the source emits its rows in a
+    fresh random order on every read, so it always does. A builder
+    that indexes the frame and then reads its payload must see one
+    read; every answer matches brute force."""
+    n, g = 1500, 150  # key k = i // g: every key spans a block boundary
+    t = pa.table({"k": pa.array([i // g for i in range(n)], pa.int64()),
+                  "v": pa.array(range(n), pa.int64()),
+                  "h": pa.array([int(i % g == 7) for i in range(n)],
+                                pa.int64())})
+
+    def shuffled(batches):
+        import random
+
+        for b in batches:
+            order = list(range(b.num_rows))
+            random.shuffle(order)
+            yield b.take(order)
+
+    src = spark.createDataFrame(t)
+    src = src.repartition(3).mapInArrow(shuffled, src.schema)
+    kinds = engine.column_kinds(src.schema)
+    enc = engine.encode_df(src, ["k"], n_buckets=1, block_rows=100,
+                           bloom_cols=["h"])
+    assert not engine._stored(enc)
+    assert engine._stored(spark.createDataFrame(t).select("*"))
+    v, h = t["v"].to_pylist(), t["h"].to_pylist()
+
+    def agg(xs):
+        return (len(xs), sum(xs), min(xs), max(xs))
+
+    hot = [x for x, y in zip(v, h) if y == 1]
+    for _ in range(3):
+        assert tuple(engine.agg_where(enc, kinds, "h", 1, 1, "v")
+                     .first()) == agg(hot)
+        assert engine.count_where(enc, kinds, "h", 0, 0).first().n_rows \
+            == n - len(hot)
+        assert tuple(engine.range_agg(enc, kinds, "k", 2, 4, "v")
+                     .first()) == agg(v[2 * g:5 * g])
+        assert sorted(r.v for r in engine.scan_where(
+            enc, kinds, "h", 1, 1).collect()) == hot
+        assert sorted(r.v for r in engine.lookup_where(
+            enc, kinds, "h", 1).collect()) == hot
+        assert [r.v for r in engine.topk_by(enc, kinds, "v", 3)
+                .collect()] == [n - 1, n - 2, n - 3]
 
 
 def _jobs(spark, run):
@@ -195,13 +262,26 @@ def test_job_budget_on_a_plain_scan(spark, table):
     for want, builders in ((0, none), (1, one)):
         for name, build in builders.items():
             assert _jobs(spark, lambda: build().collect()) == want, name
+    # any other frame collects its index first: one more job each
+    b = spark.read.parquet(table).select("*")
+    for want, builders in ((1, none), (2, one)):
+        for name, build in builders.items():
+            assert _jobs(spark, lambda: build().collect()) == want, name
 
 
 def test_rewritten_file_gives_the_new_answer(spark, tmp_path):
+    _rewrite_and_check(spark, tmp_path, lambda scan: scan)
+
+
+def test_collected_index_is_never_reused(spark, tmp_path):
+    _rewrite_and_check(spark, tmp_path, lambda scan: scan.select("*"))
+
+
+def _rewrite_and_check(spark, tmp_path, frame):
     kinds = _kinds(spark)
     path = str(tmp_path / "t" / "part-0.parquet")
     _write(_blocks(spark, _source(), "k"), path)
-    scan = spark.read.parquet(os.path.dirname(path))
+    scan = frame(spark.read.parquet(os.path.dirname(path)))
     assert engine.table_stats(scan, kinds, ["k"]).first().n_rows == N
     assert engine.range_count(scan, kinds, "k", 200, 399).first()[0] == 200
     assert [r.k for r in engine.lookup(scan, kinds, "k", 700).collect()] \
@@ -238,10 +318,83 @@ def test_odd_layouts_match_brute_force(spark, tmp_path, layout):
                drop=legacy if layout == "mixed" else ())
         _write(new, f"{root}/part-1.parquet")
     scan = spark.read.parquet(root)
-    assert (engine._BlockIndex.of(scan) is None) \
-        == (layout == "repeated_ids")
+    ix = engine._BlockIndex.of(scan)
+    assert ix is not None and ix.repeated == (layout == "repeated_ids")
     _, want = _brute(_source(), "s")
     _check(_answers(scan, kinds, "s"), want)
+
+
+def test_repeated_ids_never_count_a_block_twice(spark, tmp_path):
+    """Two encodes whose ``(bucket, block_idx)`` repeat, the second
+    shifted by half a block: a block one of them answers from metadata
+    shares its id with a boundary block of the other, so the split
+    must send every kept block to the kernel. Run as a union (collected
+    index) and as one directory (cached index)."""
+    kinds = _kinds(spark)
+    a, b = _source(), _source(50, N + 50)
+    for i, t in enumerate((a, b)):
+        _write(_blocks(spark, t, "k"), str(tmp_path / f"part-{i}.parquet"))
+    read = lambda i: spark.read.parquet(  # noqa: E731
+        str(tmp_path / f"part-{i}.parquet"))
+    union = read(0).union(read(1))
+    scan = spark.read.parquet(str(tmp_path))
+    both = pa.concat_tables([a, b])
+    _, want = _brute(both, "k")
+    truth = {}
+    for x in both["v"].to_pylist():
+        truth[x] = truth.get(x, 0) + 1
+    for frame in (union, scan):
+        assert engine._BlockIndex.of(frame).repeated
+        _check(_answers(frame, kinds, "k"), dict(want))
+        for r in engine.approx_topk(frame, "v", k=5, kind="int").collect():
+            assert r.count_lo <= truth[r.value] <= r.count_hi
+
+
+def test_extra_stored_columns_keep_the_cached_index(spark, tmp_path):
+    """A bare scan of a table persisted with :func:`with_stat_columns`
+    carries extra columns; it still reads the cached index, so
+    metadata-only answers run no job."""
+    kinds = _kinds(spark)
+    path = str(tmp_path / "stat_cols")
+    engine.with_stat_columns(engine.encode_df(
+        spark.createDataFrame(_source()), ["k"], n_buckets=1,
+        block_rows=100), ["v"]).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert "v__lo" in scan.columns
+    assert engine._scan_files(scan) is not None
+    assert _jobs(spark, lambda: engine.table_stats(scan, kinds)
+                 .collect()) == 0
+    assert engine.table_stats(scan, kinds, ["k"]).first().n_rows == N
+
+
+def test_lookup_where_prunes_by_bloom(spark, tmp_path):
+    """An uncorrelated column spans the whole domain in every block, so
+    only the Bloom can skip: a value inside every block's bounds but in
+    none of them runs no job, and a present one reads few blocks."""
+    h = [(i * 7919) % 4001 * 2 for i in range(N)]  # even values only
+    t = pa.table({"k": pa.array(range(N), pa.int64()),
+                  "h": pa.array(h, pa.int64())})
+    path = str(tmp_path / "bloom")
+    engine.encode_df(spark.createDataFrame(t), ["k"], n_buckets=1,
+                     block_rows=100, bloom_cols=["h"]).write.parquet(path)
+    kinds = engine.column_kinds(spark.createDataFrame(t).schema)
+    for frame in (spark.read.parquet(path),
+                  spark.read.parquet(path).select("*")):
+        ix = engine._BlockIndex.of(frame)
+        assert all(lo < 1001 and 3001 < hi for lo, hi in
+                   (ix.stats(i, "h", 0) for i in range(len(ix))))
+        # an odd value: in no block, though inside every block's bounds
+        absent = next(x for x in range(1001, 3001, 2) if not ix.keep(
+            lambda i: ix.bloom(i, "h", x, engine.K_I64)))
+        base = _jobs(spark, lambda: engine._BlockIndex.of(frame))
+        out = []
+        assert _jobs(spark, lambda: out.append(engine.lookup_where(
+            frame, kinds, "h", absent).collect())) == base
+        assert out == [[]]
+        assert [r.k for r in engine.lookup_where(frame, kinds, "h", h[321])
+                .collect()] == [i for i, x in enumerate(h) if x == h[321]]
+        keep = ix.keep(lambda i: ix.bloom(i, "h", h[321], engine.K_I64))
+        assert len(keep) <= 3
 
 
 def test_null_lead_keys_never_count_as_inside(spark, tmp_path):

@@ -1,4 +1,5 @@
-"""Per-block Bloom filters: build at encode, JVM-side probe, lookup_where."""
+"""Per-block Bloom filters: build at encode, block-index probe,
+lookup_where."""
 import numpy as np
 import pytest
 
@@ -17,6 +18,12 @@ def src(spark):
 @pytest.fixture(scope="module")
 def kinds(src):
     return engine.column_kinds(src.schema)
+
+
+def _bloom_kept(blocks, col, value, kind):
+    """Blocks the block index keeps by ``col``'s Bloom alone."""
+    ix = engine._BlockIndex.of(blocks)
+    return len(ix.keep(lambda i: ix.bloom(i, col, value, kind)))
 
 
 @pytest.fixture(scope="module")
@@ -42,8 +49,7 @@ def test_bloom_never_false_negative(spark, src, kinds, blocks):
 def test_bloom_prunes_absent_value(spark, blocks):
     """A value in no block prunes every block (tiny FPR at 6 probes,
     >=8 bits/row) and the lookup returns empty."""
-    kept = blocks.filter(
-        engine.bloom_keep_cond("props", '{"k": -1234567}', "str")).count()
+    kept = _bloom_kept(blocks, "props", '{"k": -1234567}', "str")
     assert kept == 0
 
 
@@ -54,8 +60,7 @@ def test_bloom_int_column_and_projection(spark, src, kinds, blocks):
     assert got.columns == ["user_id"]
     assert [r.user_id for r in got.collect()] == [row.user_id]
     # event_id is unique: the probe should keep only ~1 block (+FPR)
-    kept = blocks.filter(
-        engine.bloom_keep_cond("event_id", row.event_id, "i64")).count()
+    kept = _bloom_kept(blocks, "event_id", row.event_id, "i64")
     assert kept <= 2
 
 
@@ -63,8 +68,7 @@ def test_bloom_absent_column_keeps_all(spark, src, kinds, blocks):
     """Probing a column that has NO bloom keeps every block (null =
     cannot prune) and the exact filter still answers correctly."""
     n = blocks.count()
-    kept = blocks.filter(
-        engine.bloom_keep_cond("user_id", 3, "i64")).count()
+    kept = _bloom_kept(blocks, "user_id", 3, "i64")
     assert kept == n
     got = engine.lookup_where(blocks, kinds, "user_id", 3).count()
     assert got == src.filter(F.col("user_id") == 3).count()
@@ -98,8 +102,8 @@ def test_bloom_unsupported_kind_raises(spark, src, kinds, blocks):
 
 
 def test_bloom_build_probe_bit_identical():
-    """Driver-side replay: the JVM probe positions match the numpy
-    build positions for both int and string domains, including filter
+    """Driver-side replay: the probe positions match the numpy build
+    positions for both int and string domains, including filter
     sizes at the clamp edges."""
     import pyarrow as pa
     for vals, kind in [

@@ -14,9 +14,9 @@ agg_where, scan_where_multi + count_where_multi (AND of two
 predicates), lookup (hit + miss), lookup_in (batched IN), topk_key +
 topk_by, and grep_where (token-Bloom full-text). null_count and
 table_stats checks run once at the end. Every check runs twice: on a
-cached encode, which takes the SQL prune path, and on the same blocks
-written to parquet and read back as a bare scan, which takes the
-driver-side block index.
+cached encode, whose block index is collected in a Spark job, and on
+the same blocks written to parquet and read back as a bare scan, whose
+index is read from the files with pyarrow.
 
 Default is 3 iterations (~1 min with the shared session);
 OROCH_FUZZ_ENGINE_ITERS / OROCH_FUZZ_ENGINE_SEED crank it — deep sweeps
@@ -79,7 +79,7 @@ def fixture(spark, tmp_path_factory):
     blocks.write.parquet(path)
     scan = spark.read.parquet(path)
     assert engine._BlockIndex.of(scan) is not None
-    assert engine._BlockIndex.of(blocks) is None
+    assert engine._BlockIndex.of(blocks) is not None
     # int-domain twin for exact answers
     pdi = pd.DataFrame({
         "k": k, "u": u, "ts": ts_us, "d": d_days, "dc": dc_unscaled,

@@ -14,6 +14,13 @@ def _tok_match(col, word):
                 engine._TOKEN_SPLIT_RE), word)
 
 
+def _token_kept(blocks, word):
+    """Blocks the block index keeps by the text column's token Bloom."""
+    ix = engine._BlockIndex.of(blocks)
+    return len(ix.keep(lambda i: ix.bloom(i, "text", word, engine.K_STR,
+                                          "tbm")))
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return (spark.read
@@ -59,9 +66,7 @@ def test_grep_and_of_words(docs, doc_blocks):
 
 def test_grep_absent_word_prunes_every_block(doc_blocks):
     blocks, kinds = doc_blocks
-    keep = engine.bloom_keep_cond("text", "zzqqxxnope", engine.K_STR,
-                                  field="tbm")
-    assert blocks.filter(keep).count() == 0
+    assert _token_kept(blocks, "zzqqxxnope") == 0
     assert engine.grep_where(blocks, kinds, "text",
                              "zzqqxxnope").count() == 0
 
@@ -71,9 +76,7 @@ def test_grep_present_word_prunes_some_blocks(docs, doc_blocks):
     pruning is real, not just correct — and still answer exactly."""
     blocks, kinds = doc_blocks
     total = blocks.count()
-    keep = engine.bloom_keep_cond("text", "dup", engine.K_STR,
-                                  field="tbm")
-    kept = blocks.filter(keep).count()
+    kept = _token_kept(blocks, "dup")
     exp = docs.filter(_tok_match("text", "dup"))
     n_match = exp.count()
     assert 0 < n_match <= total  # rare but present
@@ -98,9 +101,7 @@ def test_grep_legacy_blocks_degrade_to_scan(spark, docs):
         got = engine.grep_where(blocks, kinds, "text", word)
         assert sorted(r.doc_id for r in got.collect()) \
             == sorted(r.doc_id for r in exp.collect())
-        keep = engine.bloom_keep_cond("text", word, engine.K_STR,
-                                      field="tbm")
-        assert blocks.filter(keep).count() == blocks.count()
+        assert _token_kept(blocks, word) == blocks.count()
     finally:
         blocks.unpersist()
 

@@ -34,20 +34,21 @@ class TestApproxDistinct:
 
     def test_metadata_only(self, blocks, tmp_path_factory):
         _, blk = blocks
-        # against a persisted table, the parquet scan prunes to the
-        # desc column alone — payload bytes never leave the file (the
-        # SQL path, taken by anything but a bare scan) — and the block
-        # index answers a bare scan from a local relation, with no scan
+        # against a persisted table that is not a bare scan, the block
+        # index's collect loader reads no payload column — payload
+        # bytes never leave the file — and the answer is a local
+        # relation, with no scan
         d = str(tmp_path_factory.mktemp("sketch_blocks"))
         blk.write.mode("overwrite").parquet(d)
         persisted = blk.sparkSession.read.parquet(d)
-        plan = engine.approx_distinct(persisted.select("*"), "user_id") \
+        plan = engine._index_frame(persisted.select("*")) \
             ._jdf.queryExecution().executedPlan().toString()
         scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
         assert scan and all("payload" not in ln for ln in scan)
-        plan = engine.approx_distinct(persisted, "user_id") \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "LocalTableScan" in plan and "ReadSchema" not in plan
+        for frame in (persisted, persisted.select("*")):
+            plan = engine.approx_distinct(frame, "user_id") \
+                ._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ReadSchema" not in plan
 
     def test_missing_sketch_raises(self, blocks, spark):
         df, _ = blocks
@@ -209,6 +210,20 @@ class TestApproxTopk:
             engine.approx_topk(nosketch, "tag").collect()
         with pytest.raises(ValueError):
             engine.approx_topk(blk, "tag", k=1000)
+
+
+@pytest.mark.parametrize("build, match", [
+    (lambda b: engine.approx_distinct(b, "user_id"), "no HLL sketch"),
+    (lambda b: engine.approx_quantile(b, "value", [0.5]),
+     "no quantile sketch"),
+    (lambda b: engine.approx_topk(b, "tag"), "no heavy-hitter summary")])
+def test_missing_sketch_raises_at_the_call(blocks, build, match):
+    """The sketches fold on the driver: a block without one raises when
+    the query is built, before any result is collected."""
+    df, _ = blocks
+    nosketch = engine.encode_df(df, ["event_id"], n_buckets=2)
+    with pytest.raises(ValueError, match=match):
+        build(nosketch)
 
 
 def test_sketch_kernel_determinism():

@@ -17,6 +17,15 @@ from oroch_spark import engine
 from oroch_spark.kernels import integers as ic
 
 
+def _interior(blocks, lo, hi):
+    """Blocks the block index answers from metadata: lead-key bounds
+    inside [lo, hi]."""
+    ix = engine._BlockIndex.of(blocks)
+    pred = engine._KeyPred(lo=lo, hi=hi)
+    return len(ix.keep(lambda i: engine._stats_inside(*ix.bounds(i, lo),
+                                                      pred)))
+
+
 def test_maponly_unsorted_bounds_are_true_minmax(spark, tmp_path):
     # the ADVICE-high scenario: an UNSORTED file encoded map-only must
     # store real min/max — first/last bounds ([500..300]) would make
@@ -141,9 +150,7 @@ def test_range_agg_matches_source(spark):
     assert (got.n_rows, got.sum_v, got.min_v, got.max_v) \
         == (exp.c, exp.s, exp.lo, exp.hi)
     # the pushdown is real: interior blocks carry usable stats
-    ov = engine.prune_blocks_range(blocks, 100, 900)
-    interior = ov.filter(engine._contained_cond(ov, 100, 900)).count()
-    assert interior > 0
+    assert _interior(blocks, 100, 900) > 0
     blocks.unpersist()
 
 
@@ -228,9 +235,10 @@ def test_scan_where_secondary_zone_map(spark):
 
 
 def test_scan_where_materialized_stats_pushdown(spark, tmp_path):
-    """with_stat_columns persists (lo, hi) as real columns; against the
-    stored table the secondary zone map is a parquet PushedFilter and
-    the results still match the source."""
+    """with_stat_columns persists (lo, hi) as real columns; the stored
+    table is still a bare scan, so the block index prunes it and the
+    kept blocks' ids are a parquet PushedFilter; the results still
+    match the source."""
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     kinds = engine.column_kinds(src.schema)
     blocks = engine.with_stat_columns(
@@ -244,7 +252,7 @@ def test_scan_where_materialized_stats_pushdown(spark, tmp_path):
                      & (F.col("event_id") <= 160))
     assert got.count() == exp.count() > 0
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "event_id__lo" in plan
+    assert "PushedFilters: [" in plan and "block_idx" in plan
 
 
 def test_scan_where_string_column(spark):
@@ -483,8 +491,7 @@ def test_range_agg_timestamp_agg_col_micros_domain(spark):
     assert (got.n_rows, got.sum_v, got.min_v, got.max_v) \
         == (exp.c, exp.s, exp.lo, exp.hi)
     # the interior path must be exercised, else the test proves nothing
-    ov = engine.prune_blocks_range(blocks, 100, 900)
-    assert ov.filter(engine._contained_cond(ov, 100, 900)).count() > 0
+    assert _interior(blocks, 100, 900) > 0
     blocks.unpersist()
 
 

@@ -181,11 +181,9 @@ def test_scan_where_multi_and_count_where_multi(spark):
         assert got2.columns == ["event_id"]
         assert got2.count() == exp.count()
         # compound keep <= each single keep
-        keep, _i, _rf, _pc = engine._multi_pred(zb, kinds, preds)
-        k_both = zb.filter(keep).count()
+        k_both = engine._prune_where(zb, preds).count()
         for p in preds:
-            k1, _i1, _r1, _p1 = engine._multi_pred(zb, kinds, [p])
-            assert k_both <= zb.filter(k1).count()
+            assert k_both <= engine._prune_where(zb, [p]).count()
         cnt = engine.count_where_multi(zb, kinds, preds)
         assert cnt.collect()[0].n_rows == exp.count()
         assert cnt.columns == ["n_rows"]

@@ -74,9 +74,9 @@ def main() -> None:
         "min/max (key_lo, key_hi) bounds in Python and the scan reads "
         "only the kept blocks: `bucket = b AND block_idx IN (...)` is "
         "PushedFilters, so parquet row-group stats skip the rest on "
-        "disk (a key no block can hold runs no job at all). Any other "
-        "frame pushes the zone-map filter on the bounds instead (NULL "
-        "bounds keep the block). Survivors reach the mapInArrow "
+        "disk (a key no block can hold runs no job at all; NULL bounds "
+        "keep the block). Any other frame collects the same index in "
+        "one metadata job first. Survivors reach the mapInArrow "
         "kernel, which decodes only the key column and batch-fetches "
         "matched rows.",
         plan_of(engine.lookup(
@@ -85,24 +85,22 @@ def main() -> None:
 
     sections.append((
         "range_agg (SUM/MIN/MAX/COUNT answered from block metadata)",
-        "The SQL path, taken by any frame but a bare scan (here "
-        "`select(\"*\")`). One scan, one pass: the projection flags "
-        "interior blocks (bounds inside, no null key) and nulls their "
-        "payload and desc, so they cross to the kernel as their stored "
-        "stats alone; boundary blocks decode two columns and reduce to "
-        "one partial row inside the kernel. The final agg folds one "
-        "row per block. NULL/absent stats degrade to the decode path, "
-        "never to a wrong answer. On a bare scan the block index folds "
-        "interior blocks on the driver, only the boundary blocks run "
-        "(one job, no exchange) and the answer is a LocalTableScan.",
+        "The block index splits the blocks on the driver: interior "
+        "blocks (bounds inside, no null key) fold from their stored "
+        "stats, and only the boundary blocks run — one job while the "
+        "query is built, no exchange, each block decoding two columns "
+        "and reducing to one partial row inside the kernel. "
+        "NULL/absent stats degrade to the decode path, never to a "
+        "wrong answer. The answer is a LocalTableScan.",
         plan_of(engine.range_agg(
-            spark.read.parquet(bdir).select("*"),
+            spark.read.parquet(bdir),
             engine.column_kinds(events.schema), "event_id", 1000, 9000,
             "user_id"))))
 
     sections.append((
         "range_scan with projection (pruned scan -> 2-column decode)",
-        "Range predicate on the true-min/max (key_lo, key_hi) pushes to the blocks "
+        "The block index keeps the blocks whose true-min/max (key_lo, "
+        "key_hi) overlap the range, and their ids push to the blocks "
         "parquet scan; the decode kernel touches only the requested "
         "columns' payload slices (projection pushdown into the block "
         "format).",
@@ -125,17 +123,19 @@ def main() -> None:
             .agg(F.count("*").alias("n_events"))
             .select(F.col("w.start").alias("w_start"), "n_events"))))
 
+    ev_kinds = engine.column_kinds(events.schema)
+    t0 = engine.table_stats(spark.read.parquet(sdir), ev_kinds,
+                            ["ts"]).first().min_long  # epoch-micros
     sections.append((
         "scan_where (secondary zone map on a NON-key column)",
-        "Range predicate on user_id — not the lead key — prunes via "
-        "the per-column (lo, hi) stats in the desc JSON, JVM-side "
-        "before any payload reaches the Python decode kernel; with "
-        "with_stat_columns-materialized bounds the predicate becomes "
-        "a parquet PushedFilter.",
+        "Range predicate on ts — not the lead key, but correlated with "
+        "the event_id order — prunes via the per-column (lo, hi) stats "
+        "in the desc JSON, read by the block index on the driver "
+        "before any payload reaches the Python decode kernel; the kept "
+        "ids are a parquet PushedFilter.",
         plan_of(engine.scan_where(
-            spark.read.parquet(bdir),
-            engine.column_kinds(events.schema), "user_id", 3, 5,
-            columns=["event_id", "user_id"]))))
+            spark.read.parquet(sdir), ev_kinds, "ts", t0,
+            t0 + 3600 * 10 ** 6, columns=["event_id", "ts"]))))
 
     sections.append((
         "group_count (GROUP BY pushdown into the codec)",
@@ -160,14 +160,14 @@ def main() -> None:
 
     sections.append((
         "agg_where (metadata aggregates under a secondary predicate)",
-        "The SQL path (here `select(\"*\")`; a bare scan splits on "
-        "the block index like range_agg). Blocks whose PREDICATE-column "
-        "stats prove containment answer from the AGGREGATE column's "
-        "stored (lo, hi, s) stats — no payload decode; only straddlers "
-        "decode, and only two columns, each reduced to one partial row "
-        "in the same kernel pass.",
+        "Split on the block index like range_agg: blocks whose "
+        "PREDICATE-column stats prove containment answer from the "
+        "AGGREGATE column's stored (lo, hi, s) stats on the driver — "
+        "no payload decode; only straddlers decode, and only two "
+        "columns, each reduced to one partial row in one job. The "
+        "answer is a LocalTableScan.",
         plan_of(engine.agg_where(
-            spark.read.parquet(bdir).select("*"),
+            spark.read.parquet(bdir),
             engine.column_kinds(events.schema), "user_id", 2, 8,
             "event_id"))))
 
@@ -179,7 +179,8 @@ def main() -> None:
         "projection, reduces to a (bucket, block_idx) candidate-id set, "
         "and joins back broadcast; semi-join #2 exact-matches the "
         "decoded key. No BroadcastNestedLoopJoin anywhere; the blocks "
-        "table never shuffles. (Grid forced here — tables under "
+        "table never shuffles. The grid's origin and width come from "
+        "the block index. (Grid forced here — tables under "
         "engine._LJ_GRID_MIN_BLOCKS blocks, like this sf0.01 one, "
         "deliberately keep the direct range semi-join: its nested loop "
         "over <=1024 metadata rows is cheaper than three extra "
@@ -192,11 +193,9 @@ def main() -> None:
 
     sections.append((
         "topk_key (ORDER BY key LIMIT k, zone-pruned; one-bucket layout)",
-        "Only blocks that can hold a top-k row decode: on a bare scan "
-        "the threshold walks the block index on the driver and the "
-        "kept blocks are read by id (PushedFilters); any other frame "
-        "takes the threshold from at most k (n, bound) metadata rows "
-        "and pushes it as one literal. TakeOrderedAndProject finishes "
+        "Only blocks that can hold a top-k row decode: the threshold "
+        "walks the block index on the driver and the kept blocks are "
+        "read by id (PushedFilters). TakeOrderedAndProject finishes "
         "— per-partition partial top-k, no global sort, no exchange.",
         plan_of(engine.topk_key(
             spark.read.parquet(sdir),
@@ -205,9 +204,9 @@ def main() -> None:
     sections.append((
         "lookup_where (per-block Bloom filter probe)",
         "Equality on a high-cardinality column UNCORRELATED with block "
-        "order: the k Bloom probes are pure JVM expressions "
-        "(unbase64/substring/getbit) over the small desc column — "
-        "blocks whose filter proves the value absent never decode; "
+        "order: the block index tests the k Bloom probes of every "
+        "block on the driver — blocks whose filter proves the value "
+        "absent are never read (the kept ids are PushedFilters); "
         "null/missing filters keep the block.",
         plan_of(engine.lookup_where(
             spark.read.parquet(bdir),

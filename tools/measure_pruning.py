@@ -36,6 +36,15 @@ def main() -> None:
         rows.append((op, desc, total, survivors,
                      f"{100.0 * (1 - survivors / total):.1f}%"))
 
+    def kept(blocks, test):
+        """Blocks the block index keeps by ``test(ix, i)``."""
+        ix = engine._BlockIndex.of(blocks)
+        return len(ix.keep(lambda i: test(ix, i)))
+
+    def bloom_kept(blocks, col, value, field="bm"):
+        return kept(blocks, lambda ix, i: ix.bloom(i, col, value,
+                                                   engine.K_STR, field))
+
     # --- events (sf0.1, 100k rows, event_id key, 512-row blocks) -------
     ev = spark.read.parquet(f"{SF}/events.parquet")
     kinds = engine.column_kinds(ev.schema)
@@ -56,33 +65,30 @@ def main() -> None:
     add("range_scan (0.1% of key space)", "event_id in [1000, 1100]",
         total, engine.prune_blocks_range(evb, 1000, 1100).count())
     n_rows_total = int(evb.agg(F.sum("n")).collect()[0][0])
-    ov = engine.prune_blocks_range(evb, 500, 75000)
-    interior = ov.filter(engine._contained_cond(ov, 500, 75000)).count()
+    inside = engine._KeyPred(lo=500, hi=75000)
     add("range_count (75% of key space): blocks never DECODED",
         "interior blocks answer from metadata", total,
-        ov.count() - interior)
+        engine.prune_blocks_range(evb, 500, 75000).count()
+        - kept(evb, lambda ix, i: engine._stats_inside(
+            *ix.bounds(i, 500), inside)))
     # secondary zone map: ts correlates with event_id block order
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     lo = int(ev.agg(F.min(ts_us)).collect()[0][0])
     hi = int(ev.agg(F.max(ts_us)).collect()[0][0])
     cut = lo + (hi - lo) // 100
-    blo, bhi, l2, h2 = engine._where_bounds(evb, "ts", lo, cut)
     add("scan_where (secondary col, correlated)",
         "ts in first 1% of time range", total,
-        evb.filter(engine._bounds_keep(blo, bhi, l2, h2)).count())
+        engine._prune_where(evb, [("ts", lo, cut)]).count())
     add("lookup_where (Bloom, PRESENT value)",
         "props = '{\"k\": 42}' — 1% of rows, so statistically present "
         "in ~every 512-row block; keeping them all is correct", total,
-        evb.filter(engine.bloom_keep_cond("props", '{"k": 42}', "str"))
-        .count())
+        bloom_kept(evb, "props", '{"k": 42}'))
     add("lookup_where (Bloom, ABSENT value)", "props = 'no-such'",
-        total,
-        evb.filter(engine.bloom_keep_cond("props", "no-such", "str"))
-        .count())
+        total, bloom_kept(evb, "props", "no-such"))
 
     # topk: candidate blocks after the engine's threshold prune
     add("topk_key (k=10)", "ORDER BY event_id DESC LIMIT 10", total,
-        engine._topk_prune(evb, "key_lo", "key_hi", 10, False,
+        engine._topk_prune(evb, 10, False,
                            lambda ix, i: ix.key[i]).count())
 
     # --- z-order clustering (events, user_id x value) -------------------
@@ -102,8 +108,7 @@ def main() -> None:
     v_hi = int(evi.approxQuantile("v_int", [0.1], 0.0)[0])
 
     def z_kept(blocks, col, lo, hi):
-        blo, bhi, l2, h2 = engine._where_bounds(blocks, col, lo, hi)
-        return blocks.filter(engine._bounds_keep(blo, bhi, l2, h2)).count()
+        return engine._prune_where(blocks, [(col, lo, hi)]).count()
 
     add("scan_where (z-ordered, col 1 of 2)",
         "user_id in lowest 10% of rows — uncorrelated with any single "
@@ -117,17 +122,13 @@ def main() -> None:
     # compound AND: on the z layout the per-column skips compose
     u30 = int(evi.approxQuantile("user_id", [0.3], 0.0)[0])
     v30 = int(evi.approxQuantile("v_int", [0.3], 0.0)[0])
-    zkinds = engine.column_kinds(evi.schema)
-    keep2, _i, _rf, _pc = engine._multi_pred(
-        zb, zkinds, [("user_id", 0, u30), ("v_int", 0, v30)])
+    both = [("user_id", 0, u30), ("v_int", 0, v30)]
     add("scan_where_multi (z-ordered, user_id AND value)",
         "both cols in lowest 30% of rows (~9% of rows match)", z_total,
-        zb.filter(keep2).count())
-    keep1, _i, _rf, _pc = engine._multi_pred(
-        evb, zkinds, [("user_id", 0, u30), ("v_int", 0, v30)])
+        engine._prune_where(zb, both).count())
     add("scan_where_multi (same AND, single-key layout — the contrast)",
         "both cols lowest 30% over the event_id-keyed table", total,
-        evb.filter(keep1).count())
+        engine._prune_where(evb, both).count())
 
     # --- transcripts (5.8M turns, string conv key) ----------------------
     src_dir = os.path.join(tempfile.gettempdir(),
@@ -162,9 +163,7 @@ def main() -> None:
         add("grep_where (token Bloom, ABSENT word, 5.8M turns)",
             "text ∋ 'qqzzxnope' — needle not in the corpus: answered "
             "at metadata speed, zero payload decodes", tt_total,
-            ttb.filter(engine.bloom_keep_cond(
-                "text", "qqzzxnope", engine.K_STR, field="tbm"))
-            .count())
+            bloom_kept(ttb, "text", "qqzzxnope", "tbm"))
         import glob
 
         import pyarrow.compute as pc
@@ -180,8 +179,7 @@ def main() -> None:
             "keeping them all is correct (block-sparse tokens — real "
             "corpora's identifiers — skip like the documents case in "
             "test_grep_where)", tt_total,
-            ttb.filter(engine.bloom_keep_cond(
-                "text", word, engine.K_STR, field="tbm")).count())
+            bloom_kept(ttb, "text", word, "tbm"))
 
     out = ["# PRUNING — measured block-skip ratios\n",
            "Generated by `python3 tools/measure_pruning.py`. Exact "
@@ -191,8 +189,9 @@ def main() -> None:
            "selectivity, not hardware — they are the scale story: at "
            "1000x the data the same predicates skip the same fraction "
            "of (1000x more) blocks, and the skipped blocks' payload "
-           "bytes never leave disk (the bounds are parquet "
-           "PushedFilters / pre-payload metadata reads).\n",
+           "bytes never leave disk (the driver-side block index decides "
+           "from the non-payload columns, and the kept block ids are "
+           "parquet PushedFilters).\n",
            "| operator | predicate | blocks total | blocks kept | "
            "pruned |",
            "|---|---|---|---|---|"]
