@@ -40,6 +40,7 @@ Scale design (the 10^12-turn story):
 from __future__ import annotations
 
 import base64
+import bisect
 import decimal as _dec
 import gc
 import json
@@ -1782,21 +1783,29 @@ def decode_df(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     so a 2-column read of a 50-column table pays for 2 columns.
     ``passthrough`` appends block-level metadata columns of the blocks
     table (e.g. ``batch_id``), replicated onto every decoded row."""
-    import pyarrow as pa
+    out_schema, fn = _decoder(schema_kinds, columns, {
+        p: blocks.schema[p].dataType for p in passthrough or ()})
+    return blocks.mapInArrow(fn, schema=out_schema)
+
+
+def _decoder(schema_kinds: list[tuple[str, str]],
+             columns: Optional[list[str]] = None,
+             passthrough: Optional[dict] = None):
+    """:func:`decode_df`'s output schema and :func:`make_decode_fn`
+    kernel: the ``columns`` projection (or every column), then the
+    ``passthrough`` block columns, by name and Spark type."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if columns is not None:
         by_name = dict(schema_kinds)
         schema_kinds = [(c, by_name[c]) for c in columns]
-    fields = [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds]
-    passthrough = tuple(passthrough or ())
-    for p in passthrough:
-        fields.append(T.StructField(p, blocks.schema[p].dataType))
-    out_schema = T.StructType(fields)
-    arrow_schema = to_arrow_schema(out_schema)
-    fn = make_decode_fn(schema_kinds, arrow_schema.serialize().to_pybytes(),
-                        passthrough=passthrough)
-    return blocks.mapInArrow(fn, schema=out_schema)
+    passthrough = passthrough or {}
+    out_schema = T.StructType(
+        [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds]
+        + [T.StructField(p, t) for p, t in passthrough.items()])
+    return out_schema, make_decode_fn(
+        schema_kinds, to_arrow_schema(out_schema).serialize().to_pybytes(),
+        passthrough=tuple(passthrough))
 
 
 def roundtrip_df(df: DataFrame, key_cols: list[str], **kw) -> DataFrame:
@@ -2015,19 +2024,63 @@ def _index_table(t: "pa.Table", cols=_INDEX_COLS) -> "pa.Table":
                      for c in cols})
 
 
-def _read_index(files: list[str], cols=_INDEX_COLS) -> "pa.Table":
+_BLOCK_COLS = ("n", "desc", "payload")  # what a decode kernel reads
+
+
+def _read_index(files: list[str], cols=_INDEX_COLS):
     """The index columns ``cols`` of every file, in order, read with
-    pyarrow."""
+    pyarrow; and from the same footers, per row group in that order
+    its ``(first index row, file, row group, bytes)``, the bytes being
+    those of its compressed ``n``/``desc``/``payload`` chunks."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    parts = []
-    for f in files:
-        pf = pq.ParquetFile(f)
+    parts, groups, start = [], [], 0
+    for f, path in enumerate(files):
+        pf = pq.ParquetFile(path)
         have = set(pf.schema_arrow.names)
         parts.append(_index_table(
             pf.read(columns=[c for c in cols if c in have]), cols))
-    return pa.concat_tables(parts)
+        meta = pf.metadata
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            groups.append((start, f, g, sum(
+                rg.column(j).total_compressed_size
+                for j in range(rg.num_columns)
+                if rg.column(j).path_in_schema in _BLOCK_COLS)))
+            start += rg.num_rows
+    return pa.concat_tables(parts), groups
+
+
+def _stat_key(files: list[str]) -> tuple:
+    """Each file's ``(path, st_ino, st_mtime_ns, st_size)``."""
+    return tuple((f, st.st_ino, st.st_mtime_ns, st.st_size)
+                 for f, st in zip(files, map(os.stat, files)))
+
+
+def _stable(files: list[str], key: tuple, read):
+    """``read()`` of ``files`` when they have the stats ``key`` before
+    and after it; None when one changed, so a read never mixes two
+    versions of a file with each other or with an index."""
+    if _stat_key(files) != key:
+        return None
+    out = read()
+    return out if _stat_key(files) == key else None
+
+
+def _split_bytes(spark, sizes: list[int]) -> int:
+    """Spark's input split size for a scan of files of ``sizes`` bytes
+    (``FilePartition.maxSplitBytes``): what one task reads. It is
+    ``maxPartitionBytes``, or less on a small scan, which Spark spreads
+    over the default parallelism, charging each file
+    ``openCostInBytes`` more."""
+    js = spark._jsparkSession
+    conf = js.sessionState().conf()
+    cost = conf.filesOpenCostInBytes()
+    par = conf.filesMinPartitionNum()
+    par = par.get() if par.isDefined() else js.leafNodeDefaultParallelism()
+    return min(conf.filesMaxPartitionBytes(),
+               max(cost, sum(size + cost for size in sizes) // par))
 
 
 def _index_frame(blocks: DataFrame, cols=_INDEX_COLS) -> DataFrame:
@@ -2098,21 +2151,28 @@ class _BlockIndex:
     (:meth:`narrow`).
 
     :meth:`of` loads it one of two ways. A bare parquet scan
-    (:func:`_scan_files`) is read with pyarrow and cached, checked on
+    (:meth:`scanned`) is read with pyarrow and cached, checked on
     every use against each file's ``(st_ino, st_mtime_ns, st_size)``
     the way ``_zipcache`` checks archives. Any other frame is collected
     in one Spark job and not cached. A builder that reads the payload
     after the index takes both from :func:`_indexed`, which pins a
     frame whose reads may differ.
 
+    A scanned index also knows where each block lives (its file's
+    row groups, in order) and each row group's block-column bytes, so
+    :meth:`local` can read kept blocks on the driver instead of in a
+    Spark job: the one place that decides between the two.
+
     A ``(bucket, block_idx)`` that repeats (or holds a null) cannot
     single its block out, so the index only ever over-reads it:
     :meth:`narrow` keeps every block that shares a kept id, and
     :meth:`split` answers nothing on the driver."""
 
-    __slots__ = ("n", "ids", "key", "skey", "desc", "_cols", "repeated")
+    __slots__ = ("n", "ids", "key", "skey", "desc", "_cols", "repeated",
+                 "_files", "_stats", "_groups")
 
-    def __init__(self, t: "pa.Table"):
+    def __init__(self, t: "pa.Table", groups=None, files=None, stats=None):
+        self._files, self._stats, self._groups = files, stats, groups
         self.n = t["n"].to_pylist()
         self.ids = list(zip(t["bucket"].to_pylist(),
                             t["block_idx"].to_pylist()))
@@ -2141,24 +2201,49 @@ class _BlockIndex:
         """The index of ``blocks``, as this read of it sees it. Without
         ``desc`` it holds only the ids, ``n`` and lead-key bounds (no
         :attr:`cols`): all the lead-key rules read."""
-        cols = _INDEX_COLS if desc else _LEAD_COLS
+        ix = cls.scanned(blocks, desc)
+        if ix is None:
+            cols = _INDEX_COLS if desc else _LEAD_COLS
+            ix = cls(_index_table(_index_frame(blocks, cols).toArrow(),
+                                  cols))
+        return ix
+
+    @classmethod
+    def scanned(cls, blocks: DataFrame,
+                desc: bool = True) -> Optional["_BlockIndex"]:
+        """The cached pyarrow index of a bare scan; None for any other
+        frame, or when its files cannot be read here or keep changing
+        while they are (Spark reads them then). Every read — the index,
+        a ``desc`` loaded later — is checked against the stats the
+        index is cached by (:func:`_stable`); a file rewritten during
+        it is read again, never mixed into that index."""
         files = _scan_files(blocks)
-        if files is not None:
-            try:  # stat before the read: a change after it rebuilds
-                key = tuple((f, st.st_ino, st.st_mtime_ns, st.st_size)
-                            for f, st in zip(files, map(os.stat, files)))
-                if key not in _indexes:
-                    ix = cls(_read_index(files, cols))
+        if files is None:
+            return None
+        cols = _INDEX_COLS if desc else _LEAD_COLS
+        try:
+            for _ in range(2):  # a file changed mid-read: read it anew
+                key = _stat_key(files)
+                ix = _indexes.get(key)
+                if ix is None:
+                    got = _stable(files, key,
+                                  lambda: _read_index(files, cols))
+                    if got is None:
+                        continue
+                    ix = cls(*got, files, key)
                     while len(_indexes) >= _INDEX_KEEP:
                         del _indexes[next(iter(_indexes))]
                     _indexes[key] = ix
-                ix = _indexes[key]
                 if desc and ix.desc is None and ix._cols is None:
-                    ix.desc = _read_index(files, ("desc",))["desc"]
+                    got = _stable(files, key, lambda: _read_index(
+                        files, ("desc",))[0]["desc"])
+                    if got is None:
+                        continue
+                    ix.desc = got
                 return ix
-            except Exception:  # unreadable here: Spark reads it below
-                pass
-        return cls(_index_table(_index_frame(blocks, cols).toArrow(), cols))
+        except Exception:  # unreadable here
+            pass
+        return None
 
     def __len__(self) -> int:
         return len(self.n)
@@ -2218,15 +2303,75 @@ class _BlockIndex:
             f"({', '.join(map(_sql_lit, sorted(js)))}))"
             for b, js in sorted(by_bucket.items())) or "FALSE")
 
+    def local(self, blocks: DataFrame,
+              keep: list[int]) -> Optional[list["pa.RecordBatch"]]:
+        """The ``n``/``desc``/``payload`` of the blocks at positions
+        ``keep``, read on the driver for a builder to run its kernel
+        in-process, with no Spark job. Only a scanned index reads them,
+        and only when the row groups that hold them fit in one Spark
+        input split: their block-column bytes at most the split size
+        Spark would cut this scan into (:func:`_split_bytes`), so the
+        driver reads what one task would. Each such row group is read
+        and cut to the kept rows by position. None — take the Spark
+        path — for a collected index, a larger read, or files changed
+        since the index."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if self._groups is None:
+            return None
+        starts = [start for start, *_ in self._groups]
+        rows: dict = {}  # row group position -> its kept rows
+        for i in keep:
+            j = bisect.bisect_right(starts, i) - 1
+            rows.setdefault(j, []).append(i - starts[j])
+        if sum(self._groups[j][3] for j in rows) > _split_bytes(
+                blocks.sparkSession, [st[3] for st in self._stats]):
+            return None
+
+        def read():
+            out, pfs = [], {}
+            for j, take in sorted(rows.items()):
+                _, f, g, _ = self._groups[j]
+                if f not in pfs:
+                    pfs[f] = pq.ParquetFile(self._files[f])
+                out += pfs[f].read_row_group(g, columns=list(_BLOCK_COLS)) \
+                    .take(take).to_batches()
+            return out
+
+        try:
+            return _stable(self._files, self._stats, read)
+        except (OSError, pa.ArrowException):  # unreadable here: Spark
+            return None  # reads it, or raises the error itself
+
+    @classmethod
+    def every(cls, blocks: DataFrame) -> Optional[list["pa.RecordBatch"]]:
+        """Every block of a bare scan, read on the driver as
+        :meth:`local` reads kept ones; None when :meth:`local` does not
+        read them. A scan whose files are larger than one input split
+        is not even indexed: its block columns are nearly all of its
+        bytes, so :meth:`local` would not read them."""
+        files = _scan_files(blocks)
+        try:
+            sizes = [os.stat(f).st_size for f in files or ()]
+        except OSError:
+            return None
+        if files is None \
+                or sum(sizes) > _split_bytes(blocks.sparkSession, sizes):
+            return None
+        ix = cls.scanned(blocks, desc=False)
+        return None if ix is None else ix.local(blocks, range(len(ix)))
+
     def split(self, blocks: DataFrame, keep: list[int], inside, interior,
               schema_kinds: list[tuple[str, str]], preds: list[tuple],
               agg_col: Optional[str] = None) -> list[tuple]:
         """Partials ``(_c, _s, _lo, _hi)`` of the blocks at positions
         ``keep``: those ``inside(i)`` accepts from ``interior(i)`` on the
-        driver, the boundary rest from :func:`make_partials_fn` in one
-        job over just those blocks (no shuffle). With repeated ids every
-        kept block is boundary, so no block is counted twice; a pruned
-        block that rides along with a kept id matches no row."""
+        driver, the boundary rest from :func:`make_partials_fn` — on
+        the driver when :meth:`local` reads them, else in one job over
+        just those blocks (no shuffle). With repeated ids every kept
+        block is boundary, so no block is counted twice; a pruned block
+        that rides along with a kept id matches no row."""
         parts, boundary = [], []
         for i in keep:
             if not self.repeated and inside(i):
@@ -2234,8 +2379,18 @@ class _BlockIndex:
             else:
                 boundary.append(i)
         if boundary:
-            parts += _block_partials(self.narrow(blocks, boundary),
-                                     schema_kinds, preds, agg_col).collect()
+            kinds = dict(schema_kinds)
+            fn = make_partials_fn([(c, *_pred_domain(kinds[c], lo, hi))
+                                   for c, lo, hi in preds], agg_col)
+            got = self.local(blocks, boundary)
+            if got is None:
+                parts += self.narrow(blocks, boundary) \
+                    .select(*_BLOCK_COLS).mapInArrow(
+                        fn, ", ".join(f"{c} long" for c in _PARTIALS)) \
+                    .collect()
+            else:
+                parts += [row for b in fn(got)
+                          for row in zip(*b.to_pydict().values())]
         return parts
 
 
@@ -2262,10 +2417,19 @@ def _local_df(spark, schema: T.StructType,
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow = to_arrow_schema(schema)
-    table = arrow.empty_table() if columns is None else pa.table(
+    return _arrow_df(spark, schema, [] if columns is None else pa.table(
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
-        schema=arrow)
-    return spark.createDataFrame(table, schema)
+        schema=arrow).to_batches())
+
+
+def _arrow_df(spark, schema: T.StructType, batches) -> DataFrame:
+    """A LocalRelation of ``batches`` in ``schema``'s Arrow form, such
+    as a kernel's output."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(pa.Table.from_batches(
+        list(batches), to_arrow_schema(schema)), schema)
 
 
 def _fold_partials(spark, parts: list[tuple], aggs: bool,
@@ -2436,19 +2600,6 @@ def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
                 names=list(_PARTIALS))
 
     return block_partials
-
-
-def _block_partials(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-                    preds: list[tuple],
-                    agg_col: Optional[str] = None) -> DataFrame:
-    """A partial row ``(_c, _s, _lo, _hi)`` per block of ``blocks``
-    from :func:`make_partials_fn`, under ``preds`` (``(col, lo, hi)``
-    in the prune domain, ``lo`` None for IS NULL)."""
-    kinds = dict(schema_kinds)
-    preds = [(c, *_pred_domain(kinds[c], lo, hi)) for c, lo, hi in preds]
-    return blocks.select("n", "desc", "payload").mapInArrow(
-        make_partials_fn(preds, agg_col),
-        ", ".join(f"{c} long" for c in _PARTIALS))
 
 
 def _index_split(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2962,8 +3113,9 @@ def make_lookup_fn(kinds: list[tuple[str, str]], key_col: str, value,
 def _lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
             key_col: str, values: list) -> DataFrame:
     """The rows whose lead key is one of ``values``: the blocks whose
-    bounds can hold a value run :func:`make_lookup_fn`; when no block
-    can, a local empty frame answers with no job."""
+    bounds can hold a value run :func:`make_lookup_fn` (on the driver
+    when :meth:`_BlockIndex.local` reads them); when no block can, a
+    local empty frame answers with no job."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     out_schema = T.StructType(
@@ -2974,6 +3126,9 @@ def _lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         return _local_df(blocks.sparkSession, out_schema)
     fn = make_lookup_fn(schema_kinds, key_col, values,
                         to_arrow_schema(out_schema).serialize().to_pybytes())
+    got = ix.local(blocks, keep)
+    if got is not None:
+        return _arrow_df(blocks.sparkSession, out_schema, fn(got))
     return ix.narrow(blocks, keep).mapInArrow(fn, schema=out_schema)
 
 
@@ -3039,16 +3194,39 @@ def make_group_count_fn(col: str, arrow_schema_bytes: bytes):
     return count_blocks
 
 
-def _group_partial(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-                   col: str) -> DataFrame:
-    from pyspark.sql.pandas.types import to_arrow_schema
+def _sum_counts(batches, schema: "pa.Schema",
+                limit: int) -> Optional["pa.Table"]:
+    """The ``(value, n_rows)`` pairs of ``batches`` summed per value
+    with Spark's grouping of float keys — ``-0.0`` = ``0.0``, one NaN
+    group, one null group — in ``schema``; None as soon as the sums
+    pass ``limit`` rows. Pairs are folded whenever more than ``limit``
+    are pending, so no more than about ``limit`` rows are held."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    kind = dict(schema_kinds)[col]
-    out_schema = T.StructType([T.StructField(col, spark_type_of(kind)),
-                               T.StructField("n_rows", T.LongType())])
-    arrow_schema = to_arrow_schema(out_schema)
-    fn = make_group_count_fn(col, arrow_schema.serialize().to_pybytes())
-    return blocks.mapInArrow(fn, schema=out_schema)
+    col = schema.names[0]
+
+    def fold(parts) -> "pa.Table":
+        t = pa.Table.from_batches(parts, schema)
+        key = t[col]
+        if pa.types.is_floating(key.type):
+            key = pc.if_else(pc.is_nan(key),
+                             pa.scalar(float("nan"), key.type),
+                             pc.add(key, pa.scalar(0.0, key.type)))
+        sums = t.set_column(0, col, key).group_by(col) \
+            .aggregate([("n_rows", "sum")])
+        return pa.table([sums[col], sums["n_rows_sum"]], schema=schema)
+
+    parts, pending = [], 0
+    for batch in batches:
+        parts.append(batch)
+        pending += batch.num_rows
+        if pending > limit:
+            sums = fold(parts)
+            if sums.num_rows > limit:
+                return None
+            parts, pending = sums.to_batches(), sums.num_rows
+    return fold(parts)
 
 
 def group_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3063,20 +3241,40 @@ def group_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     aggregation, with level one already done by the codec. Beyond the
     reference's surface (its container has point/find access only,
     `/root/reference/oroch/integer_array.h:166-208`); the natural
-    GROUP BY an analyst runs daily at 100 TB."""
-    return (_group_partial(blocks, schema_kinds, col).groupBy(col)
-            .agg(F.expr("CAST(sum(n_rows) AS BIGINT) AS n_rows")))
+    GROUP BY an analyst runs daily at 100 TB. On a bare scan whose
+    files fit one input split (:meth:`_BlockIndex.every`) the kernel
+    runs on the driver instead and the counts sum there
+    (:func:`_sum_counts`), with no job — when they sum to at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` values, the one
+    Arrow batch that ``createDataFrame`` makes a partition of; a frame
+    that is not a bare scan gets no index (that would be a job)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    kind = dict(schema_kinds)[col]
+    out_schema = T.StructType([T.StructField(col, spark_type_of(kind)),
+                               T.StructField("n_rows", T.LongType())])
+    arrow_schema = to_arrow_schema(out_schema)
+    fn = make_group_count_fn(col, arrow_schema.serialize().to_pybytes())
+    spark = blocks.sparkSession
+    got = _BlockIndex.every(blocks)
+    sums = None if got is None else _sum_counts(
+        fn(got), arrow_schema,
+        spark._jsparkSession.sessionState().conf().arrowMaxRecordsPerBatch())
+    if sums is not None:
+        return _arrow_df(spark, out_schema, sums.to_batches())
+    return blocks.mapInArrow(fn, schema=out_schema).groupBy(col).agg(
+        F.expr("CAST(sum(n_rows) AS BIGINT) AS n_rows"))
 
 
 def distinct_values(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                     col: str) -> DataFrame:
     """SELECT DISTINCT ``col`` with the same codec pushdown as
-    :func:`group_count`: dictionary-coded blocks contribute exactly
-    their (referenced) dictionary entries — for a dict/RLE-coded
-    column the distinct set streams out of block metadata-sized
-    dictionaries and the row payload is never expanded."""
-    return (_group_partial(blocks, schema_kinds, col)
-            .select(col).distinct())
+    :func:`group_count`, whose values it is: dictionary-coded blocks
+    contribute exactly their (referenced) dictionary entries — for a
+    dict/RLE-coded column the distinct set streams out of block
+    metadata-sized dictionaries and the row payload is never expanded.
+    (Spark prunes the unused count away: the plan is a distinct.)"""
+    return group_count(blocks, schema_kinds, col).select(col)
 
 
 def make_group_agg_fn(group_cols: list[str], agg_col: Optional[str],
@@ -3353,41 +3551,77 @@ def _topk_threshold(walk, k: int):
     return None
 
 
-def _topk_prune(blocks: DataFrame, k: int, ascending: bool,
-                bounds, desc: bool = True) -> DataFrame:
-    """Keep the blocks that can hold one of the top ``k`` rows by the
-    block bounds ``bounds(ix, i)``, with the overlap-safe prefix rule
-    of :func:`topk_key`: the driver walks the bounded blocks of the
+def _topk_keep(ix: "_BlockIndex", k: int, ascending: bool,
+               bounds) -> list[int]:
+    """Positions of the blocks that can hold one of the top ``k`` rows
+    by the block bounds ``bounds(ix, i)``, with the overlap-safe prefix
+    rule of :func:`topk_key`: the driver walks the bounded blocks of the
     block index to the threshold where the prefix holds k rows (at most
     k blocks) and keeps the blocks that reach it
     (:func:`_stats_overlap`). Blocks without bounds are always kept and
     never join the prefix; fewer than k rows in bounded blocks keeps
-    every block. Ascending mirrors with the bounds swapped. ``desc``
-    as in :meth:`_BlockIndex.of`."""
-    blocks, ix = _indexed(blocks, desc)
+    every block. Ascending mirrors with the bounds swapped."""
     b = [bounds(ix, i) for i in range(len(ix))]
     t = _topk_threshold(sorted(
         ((x[ascending], n) for x, n in zip(b, ix.n)
          if x[ascending] is not None),
         key=lambda p: p[0], reverse=not ascending), k)
     if t is None:
-        return blocks
+        return list(range(len(ix)))
     # desc: keep B iff it reaches up to t; asc: down to t
     pred = _KeyPred(hi=t) if ascending else _KeyPred(lo=t)
-    return ix.narrow(blocks, [i for i, x in enumerate(b)
-                              if _stats_overlap(*x, pred)])
+    return [i for i, x in enumerate(b) if _stats_overlap(*x, pred)]
 
 
-def _topk_decode(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-                 col: str, k: int, ascending: bool,
-                 columns: Optional[list[str]]) -> DataFrame:
-    """Decode ``blocks`` (``col`` plus the projection) into Spark's
-    TakeOrderedAndProject: ORDER BY ``col`` LIMIT ``k``."""
+def _topk_rows(batches, schema: "pa.Schema", col: str, k: int,
+               ascending: bool) -> "pa.Table":
+    """The first ``k`` rows of ``batches`` in Spark's ORDER BY ``col``:
+    ASC puts nulls first, DESC puts them last, and NaN sorts above
+    every number (pyarrow alone would put NaN next to the nulls). Cut
+    back to k rows after every batch."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    order = "ascending" if ascending else "descending"
+    top = schema.empty_table()
+    for b in batches:
+        t = pa.concat_tables([top, pa.Table.from_batches([b])])
+        keys = [(col, order)]
+        if pa.types.is_floating(t[col].type):
+            t = t.append_column("_nan", pc.fill_null(pc.is_nan(t[col]),
+                                                     False))
+            keys.insert(0, ("_nan", order))
+        idx = pc.sort_indices(t, sort_keys=keys, null_placement=(
+            "at_start" if ascending else "at_end"))
+        top = t.take(idx[:k]).select(schema.names)
+    return top
+
+
+def _topk(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+          col: str, k: int, ascending: bool, columns: Optional[list[str]],
+          bounds, desc: bool = True) -> DataFrame:
+    """ORDER BY ``col`` LIMIT ``k`` over the blocks :func:`_topk_keep`
+    keeps, decoding ``col`` plus the projection: on the driver, sorted
+    by :func:`_topk_rows`, when :meth:`_BlockIndex.local` reads them;
+    else into Spark's TakeOrderedAndProject. ``desc`` as in
+    :meth:`_BlockIndex.of`."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     decode_cols = columns
     if columns is not None and col not in columns:
         decode_cols = [col] + columns
-    dec = decode_df(blocks, schema_kinds, columns=decode_cols)
-    out = dec.orderBy(F.asc(col) if ascending else F.desc(col)).limit(k)
+    blocks, ix = _indexed(blocks, desc)
+    keep = _topk_keep(ix, k, ascending, bounds)
+    got = ix.local(blocks, keep)
+    if got is None:
+        out = decode_df(ix.narrow(blocks, keep), schema_kinds,
+                        columns=decode_cols) \
+            .orderBy(F.asc(col) if ascending else F.desc(col)).limit(k)
+    else:
+        schema, fn = _decoder(schema_kinds, decode_cols)
+        out = _arrow_df(blocks.sparkSession, schema, _topk_rows(
+            fn(got), to_arrow_schema(schema), col, k,
+            ascending).to_batches())
     if decode_cols is not columns:
         out = out.select(*columns)
     return out
@@ -3404,14 +3638,15 @@ def topk_key(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     prefix block has key >= its block's key_lo >= t (t = the prefix's
     minimum key_lo), so any block with ``key_hi < t`` provably has k
     rows above it and is skipped. Degenerate layouts (nulls in bounds,
-    fewer than k rows) keep everything. The decode then feeds Spark's
+    fewer than k rows) keep everything. The kept blocks decode and sort
+    on the driver when they fit one input split
+    (:meth:`_BlockIndex.local`), else feed Spark's
     TakeOrderedAndProject — per-partition partial top-k, no global
     sort. (Ascending mirrors with the bounds swapped and negated.)"""
     is_str = dict(schema_kinds)[key_col] == K_STR
-    kept = _topk_prune(blocks, k, ascending,
-                       lambda ix, i: (ix.skey if is_str else ix.key)[i],
-                       desc=False)
-    return _topk_decode(kept, schema_kinds, key_col, k, ascending, columns)
+    return _topk(blocks, schema_kinds, key_col, k, ascending, columns,
+                 lambda ix, i: (ix.skey if is_str else ix.key)[i],
+                 desc=False)
 
 
 def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3425,9 +3660,8 @@ def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     block order; uncorrelated columns degrade to a full scan — never a
     wrong answer). The threshold comes from at most k metadata rows;
     nothing shuffles."""
-    kept = _topk_prune(blocks, k, ascending,
-                       lambda ix, i: ix.stats(i, col, 0))
-    return _topk_decode(kept, schema_kinds, col, k, ascending, columns)
+    return _topk(blocks, schema_kinds, col, k, ascending, columns,
+                 lambda ix, i: ix.stats(i, col, 0))
 
 
 def manifest_rows(blocks: DataFrame, snapshot_id: str, run_id: str) -> DataFrame:

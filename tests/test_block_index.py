@@ -14,11 +14,17 @@ evaluator of every builder.
   files repeating a ``(bucket, block_idx)``, old and new files in one
   directory — give the brute-force answers, and repeated ids never
   count a block twice;
-- metadata-only answers run no Spark job on a bare scan; boundary
-  blocks and top-k run one; any other frame adds the collect job.
+- on a bare scan, metadata-only answers run no Spark job, and neither
+  do boundary blocks, lookups and top-k whose kept row groups fit one
+  input split (they are read and decoded on the driver); a smaller
+  split reads them in one job, and any other frame adds the collect
+  job;
+- the index never mixes two versions of a file: a file rewritten
+  while the index, a ``desc`` loaded later or the kept blocks are read
+  gives the new file's answer.
 """
+import contextlib
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -230,17 +236,7 @@ def test_frame_whose_reads_differ_is_read_once(spark):
                 .collect()] == [n - 1, n - 2, n - 3]
 
 
-def _jobs(spark, run):
-    sc, group = spark.sparkContext, f"ix-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_job_budget_on_a_plain_scan(spark, table):
+def test_job_budget_on_a_plain_scan(spark, table, jobs, split_below):
     kinds = _kinds(spark)
     b = spark.read.parquet(table)
     e = engine
@@ -259,14 +255,20 @@ def test_job_budget_on_a_plain_scan(spark, table):
                                                   "v"),
         "lookup_hit": lambda: e.lookup(b, kinds, "k", 123),
     }
-    for want, builders in ((0, none), (1, one)):
-        for name, build in builders.items():
-            assert _jobs(spark, lambda: build().collect()) == want, name
-    # any other frame collects its index first: one more job each
+    # the kept blocks fit one input split: read on the driver, no job
+    for name, build in {**none, **one}.items():
+        assert jobs(lambda: build().collect()) == 0, name
+    # a split smaller than the kept bytes: one job reads the blocks
+    with split_below(b):
+        for want, builders in ((0, none), (1, one)):
+            for name, build in builders.items():
+                assert jobs(lambda: build().collect()) == want, name
+    # any other frame collects its index first and reads its blocks in
+    # Spark: one more job each
     b = spark.read.parquet(table).select("*")
     for want, builders in ((1, none), (2, one)):
         for name, build in builders.items():
-            assert _jobs(spark, lambda: build().collect()) == want, name
+            assert jobs(lambda: build().collect()) == want, name
 
 
 def test_rewritten_file_gives_the_new_answer(spark, tmp_path):
@@ -299,6 +301,61 @@ def _rewrite_and_check(spark, tmp_path, frame):
                  .first()) == want[("agg", -50, 2000)]
 
 
+def _rewritten_later(spark, tmp_path):
+    """(scan, path, the new file's blocks, the new source): a one-file
+    table whose index a lookup has cached without ``desc``, and the
+    half-size table the test rewrites it with."""
+    kinds = _kinds(spark)
+    path = str(tmp_path / "t" / "part-0.parquet")
+    _write(_blocks(spark, _source(), "k"), path)
+    scan = spark.read.parquet(os.path.dirname(path))
+    assert [r.k for r in engine.lookup(scan, kinds, "k", 700).collect()] \
+        == [700]
+    new = _source(0, N // 2, shift=3)
+    return scan, path, _blocks(spark, new, "k"), new
+
+
+def test_file_rewritten_while_desc_loads(spark, tmp_path, monkeypatch):
+    """The index is cached without ``desc``; the file is rewritten,
+    with half the blocks, just before a later query reads ``desc``.
+    The index is read anew from the new file, never the old ``n`` and
+    bounds with the new descriptors."""
+    scan, path, new_blocks, new = _rewritten_later(spark, tmp_path)
+    stock, done = engine._read_index, []
+
+    def rewrite_then_read(files, cols=engine._INDEX_COLS):
+        if cols == ("desc",) and not done:
+            done.append(path)
+            _write(new_blocks, path)
+        return stock(files, cols)
+
+    monkeypatch.setattr(engine, "_read_index", rewrite_then_read)
+    got = sorted(tuple(r) for r in
+                 engine.table_stats(scan, _kinds(spark)).collect())
+    assert done and got == _brute(new, "k")[1]["stats"]
+
+
+def test_file_rewritten_while_blocks_are_read(spark, tmp_path,
+                                              monkeypatch):
+    """A lookup reads its kept block on the driver, and the file is
+    rewritten right after that read. The stats checked after it send
+    the lookup to Spark, which reads the new file: a key that only the
+    old file holds is not found."""
+    scan, path, new_blocks, _ = _rewritten_later(spark, tmp_path)
+    stock, done = pq.ParquetFile.read_row_group, []
+
+    def read_then_rewrite(self, *a, **kw):
+        out = stock(self, *a, **kw)
+        if not done:
+            done.append(path)
+            _write(new_blocks, path)
+        return out
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", read_then_rewrite)
+    assert engine.lookup(scan, _kinds(spark), "k", 700).collect() == []
+    assert done
+
+
 @pytest.mark.parametrize("layout", ["legacy", "repeated_ids", "mixed"])
 def test_odd_layouts_match_brute_force(spark, tmp_path, layout):
     kinds = _kinds(spark)
@@ -324,12 +381,14 @@ def test_odd_layouts_match_brute_force(spark, tmp_path, layout):
     _check(_answers(scan, kinds, "s"), want)
 
 
-def test_repeated_ids_never_count_a_block_twice(spark, tmp_path):
+def test_repeated_ids_never_count_a_block_twice(spark, tmp_path,
+                                                split_below):
     """Two encodes whose ``(bucket, block_idx)`` repeat, the second
     shifted by half a block: a block one of them answers from metadata
     shares its id with a boundary block of the other, so the split
     must send every kept block to the kernel. Run as a union (collected
-    index) and as one directory (cached index)."""
+    index), and as one directory (cached index) whose kept blocks are
+    read on the driver by position, and in Spark by id."""
     kinds = _kinds(spark)
     a, b = _source(), _source(50, N + 50)
     for i, t in enumerate((a, b)):
@@ -343,14 +402,15 @@ def test_repeated_ids_never_count_a_block_twice(spark, tmp_path):
     truth = {}
     for x in both["v"].to_pylist():
         truth[x] = truth.get(x, 0) + 1
-    for frame in (union, scan):
+    for frame, split in ((union, None), (scan, None), (scan, scan)):
         assert engine._BlockIndex.of(frame).repeated
-        _check(_answers(frame, kinds, "k"), dict(want))
+        with split_below(split) if split else contextlib.nullcontext():
+            _check(_answers(frame, kinds, "k"), dict(want))
         for r in engine.approx_topk(frame, "v", k=5, kind="int").collect():
             assert r.count_lo <= truth[r.value] <= r.count_hi
 
 
-def test_extra_stored_columns_keep_the_cached_index(spark, tmp_path):
+def test_extra_stored_columns_keep_the_cached_index(spark, tmp_path, jobs):
     """A bare scan of a table persisted with :func:`with_stat_columns`
     carries extra columns; it still reads the cached index, so
     metadata-only answers run no job."""
@@ -362,12 +422,11 @@ def test_extra_stored_columns_keep_the_cached_index(spark, tmp_path):
     scan = spark.read.parquet(path)
     assert "v__lo" in scan.columns
     assert engine._scan_files(scan) is not None
-    assert _jobs(spark, lambda: engine.table_stats(scan, kinds)
-                 .collect()) == 0
+    assert jobs(lambda: engine.table_stats(scan, kinds).collect()) == 0
     assert engine.table_stats(scan, kinds, ["k"]).first().n_rows == N
 
 
-def test_lookup_where_prunes_by_bloom(spark, tmp_path):
+def test_lookup_where_prunes_by_bloom(spark, tmp_path, jobs):
     """An uncorrelated column spans the whole domain in every block, so
     only the Bloom can skip: a value inside every block's bounds but in
     none of them runs no job, and a present one reads few blocks."""
@@ -386,9 +445,9 @@ def test_lookup_where_prunes_by_bloom(spark, tmp_path):
         # an odd value: in no block, though inside every block's bounds
         absent = next(x for x in range(1001, 3001, 2) if not ix.keep(
             lambda i: ix.bloom(i, "h", x, engine.K_I64)))
-        base = _jobs(spark, lambda: engine._BlockIndex.of(frame))
+        base = jobs(lambda: engine._BlockIndex.of(frame))
         out = []
-        assert _jobs(spark, lambda: out.append(engine.lookup_where(
+        assert jobs(lambda: out.append(engine.lookup_where(
             frame, kinds, "h", absent).collect())) == base
         assert out == [[]]
         assert [r.k for r in engine.lookup_where(frame, kinds, "h", h[321])

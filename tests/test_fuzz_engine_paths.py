@@ -12,11 +12,15 @@ Op classes checked per iteration: scan_where, count_where,
 range_count, range_agg (SUM/MIN/MAX/COUNT in the codec domain),
 agg_where, scan_where_multi + count_where_multi (AND of two
 predicates), lookup (hit + miss), lookup_in (batched IN), topk_key +
-topk_by, and grep_where (token-Bloom full-text). null_count and
-table_stats checks run once at the end. Every check runs twice: on a
-cached encode, whose block index is collected in a Spark job, and on
-the same blocks written to parquet and read back as a bare scan, whose
-index is read from the files with pyarrow.
+topk_by, grep_where (token-Bloom full-text), and group_count +
+distinct_values. null_count and table_stats checks run once at the
+end, on the first two frames below (they read metadata only). The
+per-iteration checks run three times: on a cached encode, whose block
+index is collected in a Spark job; on the same blocks written to
+parquet and read back as a bare scan, whose index is read from the
+files with pyarrow and whose kept blocks are decoded on the driver;
+and on that scan with ``spark.sql.files.maxPartitionBytes`` below its
+row groups, so Spark reads the kept blocks.
 
 Default is 3 iterations (~1 min with the shared session);
 OROCH_FUZZ_ENGINE_ITERS / OROCH_FUZZ_ENGINE_SEED crank it — deep sweeps
@@ -130,10 +134,12 @@ def _rand_range(rng, lo_d, hi_d):
     return (a, b) if a <= b else (b, a)
 
 
-def test_pruned_paths_match_exact(fixture):
+def test_pruned_paths_match_exact(fixture, split_below):
     frames, kinds, pdi = fixture
     for blocks in frames:
         _pruned_paths_match_exact(blocks, kinds, pdi)
+    with split_below(frames[1]):
+        _pruned_paths_match_exact(frames[1], kinds, pdi)
 
 
 def _pruned_paths_match_exact(blocks, kinds, pdi):
@@ -231,6 +237,21 @@ def _pruned_paths_match_exact(blocks, kinds, pdi):
             _canon_collect(engine.lookup_in(blocks, kinds, "k", probes)),
             _canon_expected(pdi, pdi["k"].isin(probes).to_numpy()),
             check_dtype=False)
+
+        # group_count / distinct_values, compared in the int domain
+        gcol = rnd.choice(["s", "u", "ni", "ts", "d", "dc"])
+        canon = dict(zip(["k", "u", "ts", "d", "dc", "s", "ni", "txt"],
+                         _canon()))[gcol]
+        want = {None if pd.isna(v) else v: int(c) for v, c in
+                pdi[gcol].value_counts(dropna=False).items()}
+        got = engine.group_count(blocks, kinds, gcol) \
+            .select(canon, "n_rows").collect()
+        assert len(got) == len(want) \
+            and {r[0]: r[1] for r in got} == want, gcol
+        got = engine.distinct_values(blocks, kinds, gcol) \
+            .select(canon).collect()
+        assert len(got) == len(want) \
+            and {r[0] for r in got} == set(want), gcol
 
         # token-Bloom full-text search (present and absent words)
         w = rnd.choice(WORDS + ["missing_word"])

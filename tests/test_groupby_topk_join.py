@@ -296,21 +296,30 @@ def test_topk_prunes_blocks(spark):
         blocks.unpersist()
 
 
-def test_topk_plan_never_shuffles_payload(spark, events):
-    """Regression pin for the plan shape: topk_key's plan has no
-    shuffle Exchange at all — the threshold is a literal taken from at
-    most k metadata rows, and TakeOrderedAndProject finishes."""
+def test_topk_plan_never_shuffles_payload(spark, events, jobs):
+    """Regression pin for the plan shape. On a bare scan whose kept
+    blocks fit one input split, topk_key decodes and sorts them on the
+    driver: the answer is a LocalTableScan and no job runs. On any
+    other frame the plan has no shuffle Exchange at all — the threshold
+    is a literal taken from at most k metadata rows, and
+    TakeOrderedAndProject finishes."""
     import contextlib
     import io
 
     src, blocks, kinds = events
-    for ascending in (False, True):
-        df = engine.topk_key(blocks, kinds, "event_id", 10,
-                             ascending=ascending)
+
+    def plan_of(df):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        plan = buf.getvalue()
+        return buf.getvalue()
+
+    for ascending in (False, True):
+        top = lambda b: engine.topk_key(  # noqa: E731
+            b, kinds, "event_id", 10, ascending=ascending)
+        assert "LocalTableScan" in plan_of(top(blocks))
+        assert jobs(lambda: top(blocks).collect()) == 0
+        plan = plan_of(top(blocks.select("*")))
         assert "Exchange" not in plan
         assert "TakeOrderedAndProject" in plan
 

@@ -4,9 +4,11 @@ null_count) against brute force over the raw table.
 Every block yields one partial row: blocks the metadata answers give
 their stored count and stats, the rest reduce their own rows in the
 decode kernel. The answers must equal pyarrow's over the source, for
-every key and aggregate kind, on blocks that predate the aggregate
-column, on legacy blocks without stats, and on empty ranges; and a
-range the metadata answers in full must never decode a payload.
+every key and aggregate kind (a nullable one too), whether the
+boundary blocks reduce on the driver or in a Spark job, on blocks that
+predate the aggregate column, on legacy blocks without stats, and on
+empty ranges; and a range the metadata answers in full must never
+decode a payload.
 """
 import datetime
 import decimal
@@ -103,6 +105,19 @@ def _ranges(dom, col):
 
 @pytest.mark.parametrize("kind", list(KEY_COLS))
 def test_range_aggregates_match_bruteforce(src, tables, kind):
+    _range_aggregates_match(src, tables, kind)
+
+
+@pytest.mark.parametrize("kind", list(KEY_COLS))
+def test_range_aggregates_match_bruteforce_in_spark(src, tables, kind,
+                                                    split_below):
+    """The same answers when no row group fits one input split: the
+    boundary blocks reduce in a Spark job, not on the driver."""
+    with split_below(tables[1][kind]):
+        _range_aggregates_match(src, tables, kind)
+
+
+def _range_aggregates_match(src, tables, kind):
     kinds, blocks = tables[0], tables[1][kind]
     dom, col = src[1], KEY_COLS[kind]
     for i, (lo, hi) in enumerate(_ranges(dom, col)):

@@ -326,24 +326,15 @@ def test_sql_builders_answer(tables, kind):
     assert ids(engine.lookup_where(blocks, kinds, "s", _sval(77))) == [77]
 
 
-def _jobs(sc, name, build):
-    """Spark jobs that building and collecting ``build()`` runs."""
-    sc.setJobGroup(f"budget-{name}", name)
-    try:
-        build().collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(f"budget-{name}"))
-
-
-def test_query_job_budget(spark, tables):
+def test_query_job_budget(spark, tables, jobs):
     """Range aggregates and top-k run at most two Spark jobs each —
-    building the query included; the block index can answer the range
-    aggregates with none — and on a frame that is not a bare scan the
-    metadata-split builders run at most two: the index collect and one
-    payload job."""
+    building the query included. On a bare scan whose kept blocks fit
+    one input split they run none: the block index answers the
+    interior blocks, and the boundary blocks and top-k's kept blocks
+    are read and decoded on the driver. On a frame that is not a bare
+    scan the metadata-split builders run at most two, the index
+    collect and one payload job, and top-k exactly those two."""
     kinds, blocks = tables[0], tables[1]["i64"]
-    sc = spark.sparkContext
     builders = {
         "topk_key": lambda: engine.topk_key(blocks, kinds, "id", 7),
         "topk_by": lambda: engine.topk_by(blocks, kinds, "v", 7,
@@ -356,10 +347,13 @@ def test_query_job_budget(spark, tables):
                                                   100, 650),
     }
     for name, build in builders.items():
-        least = 0 if name in ("range_agg", "agg_where", "range_count") \
-            else 1
-        assert least <= _jobs(sc, name, build) <= 2, name
+        assert jobs(lambda: build().collect()) == 0, name
     blocks = blocks.select("*")
+    for name, build in {
+            "topk_key_all": lambda: engine.topk_key(blocks, kinds, "id", 7),
+            "topk_by_all": lambda: engine.topk_by(blocks, kinds, "v", 7,
+                                                  ascending=True)}.items():
+        assert jobs(lambda: build().collect()) == 2, name
     for name, build in {
             "range_agg_all": lambda: engine.range_agg(
                 blocks, kinds, "id", 100, 650, "v"),
@@ -373,7 +367,7 @@ def test_query_job_budget(spark, tables):
                 blocks, kinds, [("id", 100, 650), ("v", 0, 900)]),
             "null_count_all": lambda: engine.null_count(
                 blocks, kinds, "v")}.items():
-        assert _jobs(sc, name, build) <= 2, name
+        assert jobs(lambda: build().collect()) <= 2, name
 
 
 @pytest.mark.parametrize("v", [0, -5, 2 ** 63 - 1, -2 ** 63])

@@ -68,32 +68,59 @@ def main() -> None:
     engine.encode_df(events, ["event_id"], n_buckets=1, block_rows=4096) \
         .write.mode("overwrite").parquet(sdir)
     sections.append((
-        "lookup (persisted blocks: block index -> kept blocks by id -> "
-        "key-only decode; one-bucket layout)",
+        "lookup (bare scan: kept blocks decoded on the driver; "
+        "one-bucket layout)",
         "On a bare scan the driver-side block index tests the TRUE "
-        "min/max (key_lo, key_hi) bounds in Python and the scan reads "
-        "only the kept blocks: `bucket = b AND block_idx IN (...)` is "
-        "PushedFilters, so parquet row-group stats skip the rest on "
-        "disk (a key no block can hold runs no job at all; NULL bounds "
-        "keep the block). Any other frame collects the same index in "
-        "one metadata job first. Survivors reach the mapInArrow "
-        "kernel, which decodes only the key column and batch-fetches "
-        "matched rows.",
+        "min/max (key_lo, key_hi) bounds in Python, and the row groups "
+        "that hold the kept blocks fit one input split (Spark's split "
+        "size: min(maxPartitionBytes, max(openCostInBytes, scan bytes "
+        "/ default parallelism))): pyarrow reads just those "
+        "blocks, the lookup kernel runs in-process, and the matched "
+        "rows are a LocalTableScan. No Spark job runs.",
         plan_of(engine.lookup(
             spark.read.parquet(sdir),
             engine.column_kinds(events.schema), "event_id", 777))))
 
     sections.append((
-        "range_agg (SUM/MIN/MAX/COUNT answered from block metadata)",
+        "lookup (any other frame, here select(\"*\"): block index -> "
+        "kept blocks by id -> key-only decode)",
+        "Any frame that is not a bare scan collects the same index in "
+        "one metadata job, and the kept blocks are read by id: "
+        "`bucket = b AND block_idx IN (...)` is PushedFilters, so "
+        "parquet row-group stats skip the rest on disk (a key no block "
+        "can hold runs no job at all; NULL bounds keep the block). "
+        "Survivors reach the mapInArrow kernel, which decodes only the "
+        "key column and batch-fetches matched rows. A bare scan whose "
+        "kept row groups exceed one input split reads them the same "
+        "way.",
+        plan_of(engine.lookup(
+            spark.read.parquet(sdir).select("*"),
+            engine.column_kinds(events.schema), "event_id", 777))))
+
+    sections.append((
+        "range_agg (SUM/MIN/MAX/COUNT answered from block metadata; "
+        "bare scan)",
         "The block index splits the blocks on the driver: interior "
         "blocks (bounds inside, no null key) fold from their stored "
-        "stats, and only the boundary blocks run — one job while the "
-        "query is built, no exchange, each block decoding two columns "
-        "and reducing to one partial row inside the kernel. "
-        "NULL/absent stats degrade to the decode path, never to a "
-        "wrong answer. The answer is a LocalTableScan.",
+        "stats, and the boundary blocks, whose row groups fit one "
+        "input split, are read with pyarrow and reduce to one partial "
+        "row each in the same kernel, in-process. NULL/absent stats "
+        "degrade to the decode path, never to a wrong answer. The "
+        "answer is a LocalTableScan; no Spark job runs.",
         plan_of(engine.range_agg(
             spark.read.parquet(bdir),
+            engine.column_kinds(events.schema), "event_id", 1000, 9000,
+            "user_id"))))
+
+    sections.append((
+        "range_agg (any other frame, here select(\"*\"))",
+        "The same split over the collected index: only the boundary "
+        "blocks run, in one job while the query is built, with no "
+        "exchange, each block decoding two columns and reducing to one "
+        "partial row inside the kernel. The answer is again a "
+        "LocalTableScan.",
+        plan_of(engine.range_agg(
+            spark.read.parquet(bdir).select("*"),
             engine.column_kinds(events.schema), "event_id", 1000, 9000,
             "user_id"))))
 
@@ -138,14 +165,26 @@ def main() -> None:
             t0 + 3600 * 10 ** 6, columns=["event_id", "ts"]))))
 
     sections.append((
-        "group_count (GROUP BY pushdown into the codec)",
+        "group_count (GROUP BY pushdown into the codec; bare scan)",
         "Each block emits its (value, count) pairs from inside the "
         "decode kernel — dictionary/RLE blocks never rebuild row "
-        "values — then HashAggregate partial-aggregates the pairs "
-        "map-side before the one exchange on the low-cardinality "
-        "group key.",
+        "values. On a bare scan that fits one input split the kernel "
+        "runs on the driver over the blocks pyarrow reads and the "
+        "pairs sum there (Spark's float-key rules: -0.0 = 0.0, one NaN "
+        "group): a LocalTableScan, no job. Sums past one Arrow batch "
+        "(spark.sql.execution.arrow.maxRecordsPerBatch values) are "
+        "left to Spark, as below.",
         plan_of(engine.group_count(
             spark.read.parquet(bdir),
+            engine.column_kinds(events.schema), "event_type"))))
+
+    sections.append((
+        "group_count (any other frame, here select(\"*\"))",
+        "The kernel runs in mapInArrow and HashAggregate "
+        "partial-aggregates the pairs map-side before the one exchange "
+        "on the low-cardinality group key.",
+        plan_of(engine.group_count(
+            spark.read.parquet(bdir).select("*"),
             engine.column_kinds(events.schema), "event_type"))))
 
     sections.append((
@@ -192,13 +231,25 @@ def main() -> None:
             .select("event_id"), grid_min_blocks=0))))
 
     sections.append((
-        "topk_key (ORDER BY key LIMIT k, zone-pruned; one-bucket layout)",
+        "topk_key (ORDER BY key LIMIT k, zone-pruned; bare scan, "
+        "one-bucket layout)",
         "Only blocks that can hold a top-k row decode: the threshold "
-        "walks the block index on the driver and the kept blocks are "
-        "read by id (PushedFilters). TakeOrderedAndProject finishes "
-        "— per-partition partial top-k, no global sort, no exchange.",
+        "walks the block index on the driver. Their row groups fit one "
+        "input split, so pyarrow reads them, the decode kernel runs "
+        "in-process and pyarrow sorts and keeps k rows in Spark's "
+        "order (ASC nulls first, DESC nulls last, NaN above every "
+        "number): a LocalTableScan, no job.",
         plan_of(engine.topk_key(
             spark.read.parquet(sdir),
+            engine.column_kinds(events.schema), "event_id", 10))))
+
+    sections.append((
+        "topk_key (any other frame, here select(\"*\"))",
+        "The kept blocks are read by id (PushedFilters) and "
+        "TakeOrderedAndProject finishes — per-partition partial top-k, "
+        "no global sort, no exchange.",
+        plan_of(engine.topk_key(
+            spark.read.parquet(sdir).select("*"),
             engine.column_kinds(events.schema), "event_id", 10))))
 
     sections.append((

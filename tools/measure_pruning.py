@@ -88,8 +88,8 @@ def main() -> None:
 
     # topk: candidate blocks after the engine's threshold prune
     add("topk_key (k=10)", "ORDER BY event_id DESC LIMIT 10", total,
-        engine._topk_prune(evb, 10, False,
-                           lambda ix, i: ix.key[i]).count())
+        len(engine._topk_keep(engine._BlockIndex.of(evb), 10, False,
+                              lambda ix, i: ix.key[i])))
 
     # --- z-order clustering (events, user_id x value) -------------------
     # Same table re-clustered by the Morton interleave of two mutually
