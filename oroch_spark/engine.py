@@ -1931,6 +1931,29 @@ class _KeyPred:
     def wants_notnull(self) -> bool:
         return any(op == "notnull" for op, _ in self.raw)
 
+    @property
+    def nullish(self) -> bool:
+        """Is it a null test that the null counts can decide: IS NULL,
+        or an IS NOT NULL with no values or bounds beside it (a row
+        that matches those cannot be null)?"""
+        return self.wants_null or (self.wants_notnull and self.values is None
+                                   and self.lo is None and self.hi is None)
+
+    @property
+    def rejects_null(self) -> bool:
+        """Does no null row match it? Every op but IS NULL and NOT(col
+        <=> v) is NULL on a null row under SQL ternary logic."""
+        return self.values is not None or self.lo is not None \
+            or self.hi is not None or bool(self.neq) \
+            or any(op not in ("isnull", "nseq") for op, _ in self.raw)
+
+    @property
+    def probe(self):
+        """A value of its prune domain (a string picks the
+        lexicographic bounds), None when it has none."""
+        return next((v for v in (*(self.values or ()), self.lo, self.hi,
+                                 *(self.neq or ())) if v is not None), None)
+
 
 def _stats_overlap(stats_lo, stats_hi, pred: _KeyPred) -> bool:
     """Can a container with [stats_lo, stats_hi] bounds hold any row
@@ -1981,9 +2004,8 @@ _indexes: dict = {}  # ((path, ino, mtime_ns, size), ...) -> index
 def _scan_files(blocks: DataFrame) -> Optional[list[str]]:
     """Local paths of the files ``blocks`` reads when it is a bare,
     uncached parquet scan of a blocks table with no partition columns
-    (``spark.read.parquet(dir)``; extra stored columns, such as the
-    ``<c>__lo``/``<c>__hi`` of :func:`with_stat_columns`, are fine) —
-    the listing Spark itself would read. None for any other plan,
+    (``spark.read.parquet(dir)``; extra stored columns are fine) — the
+    listing Spark itself would read. None for any other plan,
     schema or file system."""
     from urllib.parse import unquote, urlparse
 
@@ -2025,6 +2047,13 @@ def _index_table(t: "pa.Table", cols=_INDEX_COLS) -> "pa.Table":
 
 
 _BLOCK_COLS = ("n", "desc", "payload")  # what a decode kernel reads
+
+
+def _read_rows(pf: "pq.ParquetFile", group: int,
+               rows: list[int]) -> "pa.Table":
+    """The ``n``/``desc``/``payload`` of the blocks at positions ``rows``
+    of row group ``group`` of ``pf``: how every planned block is read."""
+    return pf.read_row_group(group, columns=list(_BLOCK_COLS)).take(rows)
 
 
 def _read_index(files: list[str], cols=_INDEX_COLS):
@@ -2143,25 +2172,25 @@ class _BlockIndex:
     per block its ``(bucket, block_idx)``, row count ``n``, lead-key
     bounds and parsed descriptor. Oroch keeps a container's group
     descriptors in process and checks them before it touches a payload
-    (`integer_array.h:192-208`); every builder does the same here. It
-    decides kept, interior and boundary blocks in Python with the one
-    rule set — :func:`_stats_overlap`, :func:`_stats_inside` and
-    :func:`bloom_might_contain` — answers metadata-only queries with no
-    Spark job, and gives the payload job only the kept blocks
-    (:meth:`narrow`).
+    (`integer_array.h:192-208`); every builder and ``format("oroch")``
+    do the same here. It decides kept blocks in Python with one
+    per-block rule, :meth:`admits`, and interior ones with
+    :func:`_stats_inside`; answers metadata-only queries with no Spark
+    job, and gives the payload job only the kept blocks (:meth:`narrow`).
 
     :meth:`of` loads it one of two ways. A bare parquet scan
-    (:meth:`scanned`) is read with pyarrow and cached, checked on
-    every use against each file's ``(st_ino, st_mtime_ns, st_size)``
-    the way ``_zipcache`` checks archives. Any other frame is collected
-    in one Spark job and not cached. A builder that reads the payload
-    after the index takes both from :func:`_indexed`, which pins a
-    frame whose reads may differ.
+    (:meth:`scanned`) is read with pyarrow and cached (:meth:`load`,
+    which ``format("oroch")`` plans on too), checked on every use
+    against each file's ``(st_ino, st_mtime_ns, st_size)`` the way
+    ``_zipcache`` checks archives. Any other frame is collected in one
+    Spark job and not cached. A builder that reads the payload after
+    the index takes both from :func:`_indexed`, which pins a frame
+    whose reads may differ.
 
-    A scanned index also knows where each block lives (its file's
-    row groups, in order) and each row group's block-column bytes, so
-    :meth:`local` can read kept blocks on the driver instead of in a
-    Spark job: the one place that decides between the two.
+    A loaded index also knows where each block lives (its file's row
+    groups, in order; :meth:`placed`) and each row group's block-column
+    bytes, so :meth:`local` can read kept blocks on the driver instead
+    of in a Spark job: the one place that decides between the two.
 
     A ``(bucket, block_idx)`` that repeats (or holds a null) cannot
     single its block out, so the index only ever over-reads it:
@@ -2211,38 +2240,43 @@ class _BlockIndex:
     @classmethod
     def scanned(cls, blocks: DataFrame,
                 desc: bool = True) -> Optional["_BlockIndex"]:
-        """The cached pyarrow index of a bare scan; None for any other
-        frame, or when its files cannot be read here or keep changing
-        while they are (Spark reads them then). Every read — the index,
-        a ``desc`` loaded later — is checked against the stats the
-        index is cached by (:func:`_stable`); a file rewritten during
-        it is read again, never mixed into that index."""
+        """The cached index of a bare scan (:meth:`load`); None for any
+        other frame, or when its files cannot be read here or keep
+        changing while they are (Spark reads them then)."""
         files = _scan_files(blocks)
-        if files is None:
-            return None
-        cols = _INDEX_COLS if desc else _LEAD_COLS
         try:
-            for _ in range(2):  # a file changed mid-read: read it anew
-                key = _stat_key(files)
-                ix = _indexes.get(key)
-                if ix is None:
-                    got = _stable(files, key,
-                                  lambda: _read_index(files, cols))
-                    if got is None:
-                        continue
-                    ix = cls(*got, files, key)
-                    while len(_indexes) >= _INDEX_KEEP:
-                        del _indexes[next(iter(_indexes))]
-                    _indexes[key] = ix
-                if desc and ix.desc is None and ix._cols is None:
-                    got = _stable(files, key, lambda: _read_index(
-                        files, ("desc",))[0]["desc"])
-                    if got is None:
-                        continue
-                    ix.desc = got
-                return ix
+            return None if files is None else cls.load(files, desc)
         except Exception:  # unreadable here
-            pass
+            return None
+
+    @classmethod
+    def load(cls, files: list[str],
+             desc: bool = True) -> Optional["_BlockIndex"]:
+        """The index of the blocks files ``files``, read with pyarrow
+        and cached by their stats; None when they keep changing while
+        they are read. Every read — the index, a ``desc`` loaded later
+        — is checked against the stats the index is cached by
+        (:func:`_stable`); a file rewritten during it is read again,
+        never mixed into that index."""
+        cols = _INDEX_COLS if desc else _LEAD_COLS
+        for _ in range(2):  # a file changed mid-read: read it anew
+            key = _stat_key(files)
+            ix = _indexes.get(key)
+            if ix is None:
+                got = _stable(files, key, lambda: _read_index(files, cols))
+                if got is None:
+                    continue
+                ix = cls(*got, files, key)
+                while len(_indexes) >= _INDEX_KEEP:
+                    del _indexes[next(iter(_indexes))]
+                _indexes[key] = ix
+            if desc and ix.desc is None and ix._cols is None:
+                got = _stable(files, key, lambda: _read_index(
+                    files, ("desc",))[0]["desc"])
+                if got is None:
+                    continue
+                ix.desc = got
+            return ix
         return None
 
     def __len__(self) -> int:
@@ -2278,14 +2312,37 @@ class _BlockIndex:
         """Positions of the blocks ``test(i)`` accepts."""
         return [i for i in range(len(self)) if test(i)]
 
+    def admits(self, i: int, col: Optional[str], pred: _KeyPred,
+               kind: Optional[str] = None, lead: bool = False) -> bool:
+        """May block ``i`` hold a row whose ``col`` matches ``pred``?
+        The one per-block prune rule, checked in order: ``col``'s stats,
+        or with ``lead`` the lead-key bounds, overlap ``pred``
+        (:func:`_stats_overlap`, in ``pred``'s domain); a block whose
+        ``col`` is all null (it predates ``col``, say) matches no
+        null-rejecting ``pred``, and one with no null no IS NULL — a
+        legacy block has no null count and is kept; ``col``'s Bloom
+        (of ``kind``) may hold one of ``pred``'s values. A lead-key
+        ``pred`` that is no null test reads the bounds alone, so it
+        needs no ``desc``."""
+        probe = pred.probe
+        if not _stats_overlap(*(self.bounds(i, probe) if lead
+                                else self.stats(i, col, probe)), pred):
+            return False
+        if lead and not pred.nullish:
+            return True
+        nulls = self.nulls(i, col)
+        if nulls == self.n[i] and pred.rejects_null \
+                or nulls == 0 and pred.wants_null:
+            return False
+        return not pred.values \
+            or any(self.bloom(i, col, v, kind) for v in pred.values)
+
     def where(self, tests: list[tuple], lead: bool = False) -> list[int]:
-        """Positions of the blocks that may hold a row matching every
-        ``(col, probe, _KeyPred)`` of ``tests`` (:func:`_range_tests`)
-        by ``col``'s stats, or with ``lead`` by the lead-key bounds;
-        ``probe`` picks the bounds' domain."""
-        get = (lambda i, c, v: self.bounds(i, v)) if lead else self.stats
-        return self.keep(lambda i: all(_stats_overlap(*get(i, c, v), p)
-                                       for c, v, p in tests))
+        """Positions of the blocks that :meth:`admits` for every
+        ``(col, _KeyPred)`` of ``tests`` (:func:`_range_tests`), by
+        ``col``'s stats or with ``lead`` by the lead-key bounds."""
+        return self.keep(lambda i: all(self.admits(i, c, p, lead=lead)
+                                       for c, p in tests))
 
     def narrow(self, blocks: DataFrame, keep: list[int]) -> DataFrame:
         """``blocks`` cut to the blocks at positions ``keep``, by a
@@ -2320,29 +2377,36 @@ class _BlockIndex:
 
         if self._groups is None:
             return None
-        starts = [start for start, *_ in self._groups]
-        rows: dict = {}  # row group position -> its kept rows
-        for i in keep:
-            j = bisect.bisect_right(starts, i) - 1
-            rows.setdefault(j, []).append(i - starts[j])
-        if sum(self._groups[j][3] for j in rows) > _split_bytes(
+        where = self.placed(keep)
+        if sum(size for *_, size in where) > _split_bytes(
                 blocks.sparkSession, [st[3] for st in self._stats]):
             return None
 
         def read():
             out, pfs = [], {}
-            for j, take in sorted(rows.items()):
-                _, f, g, _ = self._groups[j]
+            for f, g, rows, _ in where:
                 if f not in pfs:
                     pfs[f] = pq.ParquetFile(self._files[f])
-                out += pfs[f].read_row_group(g, columns=list(_BLOCK_COLS)) \
-                    .take(take).to_batches()
+                out += _read_rows(pfs[f], g, rows).to_batches()
             return out
 
         try:
             return _stable(self._files, self._stats, read)
         except (OSError, pa.ArrowException):  # unreadable here: Spark
             return None  # reads it, or raises the error itself
+
+    def placed(self, keep: list[int]) -> list[tuple]:
+        """The blocks at positions ``keep`` of a loaded index by the row
+        group that holds them, in file order: per row group its
+        ``(file position, row group, the blocks' rows in it, its
+        block-column bytes)``."""
+        starts = [start for start, *_ in self._groups]
+        rows: dict = {}  # row group position -> its kept rows
+        for i in keep:
+            j = bisect.bisect_right(starts, i) - 1
+            rows.setdefault(j, []).append(i - starts[j])
+        return [(*self._groups[j][1:3], take, self._groups[j][3])
+                for j, take in sorted(rows.items())]
 
     @classmethod
     def every(cls, blocks: DataFrame) -> Optional[list["pa.RecordBatch"]]:
@@ -2395,11 +2459,11 @@ class _BlockIndex:
 
 
 def _range_tests(preds: list[tuple]) -> list[tuple]:
-    """``(col, lo, hi)`` range predicates as the ``(col, probe,
-    _KeyPred)`` tests :meth:`_BlockIndex.where` takes: string bounds
-    test the lexicographic stats, any other the int64 ones."""
-    return [(c, lo, _KeyPred(lo=lo, hi=hi)) if isinstance(lo, str)
-            else (c, int(lo), _KeyPred(lo=int(lo), hi=int(hi)))
+    """``(col, lo, hi)`` range predicates as the ``(col, _KeyPred)``
+    tests :meth:`_BlockIndex.where` takes: string bounds test the
+    lexicographic stats, any other the int64 ones."""
+    return [(c, _KeyPred(lo=lo, hi=hi)) if isinstance(lo, str)
+            else (c, _KeyPred(lo=int(lo), hi=int(hi)))
             for c, lo, hi in preds]
 
 
@@ -2478,8 +2542,8 @@ def prune_blocks_in(blocks: DataFrame, values) -> DataFrame:
     if not vals:
         return blocks.filter("FALSE")
     blocks, ix = _indexed(blocks, desc=False)
-    return ix.narrow(blocks, ix.where(
-        [(None, vals[0], _KeyPred(values=vals))], lead=True))
+    return ix.narrow(blocks, ix.where([(None, _KeyPred(values=vals))],
+                                      lead=True))
 
 
 def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2624,13 +2688,13 @@ def _index_split(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
 
     parts = ix.split(
         blocks, ix.where(tests, lead),
-        lambda i: all(_stats_inside(*(ix.bounds(i, v) if lead
-                                      else ix.stats(i, c, v)), p)
+        lambda i: all(_stats_inside(*(ix.bounds(i, p.lo) if lead
+                                      else ix.stats(i, c, p.lo)), p)
                       and not ix.cols[i].get(c, {}).get("z")
-                      for c, v, p in tests)
+                      for c, p in tests)
         and (agg_col is None or None not in agg(i)),
         lambda i: (ix.n[i], *agg(i)), schema_kinds,
-        [(c, p.lo, p.hi) for c, _, p in tests], agg_col)
+        [(c, p.lo, p.hi) for c, p in tests], agg_col)
     return _fold_partials(blocks.sparkSession, parts, agg_col is not None)
 
 
@@ -2685,18 +2749,13 @@ def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                         agg_col, lead=True)
 
 
-def _stats_sql(col: str) -> str:
-    """SQL: the stats struct of ``col`` from the desc JSON; null when
-    the column has no stored stats (legacy block) or is absent from the
-    block entirely (schema evolution) — get, not [0], so the empty
-    match is NULL instead of an ANSI index error."""
-    return (f"get(filter(from_json(desc, '{_STATS_DDL}').cols, "
-            f"x -> x.n = {_sql_lit(col)}), 0)")
-
-
 def _col_stats(col: str):
-    """:func:`_stats_sql` as a Column."""
-    return F.expr(_stats_sql(col))
+    """The stats struct of ``col`` from the desc JSON, as a Column; null
+    when the column has no stored stats (legacy block) or is absent
+    from the block entirely (schema evolution) — get, not [0], so the
+    empty match is NULL instead of an ANSI index error."""
+    return F.expr(f"get(filter(from_json(desc, '{_STATS_DDL}').cols, "
+                  f"x -> x.n = {_sql_lit(col)}), 0)")
 
 
 def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -2824,19 +2883,6 @@ def approx_quantile(blocks: DataFrame, col: str,
         T.StructField("q", T.DoubleType()),
         T.StructField("value", T.DoubleType() if is_f else T.LongType())]),
         [qarr, vals])
-
-
-def with_stat_columns(blocks: DataFrame, cols: list[str]) -> DataFrame:
-    """Materialize per-column (lo, hi) descriptor stats as top-level
-    columns ``<c>__lo`` / ``<c>__hi`` — call before persisting a blocks
-    table that ``format("oroch")`` will read: its row-group planning
-    prunes on those columns' parquet min/max stats, exactly like the
-    lead-key bounds."""
-    for c in cols:
-        st = _stats_sql(c)
-        blocks = (blocks.withColumn(f"{c}__lo", F.expr(f"{st}.lo"))
-                        .withColumn(f"{c}__hi", F.expr(f"{st}.hi")))
-    return blocks
 
 
 def scan_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3007,8 +3053,7 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     out_schema = T.StructType(
         [T.StructField(n, spark_type_of(k)) for n, k in sel])
     blocks, ix = _indexed(blocks)
-    keep = ix.keep(lambda i: ix.bloom(i, col, value, kind)
-                   and _stats_overlap(*ix.stats(i, col, probe), pred))
+    keep = ix.keep(lambda i: ix.admits(i, col, pred, kind))
     if not keep:
         dec = _local_df(blocks.sparkSession, out_schema)
     else:
@@ -3121,7 +3166,7 @@ def _lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     out_schema = T.StructType(
         [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds])
     blocks, ix = _indexed(blocks, desc=False)
-    keep = ix.where([(None, values[0], _KeyPred(values=values))], lead=True)
+    keep = ix.where([(None, _KeyPred(values=values))], lead=True)
     if not keep:
         return _local_df(blocks.sparkSession, out_schema)
     fn = make_lookup_fn(schema_kinds, key_col, values,

@@ -13,31 +13,34 @@ decoded rows with
   per-block null counts, !=/NOT IN — with a constant-block prune —
   ends-with/contains and every NOT() of the above, enforced
   Arrow-side before the JVM transfer) on ANY projected
-  string/int-domain column — not just the
-  lead key — are accepted and enforced in three stages: parquet *row-group statistics* (the ``key_lo/key_hi`` /
-  ``key_slo/key_shi`` bounds columns for the key; materialized
-  ``<col>__lo/__hi`` columns for secondary predicates when the table
-  carries them) skip whole groups of blocks driver-side; surviving
-  blocks are pruned against the per-block desc stats and Bloom
-  filters BEFORE the payload column is read (a fully-pruned row
-  group never reads payload bytes); the decoded rows are then
-  filtered exactly in Arrow, so accepted filters are fully absorbed
-  (no residual Spark Filter node). This mirrors the reference's
-  metadata-pruned ``find`` (`/root/reference/oroch/
-  integer_array.h:71-136`) at the Spark source boundary, extended
+  string/int-domain column — not just the lead key — are accepted
+  and enforced in two stages. Planning loads the table's block index
+  (``engine._BlockIndex.load``: the same stat-checked, cached pyarrow
+  read a bare-scan builder uses; ``desc`` only for a predicate on a
+  non-key column or a null test) and keeps the blocks that
+  ``_BlockIndex.admits`` accepts — the one per-block rule of every
+  engine builder: lead-key bounds or per-column desc stats, the
+  all-null / exact null-count rule and the Blooms. No payload byte of
+  a pruned row group is read. Each task then reads just its planned
+  blocks and filters the decoded rows exactly in Arrow, so accepted
+  filters are fully absorbed (no residual Spark Filter node). This
+  mirrors the reference's metadata-pruned ``find``
+  (`integer_array.h:71-136`) at the Spark source boundary, extended
   with the engine's secondary zone maps and Blooms.
-- **partition-per-row-group parallelism**: each surviving (file,
-  row-group) pair is one ``InputPartition``, so decode scales out to
-  however many executors the cluster has — no driver-side decode.
+- **partition-per-row-group parallelism**: each (file, row-group)
+  pair holding a kept block is one ``InputPartition`` (carrying the
+  kept rows and the file's stats, which the task checks before it
+  reads), so decode scales out to however many executors the cluster
+  has — no driver-side decode.
 - **streaming-sink awareness**: a directory carrying ``_batches/``
   manifests reads as its COMMITTED view (uncommitted attempt files
   are invisible — the sink's exactly-once contract now holds for
   batch readers too), ``option("as_of_batch", n)`` time-travels to
   batches <= n, and ``option("latest_wins", "true")`` (+ optional
   ``option("tombstone_col", c)``) resolves max-batch-id-wins per key
-  WITHOUT a shuffle: the lead-key domain splits into ranges from
-  parquet footer stats, each range-partition reads every candidate
-  (file, row-group, batch) overlapping it, and the merge is one
+  WITHOUT a shuffle: the lead-key domain splits into ranges at the
+  kept blocks' lead-key lows, each range-partition reads every kept
+  block overlapping it, and the merge is one
   vectorized Arrow sort + group-boundary scan per partition — the
   declarative face of ``streaming/incremental.read_latest``. In
   latest-wins mode only KEY-column filters push down (the key decides
@@ -67,9 +70,11 @@ clustering — pre-sorting by key just compresses better. Callers who
 want the salted-shuffle layout repartition first (or use
 ``engine.encode_df`` directly).
 
-Scale notes (100 TB): the reader's driver-side work is footer metadata
-only (row-group stats), O(files); bulk bytes move executor-side. The
-writer is shuffle-free; one parquet file per task, job-prefixed unique
+Scale notes (100 TB): the reader plans in one process on the block
+index, O(blocks): every block's lead-key columns, plus its ``desc``
+(a few KB with Blooms and sketches) when a predicate needs it, cached
+per table version in the planning process; bulk bytes move
+executor-side. The writer is shuffle-free; one parquet file per task, job-prefixed unique
 names, so speculative/retried tasks and concurrent jobs can't collide.
 Nothing destructive happens before commit: overwrite's sweep of the
 previous table runs only after every task reports success, and
@@ -119,14 +124,10 @@ from pyspark.sql.datasource import (
 )
 
 from .. import engine
-from ..engine import _KeyPred, _stats_overlap
+from ..engine import _KeyPred, _stats_overlap  # noqa: F401 (re-exported)
 
 SIDECAR = "_oroch_table.json"
 _BATCH_DIR = "_batches"   # streaming sink's per-batch manifests
-
-# Parquet leaf columns of the block schema the reader needs besides the
-# payload; bounds columns are read first (tiny) to prune blocks.
-_META_COLS = ["n", "key_lo", "key_hi", "key_slo", "key_shi"]
 
 
 # ---------------------------------------------------------------------------
@@ -441,7 +442,7 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
             accepted.append(f)
         elif isinstance(f, (IsNull, EqualNullSafe)):
             # EqualNullSafe reaching here has value None == IS NULL;
-            # pruned against the exact per-block null counts in read()
+            # pruned against the exact per-block null counts at planning
             raw.append(("isnull", None))
             accepted.append(f)
         elif isinstance(f, IsNotNull):
@@ -455,49 +456,41 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
     return accepted, unsupported, preds
 
 
-def _pred_is_str(pred: _KeyPred) -> bool:
-    probe = (pred.values[0] if pred.values else
-             pred.lo if pred.lo is not None else pred.hi)
-    if probe is None and pred.neq:
-        probe = next(iter(pred.neq))
-    if probe is None:  # only string ops (contains/endswith/...) left
-        return any(op in ("sw", "ew", "ct", "nsw", "new", "nct")
-                   for op, _ in pred.raw)
-    return isinstance(probe, str)
-
-
 # ---------------------------------------------------------------------------
 # Reader
 # ---------------------------------------------------------------------------
 
 class _RGPartition(InputPartition):
-    """One (file, row-group) of a plain read. ``preds`` are the
-    filters pushed for THE QUERY THIS PARTITION BELONGS TO — filter
-    state rides in the partitions, never in the reader, because Spark
-    reuses one reader instance for every query on a loaded DataFrame
-    and only calls pushFilters when that query has filters: reader-
-    held predicates would silently keep filtering later unfiltered
-    queries."""
+    """One (file, row-group) of a plain read: its planned ``rows`` (the
+    blocks the block index kept) and the file's ``stats`` at planning,
+    which the read checks. ``preds`` are the filters pushed for THE
+    QUERY THIS PARTITION BELONGS TO — filter state rides in the
+    partitions, never in the reader, because Spark reuses one reader
+    instance for every query on a loaded DataFrame and only calls
+    pushFilters when that query has filters: reader-held predicates
+    would silently keep filtering later unfiltered queries."""
 
-    def __init__(self, file: str, row_group: int,
-                 preds: Optional[dict] = None):
+    def __init__(self, file: Optional[str], row_group: int,
+                 preds: Optional[dict] = None, stats: tuple = (),
+                 rows: tuple = ()):
         self.file = file
         self.row_group = row_group
         self.preds = preds or {}
+        self.stats = stats
+        self.rows = rows
 
 
 class _MergePartition(InputPartition):
-    """One lead-key range of a latest-wins read: every (file,
-    row-group, batch_id) whose bounds overlap [lo, hi) — so the
-    partition holds ALL candidate versions of its keys and can
-    resolve latest-wins locally, without a shuffle (the Python
-    DataSource API cannot express one)."""
+    """One lead-key range of a latest-wins read: every kept block whose
+    bounds overlap [lo, hi) — so the partition holds ALL candidate
+    versions of its keys and can resolve latest-wins locally, without
+    a shuffle (the Python DataSource API cannot express one)."""
 
     def __init__(self, lo, hi, items: list,
                  preds: Optional[dict] = None):
         self.lo = lo            # None = open below
         self.hi = hi            # None = open above (last range)
-        self.items = items      # [(file, row_group, batch_id)]
+        self.items = items      # [(file, stats, row_group, rows, batch)]
         self.preds = preds or {}  # per-query pushed KEY filters
 
 
@@ -630,6 +623,7 @@ class OrochReader(DataSourceReader):
         self.tombstone = options.get("tombstone_col") or None
         self.merge_parts = int(options.get("merge_partitions", 32))
         self.kinds = _reader_view_kinds(options, kinds)
+        self.kind_of = dict(kinds)
         self.schema_bytes = _arrow_schema_bytes(self.kinds)
         # committed streaming-sink view: when the directory carries
         # batch manifests, only manifest-named files are the table
@@ -649,8 +643,7 @@ class OrochReader(DataSourceReader):
         if self.latest:
             # latest-wins merge needs the key + batch id, and reads
             # the tombstone marker even though it is not output
-            by_name = dict(kinds)
-            if self.tombstone and self.tombstone not in by_name:
+            if self.tombstone and self.tombstone not in self.kind_of:
                 # the tombstone column is born when the first
                 # delete_where evolves the schema; before any delete
                 # committed, nothing is tombstoned — read as plain
@@ -674,21 +667,19 @@ class OrochReader(DataSourceReader):
                 self.tombstone = None
             need = {n for n, _ in self.kinds} | set(self.key_cols) \
                 | ({self.tombstone} if self.tombstone else set())
-            unknown = need - set(by_name)
+            unknown = need - set(self.kind_of)
             if unknown:
                 raise ValueError(f"unknown columns {sorted(unknown)}")
             self.dec_kinds = [kv for kv in kinds if kv[0] in need]
             self.dec_schema_bytes = _arrow_schema_bytes(self.dec_kinds)
-            self.key_kind = by_name[self.key_col]
         self.preds: dict[str, _KeyPred] = {}
 
     # -- pushdown ----------------------------------------------------------
     def pushFilters(self, filters: list["Filter"]) -> Iterator["Filter"]:
         # accept single-column predicates on ANY projected column with
         # a string/integer prune domain — exact enforcement decodes the
-        # column anyway; the win is the per-block desc-stats + Bloom
-        # skip (and row-group stats for the lead key / materialized
-        # secondary bounds)
+        # column anyway; the win is the block index's per-block skip
+        # (lead-key bounds, desc stats, null counts and Blooms)
         if self.latest:
             # a filter evaluated BEFORE latest-wins resolution could
             # drop the newest version of a key and resurrect a stale
@@ -697,9 +688,8 @@ class OrochReader(DataSourceReader):
             # key survives the prune, so key predicates push safely
             # (the fast path for point lookups on upsert tables).
             # Everything else stays with Spark, applied post-merge.
-            by_name = dict(self.dec_kinds)
             cols_ok = {c for c in self.key_cols
-                       if by_name.get(c) in _PRUNABLE_KINDS}
+                       if self.kind_of.get(c) in _PRUNABLE_KINDS}
             accepted, unsupported, preds = _translate(filters, cols_ok)
             self.preds = preds
             return iter(unsupported)
@@ -719,9 +709,28 @@ class OrochReader(DataSourceReader):
                 sorted(glob.glob(os.path.join(self.path, "*.parquet")))]
 
     # -- planning ----------------------------------------------------------
-    def partitions(self) -> list[InputPartition]:
-        import pyarrow.parquet as pq
+    def _plan(self, preds: dict):
+        """The files this read lists, their block index and the
+        positions of the blocks that may hold a row matching every
+        pushed predicate, each block decided by
+        ``engine._BlockIndex.admits`` — the rule every engine builder
+        prunes with. ``desc`` is loaded only for a predicate on another
+        column than the lead key, or a null test; a lead-key range
+        reads the bounds columns alone."""
+        files = self._files()
+        if not files:
+            return files, None, []
+        ix = engine._BlockIndex.load(
+            [f for f, _ in files],
+            any(c != self.key_col or p.nullish for c, p in preds.items()))
+        if ix is None:
+            raise OSError(f"the files of oroch table {self.path} kept "
+                          "changing while the read was planned; retry it")
+        return files, ix, ix.keep(lambda i: all(
+            ix.admits(i, c, p, self.kind_of[c], c == self.key_col)
+            for c, p in preds.items()))
 
+    def partitions(self) -> list[InputPartition]:
         # consume the pushed filters: they belong to the query being
         # planned NOW. Spark reuses this reader for every query on the
         # loaded DataFrame but only calls pushFilters for queries that
@@ -730,120 +739,72 @@ class OrochReader(DataSourceReader):
         preds, self.preds = self.preds, {}
         if self.latest:
             return self._merge_partitions(preds)
-        parts: list[InputPartition] = []
-        for fpath, _ in self._files():
-            md = pq.ParquetFile(fpath).metadata
-            name_to_idx = {md.schema.column(i).name: i
-                           for i in range(md.num_columns)}
-
-            def rg_bounds(rg, lo_col, hi_col):
-                ilo, ihi = name_to_idx.get(lo_col), name_to_idx.get(hi_col)
-                if ilo is None or ihi is None:
-                    return None, None
-                slo = md.row_group(rg).column(ilo).statistics
-                shi = md.row_group(rg).column(ihi).statistics
-                return (slo.min if slo is not None and slo.has_min_max
-                        else None,
-                        shi.max if shi is not None and shi.has_min_max
-                        else None)
-
-            for rg in range(md.num_row_groups):
-                keep = True
-                for col, pred in preds.items():
-                    if col == self.key_col:
-                        lo_col, hi_col = (("key_slo", "key_shi")
-                                          if _pred_is_str(pred)
-                                          else ("key_lo", "key_hi"))
-                    else:
-                        # materialized secondary bounds (engine
-                        # .with_stat_columns), when the table has them
-                        lo_col, hi_col = f"{col}__lo", f"{col}__hi"
-                    lo, hi = rg_bounds(rg, lo_col, hi_col)
-                    # row-group stats of the BOUNDS columns: the widest
-                    # interval any block in the group spans
-                    if not _stats_overlap(lo, hi, pred):
-                        keep = False
-                        break
-                if keep:
-                    parts.append(_RGPartition(fpath, rg, preds))
-        # Never return an empty plan: when the pushed predicates prune
-        # EVERY row group (e.g. a range filter beyond the table's key
-        # domain), Spark still launches one task and hands read() a
-        # None partition — read() treats a file-less partition as an
-        # empty scan.
-        return parts or [_RGPartition(None, -1, {})]
+        files, ix, keep = self._plan(preds)
+        if not keep:
+            # Never return an empty plan: when the pushed predicates
+            # prune EVERY block (e.g. a range filter beyond the table's
+            # key domain), Spark still launches one task and hands
+            # read() a None partition — read() treats a file-less
+            # partition as an empty scan.
+            return [_RGPartition(None, -1, {})]
+        return [_RGPartition(files[f][0], g, preds, ix._stats[f], rows)
+                for f, g, rows, _ in ix.placed(keep)]
 
     def _merge_partitions(self, preds: dict) -> list[InputPartition]:
         """Latest-wins planning: split the lead-key domain into ranges
-        (driver-side, parquet footer stats only) and give each range
-        every (file, row-group, batch) whose bounds overlap it. All
+        at the kept blocks' lows (driver-side, block index only) and
+        give each range every kept block whose bounds overlap it. All
         versions of a key land in exactly one partition, so the merge
-        is partition-local — merge-on-read without a shuffle. A
-        row-group without usable bounds collapses the plan to a single
-        partition (correct, not parallel)."""
-        import pyarrow.parquet as pq
-
-        lo_col, hi_col = (("key_slo", "key_shi")
-                          if self.key_kind == "str"
-                          else ("key_lo", "key_hi"))
-        kpred = preds.get(self.key_col)
-        intervals = []   # (lo, hi, file, rg, batch_id)
-        degenerate = False
-        for fpath, bid in self._files():
-            md = pq.ParquetFile(fpath).metadata
-            name_to_idx = {md.schema.column(i).name: i
-                           for i in range(md.num_columns)}
-            ilo, ihi = name_to_idx.get(lo_col), name_to_idx.get(hi_col)
-            for rg in range(md.num_row_groups):
-                lo = hi = None
-                if ilo is not None and ihi is not None:
-                    slo = md.row_group(rg).column(ilo).statistics
-                    shi = md.row_group(rg).column(ihi).statistics
-                    if slo is not None and slo.has_min_max \
-                            and shi is not None and shi.has_min_max:
-                        lo, hi = slo.min, shi.max
-                if lo is None or hi is None:
-                    degenerate = True
-                elif kpred is not None \
-                        and not _stats_overlap(lo, hi, kpred):
-                    # a pushed KEY predicate: no row in this group has
-                    # a matching key, so no version of any surviving
-                    # key lives here — skipping is merge-safe
-                    continue
-                intervals.append((lo, hi, fpath, rg, bid))
-        if not intervals:
-            # all row groups pruned (or empty table): same empty-scan
+        is partition-local — merge-on-read without a shuffle. A pushed
+        KEY predicate prunes merge-safely: a block with no matching key
+        holds no version of a surviving key. A block without bounds
+        collapses the plan to a single partition (correct, not
+        parallel)."""
+        files, ix, keep = self._plan(preds)
+        if not keep:
+            # all blocks pruned (or empty table): same empty-scan
             # sentinel as the plain planner — Spark would otherwise
             # call read(None) on an empty plan
             return [_RGPartition(None, -1, {})]
-        if degenerate or len(intervals) == 1 or self.merge_parts <= 1:
-            return [_MergePartition(None, None,
-                                    [(f, rg, b)
-                                     for _, _, f, rg, b in intervals],
-                                    preds)]
-        los = sorted(iv[0] for iv in intervals)
-        nparts = min(self.merge_parts, len(intervals))
-        cuts, seen = [], set()
-        for i in range(1, nparts):
-            c = los[len(los) * i // nparts]
-            if c not in seen:
-                seen.add(c)
-                cuts.append(c)
-        edges = [None] + sorted(cuts) + [None]
+        bounds = [ix.bounds(i, "" if self.kind_of[self.key_col] == "str"
+                            else 0) for i in keep]
+        edges = [None, None]
+        if len(keep) > 1 and self.merge_parts > 1 \
+                and not any(None in b for b in bounds):
+            los = sorted(lo for lo, _ in bounds)
+            nparts = min(self.merge_parts, len(keep))
+            edges = [None] + sorted({los[len(los) * i // nparts]
+                                     for i in range(1, nparts)}) + [None]
         parts = []
-        for j in range(len(edges) - 1):
-            rlo, rhi = edges[j], edges[j + 1]
-            items = [(f, rg, b) for lo, hi, f, rg, b in intervals
-                     if (rhi is None or lo < rhi)
-                     and (rlo is None or hi >= rlo)]
+        for rlo, rhi in zip(edges, edges[1:]):
+            items = [(files[f][0], ix._stats[f], g, rows, files[f][1])
+                     for f, g, rows, _ in ix.placed(
+                         [i for i, (lo, hi) in zip(keep, bounds)
+                          if (rhi is None or lo < rhi)
+                          and (rlo is None or hi >= rlo)])]
             if items:
                 parts.append(_MergePartition(rlo, rhi, items, preds))
         return parts
 
     # -- execution ---------------------------------------------------------
+    @staticmethod
+    def _planned(file: str, stats: tuple, row_group: int,
+                 rows: list[int]) -> Iterator:
+        """A block reader per planned row of one row group, read only
+        while ``file`` still has the ``stats`` it was planned on: a
+        file rewritten since raises, so no read decodes blocks its
+        plan did not keep."""
+        import pyarrow.parquet as pq
+
+        got = engine._stable([file], (stats,), lambda: engine._read_rows(
+            pq.ParquetFile(file), row_group, rows))
+        if got is None:
+            raise OSError(f"{file} changed since this read was planned; "
+                          "retry the read")
+        return engine._read_blocks(got)
+
     def read(self, partition) -> Iterator:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if partition is None:
             return  # Spark's stand-in task for an empty plan
@@ -851,94 +812,13 @@ class OrochReader(DataSourceReader):
             yield from self._read_merge(partition)
             return
         if partition.file is None:
-            return  # empty-scan sentinel (every row group pruned)
+            return  # empty-scan sentinel (every block pruned)
         out_schema = pa.ipc.read_schema(pa.py_buffer(self.schema_bytes))
-        pf = pq.ParquetFile(partition.file)
-        # metadata first: if every block in the group is pruned, the
-        # payload column's bytes are never read at all
-        meta = pf.read_row_group(partition.row_group,
-                                 columns=_META_COLS + ["desc"])
-        n_arr = meta.column("n").to_pylist()
-        descs = meta.column("desc").to_pylist()
-        kind_of = dict(self.kinds)
-        keep_rows: list[tuple[int, dict]] = []
-        preds = partition.preds
-        for i in range(meta.num_rows):
-            desc = None
-            keep = True
-            for col, pred in preds.items():
-                # null-count stats are worth a descriptor parse only
-                # for IS NULL, or for a PURE IS NOT NULL: an implicit
-                # IsNotNull riding beside values/bounds is redundant
-                # (a row matching them cannot be null)
-                nullish = pred.wants_null or (
-                    pred.wants_notnull and pred.values is None
-                    and pred.lo is None and pred.hi is None)
-                if col == self.key_col:
-                    # key bounds live in dedicated meta columns — the
-                    # fast path stays fast even when Spark attaches
-                    # its usual IsNotNull beside the real predicate
-                    sname = ("key_slo", "key_shi") if _pred_is_str(pred) \
-                        else ("key_lo", "key_hi")
-                    blo = meta.column(sname[0])[i].as_py()
-                    bhi = meta.column(sname[1])[i].as_py()
-                    if not _stats_overlap(blo, bhi, pred):
-                        keep = False
-                        break
-                    if not nullish:
-                        continue
-                if desc is None:
-                    desc = json.loads(descs[i])
-                d = next((c for c in desc["cols"] if c["n"] == col), None)
-                if d is None:
-                    # schema evolution: column absent => all rows null,
-                    # which fail every null-rejecting op (=, IN, range,
-                    # IS NOT NULL, !=, starts/ends/contains — all NULL
-                    # under SQL ternary logic, hence filtered)
-                    if pred.wants_notnull or pred.values or pred.neq \
-                            or pred.lo is not None \
-                            or pred.hi is not None \
-                            or any(op in ("sw", "ew", "ct")
-                                   for op, _ in pred.raw):
-                        keep = False
-                        break
-                    continue
-                if nullish:
-                    # exact per-block null count: nullable columns
-                    # store it in the descriptor; others have none
-                    nc = int(d.get("nc", 0))
-                    if pred.wants_null and nc == 0:
-                        keep = False
-                        break
-                    if pred.wants_notnull and nc >= int(n_arr[i]):
-                        keep = False
-                        break
-                if col != self.key_col:  # key bounds checked above
-                    if _pred_is_str(pred):
-                        blo, bhi = d.get("slo"), d.get("shi")
-                    else:
-                        blo, bhi = d.get("lo"), d.get("hi")
-                    if not _stats_overlap(blo, bhi, pred):
-                        keep = False
-                        break
-                if pred.values and d.get("bm") and not any(
-                        engine.bloom_might_contain(d["bm"], v,
-                                                   kind_of[col])
-                        for v in pred.values):
-                    keep = False
-                    break
-            if keep:
-                keep_rows.append((i, descs[i] if desc is None else desc))
-        if not keep_rows:
-            return
-        payloads = pf.read_row_group(partition.row_group,
-                                     columns=["payload"]) \
-            .column("payload")
-        for i, desc in keep_rows:
-            batch = engine._BlockReader(desc, payloads[i], n_arr[i]) \
-                .batch(out_schema)
-            if preds:
-                batch = self._exact_filter(batch, preds)
+        for blk in self._planned(partition.file, partition.stats,
+                                 partition.row_group, partition.rows):
+            batch = blk.batch(out_schema)
+            if partition.preds:
+                batch = self._exact_filter(batch, partition.preds)
             if batch.num_rows:
                 yield batch
 
@@ -998,49 +878,20 @@ class OrochReader(DataSourceReader):
         return batch.filter(mask) if mask is not None else batch
 
     def _read_merge(self, part: _MergePartition) -> Iterator:
-        """Latest-wins execution for one key range: decode the
-        surviving blocks of every candidate row-group, keep only this
-        range's rows, and resolve max-batch-id-wins per key with one
-        vectorized sort + group-boundary scan — no Python per row."""
+        """Latest-wins execution for one key range: decode the planned
+        blocks, keep only this range's rows, and resolve
+        max-batch-id-wins per key with one vectorized sort +
+        group-boundary scan — no Python per row."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         dec_schema = pa.ipc.read_schema(
             pa.py_buffer(self.dec_schema_bytes))
         full_schema = dec_schema.append(pa.field("__b", pa.int64()))
-        lo_name, hi_name = (("key_slo", "key_shi")
-                            if self.key_kind == "str"
-                            else ("key_lo", "key_hi"))
-        kpred = part.preds.get(self.key_col)
-        batches = []
-        for fpath, rg, bid in part.items:
-            pf = pq.ParquetFile(fpath)
-            meta = pf.read_row_group(rg, columns=_META_COLS + ["desc"])
-            ns = meta.column("n").to_pylist()
-            descs = meta.column("desc").to_pylist()
-            keep = []
-            for i in range(meta.num_rows):
-                blo = meta.column(lo_name)[i].as_py()
-                bhi = meta.column(hi_name)[i].as_py()
-                if blo is not None and bhi is not None:
-                    if part.hi is not None and not blo < part.hi:
-                        continue
-                    if part.lo is not None and not bhi >= part.lo:
-                        continue
-                    if kpred is not None \
-                            and not _stats_overlap(blo, bhi, kpred):
-                        continue
-                keep.append(i)
-            if not keep:
-                continue
-            payloads = pf.read_row_group(
-                rg, columns=["payload"]).column("payload")
-            for i in keep:
-                batches.append(engine._BlockReader(
-                    descs[i], payloads[i], ns[i]).batch(
-                    full_schema, passthrough={"__b": int(bid)}))
+        batches = [blk.batch(full_schema, passthrough={"__b": int(bid)})
+                   for file, stats, rg, rows, bid in part.items
+                   for blk in self._planned(file, stats, rg, rows)]
         if not batches:
             return
         tbl = pa.Table.from_batches(batches)
@@ -1815,10 +1666,10 @@ def register(spark, filter_pushdown: bool = True) -> None:
     result replays the stale filtered scan — silently wrong rows.
     This reader keeps all filter state per-plan (in the partitions it
     returns), so the defect is purely the engine-side cache; until it
-    is fixed upstream, either re-load per query (cheap — planning is
-    footer metadata only; the driver/oracle harness and every test
-    here do this) or pass ``filter_pushdown=False`` to keep filters
-    JVM-side."""
+    is fixed upstream, either re-load per query (cheap — planning
+    reads the block index, cached per table version; the driver/oracle
+    harness and every test here do this) or pass
+    ``filter_pushdown=False`` to keep filters JVM-side."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled",
                    "true" if filter_pushdown else "false")
     spark.dataSource.register(OrochDataSource)

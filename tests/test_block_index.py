@@ -411,14 +411,16 @@ def test_repeated_ids_never_count_a_block_twice(spark, tmp_path,
 
 
 def test_extra_stored_columns_keep_the_cached_index(spark, tmp_path, jobs):
-    """A bare scan of a table persisted with :func:`with_stat_columns`
-    carries extra columns; it still reads the cached index, so
-    metadata-only answers run no job."""
+    """A bare scan of a table persisted with extra stored columns
+    still reads the cached index, so metadata-only answers run no
+    job."""
     kinds = _kinds(spark)
     path = str(tmp_path / "stat_cols")
-    engine.with_stat_columns(engine.encode_df(
+    st = engine._col_stats("v")
+    engine.encode_df(
         spark.createDataFrame(_source()), ["k"], n_buckets=1,
-        block_rows=100), ["v"]).write.parquet(path)
+        block_rows=100).withColumn("v__lo", st["lo"]) \
+        .withColumn("v__hi", st["hi"]).write.parquet(path)
     scan = spark.read.parquet(path)
     assert "v__lo" in scan.columns
     assert engine._scan_files(scan) is not None

@@ -4,12 +4,23 @@ import argparse
 import glob
 import json
 import os
+import shutil
 import zipfile
 
 import pytest
 
 import cli
 from oroch_spark import engine, transcripts
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _zip(tmp_path) -> str:
+    """``cli.make_zip`` of this checkout's package, built under
+    ``tmp_path`` so no test writes into the checkout's ``dist/``."""
+    root = tmp_path / "zip_root"
+    shutil.copytree(os.path.join(ROOT, "oroch_spark"), root / "oroch_spark")
+    return cli.make_zip(str(root))
 
 
 @pytest.fixture(scope="module")
@@ -27,7 +38,7 @@ def _ns(spark=None, **kw):
 
 
 def test_zip_contains_package(tmp_path):
-    out = cli.make_zip("/root/repo")
+    out = _zip(tmp_path)
     names = zipfile.ZipFile(out).namelist()
     assert "oroch_spark/engine.py" in names
     assert "oroch_spark/kernels/integers.py" in names
@@ -258,16 +269,15 @@ def test_real_spark_submit_pyfiles(tmp_path, src_dir):
     FRESH JVM/driver process with the package shipped only via the
     zip, the way a real cluster submit works (no pytest Spark session,
     no repo on the executors' sys.path beyond --py-files)."""
-    import shutil
     import subprocess
 
-    zip_path = cli.make_zip("/root/repo")
+    zip_path = _zip(tmp_path)
     out = str(tmp_path / "enc")
     base = [shutil.which("spark-submit") or "spark-submit",
             "--master", "local[4]",
             "--conf", "spark.sql.shuffle.partitions=8",
             "--conf", "spark.ui.enabled=false",
-            "--py-files", zip_path, "/root/repo/cli.py"]
+            "--py-files", zip_path, os.path.join(ROOT, "cli.py")]
     env = {k: v for k, v in os.environ.items()
            if k not in ("PYTHONPATH",)}  # the zip must be enough
     r = subprocess.run(

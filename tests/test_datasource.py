@@ -5,6 +5,7 @@ import datetime
 import glob
 import json
 import os
+import re
 from decimal import Decimal
 
 import pytest
@@ -856,3 +857,90 @@ def test_all_pruned_scan_returns_empty(dsspark, events_table):
                        & (F.col("event_type") == "click")).count() == 0
     # and the reader is not poisoned for the next, unfiltered query
     assert dsspark.read.format("oroch").load(path).count() == src.count()
+
+
+# ---------------------------------------------------------------------------
+# planning on the block index: legacy descriptors, stale plans
+# ---------------------------------------------------------------------------
+
+def _nullable_table(dsspark, path, rows=4000):
+    """``k`` plus a nullable ``v`` (every 7th row null), one file of
+    512-row blocks; returns the source frame."""
+    src = dsspark.range(rows).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id"))
+        .alias("v"))
+    src.coalesce(1).write.format("oroch").mode("overwrite") \
+        .option("key_cols", "k").option("block_rows", "512").save(path)
+    return src
+
+
+def test_null_tests_on_legacy_descriptors(dsspark, tmp_path):
+    """Blocks whose nullable column carries ``z`` but no ``nc`` (the
+    layout before exact null counts, which ``engine.null_count`` reads
+    as unknown) are never pruned by a null test: IS NULL, IS NOT NULL
+    and IS NULL under a key range count what the source counts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "legacy_nc")
+    src = _nullable_table(dsspark, path)
+    for f in glob.glob(os.path.join(path, "*.parquet")):
+        t = pq.read_table(f)
+        descs = [json.dumps({"cols": [
+            {k: v for k, v in c.items() if k != "nc"}
+            for c in json.loads(d)["cols"]]}) for d in t["desc"].to_pylist()]
+        assert descs != t["desc"].to_pylist()
+        pq.write_table(t.set_column(t.schema.get_field_index("desc"),
+                                    "desc", pa.array(descs)), f)
+    back = dsspark.read.format("oroch").load(path)
+    for cond in (F.col("v").isNull(), F.col("v").isNotNull(),
+                 F.col("v").isNull() & (F.col("k") < 1000)):
+        assert back.filter(cond).count() == src.filter(cond).count() > 0
+
+
+def test_read_of_a_file_rewritten_since_planning_raises(dsspark, tmp_path):
+    """A partition names rows of a row group by position; when its file
+    is rewritten between planning and the read, the read raises an
+    error naming the file instead of decoding other blocks."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "stale")
+    _nullable_table(dsspark, path)
+    doc = ds.read_sidecar(path)
+    rdr = ds.OrochReader({"path": path}, doc["kinds"], doc["key_cols"])
+    list(rdr.pushFilters([ds.GreaterThanOrEqual(("k",), 3000)]))
+    part = rdr.partitions()[0]
+    t = pq.read_table(part.file)
+    pq.write_table(t.slice(0, t.num_rows - 1), part.file)
+    with pytest.raises(OSError, match=re.escape(part.file)):
+        list(rdr.read(part))
+
+
+def test_planning_over_files_that_keep_changing_raises(dsspark, tmp_path,
+                                                       monkeypatch):
+    """Each index read rewrites the table's file, so no read of it is
+    stable: planning raises an error naming the table, and no index of
+    the file is cached."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "churn")
+    _nullable_table(dsspark, path)
+    f = glob.glob(os.path.join(path, "*.parquet"))[0]
+    t = pq.read_table(f)
+    stock, reads = engine._read_index, []
+
+    def read_then_rewrite(files, cols=engine._INDEX_COLS):
+        out = stock(files, cols)
+        reads.append(f)
+        pq.write_table(t.slice(0, t.num_rows - len(reads) % 2), f)
+        return out
+
+    monkeypatch.setattr(engine, "_read_index", read_then_rewrite)
+    doc = ds.read_sidecar(path)
+    rdr = ds.OrochReader({"path": path}, doc["kinds"], doc["key_cols"])
+    list(rdr.pushFilters([ds.IsNull(("v",))]))
+    with pytest.raises(OSError, match=re.escape(path)):
+        rdr.partitions()
+    assert len(reads) == 2
+    assert not any(f in [st[0] for st in key] for key in engine._indexes)

@@ -22,12 +22,22 @@ files with pyarrow and whose kept blocks are decoded on the driver;
 and on that scan with ``spark.sql.files.maxPartitionBytes`` below its
 row groups, so Spark reads the kept blocks.
 
+``format("oroch")`` gets the same treatment on a table written through
+``write.format("oroch")``: random pushed filters and conjunctions,
+counted through Spark and through the reader's own plan, against
+pandas — on the table and on a copy with its descriptor stats and null
+counts stripped.
+
 Default is 3 iterations (~1 min with the shared session);
 OROCH_FUZZ_ENGINE_ITERS / OROCH_FUZZ_ENGINE_SEED crank it — deep sweeps
 totalling 176 iterations across nine seeds have run clean.
 """
+import datetime
+import glob
+import json
 import os
 import random
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -277,3 +287,186 @@ def test_null_count_matches_exact(fixture):
         assert stats["ni"].n_nulls == int(pdi["ni"].isna().sum())
         assert (stats["s"].min_str, stats["s"].max_str) \
             == (pdi["s"].min(), pdi["s"].max())
+
+
+# ---------------------------------------------------------------------------
+# format("oroch"): pushed filters against brute force
+# ---------------------------------------------------------------------------
+
+DS_QUERIES = 8 * ITERS
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+# the Python value of each column's domain value, as Spark pushes it
+_DS_LIT = {"d": lambda v: datetime.date(1970, 1, 1)
+           + datetime.timedelta(days=int(v)),
+           "ts": lambda v: _EPOCH + datetime.timedelta(microseconds=int(v)),
+           "s": str}
+_DS_OPS = {"ts": ["range", "isnull", "notnull"],
+           "s": ["eq", "in", "range", "sw", "isnull", "notnull", "neq",
+                 "notin"]}
+_DS_INT_OPS = ["eq", "in", "range", "isnull", "notnull", "neq", "notin"]
+
+
+def _strip_desc(path, fields):
+    """Rewrite every block file under ``path`` with ``fields`` removed
+    from each column of its descriptors."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for f in glob.glob(os.path.join(path, "*.parquet")):
+        t = pq.read_table(f)
+        descs = [json.dumps({"cols": [
+            {k: v for k, v in c.items() if k not in fields}
+            for c in json.loads(d)["cols"]]})
+            for d in t["desc"].to_pylist()]
+        pq.write_table(t.set_column(t.schema.get_field_index("desc"),
+                                    "desc", pa.array(descs)), f)
+
+
+@pytest.fixture(scope="module")
+def oroch_fixture(spark, tmp_path_factory):
+    """A table written through ``write.format("oroch")`` in two commits:
+    Blooms on ``s`` and ``u``, a nullable ``ni`` with an all-null key
+    stretch, and a column ``e`` that only the second, appended commit
+    has (the first one's blocks predate it). Yields its path, its copy
+    with every descriptor's stats and null counts stripped (the
+    legacy layout), the first commit's files and the source rows in
+    the int domain (ts in microseconds, d in days)."""
+    import pyarrow as pa
+    from oroch_spark.sources import datasource as ds
+
+    ds.register(spark)
+    rng = np.random.default_rng(SEED + 2)
+    n = 3000
+    k = np.sort(rng.integers(0, 2000, size=n)).astype(np.int64)
+    nulls = ((600 <= k) & (k < 800)) | (rng.random(n) < 0.15)
+    late = k >= 1400
+    pdi = pd.DataFrame({
+        "k": k,
+        "u": (k * 3 + rng.integers(-300, 300, size=n)).astype(np.int64),
+        "ts": (1_700_000_000_000_000 + k * 3_600_000_000
+               + rng.integers(0, 10**9, size=n)).astype(np.int64),
+        "d": (19000 + k // 20).astype(np.int64),
+        "s": [f"cat{int(x):03d}" for x in rng.integers(0, 40, size=n)],
+        "ni": pd.array([None if z else int(x) for z, x in
+                        zip(nulls, rng.integers(0, 500, size=n))],
+                       dtype="Int64"),
+        "e": pd.array([int(x) if z else None for z, x in
+                       zip(late, rng.integers(0, 100, size=n))],
+                      dtype="Int64"),
+    })
+
+    def frame(part, cols):
+        t = pa.table({c: pa.array(part[c], pa.string() if c == "s"
+                                  else pa.int64()) for c in cols})
+        return (spark.createDataFrame(t)
+                .withColumn("ts", F.timestamp_micros("ts"))
+                .withColumn("d", F.date_from_unix_date(
+                    F.col("d").cast("int"))))
+
+    path = str(tmp_path_factory.mktemp("fuzz_ds") / "t")
+    for part, cols, mode in ((pdi[~late], list(pdi.columns[:-1]),
+                              "overwrite"),
+                             (pdi[late], list(pdi.columns), "append")):
+        (frame(part, cols).repartitionByRange(2, "k")
+         .sortWithinPartitions("k").write.format("oroch").mode(mode)
+         .option("key_cols", "k").option("block_rows", "128")
+         .option("bloom_cols", "s,u").save(path))
+        if mode == "overwrite":
+            first = set(ds.read_sidecar(path)["files"])
+    legacy = path + "_legacy"
+    shutil.copytree(path, legacy)
+    _strip_desc(legacy, ("lo", "hi", "s", "slo", "shi", "nc"))
+    yield path, legacy, first, pdi
+
+
+def _ds_pred(rnd, pdi, col):
+    """A random predicate on ``col``: (Spark Column, the filters Spark
+    pushes for it, SQL-semantics mask over ``pdi``)."""
+    from oroch_spark.sources import datasource as ds
+
+    x, c, a = pdi[col], F.col(col), (col,)
+    lit = _DS_LIT.get(col, int)
+    seen = sorted(set(x.dropna()))
+    far = "zzz" if col == "s" else int(seen[-1]) + 1000
+
+    def pick():
+        return rnd.choice(seen) if rnd.random() < 0.85 else far
+
+    def mask(m):
+        return m.fillna(False).to_numpy(dtype=bool) \
+            if hasattr(m, "fillna") else np.asarray(m, dtype=bool)
+
+    valid = mask(x.notna())
+    op = rnd.choice(_DS_OPS.get(col, _DS_INT_OPS))
+    if op == "eq":
+        v = pick()
+        return c == F.lit(lit(v)), [ds.EqualTo(a, lit(v))], \
+            valid & mask(x == v)
+    if op in ("in", "notin"):
+        vs = [pick() for _ in range(rnd.randint(1, 4))]
+        hit = mask(x.isin(vs))
+        if op == "in":
+            return c.isin([lit(v) for v in vs]), \
+                [ds.In(a, tuple(lit(v) for v in vs))], hit
+        return ~c.isin([lit(v) for v in vs]), \
+            [ds.Not(ds.In(a, tuple(lit(v) for v in vs)))], valid & ~hit
+    if op == "neq":
+        v = pick()
+        return c != F.lit(lit(v)), [ds.Not(ds.EqualTo(a, lit(v)))], \
+            valid & mask(x != v)
+    if op == "isnull":
+        return c.isNull(), [ds.IsNull(a)], ~valid
+    if op == "notnull":
+        return c.isNotNull(), [ds.IsNotNull(a)], valid
+    if op == "sw":
+        v = pick()
+        p = v[:rnd.randint(1, len(v))]
+        return c.startswith(p), [ds.StringStartsWith(a, p)], \
+            valid & mask(x.str.startswith(p))
+    lo, hi = sorted([pick(), pick()])
+    parts = [(c >= F.lit(lit(lo)), ds.GreaterThanOrEqual(a, lit(lo)),
+              valid & mask(x >= lo)),
+             (c < F.lit(lit(hi)), ds.LessThan(a, lit(hi)),
+              valid & mask(x < hi))]
+    parts = rnd.sample(parts, rnd.randint(1, 2))
+    col_ = parts[0][0] if len(parts) == 1 else parts[0][0] & parts[1][0]
+    return col_, [p[1] for p in parts], \
+        np.logical_and.reduce([p[2] for p in parts])
+
+
+def test_oroch_source_filters_match_brute_force(spark, oroch_fixture):
+    """Random pushed filters and their conjunctions over int64, ts,
+    date, string and nullable columns count what pandas counts, read
+    through Spark and planned and read through the reader itself, on
+    the table and on its copy without stats or null counts. A
+    null-rejecting filter on ``e`` plans no block of the first commit,
+    which predates ``e``."""
+    from oroch_spark.sources import datasource as ds
+
+    path, legacy, first, pdi = oroch_fixture
+    rnd = random.Random(SEED + 3)
+    for table in (path, legacy):
+        doc = ds.read_sidecar(table)
+        for _ in range(DS_QUERIES):
+            preds = [_ds_pred(rnd, pdi, rnd.choice(
+                ["k", "u", "ts", "d", "s", "ni", "e"]))
+                for _ in range(rnd.randint(1, 3))]
+            cond = preds[0][0]
+            for p in preds[1:]:
+                cond = cond & p[0]
+            want = int(np.logical_and.reduce([p[2] for p in preds]).sum())
+            what = (table, [f for p in preds for f in p[1]])
+            assert spark.read.format("oroch").load(table).filter(cond) \
+                .count() == want, what
+            rdr = ds.OrochReader({"path": table}, doc["kinds"],
+                                 doc["key_cols"])
+            if list(rdr.pushFilters(what[1])):
+                continue  # a ts bound: Spark filters it
+            parts = rdr.partitions()
+            assert sum(b.num_rows for p in parts for b in rdr.read(p)) \
+                == want, what
+            if any((f.child if isinstance(f, ds.Not) else f).attribute
+                   == ("e",) and not isinstance(f, ds.IsNull)
+                   for f in what[1]):
+                assert not {os.path.basename(p.file) for p in parts
+                            if p.file} & first, what

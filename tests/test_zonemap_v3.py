@@ -235,15 +235,16 @@ def test_scan_where_secondary_zone_map(spark):
 
 
 def test_scan_where_materialized_stats_pushdown(spark, tmp_path):
-    """with_stat_columns persists (lo, hi) as real columns; the stored
-    table is still a bare scan, so the block index prunes it and the
-    kept blocks' ids are a parquet PushedFilter; the results still
-    match the source."""
+    """(lo, hi) persisted as extra stored columns; the stored table is
+    still a bare scan, so the block index prunes it and the kept
+    blocks' ids are a parquet PushedFilter; the results still match
+    the source."""
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     kinds = engine.column_kinds(src.schema)
-    blocks = engine.with_stat_columns(
-        engine.encode_df(src, ["ts"], n_buckets=1, block_rows=128),
-        ["event_id"])
+    st = engine._col_stats("event_id")
+    blocks = engine.encode_df(src, ["ts"], n_buckets=1, block_rows=128) \
+        .withColumn("event_id__lo", st["lo"]) \
+        .withColumn("event_id__hi", st["hi"])
     bp = str(tmp_path / "blocks")
     blocks.write.parquet(bp)
     stored = spark.read.parquet(bp)

@@ -263,6 +263,25 @@ def main() -> None:
             spark.read.parquet(bdir),
             engine.column_kinds(events.schema), "props", '{"k": 42}'))))
 
+    from oroch_spark.sources import datasource
+    datasource.register(spark)
+    odir = os.path.join(tempfile.gettempdir(), "oroch_plans_source")
+    events.repartitionByRange(4, "event_id") \
+        .sortWithinPartitions("event_id").write.format("oroch") \
+        .mode("overwrite").option("key_cols", "event_id") \
+        .option("bloom_cols", "user_id").save(odir)
+    sections.append((
+        "format(\"oroch\") filtered read (planned on the block index)",
+        "The key range, the Bloom column's equality and the null test "
+        "are accepted: planning keeps the blocks the block index "
+        "admits (lead-key bounds, desc stats, null counts, Blooms), "
+        "one partition per row group of kept blocks, and each task "
+        "filters its decoded rows exactly in Arrow, so the BatchScan "
+        "has no residual Filter above it for them.",
+        plan_of(spark.read.format("oroch").load(odir).filter(
+            "event_id >= 100 AND event_id < 2000 AND user_id = 7 "
+            "AND props IS NOT NULL"))))
+
     sections.append((
         "pq_adc_scores (ANN scoring over 8-byte PQ codes)",
         "One narrow ArrowEvalPython stage over the code column only — "
