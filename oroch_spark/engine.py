@@ -1283,6 +1283,8 @@ class _BlockReader:
         d = self._cols.get(name)
         if d is None:
             return None
+        if d["k"] == K_BIN or d["k"].startswith("arr("):
+            raise ValueError(f"{d['k']} column {name!r} is not comparable")
         if d["k"] in (K_STR, K_F64, K_F32):
             return self.column(name, pa.binary() if d["k"] == K_STR
                                else pa.float64())
@@ -1293,20 +1295,91 @@ class _BlockReader:
                                         width=_INT_WIDTHS.get(d["k"], 8)),
                         mask=None if valid is None else ~valid)
 
+    def select(self, preds: list[tuple]) -> np.ndarray:
+        """Positions of the rows that pass the row tests
+        (:attr:`_KeyPred.raw`) of every ``(col, _KeyPred)`` of
+        ``preds``: the one row evaluator. Each column is read once
+        (:meth:`codes`), none once no row is left; an IN on a
+        non-nullable string column matches the dictionary
+        (`strings.str_block_eq_indices`); a column the block predates
+        is all NULL."""
+        keep = np.ones(self.n, dtype=bool)
+        for col, pred in preds:
+            if not keep.any():
+                break
+            tests = list(pred.raw)
+            kb = self.str_blob(col) if any(op == "in" for op, _ in tests) \
+                else None
+            if kb is not None:
+                for vs in (v for op, v in tests if op == "in"):
+                    hit = sc.str_block_eq_indices(kb, self.n, list(vs))
+                    keep &= np.bincount(hit, minlength=self.n) > 0
+                tests = [(op, v) for op, v in tests if op != "in"]
+            if not tests:
+                continue
+            vals = self.codes(col)
+            if vals is None:  # the block predates col: every row is NULL
+                if pred.rejects_null:
+                    keep[:] = False
+                continue
+            for op, v in tests:
+                keep &= _row_test(vals, op, v)
+        return np.flatnonzero(keep)
+
     def batch(self, schema: "pa.Schema",
               idxs: Optional[np.ndarray] = None,
               passthrough: Optional[dict] = None) -> "pa.RecordBatch":
-        """The block's rows (or rows ``idxs``) as ``schema``; fields
-        named in ``passthrough`` are BLOCK-level values replicated onto
-        every row instead of decoded columns."""
+        """The block's rows (or the rows at the ascending positions
+        ``idxs``, a plain decode when that is every row) as ``schema``;
+        fields named in ``passthrough`` are BLOCK-level values
+        replicated onto every row instead of decoded columns."""
         import pyarrow as pa
 
+        if idxs is not None and len(idxs) == self.n:
+            idxs = None
         m = self.n if idxs is None else len(idxs)
         cols = [pa.repeat(passthrough[f.name], m).cast(f.type)
                 if passthrough and f.name in passthrough
                 else self.column(f.name, f.type, idxs)
                 for f in schema]
         return pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
+def _row_test(vals: "pa.Array", op: str, v) -> np.ndarray:
+    """Row mask of one row test ``(op, v)`` of a :attr:`_KeyPred.raw`
+    on a column read by :meth:`_BlockReader.codes`, ``v`` in that
+    column's domain (a string compared by its UTF-8 bytes). A null row
+    passes only IS NULL and NOT(col <=> v): every other test is NULL
+    on it under SQL's ternary logic, which rejects the row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    pos = {"neq": "in", "nsw": "sw", "new": "ew", "nct": "ct"}.get(op, op)
+    if op == "isnull":
+        m = vals.is_null()
+    elif op == "notnull":
+        m = vals.is_valid()
+    elif op == "nseq":  # NOT(col <=> v) for a non-null v
+        m = pc.invert(pc.fill_null(
+            pc.equal(vals, pa.scalar(v[0], vals.type)), False))
+    elif pos == "in":
+        m = pc.is_in(vals, value_set=pa.array(list(v), vals.type))
+    elif pos == "tok":  # grep -w: v is one [0-9A-Za-z_]+ word
+        m = pc.match_substring_regex(
+            vals, pattern=f"(^|{_TOKEN_SPLIT_RE}){v}({_TOKEN_SPLIT_RE}|$)")
+    elif pos in ("sw", "ew", "ct"):
+        m = {"sw": pc.starts_with, "ew": pc.ends_with,
+             "ct": pc.match_substring}[pos](vals, pattern=v)
+    else:
+        m = {"<": pc.less, "<=": pc.less_equal, ">": pc.greater,
+             ">=": pc.greater_equal}[op](
+            vals, pa.scalar(v) if isinstance(v, float)
+            else pa.scalar(v, vals.type))
+    if pos != op:  # NOT IN and the NOT string tests
+        m = pc.invert(m)
+    if op not in ("isnull", "nseq"):
+        m = pc.and_kleene(m, vals.is_valid())
+    return m.to_numpy(zero_copy_only=False)
 
 
 def _read_blocks(batch) -> Iterator[_BlockReader]:
@@ -1318,7 +1391,7 @@ def _read_blocks(batch) -> Iterator[_BlockReader]:
         yield _BlockReader(descs[i], payloads[i], ns[i])
 
 
-def make_decode_fn(kinds: list[tuple[str, str]], arrow_schema_bytes: bytes,
+def make_decode_fn(arrow_schema_bytes: bytes,
                    passthrough: tuple[str, ...] = ()):
     """mapInArrow kernel: each encoded block row expands to its rows.
     No shuffle — blocks decode independently (SURVEY.md §3.2). The
@@ -1804,7 +1877,7 @@ def _decoder(schema_kinds: list[tuple[str, str]],
         [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds]
         + [T.StructField(p, t) for p, t in passthrough.items()])
     return out_schema, make_decode_fn(
-        schema_kinds, to_arrow_schema(out_schema).serialize().to_pybytes(),
+        to_arrow_schema(out_schema).serialize().to_pybytes(),
         passthrough=tuple(passthrough))
 
 
@@ -1870,34 +1943,6 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _key_lit(schema_kinds: list[tuple[str, str]], key_col: str, v) -> str:
-    """Row-level literal (SQL) for a key bound: the prune domain is
-    int64 (epoch-micros for ts, days for date), but the decoded column
-    keeps its logical type — convert the bound to match so the exact
-    filter resolves."""
-    kind = dict(schema_kinds)[key_col]
-    if isinstance(v, str):
-        return _sql_lit(v)
-    if kind == K_TS:
-        return f"timestamp_micros({_sql_lit(int(v))})"
-    if kind == K_DATE:
-        return f"date_from_unix_date(CAST({_sql_lit(int(v))} AS INT))"
-    if kind == K_BOOL:
-        return _sql_lit(bool(v))
-    if kind.startswith("dec("):
-        p, s = kind[4:-1].split(",")
-        # bounds arrive in the prune/stats domain = UNSCALED ints
-        return (f"CAST({_sql_lit(_dec.Decimal(int(v)).scaleb(-int(s)))} "
-                f"AS DECIMAL({int(p)},{int(s)}))")
-    return _sql_lit(int(v))
-
-
-def _between(schema_kinds: list[tuple[str, str]], col: str, lo, hi) -> str:
-    """Exact row filter (SQL) ``lo <= col <= hi`` on a decoded column."""
-    return (f"{_q(col)} >= {_key_lit(schema_kinds, col, lo)} "
-            f"AND {_q(col)} <= {_key_lit(schema_kinds, col, hi)}")
-
-
 _AGG_BAD_KINDS = (K_STR, K_F64, K_F32, K_BIN)
 
 
@@ -1913,15 +1958,16 @@ def _check_agg_kind(op: str, kind: str) -> None:
 
 @dataclass
 class _KeyPred:
-    """Predicates on one column, normalized to a bounds envelope plus
-    an optional exact IN set (both in the prune domain): the filters
-    ``format("oroch")`` accepts, or a builder's range or probe values.
-    ``values`` doubles as the equality set."""
+    """Predicates on one column: the filters ``format("oroch")``
+    accepts, or a builder's range, probe values or row test. The block
+    rules read a bounds envelope and an exact IN set (``values``, also
+    the equality set) in the prune domain; :meth:`_BlockReader.select`
+    reads the ``raw`` row tests."""
     lo: Optional[object] = None
     hi: Optional[object] = None
     values: Optional[list] = None  # exact set (EqualTo / In)
     neq: Optional[set] = None      # excluded set (Not(EqualTo/In))
-    raw: tuple = ()                # original literals for row filtering
+    raw: tuple = ()                # (op, literal) row tests, ANDed
 
     @property
     def wants_null(self) -> bool:
@@ -2427,15 +2473,15 @@ class _BlockIndex:
         return None if ix is None else ix.local(blocks, range(len(ix)))
 
     def split(self, blocks: DataFrame, keep: list[int], inside, interior,
-              schema_kinds: list[tuple[str, str]], preds: list[tuple],
-              agg_col: Optional[str] = None) -> list[tuple]:
+              tests: list[tuple], agg_col: Optional[str] = None) -> list:
         """Partials ``(_c, _s, _lo, _hi)`` of the blocks at positions
         ``keep``: those ``inside(i)`` accepts from ``interior(i)`` on the
-        driver, the boundary rest from :func:`make_partials_fn` — on
-        the driver when :meth:`local` reads them, else in one job over
-        just those blocks (no shuffle). With repeated ids every kept
-        block is boundary, so no block is counted twice; a pruned block
-        that rides along with a kept id matches no row."""
+        driver, the boundary rest from :func:`make_partials_fn` under
+        the row ``tests`` — on the driver when :meth:`local` reads them,
+        else in one job over just those blocks (no shuffle). With
+        repeated ids every kept block is boundary, so no block is
+        counted twice; a pruned block that rides along with a kept id
+        matches no row."""
         parts, boundary = [], []
         for i in keep:
             if not self.repeated and inside(i):
@@ -2443,9 +2489,7 @@ class _BlockIndex:
             else:
                 boundary.append(i)
         if boundary:
-            kinds = dict(schema_kinds)
-            fn = make_partials_fn([(c, *_pred_domain(kinds[c], lo, hi))
-                                   for c, lo, hi in preds], agg_col)
+            fn = make_partials_fn(tests, agg_col)
             got = self.local(blocks, boundary)
             if got is None:
                 parts += self.narrow(blocks, boundary) \
@@ -2459,12 +2503,21 @@ class _BlockIndex:
 
 
 def _range_tests(preds: list[tuple]) -> list[tuple]:
-    """``(col, lo, hi)`` range predicates as the ``(col, _KeyPred)``
-    tests :meth:`_BlockIndex.where` takes: string bounds test the
-    lexicographic stats, any other the int64 ones."""
-    return [(c, _KeyPred(lo=lo, hi=hi)) if isinstance(lo, str)
-            else (c, _KeyPred(lo=int(lo), hi=int(hi)))
-            for c, lo, hi in preds]
+    """``(col, lo, hi)`` range predicates as ``(col, _KeyPred)`` tests:
+    the bounds :meth:`_BlockIndex.where` prunes by and the ``>=``/``<=``
+    row tests :meth:`_BlockReader.select` keeps rows by. A string
+    bound stays a string (the lexicographic stats), a float a float (a
+    NaN raises), any other becomes an int64."""
+    tests = []
+    for c, *bounds in preds:
+        lo, hi = (v if isinstance(v, str) else float(v)
+                  if isinstance(v, (float, np.floating)) else int(v)
+                  for v in bounds)
+        if lo != lo or hi != hi:
+            raise ValueError(f"a range bound on {c!r} is NaN")
+        tests.append((c, _KeyPred(lo=lo, hi=hi,
+                                  raw=((">=", lo), ("<=", hi)))))
+    return tests
 
 
 def _longs(*names: str) -> T.StructType:
@@ -2494,6 +2547,11 @@ def _arrow_df(spark, schema: T.StructType, batches) -> DataFrame:
 
     return spark.createDataFrame(pa.Table.from_batches(
         list(batches), to_arrow_schema(schema)), schema)
+
+
+def _batch_rows(spark) -> int:
+    """``spark.sql.execution.arrow.maxRecordsPerBatch``: one batch."""
+    return spark._jsparkSession.sessionState().conf().arrowMaxRecordsPerBatch()
 
 
 def _fold_partials(spark, parts: list[tuple], aggs: bool,
@@ -2546,75 +2604,6 @@ def prune_blocks_in(blocks: DataFrame, values) -> DataFrame:
                                       lead=True))
 
 
-def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-               key_col: str, lo, hi,
-               columns: Optional[list[str]] = None) -> DataFrame:
-    """Key-range scan against the blocks table: zone-map prune to
-    overlapping blocks, decode (optionally a projection — the key
-    column is added to the decode set and trimmed from the output if
-    not requested), filter to the exact range. At scale this reads
-    only the row groups whose key ranges overlap — the blocks-table
-    analogue of partition pruning + parquet predicate pushdown."""
-    return _decode_where(prune_blocks_range(blocks, lo, hi), schema_kinds,
-                         [key_col], _between(schema_kinds, key_col, lo, hi),
-                         columns)
-
-
-def _decode_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-                  pred_cols: list[str], row_filter: str,
-                  columns: Optional[list[str]]) -> DataFrame:
-    """Decode ``blocks`` (the predicate columns plus the ``columns``
-    projection, or every column), keep the rows ``row_filter`` (SQL)
-    accepts, and trim the predicate-only columns."""
-    decode_cols = columns
-    if columns is not None and not set(pred_cols) <= set(columns):
-        decode_cols = list(dict.fromkeys(pred_cols + list(columns)))
-    dec = decode_df(blocks, schema_kinds,
-                    columns=decode_cols).filter(row_filter)
-    if decode_cols is not columns:
-        dec = dec.select(*columns)
-    return dec
-
-
-def _pred_domain(kind: str, lo, hi):
-    """``[lo, hi]`` in the comparison domain :meth:`_BlockReader.codes`
-    reads ``kind`` in, matching how :func:`_between` compares the
-    decoded column: strings as UTF-8 bytes, bools and f32 through the
-    column's own type. ``lo`` None (the IS NULL predicate) passes."""
-    if lo is None:
-        return None, None
-    if kind == K_STR:
-        return str(lo).encode("utf-8"), str(hi).encode("utf-8")
-    if kind in (K_F64, K_F32):
-        cast = np.float32 if kind == K_F32 else float
-        return float(cast(lo)), float(cast(hi))
-    if kind == K_BIN or kind.startswith("arr("):
-        raise ValueError(f"range predicates compare integer-domain, float "
-                         f"or string columns, not kind {kind!r}")
-    if kind == K_BOOL:
-        return int(bool(lo)), int(bool(hi))
-    return int(lo), int(hi)
-
-
-def _rows_matching(blk: _BlockReader, preds) -> np.ndarray:
-    """Row mask of ``blk`` under an AND of ``(col, lo, hi)`` predicates
-    in the comparison domain: ``lo <= col <= hi`` (a NULL never
-    matches), or ``col IS NULL`` when ``lo`` is None."""
-    import pyarrow.compute as pc
-
-    mask = np.ones(blk.n, dtype=bool)
-    for col, lo, hi in preds:
-        vals = blk.codes(col)
-        if vals is None:  # the block predates col: every row is NULL
-            if lo is not None:
-                return np.zeros(blk.n, dtype=bool)
-            continue
-        m = vals.is_null() if lo is None else pc.and_(
-            pc.greater_equal(vals, lo), pc.less_equal(vals, hi))
-        mask &= pc.fill_null(m, False).to_numpy(zero_copy_only=False)
-    return mask
-
-
 def _int64_parts(s: int) -> list[int]:
     """``s`` as int64 addends: one when it fits, else enough that
     Spark's sum over them overflows exactly as it would have over the
@@ -2630,15 +2619,15 @@ def _int64_parts(s: int) -> list[int]:
 _PARTIALS = ("_c", "_s", "_lo", "_hi")
 
 
-def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
+def make_partials_fn(tests: list[tuple], agg_col: Optional[str]):
     """mapInArrow kernel: one partial row ``(_c, _s, _lo, _hi)`` per
-    block. Each block decodes only the predicate columns and
-    ``agg_col``, keeps the rows the ``(col, lo, hi)`` predicates accept
-    (:func:`_rows_matching`), and reduces them itself: the row count,
-    and the exact sum, min and max of the non-null ``agg_col`` values
-    in the int64 codec domain. Only partials cross back to the JVM,
-    never rows. A sum past int64 spills into extra ``(0, part, NULL,
-    NULL)`` rows (:func:`_int64_parts`)."""
+    block. Each block keeps the rows the ``(col, _KeyPred)`` tests
+    accept (:meth:`_BlockReader.select`, which decodes only their
+    columns), reads ``agg_col`` when a row is kept, and reduces the
+    kept rows itself: the row count, and the exact sum, min and max
+    of the non-null ``agg_col`` values in the int64 codec domain. Only
+    partials cross back to the JVM, never rows. A sum past int64 spills
+    into extra ``(0, part, NULL, NULL)`` rows (:func:`_int64_parts`)."""
 
     def block_partials(batches) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -2646,11 +2635,12 @@ def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
         for batch in batches:
             out = {c: [] for c in _PARTIALS}
             for blk in _read_blocks(batch):
-                mask = _rows_matching(blk, preds)
-                c, s, lo, hi = int(mask.sum()), None, None, None
-                vals = None if agg_col is None else blk.codes(agg_col)
+                idxs = blk.select(tests)
+                c, s, lo, hi = len(idxs), None, None, None
+                vals = None if agg_col is None or not c \
+                    else blk.codes(agg_col)
                 if vals is not None:
-                    sel = vals.filter(pa.array(mask)).drop_null().to_numpy()
+                    sel = vals.take(idxs).drop_null().to_numpy()
                     if len(sel):
                         s, lo, hi = (_exact_sum(sel), int(sel.min()),
                                      int(sel.max()))
@@ -2666,8 +2656,8 @@ def make_partials_fn(preds: list[tuple], agg_col: Optional[str]):
     return block_partials
 
 
-def _index_split(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-                 preds: list[tuple], agg_col: Optional[str] = None,
+def _index_split(blocks: DataFrame, preds: list[tuple],
+                 agg_col: Optional[str] = None,
                  lead: bool = False) -> DataFrame:
     """COUNT(*) — and with ``agg_col`` that column's exact SUM, MIN and
     MAX in the int64 codec domain — under an AND of ``(col, lo, hi)``
@@ -2693,8 +2683,7 @@ def _index_split(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                       and not ix.cols[i].get(c, {}).get("z")
                       for c, p in tests)
         and (agg_col is None or None not in agg(i)),
-        lambda i: (ix.n[i], *agg(i)), schema_kinds,
-        [(c, p.lo, p.hi) for c, p in tests], agg_col)
+        lambda i: (ix.n[i], *agg(i)), tests, agg_col)
     return _fold_partials(blocks.sparkSession, parts, agg_col is not None)
 
 
@@ -2707,8 +2696,7 @@ def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     and then only the key column. For a wide range over a big table,
     almost every surviving block is interior, so the count is answered
     from the block index alone."""
-    return _index_split(blocks, schema_kinds, [(key_col, lo, hi)],
-                        lead=True)
+    return _index_split(blocks, [(key_col, lo, hi)], lead=True)
 
 
 _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
@@ -2745,8 +2733,7 @@ def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     comes from the block index with one job over the few boundary
     blocks."""
     _check_agg_kind("range_agg", dict(schema_kinds)[agg_col])
-    return _index_split(blocks, schema_kinds, [(key_col, lo, hi)],
-                        agg_col, lead=True)
+    return _index_split(blocks, [(key_col, lo, hi)], agg_col, lead=True)
 
 
 def _col_stats(col: str):
@@ -2770,8 +2757,8 @@ def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     blocks, ix = _indexed(blocks)
     parts = ix.split(
         blocks, list(range(len(ix))), lambda i: ix.nulls(i, col) is not None,
-        lambda i: (ix.nulls(i, col), None, None, None), schema_kinds,
-        [(col, None, None)])
+        lambda i: (ix.nulls(i, col), None, None, None),
+        [(col, _KeyPred(raw=(("isnull", None),)))])
     return _fold_partials(blocks.sparkSession, parts, False, "n_nulls")
 
 
@@ -2919,7 +2906,7 @@ def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     event_id-keyed table) a wide predicate is answered almost entirely
     from metadata; on an uncorrelated column it degrades gracefully to
     the scan — never to a wrong answer."""
-    return _index_split(blocks, schema_kinds, [(col, lo, hi)])
+    return _index_split(blocks, [(col, lo, hi)])
 
 
 def _prune_where(blocks: DataFrame, preds: list[tuple]) -> DataFrame:
@@ -2940,12 +2927,11 @@ def scan_where_multi(blocks: DataFrame,
     the skip ratios compound — each z column's stats are selective at
     once, which is the query shape Z-ordering exists for. On a
     single-key layout it degrades to the best single predicate's
-    pruning, never to a wrong answer (stat-less blocks are kept). One
-    decode of the surviving blocks."""
-    return _decode_where(
-        _prune_where(blocks, preds), schema_kinds, [c for c, _, _ in preds],
-        " AND ".join(f"({_between(schema_kinds, c, lo, hi)})"
-                     for c, lo, hi in preds), columns)
+    pruning, never to a wrong answer (stat-less blocks are kept).
+    Survivors select rows and fetch the output at them (:func:`_scan`)."""
+    blocks, ix = _indexed(blocks)
+    tests = _range_tests(preds)
+    return _scan(blocks, schema_kinds, ix, ix.where(tests), tests, columns)
 
 
 def count_where_multi(blocks: DataFrame,
@@ -2957,7 +2943,7 @@ def count_where_multi(blocks: DataFrame,
     payload decode, blocks any predicate excludes are pruned, and only
     straddlers decode (just the predicate columns). One row out:
     ``n_rows``."""
-    return _index_split(blocks, schema_kinds, preds)
+    return _index_split(blocks, preds)
 
 
 def bloom_might_contain(bm_b64: Optional[str], value, kind: str) -> bool:
@@ -3001,19 +2987,15 @@ def grep_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         words = [words]
     if not words:
         raise ValueError("grep_where: need at least one word")
-    row_f = []
-    tokens = (f"split(coalesce({_q(col)}, {_sql_lit('')}), "
-              f"{_sql_lit(_TOKEN_SPLIT_RE)})")
     for w in words:
         if not re.fullmatch("[0-9A-Za-z_]+", w):
             raise ValueError(f"grep_where: probe {w!r} is not a single "
                              "word token ([0-9A-Za-z_]+)")
-        row_f.append(f"array_contains({tokens}, {_sql_lit(w)})")
     blocks, ix = _indexed(blocks)
     keep = ix.keep(lambda i: all(ix.bloom(i, col, w, K_STR, "tbm")
                                  for w in words))
-    return _decode_where(ix.narrow(blocks, keep), schema_kinds, [col],
-                         " AND ".join(row_f), columns)
+    return _scan(blocks, schema_kinds, ix, keep, [
+        (col, _KeyPred(raw=tuple(("tok", w) for w in words)))], columns)
 
 
 def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3034,8 +3016,6 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     columns at matched indices; when no block survives no job runs.
     ~2% false-positive probes at the default sizing; never a false
     negative."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     kind = dict(schema_kinds)[col]
     if kind not in (K_STR, K_I8, K_I16, K_I32, K_I64, K_TS, K_DATE,
                     K_BOOL):
@@ -3043,27 +3023,11 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                          "has no equality-probe domain (use a "
                          "string/integer-domain column)")
     probe = str(value) if kind == K_STR else int(value)
-    pred = _KeyPred(values=[probe])
-    decode_cols = columns
-    if columns is not None and col not in columns:
-        decode_cols = [col] + columns
-    by_name = dict(schema_kinds)
-    sel = schema_kinds if decode_cols is None \
-        else [(c, by_name[c]) for c in decode_cols]
-    out_schema = T.StructType(
-        [T.StructField(n, spark_type_of(k)) for n, k in sel])
+    pred = _KeyPred(values=[probe], raw=(("in", (probe,)),))
     blocks, ix = _indexed(blocks)
-    keep = ix.keep(lambda i: ix.admits(i, col, pred, kind))
-    if not keep:
-        dec = _local_df(blocks.sparkSession, out_schema)
-    else:
-        fn = make_lookup_fn(schema_kinds, col, probe,
-                            to_arrow_schema(out_schema)
-                            .serialize().to_pybytes())
-        dec = ix.narrow(blocks, keep).mapInArrow(fn, schema=out_schema)
-    if columns is not None and col not in columns:
-        dec = dec.select(*columns)
-    return dec
+    return _scan(blocks, schema_kinds, ix,
+                 ix.keep(lambda i: ix.admits(i, col, pred, kind)),
+                 [(col, pred)], columns)
 
 
 def _column_at_indices(blob: bytes, kind: str, n: int, arrow_type,
@@ -3091,90 +3055,75 @@ def _column_at_indices(blob: bytes, kind: str, n: int, arrow_type,
     return full.take(pa.array(idxs, type=pa.int64()))
 
 
-def make_lookup_fn(kinds: list[tuple[str, str]], key_col: str, value,
-                   arrow_schema_bytes: bytes):
-    """mapInArrow kernel: per surviving block, decode ONLY the key
-    column, locate matching row indices, then materialize the other
-    columns at just those indices (value-level fetch for O(1)-codecs,
-    one decode+take otherwise). Blocks without a match emit nothing.
-    Integer-domain and string keys both supported (the reference's
-    ``find`` is generic over T, `integer_array.h:192-208`).
+def _selected(batches, tests: list[tuple]) -> Iterator[tuple]:
+    """``(reader, row positions)`` of each block of ``batches`` with a
+    row that passes the ``(col, _KeyPred)`` row ``tests``
+    (:meth:`_BlockReader.select`)."""
+    for batch in batches:
+        for blk in _read_blocks(batch):
+            idxs = blk.select(tests)
+            if len(idxs):
+                yield blk, idxs
 
-    ``value`` may be a scalar or a LIST of scalars (the IN-list form):
-    a block's key column decodes once and every probe value matches
-    against it, so a k-key batch fetch costs one decode per surviving
-    block — not k.
 
-    The output schema may be a PROJECTION (any subset of the table's
-    columns, the probe column included or not): only the named
-    columns' payload slices are touched. Single-value probes on
-    non-nullable string columns match dictionary-coded blocks against
-    the dictionary alone (`strings.str_block_eq_indices`) — the row
-    strings never materialize."""
-    kind_of = dict(kinds)
-    values = value if isinstance(value, (list, tuple)) else [value]
+def make_select_fn(tests: list[tuple], arrow_schema_bytes: bytes):
+    """mapInArrow kernel: per block, the rows that pass the row
+    ``tests`` (:func:`_selected`) as the output schema, any projection
+    of the table: its columns are fetched at just those rows (a plain
+    decode when every row passes), and a block without a match decodes
+    none. The generic form of the reference's ``find``
+    (`integer_array.h:192-208`)."""
 
-    def lookup_blocks(batches) -> "Iterator[pa.RecordBatch]":
+    def select_blocks(batches) -> "Iterator[pa.RecordBatch]":
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
-        kind = kind_of[key_col]
-        key_str = kind == K_STR
-        probes = [str(v) if key_str else int(v) for v in values]
-        probe_set = pa.array(probes,
-                             type=pa.string() if key_str else pa.int64())
-        if kind.startswith("dec("):
-            # probes are unscaled ints; an int64 decode of a decimal
-            # column would read its 128-bit words as garbage keys
-            p, s = (int(x) for x in kind[4:-1].split(","))
-            probe_set = pa.array([_dec.Decimal(v).scaleb(-s)
-                                  for v in probes], pa.decimal128(p, s))
-        for batch in batches:
-            for blk in _read_blocks(batch):
-                kb = blk.str_blob(key_col) if key_str else None
-                if kb is not None:
-                    # dictionary-aware (scalar and IN forms): dict/RLE
-                    # blocks match the dictionary and never rebuild
-                    # row strings
-                    idxs = sc.str_block_eq_indices(kb, blk.n, probes)
-                else:
-                    # Arrow-side equality: a NULLABLE int64 column
-                    # would to_numpy() into float64, whose 53-bit
-                    # mantissa collapses distinct keys above 2^53
-                    # into false equality matches. A block predating
-                    # the probe column reads all-null: no match.
-                    keys = blk.column(key_col, probe_set.type)
-                    eq = pc.is_in(keys, value_set=probe_set)
-                    idxs = np.flatnonzero(
-                        pc.fill_null(eq, False)
-                        .to_numpy(zero_copy_only=False))
-                if len(idxs):
-                    yield blk.batch(out_schema, idxs)
+        for blk, idxs in _selected(batches, tests):
+            yield blk.batch(out_schema, idxs)
 
-    return lookup_blocks
+    return select_blocks
 
 
-def _lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-            key_col: str, values: list) -> DataFrame:
-    """The rows whose lead key is one of ``values``: the blocks whose
-    bounds can hold a value run :func:`make_lookup_fn` (on the driver
-    when :meth:`_BlockIndex.local` reads them); when no block can, a
-    local empty frame answers with no job."""
+def _scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+          ix: "_BlockIndex", keep: list[int], tests: list[tuple],
+          columns: Optional[list[str]] = None) -> DataFrame:
+    """The rows of the blocks at positions ``keep`` that pass the row
+    ``tests``, as ``columns`` (all when None): an empty local frame if
+    nothing is kept; on the driver when :meth:`_BlockIndex.local` reads
+    the blocks and at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows pass (the one Arrow batch ``createDataFrame`` makes a
+    partition of: the driver stops selecting once more do, before it
+    fetches a column); else :func:`make_select_fn` in one job."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    out_schema = T.StructType(
-        [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds])
-    blocks, ix = _indexed(blocks, desc=False)
-    keep = ix.where([(None, _KeyPred(values=values))], lead=True)
+    spark = blocks.sparkSession
+    by_name = dict(schema_kinds)
+    out_schema = T.StructType([
+        T.StructField(c, spark_type_of(by_name[c]))
+        for c in (by_name if columns is None else columns)])
     if not keep:
-        return _local_df(blocks.sparkSession, out_schema)
-    fn = make_lookup_fn(schema_kinds, key_col, values,
-                        to_arrow_schema(out_schema).serialize().to_pybytes())
+        return _local_df(spark, out_schema)
+    arrow = to_arrow_schema(out_schema)
     got = ix.local(blocks, keep)
-    if got is not None:
-        return _arrow_df(blocks.sparkSession, out_schema, fn(got))
+    picks = None if got is None else _upto(_selected(got, tests),
+                                           _batch_rows(spark))
+    if picks is not None:
+        return _arrow_df(spark, out_schema,
+                         [blk.batch(arrow, idxs) for blk, idxs in picks])
+    fn = make_select_fn(tests, arrow.serialize().to_pybytes())
     return ix.narrow(blocks, keep).mapInArrow(fn, schema=out_schema)
+
+
+def _upto(picks, limit: int) -> Optional[list]:
+    """The ``(reader, row positions)`` ``picks`` as a list; None as
+    soon as they pass ``limit`` rows."""
+    out, n = [], 0
+    for blk, idxs in picks:
+        n += len(idxs)
+        if n > limit:
+            return None
+        out.append((blk, idxs))
+    return out
 
 
 def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3186,8 +3135,7 @@ def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     (`/root/reference/oroch/integer_array.h:166-208`). ``value`` may be
     an int (integer-domain keys, incl. ts-as-micros/date-as-days) or a
     str (string keys, pruned lexicographically)."""
-    return _lookup(blocks, schema_kinds, key_col,
-                   [value if isinstance(value, str) else int(value)])
+    return lookup_in(blocks, schema_kinds, key_col, [value])
 
 
 def lookup_in(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3196,16 +3144,36 @@ def lookup_in(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     pass over the persisted blocks table. Pruning keeps blocks whose
     bounds can contain any probe value (:func:`prune_blocks_in`); each
     surviving block decodes its key column ONCE and matches the whole
-    probe set against it (np.isin / Arrow is_in), so the cost is
-    O(surviving blocks), not O(keys x blocks). Extension beyond the
-    reference's single-value ``find`` (`integer_array.h:192-208`) — the
-    shape an analyst's batch entity-fetch takes at 100 TB."""
+    probe set against it (Arrow is_in, or a string block's dictionary),
+    so the cost is O(surviving blocks), not O(keys x blocks). Extension
+    beyond the reference's single-value ``find``
+    (`integer_array.h:192-208`) — the shape an analyst's batch
+    entity-fetch takes at 100 TB."""
     values = [v if isinstance(v, str) else int(v) for v in values]
     if not values:
         raise ValueError("lookup_in needs at least one probe value")
     if len({type(v) for v in values}) > 1:
         raise ValueError("lookup_in probe values must share one type")
-    return _lookup(blocks, schema_kinds, key_col, values)
+    blocks, ix = _indexed(blocks, desc=False)
+    tests = [(key_col, _KeyPred(values=values,
+                                raw=(("in", tuple(values)),)))]
+    return _scan(blocks, schema_kinds, ix, ix.where(tests, lead=True),
+                 tests)
+
+
+def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+               key_col: str, lo, hi,
+               columns: Optional[list[str]] = None) -> DataFrame:
+    """Key-range scan against the blocks table: zone-map prune to
+    overlapping blocks, select the rows in [lo, hi] on the key column
+    alone, and fetch the ``columns`` projection (every column when
+    None) at them (:func:`_scan`). At scale this reads only the row
+    groups whose key ranges overlap — the blocks-table analogue of
+    partition pruning + parquet predicate pushdown."""
+    blocks, ix = _indexed(blocks, desc=False)
+    tests = _range_tests([(key_col, lo, hi)])
+    return _scan(blocks, schema_kinds, ix, ix.where(tests, lead=True),
+                 tests, columns)
 
 
 def make_group_count_fn(col: str, arrow_schema_bytes: bytes):
@@ -3302,9 +3270,8 @@ def group_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     fn = make_group_count_fn(col, arrow_schema.serialize().to_pybytes())
     spark = blocks.sparkSession
     got = _BlockIndex.every(blocks)
-    sums = None if got is None else _sum_counts(
-        fn(got), arrow_schema,
-        spark._jsparkSession.sessionState().conf().arrowMaxRecordsPerBatch())
+    sums = None if got is None else _sum_counts(fn(got), arrow_schema,
+                                                _batch_rows(spark))
     if sums is not None:
         return _arrow_df(spark, out_schema, sums.to_batches())
     return blocks.mapInArrow(fn, schema=out_schema).groupBy(col).agg(
@@ -3425,7 +3392,7 @@ def agg_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     codec domain. On a predicate correlated with block order a wide
     range is almost all interior blocks — answered from the index."""
     _check_agg_kind("agg_where", dict(schema_kinds)[agg_col])
-    return _index_split(blocks, schema_kinds, [(col, lo, hi)], agg_col)
+    return _index_split(blocks, [(col, lo, hi)], agg_col)
 
 
 # lookup_join block-prune grid: the bucket width is the AVERAGE block

@@ -11,8 +11,8 @@ decoded rows with
   StringStartsWith — rewritten to the range [p, ceil(p)) so the same
   zone-map pruning applies — IS [NOT] NULL against the exact
   per-block null counts, !=/NOT IN — with a constant-block prune —
-  ends-with/contains and every NOT() of the above, enforced
-  Arrow-side before the JVM transfer) on ANY projected
+  ends-with/contains and every NOT() of the above, enforced before
+  the JVM transfer) on ANY projected
   string/int-domain column — not just the lead key — are accepted
   and enforced in two stages. Planning loads the table's block index
   (``engine._BlockIndex.load``: the same stat-checked, cached pyarrow
@@ -22,8 +22,10 @@ decoded rows with
   engine builder: lead-key bounds or per-column desc stats, the
   all-null / exact null-count rule and the Blooms. No payload byte of
   a pruned row group is read. Each task then reads just its planned
-  blocks and filters the decoded rows exactly in Arrow, so accepted
-  filters are fully absorbed (no residual Spark Filter node). This
+  blocks and selects their rows with the engine's row evaluator
+  (``engine.make_select_fn``), decoding the output columns only at
+  matching rows, so accepted filters are fully absorbed (no residual
+  Spark Filter node). This
   mirrors the reference's metadata-pruned ``find``
   (`integer_array.h:71-136`) at the Spark source boundary, extended
   with the engine's secondary zone maps and Blooms.
@@ -124,7 +126,7 @@ from pyspark.sql.datasource import (
 )
 
 from .. import engine
-from ..engine import _KeyPred, _stats_overlap  # noqa: F401 (re-exported)
+from ..engine import _KeyPred
 
 SIDECAR = "_oroch_table.json"
 _BATCH_DIR = "_batches"   # streaming sink's per-batch manifests
@@ -308,7 +310,6 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
     preds: dict[str, _KeyPred] = {}
     accepted: list[Filter] = []
     unsupported: list[Filter] = []
-    raws: dict[str, list] = {}
 
     def bump_lo(pred, d, inclusive):
         lo = d if inclusive else (d + 1 if isinstance(d, int) else d)
@@ -330,8 +331,8 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
             unsupported.append(f)
             continue
         col = tuple(attr)[0]
-        pred = preds.setdefault(col, _KeyPred(raw=()))
-        raw = raws.setdefault(col, [])
+        pred = preds.setdefault(col, _KeyPred(raw=[]))
+        raw = pred.raw  # row tests, each literal the domain value d
         if isinstance(f, Not):
             g = leaf
             if isinstance(g, EqualTo) or (isinstance(g, EqualNullSafe)
@@ -347,9 +348,9 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                 # stay row-level only.
                 if isinstance(g, EqualTo):
                     pred.neq = (pred.neq or set()) | {d}
-                    raw.append(("neq", (g.value,)))
+                    raw.append(("neq", (d,)))
                 else:
-                    raw.append(("nseq", (g.value,)))
+                    raw.append(("nseq", (d,)))
                 accepted.append(f)
             elif isinstance(g, In):
                 ds = [_domain_of(v) for v in g.value]
@@ -357,7 +358,7 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                     unsupported.append(f)
                     continue
                 pred.neq = (pred.neq or set()) | set(ds)
-                raw.append(("neq", tuple(g.value)))
+                raw.append(("neq", tuple(ds)))
                 accepted.append(f)
             elif isinstance(g, EqualNullSafe):  # value is None
                 raw.append(("notnull", None))
@@ -385,7 +386,7 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                 continue
             pred.values = [d] if pred.values is None \
                 else [x for x in pred.values if x == d]
-            raw.append(("in", (f.value,)))
+            raw.append(("in", (d,)))
             accepted.append(f)
         elif isinstance(f, In):
             ds = [_domain_of(v) for v in f.value]
@@ -394,7 +395,7 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                 continue
             pred.values = ds if pred.values is None \
                 else [x for x in pred.values if x in set(ds)]
-            raw.append(("in", tuple(f.value)))
+            raw.append(("in", tuple(ds)))
             accepted.append(f)
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual,
                             LessThan, LessThanOrEqual)):
@@ -404,16 +405,16 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                 continue
             if isinstance(f, GreaterThan):
                 bump_lo(pred, d, inclusive=False)
-                raw.append((">", f.value))
+                raw.append((">", d))
             elif isinstance(f, GreaterThanOrEqual):
                 bump_lo(pred, d, inclusive=True)
-                raw.append((">=", f.value))
+                raw.append((">=", d))
             elif isinstance(f, LessThan):
                 bump_hi(pred, d, inclusive=False)
-                raw.append(("<", f.value))
+                raw.append(("<", d))
             else:
                 bump_hi(pred, d, inclusive=True)
-                raw.append(("<=", f.value))
+                raw.append(("<=", d))
             accepted.append(f)
         elif isinstance(f, StringStartsWith):
             p = f.value
@@ -436,7 +437,7 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                 unsupported.append(f)
                 continue
             # no range/Bloom prune exists for suffix/substring — the
-            # win is Arrow-side row filtering before the JVM transfer
+            # win is row selection before the JVM transfer
             raw.append(("ew" if isinstance(f, StringEndsWith) else "ct",
                         f.value))
             accepted.append(f)
@@ -450,8 +451,6 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
             accepted.append(f)
         else:
             unsupported.append(f)
-    for col, pred in preds.items():
-        pred.raw = tuple(raws.get(col, ()))
     preds = {c: p for c, p in preds.items() if p.raw}
     return accepted, unsupported, preds
 
@@ -789,11 +788,11 @@ class OrochReader(DataSourceReader):
     # -- execution ---------------------------------------------------------
     @staticmethod
     def _planned(file: str, stats: tuple, row_group: int,
-                 rows: list[int]) -> Iterator:
-        """A block reader per planned row of one row group, read only
-        while ``file`` still has the ``stats`` it was planned on: a
-        file rewritten since raises, so no read decodes blocks its
-        plan did not keep."""
+                 rows: list[int]) -> "pa.Table":
+        """The planned blocks of one row group, read only while
+        ``file`` still has the ``stats`` it was planned on: a file
+        rewritten since raises, so no read decodes blocks its plan did
+        not keep."""
         import pyarrow.parquet as pq
 
         got = engine._stable([file], (stats,), lambda: engine._read_rows(
@@ -801,11 +800,9 @@ class OrochReader(DataSourceReader):
         if got is None:
             raise OSError(f"{file} changed since this read was planned; "
                           "retry the read")
-        return engine._read_blocks(got)
+        return got
 
     def read(self, partition) -> Iterator:
-        import pyarrow as pa
-
         if partition is None:
             return  # Spark's stand-in task for an empty plan
         if isinstance(partition, _MergePartition):
@@ -813,73 +810,15 @@ class OrochReader(DataSourceReader):
             return
         if partition.file is None:
             return  # empty-scan sentinel (every block pruned)
-        out_schema = pa.ipc.read_schema(pa.py_buffer(self.schema_bytes))
-        for blk in self._planned(partition.file, partition.stats,
-                                 partition.row_group, partition.rows):
-            batch = blk.batch(out_schema)
-            if partition.preds:
-                batch = self._exact_filter(batch, partition.preds)
-            if batch.num_rows:
-                yield batch
-
-    def _exact_filter(self, batch, preds):
-        """Enforce the ACCEPTED filters exactly (Spark won't re-apply
-        them): compare each decoded predicate column against the
-        original literals in Arrow."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        mask = None
-
-        def also(m):
-            nonlocal mask
-            mask = m if mask is None else pc.and_(mask, m)
-
-        for col, pred in preds.items():
-            arr = batch.column(col)
-            for op, v in pred.raw:
-                if op == "in":
-                    vs = pa.array(list(v), type=arr.type)
-                    also(pc.is_in(arr, value_set=vs))
-                elif op == "neq":
-                    # SQL NOT(col = v): null rows fail
-                    vs = pa.array(list(v), type=arr.type)
-                    also(pc.and_kleene(pc.is_valid(arr),
-                                       pc.invert(pc.is_in(arr,
-                                                          value_set=vs))))
-                elif op == "nseq":
-                    # NOT(col <=> v), v non-null: null rows PASS
-                    s = pa.scalar(v[0], type=arr.type)
-                    also(pc.invert(pc.fill_null(pc.equal(arr, s),
-                                                False)))
-                elif op == "sw":
-                    also(pc.starts_with(arr, pattern=v))
-                elif op == "ew":
-                    also(pc.ends_with(arr, pattern=v))
-                elif op == "ct":
-                    also(pc.match_substring(arr, pattern=v))
-                elif op == "nsw":
-                    # null propagates through invert -> row dropped,
-                    # matching SQL NOT(startswith(NULL, p)) = NULL
-                    also(pc.invert(pc.starts_with(arr, pattern=v)))
-                elif op == "new":
-                    also(pc.invert(pc.ends_with(arr, pattern=v)))
-                elif op == "nct":
-                    also(pc.invert(pc.match_substring(arr, pattern=v)))
-                elif op == "isnull":
-                    also(pc.is_null(arr))
-                elif op == "notnull":
-                    also(pc.is_valid(arr))
-                else:
-                    s = pa.scalar(v, type=arr.type)
-                    also({"<": pc.less, "<=": pc.less_equal,
-                          ">": pc.greater,
-                          ">=": pc.greater_equal}[op](arr, s))
-        return batch.filter(mask) if mask is not None else batch
+        yield from engine.make_select_fn(
+            list(partition.preds.items()), self.schema_bytes)(
+            self._planned(partition.file, partition.stats,
+                          partition.row_group, partition.rows).to_batches())
 
     def _read_merge(self, part: _MergePartition) -> Iterator:
         """Latest-wins execution for one key range: decode the planned
-        blocks, keep only this range's rows, and resolve
+        blocks' rows the pushed KEY filters select (every version of a
+        key shares it), keep only this range's rows, and resolve
         max-batch-id-wins per key with one vectorized sort +
         group-boundary scan — no Python per row."""
         import numpy as np
@@ -889,9 +828,11 @@ class OrochReader(DataSourceReader):
         dec_schema = pa.ipc.read_schema(
             pa.py_buffer(self.dec_schema_bytes))
         full_schema = dec_schema.append(pa.field("__b", pa.int64()))
-        batches = [blk.batch(full_schema, passthrough={"__b": int(bid)})
+        batches = [blk.batch(full_schema, idxs, passthrough={"__b": int(bid)})
                    for file, stats, rg, rows, bid in part.items
-                   for blk in self._planned(file, stats, rg, rows)]
+                   for blk in engine._read_blocks(
+                       self._planned(file, stats, rg, rows))
+                   if len(idxs := blk.select(list(part.preds.items())))]
         if not batches:
             return
         tbl = pa.Table.from_batches(batches)
@@ -930,12 +871,6 @@ class OrochReader(DataSourceReader):
         if self.tombstone:
             tomb = pc.fill_null(tbl.column(self.tombstone), False)
             tbl = tbl.filter(pc.invert(tomb))
-        if part.preds:
-            # exact enforcement of the pushed key predicates, AFTER
-            # resolution (order is immaterial for key predicates, but
-            # post-merge keeps one code path); works on Table like on
-            # RecordBatch
-            tbl = self._exact_filter(tbl, part.preds)
         out_schema = pa.ipc.read_schema(pa.py_buffer(self.schema_bytes))
         out = pa.table({f.name: tbl.column(f.name)
                         for f in out_schema}).cast(out_schema)

@@ -15,10 +15,10 @@ evaluator of every builder.
   directory — give the brute-force answers, and repeated ids never
   count a block twice;
 - on a bare scan, metadata-only answers run no Spark job, and neither
-  do boundary blocks, lookups and top-k whose kept row groups fit one
-  input split (they are read and decoded on the driver); a smaller
-  split reads them in one job, and any other frame adds the collect
-  job;
+  do boundary blocks, lookups, scans and top-k whose kept row groups
+  fit one input split (they are read and decoded on the driver); a
+  smaller split reads them in one job, and any other frame adds the
+  collect job;
 - the index never mixes two versions of a file: a file rewritten
   while the index, a ``desc`` loaded later or the kept blocks are read
   gives the new file's answer.
@@ -254,6 +254,12 @@ def test_job_budget_on_a_plain_scan(spark, table, jobs, split_below):
         "range_agg_boundary": lambda: e.range_agg(b, kinds, "k", 150, 449,
                                                   "v"),
         "lookup_hit": lambda: e.lookup(b, kinds, "k", 123),
+        "range_scan": lambda: e.range_scan(b, kinds, "k", 150, 449),
+        "scan_where": lambda: e.scan_where(b, kinds, "v", 10, 20, ["k"]),
+        "scan_where_multi": lambda: e.scan_where_multi(
+            b, kinds, [("k", 100, 700), ("v", 0, 250)]),
+        "lookup_where": lambda: e.lookup_where(b, kinds, "v", 7),
+        "grep_where": lambda: e.grep_where(b, kinds, "s", "s0123"),
     }
     # the kept blocks fit one input split: read on the driver, no job
     for name, build in {**none, **one}.items():

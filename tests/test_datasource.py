@@ -609,13 +609,13 @@ def test_neq_constant_prune(dsspark, tmp_path):
 
 
 def test_stats_overlap_neq_unit():
-    p = ds._KeyPred(neq={7}, raw=(("neq", (7,)),))
-    assert not ds._stats_overlap(7, 7, p)        # constant excluded
-    assert ds._stats_overlap(6, 7, p)            # range: may hold 6
-    assert ds._stats_overlap(None, None, p)      # no stats: keep
-    s = ds._KeyPred(neq={"x"}, raw=(("neq", ("x",)),))
-    assert not ds._stats_overlap("x", "x", s)
-    assert ds._stats_overlap("w", "y", s)
+    p = engine._KeyPred(neq={7}, raw=(("neq", (7,)),))
+    assert not engine._stats_overlap(7, 7, p)    # constant excluded
+    assert engine._stats_overlap(6, 7, p)        # range: may hold 6
+    assert engine._stats_overlap(None, None, p)  # no stats: keep
+    s = engine._KeyPred(neq={"x"}, raw=(("neq", ("x",)),))
+    assert not engine._stats_overlap("x", "x", s)
+    assert engine._stats_overlap("w", "y", s)
 
 
 # ---------------------------------------------------------------------------

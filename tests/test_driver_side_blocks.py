@@ -1,7 +1,7 @@
 """Kept blocks read and decoded on the driver (``_BlockIndex.local``)
 give the answers the same builders give when Spark reads the blocks.
 
-On a bare scan whose kept row groups fit one input split, lookups,
+On a bare scan whose kept row groups fit one input split, lookups, scans,
 boundary partials, ``group_count``/``distinct_values`` and top-k run
 their kernel in-process and fold on the driver; with
 ``spark.sql.files.maxPartitionBytes`` below those row groups they run
@@ -11,8 +11,8 @@ number, and float group keys fold ``-0.0`` into ``0.0`` with one NaN
 group and one null group. The driver reads only the row groups that
 hold kept blocks, so a corrupt row group elsewhere never stops it.
 It reads at most what Spark would give one task (the scan's split
-size), and a group count whose answer passes one Arrow batch sums in
-Spark.
+size), and a group count or scan whose answer passes one Arrow batch
+runs in Spark.
 """
 import math
 import os
@@ -171,6 +171,57 @@ def test_group_count_past_one_arrow_batch_runs_in_spark(spark, tmp_path,
         engine.group_count(scan, kinds, "s").collect())) == 0
     assert sorted((r.s, r.n_rows) for r in out[1]) == \
         [(f"s{i}", len(range(i, rows, 7))) for i in range(7)]
+
+
+def test_scans_past_one_arrow_batch_run_in_spark(spark, tmp_path, jobs):
+    """A scan builder whose answer has more rows than one Arrow batch
+    holds is not built on the driver: a whole-table ``range_scan``, wide
+    ``scan_where(_multi)``, a ``grep_where`` on a word of every row and
+    a ``lookup_where`` on a common value read the blocks in one Spark
+    job with the exact rows, while narrow ones on the same scan still
+    run no job."""
+    rows = engine._batch_rows(spark) + 500
+    t = pa.table({"k": pa.array(range(rows), pa.int64()),
+                  "v": pa.array([i % 100 for i in range(rows)], pa.int64()),
+                  "c": pa.array([int(i % 50 == 0) for i in range(rows)],
+                                pa.int64()),
+                  "s": [f"w{i % 100} x" for i in range(rows)]})
+    src = spark.createDataFrame(t)
+    kinds = engine.column_kinds(src.schema)
+    path = str(tmp_path / "wide")
+    engine.encode_df(src, ["k"], n_buckets=1, block_rows=2048) \
+        .write.parquet(path)
+    scan = spark.read.parquet(path)
+    e = engine
+    wide = {
+        "range_scan": (lambda: e.range_scan(scan, kinds, "k", 0, rows),
+                       lambda i: True),
+        "scan_where": (lambda: e.scan_where(scan, kinds, "v", 0, 98, ["k"]),
+                       lambda i: i % 100 <= 98),
+        "scan_where_multi": (lambda: e.scan_where_multi(
+            scan, kinds, [("k", 1, rows), ("v", 1, 99)], ["k"]),
+            lambda i: i % 100 >= 1),
+        "grep_where": (lambda: e.grep_where(scan, kinds, "s", "x", ["k"]),
+                       lambda i: True),
+        "lookup_where": (lambda: e.lookup_where(scan, kinds, "c", 0, ["k"]),
+                         lambda i: i % 50 != 0),
+    }
+    narrow = {
+        "range_scan": (lambda: e.range_scan(scan, kinds, "k", 100, 149),
+                       lambda i: 100 <= i <= 149),
+        "scan_where": (lambda: e.scan_where(scan, kinds, "v", 99, 99, ["k"]),
+                       lambda i: i % 100 == 99),
+        "grep_where": (lambda: e.grep_where(scan, kinds, "s", "w7", ["k"]),
+                       lambda i: i % 100 == 7),
+        "lookup_where": (lambda: e.lookup_where(scan, kinds, "c", 1, ["k"]),
+                         lambda i: i % 50 == 0),
+    }
+    for want, builders in ((1, wide), (0, narrow)):
+        for name, (build, match) in builders.items():
+            out = []
+            assert jobs(lambda: out.append(build().collect())) == want, name
+            assert sorted(r.k for r in out[0]) == \
+                [i for i in range(rows) if match(i)], name
 
 
 def test_group_count_indexes_no_scan_larger_than_a_split(

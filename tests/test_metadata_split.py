@@ -282,7 +282,58 @@ def test_kernel_compares_in_the_codec_domain():
         off += len(blob)
     blk = engine._BlockReader({"cols": descs}, pa.scalar(blobs), 2)
     for name, (_, kind, lo, hi) in cols.items():
-        pred = [(name, *engine._pred_domain(kind, lo, hi))]
-        got = engine._rows_matching(blk, pred).tolist()
+        rows = blk.select(engine._range_tests([(name, lo, hi)])).tolist()
+        got = [i in rows for i in range(2)]
         assert got == {"ts": [False, True], "dc": [False, True],
                        "dt": [True, True], "s": [True, False]}[name]
+
+
+def test_float_bounds_match_brute_force(spark, tmp_path):
+    """Fractional bounds on f64 and f32 columns keep exactly the rows
+    whose value, read as float64, lies in [lo, hi] — a NaN row in none
+    — through every range builder, on the driver and in a Spark job;
+    a NaN bound raises."""
+    n = 400
+    f = np.arange(n) * 0.25
+    f[5] = np.nan
+    g = (np.arange(n) * 0.1).astype(np.float32)
+    g[7] = np.nan
+    t = pa.table({"k": pa.array(np.arange(n), pa.int64()),
+                  "f": pa.array(f, pa.float64()),
+                  "g": pa.array(g, pa.float32())})
+    kinds = engine.column_kinds(spark.createDataFrame(t).schema)
+    path = str(tmp_path / "blocks")
+    engine.encode_df(spark.createDataFrame(t), ["k"], n_buckets=1,
+                     block_rows=64).write.parquet(path)
+
+    def brute(preds):
+        m = np.ones(n, dtype=bool)
+        for c, lo, hi in preds:
+            v = t[c].to_numpy().astype(np.float64)
+            m &= (v >= lo) & (v <= hi)
+        return np.flatnonzero(m).tolist()
+
+    cases = [[("f", -0.9, 0.9)], [("f", 10.3, 12.9)], [("g", -0.9, 0.9)],
+             [("g", 10.3, 12.9)], [("f", 0.2, 30.1), ("g", 1.05, 50.0)]]
+    scan = spark.read.parquet(path)
+    for b in (scan, scan.select("*")):
+        for preds in cases:
+            want = brute(preds)
+            assert sorted(r.k for r in engine.scan_where_multi(
+                b, kinds, preds, ["k"]).collect()) == want, preds
+            assert engine.count_where_multi(b, kinds, preds) \
+                .first().n_rows == len(want), preds
+            if len(preds) == 1:
+                (c, lo, hi), = preds
+                assert sorted(r.k for r in engine.scan_where(
+                    b, kinds, c, lo, hi).collect()) == want, preds
+                assert engine.count_where(b, kinds, c, lo, hi) \
+                    .first().n_rows == len(want), preds
+                assert tuple(engine.agg_where(b, kinds, c, lo, hi, "k")
+                             .first()) == (len(want), sum(want),
+                                           min(want), max(want)), preds
+    assert brute([("f", -0.9, 0.9)]) == [0, 1, 2, 3]
+    assert len(brute([("f", 10.3, 12.9)])) == 10
+    for build in (engine.scan_where, engine.count_where):
+        with pytest.raises(ValueError):
+            build(scan, kinds, "f", float("nan"), 1.0)

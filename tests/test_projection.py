@@ -1,7 +1,9 @@
 """Projection pushdown into the block format: every reader that can
-leave a column out — decode_df(columns=...), lookup_where(columns=...),
-group_count/group_agg, and format("oroch") with option("columns") —
-must touch ONLY the requested columns' bytes. Proven by corrupting an
+leave a column out — decode_df(columns=...), lookup_where, range_scan,
+scan_where and grep_where with columns=..., group_count/group_agg, and
+format("oroch") with option("columns") — must touch ONLY the requested
+columns' bytes, and a filtered read only its predicate columns plus
+the output columns at matching rows. Proven by corrupting an
 unrequested column's payload slice — the projection still decodes
 exactly, while a read of that column fails."""
 import glob
@@ -85,6 +87,34 @@ def test_lookup_where_projection_skips_unrequested_bytes(spark, ctx, bad):
         engine.lookup_where(bad, kinds, "lang", "es").collect()
 
 
+def test_scan_builders_decode_only_predicate_and_output_columns(
+        spark, ctx, bad):
+    """A scan selects rows on its predicate column and decodes the
+    output columns only at matching rows: a projection without the
+    corrupted column reads exactly, a block kept by its stats but with
+    no matching row decodes no output column at all, and a read that
+    outputs the corrupted column at matching rows fails."""
+    src, kinds, _ = ctx
+    cols = ["doc_id", "n_chars"]
+    missing = sorted(set(range(47, 559)) - {
+        r.n_chars for r in src.select("n_chars").collect()})[0]
+    cases = [
+        (lambda c: engine.range_scan(bad, kinds, "doc_id", 100, 200, c),
+         F.col("doc_id").between(100, 200)),
+        (lambda c: engine.scan_where(bad, kinds, "n_chars", 100, 150, c),
+         F.col("n_chars").between(100, 150)),
+        (lambda c: engine.grep_where(bad, kinds, "lang", "es", c),
+         F.col("lang") == "es")]
+    for build, cond in cases:
+        exp = src.filter(cond).select(*cols)
+        assert len(_rows(exp, ["doc_id"])) > 0
+        assert _rows(build(cols), ["doc_id"]) == _rows(exp, ["doc_id"])
+        with pytest.raises(Exception):
+            build(None).collect()
+    assert engine.scan_where(bad, kinds, "n_chars", missing,
+                             missing).collect() == []
+
+
 def test_group_count_skips_unrequested_bytes(spark, ctx, bad):
     src, kinds, _ = ctx
     # lang takes the dictionary-only shortcut, n_chars a full decode
@@ -127,3 +157,9 @@ def test_datasource_projection_with_filter_skips_unrequested_bytes(
     assert _rows(got, ["doc_id"]) == _rows(exp, ["doc_id"])
     with pytest.raises(Exception):
         spark.read.format("oroch").load(path).filter(cond).collect()
+    # a pushed filter that the block index keeps a block for but that
+    # matches no row decodes no output column
+    missing = sorted(set(range(47, 559)) - {
+        r.n_chars for r in src.select("n_chars").collect()})[0]
+    assert spark.read.format("oroch").load(path) \
+        .filter(F.col("n_chars") == missing).collect() == []

@@ -234,11 +234,12 @@ def test_scan_where_secondary_zone_map(spark):
     blocks.unpersist()
 
 
-def test_scan_where_materialized_stats_pushdown(spark, tmp_path):
+def test_scan_where_materialized_stats_pushdown(spark, tmp_path,
+                                                split_below):
     """(lo, hi) persisted as extra stored columns; the stored table is
-    still a bare scan, so the block index prunes it and the kept
-    blocks' ids are a parquet PushedFilter; the results still match
-    the source."""
+    still a bare scan, so the block index prunes it; the results still
+    match the source. Read on the driver it plans a local scan; read in
+    Spark, the kept blocks' ids are a parquet PushedFilter."""
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     kinds = engine.column_kinds(src.schema)
     st = engine._col_stats("event_id")
@@ -252,7 +253,10 @@ def test_scan_where_materialized_stats_pushdown(spark, tmp_path):
     exp = src.filter((F.col("event_id") >= 100)
                      & (F.col("event_id") <= 160))
     assert got.count() == exp.count() > 0
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    with split_below(stored):
+        got = engine.scan_where(stored, kinds, "event_id", 100, 160)
+        assert got.count() == exp.count()
+        plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "block_idx" in plan
 
 

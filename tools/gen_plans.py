@@ -33,9 +33,18 @@ def main() -> None:
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     events = spark.read.parquet(f"{SF}/events.parquet")
+    ev_kinds = engine.column_kinds(events.schema)
     qv = entry._query_vec(SF)
 
     sections = []
+
+    def bare_and_other(title, bare_claim, other_claim, path, build):
+        for how, claim, frame in (
+                ("bare scan", bare_claim, spark.read.parquet(path)),
+                ("any other frame, here select(\"*\")", other_claim,
+                 spark.read.parquet(path).select("*"))):
+            sections.append((f"{title} ({how})", claim,
+                             plan_of(build(frame))))
 
     sections.append((
         "maponly_encode (shuffle-free; data read happens inside the UDF)",
@@ -124,17 +133,17 @@ def main() -> None:
             engine.column_kinds(events.schema), "event_id", 1000, 9000,
             "user_id"))))
 
-    sections.append((
-        "range_scan with projection (pruned scan -> 2-column decode)",
+    bare_and_other(
+        "range_scan with projection",
         "The block index keeps the blocks whose true-min/max (key_lo, "
-        "key_hi) overlap the range, and their ids push to the blocks "
-        "parquet scan; the decode kernel touches only the requested "
-        "columns' payload slices (projection pushdown into the block "
-        "format).",
-        plan_of(engine.range_scan(
-            spark.read.parquet(bdir),
-            engine.column_kinds(events.schema), "event_id", 1000, 1100,
-            columns=["user_id", "value"]))))
+        "key_hi) overlap the range; they fit one input split, so the "
+        "select kernel runs in-process, fetching only the requested "
+        "columns at the rows the key selects: a LocalTableScan.",
+        "The mapInArrow select kernel does the same over the kept "
+        "blocks (here all four: the keys hash across the buckets), so "
+        "no Filter or Project follows it.",
+        bdir, lambda b: engine.range_scan(b, ev_kinds, "event_id", 1000,
+                                          1100, columns=["user_id", "value"]))
 
     sections.append((
         "tumbling_window_agg (1h windows over the decoded blocks table)",
@@ -150,19 +159,20 @@ def main() -> None:
             .agg(F.count("*").alias("n_events"))
             .select(F.col("w.start").alias("w_start"), "n_events"))))
 
-    ev_kinds = engine.column_kinds(events.schema)
     t0 = engine.table_stats(spark.read.parquet(sdir), ev_kinds,
                             ["ts"]).first().min_long  # epoch-micros
-    sections.append((
+    bare_and_other(
         "scan_where (secondary zone map on a NON-key column)",
         "Range predicate on ts — not the lead key, but correlated with "
         "the event_id order — prunes via the per-column (lo, hi) stats "
         "in the desc JSON, read by the block index on the driver "
-        "before any payload reaches the Python decode kernel; the kept "
-        "ids are a parquet PushedFilter.",
-        plan_of(engine.scan_where(
-            spark.read.parquet(sdir), ev_kinds, "ts", t0,
-            t0 + 3600 * 10 ** 6, columns=["event_id", "ts"]))))
+        "before any payload is read; the kept block fits one input "
+        "split, so the select kernel runs in-process: a LocalTableScan.",
+        "The kept ids are a parquet PushedFilter, and the mapInArrow "
+        "select kernel keeps the rows in the range: no Filter after it.",
+        sdir, lambda b: engine.scan_where(
+            b, ev_kinds, "ts", t0, t0 + 3600 * 10 ** 6,
+            columns=["event_id", "ts"]))
 
     sections.append((
         "group_count (GROUP BY pushdown into the codec; bare scan)",
@@ -252,16 +262,16 @@ def main() -> None:
             spark.read.parquet(sdir).select("*"),
             engine.column_kinds(events.schema), "event_id", 10))))
 
-    sections.append((
+    bare_and_other(
         "lookup_where (per-block Bloom filter probe)",
         "Equality on a high-cardinality column UNCORRELATED with block "
         "order: the block index tests the k Bloom probes of every "
         "block on the driver — blocks whose filter proves the value "
-        "absent are never read (the kept ids are PushedFilters); "
-        "null/missing filters keep the block.",
-        plan_of(engine.lookup_where(
-            spark.read.parquet(bdir),
-            engine.column_kinds(events.schema), "props", '{"k": 42}'))))
+        "absent are never read; null/missing filters keep the block. "
+        "The kept blocks fit one input split: a LocalTableScan.",
+        "The kept blocks reach the mapInArrow select kernel (by id "
+        "when the Blooms keep fewer than all).",
+        bdir, lambda b: engine.lookup_where(b, ev_kinds, "props", '{"k": 42}'))
 
     from oroch_spark.sources import datasource
     datasource.register(spark)
@@ -276,8 +286,9 @@ def main() -> None:
         "are accepted: planning keeps the blocks the block index "
         "admits (lead-key bounds, desc stats, null counts, Blooms), "
         "one partition per row group of kept blocks, and each task "
-        "filters its decoded rows exactly in Arrow, so the BatchScan "
-        "has no residual Filter above it for them.",
+        "selects its rows exactly with the engine's row evaluator "
+        "before it decodes the output columns at them, so the "
+        "BatchScan has no residual Filter above it for them.",
         plan_of(spark.read.format("oroch").load(odir).filter(
             "event_id >= 100 AND event_id < 2000 AND user_id = 7 "
             "AND props IS NOT NULL"))))
