@@ -25,11 +25,11 @@ Scale design (the 10^12-turn story):
   anti-joins planned buckets against the manifest and encodes only the
   remainder (see `checkpoint.py`).
 - **No collect() of table rows** in the data path. Query plans are
-  built with three bounded planning reads: ``zorder_key``'s one
-  min/max row, ``lookup_join``'s one grid-aggregate row, and the
-  top-k threshold (at most k ``(n, bound)`` metadata rows, never a
-  payload). The resume path's pending-bucket id list is bounded by
-  n_buckets.
+  built with two bounded planning reads: ``zorder_key``'s one
+  min/max row and the top-k threshold (at most k ``(n, bound)``
+  metadata rows, never a payload); ``lookup_join`` holds its probe's
+  distinct keys, as a broadcast join would. The resume path's
+  pending-bucket id list is bounded by n_buckets.
 - **Block index**: against a bare parquet scan of a persisted blocks
   table, the point-query builders read its non-payload columns on the
   driver (``_BlockIndex``, checked against the files on every use),
@@ -1233,7 +1233,7 @@ class _BlockReader:
     the Arrow buffer would be signed (format ``'b'``) and misread the
     codec tag bytes."""
 
-    __slots__ = ("n", "_cols", "_payload", "_bytes")
+    __slots__ = ("n", "_cols", "_payload", "_bytes", "_ints")
 
     def __init__(self, desc, payload, n):
         if isinstance(desc, str):
@@ -1242,6 +1242,7 @@ class _BlockReader:
         self._cols = {d["n"]: d for d in desc["cols"]}
         self._payload = payload
         self._bytes = None
+        self._ints = {}  # non-nullable int64 codes :meth:`codes` decoded
 
     def _blob(self, d) -> bytes:
         if self._bytes is None:
@@ -1270,7 +1271,8 @@ class _BlockReader:
             return _decode_column(self._blob(d), d["k"], self.n,
                                   arrow_type, nullable=bool(d.get("z")))
         return _column_at_indices(self._blob(d), d["k"], self.n,
-                                  arrow_type, bool(d.get("z")), idxs)
+                                  arrow_type, bool(d.get("z")), idxs,
+                                  self._ints.get(name))
 
     def codes(self, name: str) -> Optional["pa.Array"]:
         """Column ``name`` in its comparison domain, for kernels that
@@ -1291,16 +1293,31 @@ class _BlockReader:
         blob, valid = self._blob(d), None
         if d.get("z"):
             valid, blob = _split_validity(blob, self.n)
-        return pa.array(ic.decode_block(blob, self.n,
-                                        width=_INT_WIDTHS.get(d["k"], 8)),
-                        mask=None if valid is None else ~valid)
+        ints = ic.decode_block(blob, self.n, width=_INT_WIDTHS.get(d["k"], 8))
+        if valid is None:
+            self._ints[name] = ints
+        return pa.array(ints, mask=None if valid is None else ~valid)
+
+    def validity(self, name: str) -> Optional["pa.Array"]:
+        """Column ``name``'s nulls alone, from its validity bitmap with
+        no decode (so of any kind, bin and array too): a bool array,
+        null where the column is. None when the block predates it."""
+        import pyarrow as pa
+
+        d = self._cols.get(name)
+        if d is None:
+            return None
+        valid = _split_validity(self._blob(d), self.n)[0] if d.get("z") \
+            else np.ones(self.n, dtype=bool)
+        return pa.array(valid, mask=~valid)
 
     def select(self, preds: list[tuple]) -> np.ndarray:
         """Positions of the rows that pass the row tests
         (:attr:`_KeyPred.raw`) of every ``(col, _KeyPred)`` of
         ``preds``: the one row evaluator. Each column is read once
-        (:meth:`codes`), none once no row is left; an IN on a
-        non-nullable string column matches the dictionary
+        (:meth:`codes`, or :meth:`validity` for null tests alone),
+        none once no row is left; an IN on a non-nullable string
+        column matches the dictionary
         (`strings.str_block_eq_indices`); a column the block predates
         is all NULL."""
         keep = np.ones(self.n, dtype=bool)
@@ -1312,12 +1329,14 @@ class _BlockReader:
                 else None
             if kb is not None:
                 for vs in (v for op, v in tests if op == "in"):
-                    hit = sc.str_block_eq_indices(kb, self.n, list(vs))
+                    hit = sc.str_block_eq_indices(
+                        kb, self.n, vs.searched("string"))
                     keep &= np.bincount(hit, minlength=self.n) > 0
                 tests = [(op, v) for op, v in tests if op != "in"]
             if not tests:
                 continue
-            vals = self.codes(col)
+            nulls_only = all(op in ("isnull", "notnull") for op, _ in tests)
+            vals = self.validity(col) if nulls_only else self.codes(col)
             if vals is None:  # the block predates col: every row is NULL
                 if pred.rejects_null:
                     keep[:] = False
@@ -1348,9 +1367,10 @@ class _BlockReader:
 def _row_test(vals: "pa.Array", op: str, v) -> np.ndarray:
     """Row mask of one row test ``(op, v)`` of a :attr:`_KeyPred.raw`
     on a column read by :meth:`_BlockReader.codes`, ``v`` in that
-    column's domain (a string compared by its UTF-8 bytes). A null row
-    passes only IS NULL and NOT(col <=> v): every other test is NULL
-    on it under SQL's ternary logic, which rejects the row."""
+    column's domain (a string compared by its UTF-8 bytes; an
+    :class:`_InSet` for IN and NOT IN). A null row passes only IS NULL
+    and NOT(col <=> v): every other test is NULL on it under SQL's
+    ternary logic, which rejects the row."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1363,7 +1383,9 @@ def _row_test(vals: "pa.Array", op: str, v) -> np.ndarray:
         m = pc.invert(pc.fill_null(
             pc.equal(vals, pa.scalar(v[0], vals.type)), False))
     elif pos == "in":
-        m = pc.is_in(vals, value_set=pa.array(list(v), vals.type))
+        x = vals.fill_null(b"" if vals.type == pa.binary() else 0)
+        m = pa.array(sc.in_sorted(x.to_numpy(zero_copy_only=False),
+                                  v.searched(vals.type)))
     elif pos == "tok":  # grep -w: v is one [0-9A-Za-z_]+ word
         m = pc.match_substring_regex(
             vals, pattern=f"(^|{_TOKEN_SPLIT_RE}){v}({_TOKEN_SPLIT_RE}|$)")
@@ -1956,16 +1978,42 @@ def _check_agg_kind(op: str, kind: str) -> None:
 # The Python prune rules and the driver-side block index
 # ---------------------------------------------------------------------------
 
+class _InSet(tuple):
+    """The distinct values of an IN or NOT IN test, ascending, as
+    :func:`_stats_overlap` bisects them and the row evaluator searches
+    them (``strings.in_sorted``): no block sorts, hashes or converts
+    the set. Its NumPy forms are built once, where it runs; never
+    pickled."""
+
+    def __new__(cls, values):
+        return super().__new__(cls, sorted(set(values)))
+
+    def __reduce__(self):
+        return _InSet, (tuple(self),)
+
+    def searched(self, arrow_type) -> np.ndarray:
+        """The values as the array a column of ``arrow_type`` (as read by
+        :meth:`_BlockReader.codes`; ``"string"`` for a string block's
+        values) is searched in: UTF-8 bytes for binary, else as is."""
+        key = str(arrow_type)
+        if key not in self.__dict__:
+            self.__dict__[key] = np.array(
+                [v.encode() for v in self] if key == "binary" else self,
+                dtype=object if key in ("string", "binary")
+                else arrow_type.to_pandas_dtype())
+        return self.__dict__[key]
+
+
 @dataclass
 class _KeyPred:
     """Predicates on one column: the filters ``format("oroch")``
     accepts, or a builder's range, probe values or row test. The block
     rules read a bounds envelope and an exact IN set (``values``, also
-    the equality set) in the prune domain; :meth:`_BlockReader.select`
-    reads the ``raw`` row tests."""
+    the equality set, ascending) in the prune domain;
+    :meth:`_BlockReader.select` reads the ``raw`` row tests."""
     lo: Optional[object] = None
     hi: Optional[object] = None
-    values: Optional[list] = None  # exact set (EqualTo / In)
+    values: Optional[list] = None  # exact set (EqualTo / In), ascending
     neq: Optional[set] = None      # excluded set (Not(EqualTo/In))
     raw: tuple = ()                # (op, literal) row tests, ANDed
 
@@ -1997,8 +2045,9 @@ class _KeyPred:
     def probe(self):
         """A value of its prune domain (a string picks the
         lexicographic bounds), None when it has none."""
-        return next((v for v in (*(self.values or ()), self.lo, self.hi,
-                                 *(self.neq or ())) if v is not None), None)
+        return next((v for v in (*(self.values or ())[:1], self.lo,
+                                 self.hi, *(self.neq or ()))
+                     if v is not None), None)
 
 
 def _stats_overlap(stats_lo, stats_hi, pred: _KeyPred) -> bool:
@@ -2007,9 +2056,8 @@ def _stats_overlap(stats_lo, stats_hi, pred: _KeyPred) -> bool:
     if stats_lo is None or stats_hi is None:
         return True
     if pred.values is not None:
-        if not pred.values:
-            return False
-        if not any(stats_lo <= v <= stats_hi for v in pred.values):
+        j = bisect.bisect_left(pred.values, stats_lo)
+        if j == len(pred.values) or pred.values[j] > stats_hi:
             return False
     if pred.lo is not None and stats_hi < pred.lo:
         return False
@@ -3022,8 +3070,8 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
         raise ValueError(f"lookup_where: column {col!r} kind {kind!r} "
                          "has no equality-probe domain (use a "
                          "string/integer-domain column)")
-    probe = str(value) if kind == K_STR else int(value)
-    pred = _KeyPred(values=[probe], raw=(("in", (probe,)),))
+    probe = _InSet([str(value) if kind == K_STR else int(value)])
+    pred = _KeyPred(values=probe, raw=(("in", probe),))
     blocks, ix = _indexed(blocks)
     return _scan(blocks, schema_kinds, ix,
                  ix.keep(lambda i: ix.admits(i, col, pred, kind)),
@@ -3031,16 +3079,18 @@ def lookup_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
 
 
 def _column_at_indices(blob: bytes, kind: str, n: int, arrow_type,
-                       nullable: bool, idxs: np.ndarray) -> "pa.Array":
-    """Values of one encoded column at row indices ``idxs`` — O(1)
-    value-level ``fetch`` per index for fetchable integer codecs
+                       nullable: bool, idxs: np.ndarray,
+                       ints: Optional[np.ndarray] = None) -> "pa.Array":
+    """Values of one encoded column at row indices ``idxs`` — taken from
+    its decoded int64 codes ``ints`` when a row test has read them, by
+    O(1) value-level ``fetch`` per index for fetchable integer codecs
     (`integers.py` fetch, mirroring `/root/reference/oroch/
     bitpck.h:203-225`), full-decode + take otherwise."""
     import pyarrow as pa
 
     if kind in (K_I64, K_TS, *_INT_WIDTHS) and not nullable:
-        vals = ic.fetch_many(blob, idxs, n,
-                             width=_INT_WIDTHS.get(kind, 8))
+        vals = ic.fetch_many(blob, idxs, n, width=_INT_WIDTHS.get(
+            kind, 8)) if ints is None else ints[idxs]
         if kind == K_TS:
             return pa.array(vals, type=pa.int64()).cast(arrow_type)
         if kind == K_DATE:
@@ -3139,26 +3189,26 @@ def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
 
 
 def lookup_in(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-              key_col: str, values) -> DataFrame:
-    """Batched IN-list point lookup: fetch the rows of MANY keys in one
-    pass over the persisted blocks table. Pruning keeps blocks whose
-    bounds can contain any probe value (:func:`prune_blocks_in`); each
-    surviving block decodes its key column ONCE and matches the whole
-    probe set against it (Arrow is_in, or a string block's dictionary),
-    so the cost is O(surviving blocks), not O(keys x blocks). Extension
-    beyond the reference's single-value ``find``
-    (`integer_array.h:192-208`) — the shape an analyst's batch
-    entity-fetch takes at 100 TB."""
+              key_col: str, values,
+              columns: Optional[list[str]] = None) -> DataFrame:
+    """Batched IN-list point lookup: the rows of MANY keys, as
+    ``columns`` (all when None), in one pass over the blocks table. The
+    probe set is sorted once (:class:`_InSet`): the block index keeps
+    the blocks whose bounds hold a value, and each kept block decodes
+    its key column ONCE and binary-searches the set (a string block
+    its dictionary): O(kept blocks x log keys). Extension beyond the
+    reference's single-value ``find`` (`integer_array.h:192-208`) —
+    the shape an analyst's batch entity-fetch takes at 100 TB."""
     values = [v if isinstance(v, str) else int(v) for v in values]
     if not values:
         raise ValueError("lookup_in needs at least one probe value")
     if len({type(v) for v in values}) > 1:
         raise ValueError("lookup_in probe values must share one type")
     blocks, ix = _indexed(blocks, desc=False)
-    tests = [(key_col, _KeyPred(values=values,
-                                raw=(("in", tuple(values)),)))]
+    vs = _InSet(values)
+    tests = [(key_col, _KeyPred(values=vs, raw=(("in", vs),)))]
     return _scan(blocks, schema_kinds, ix, ix.where(tests, lead=True),
-                 tests)
+                 tests, columns)
 
 
 def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3395,162 +3445,32 @@ def agg_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     return _index_split(blocks, [(col, lo, hi)], agg_col)
 
 
-# lookup_join block-prune grid: the bucket width is the AVERAGE block
-# bound span, so a typical block covers 1-2 buckets; a block spanning
-# more than _LJ_SPAN_CAP buckets (an outlier interleaving most of the
-# key domain — it overlaps nearly any probe anyway) skips the prune
-# and is kept unconditionally, bounding the explode at O(blocks x
-# small-constant).
-_LJ_SPAN_CAP = 64
-# Below this many blocks the grid's three extra exchanges cost more
-# than they save: a direct range-condition semi-join (a nested loop,
-# but over <=1024 METADATA rows x broadcast keys) is strictly cheaper,
-# so tiny tables keep the low-latency plan and the grid engages where
-# the nested loop would actually hurt (10^6+ blocks at 100 TB).
-_LJ_GRID_MIN_BLOCKS = 1024
-
-def _str_surrogate(c: "F.Column") -> "F.Column":
-    """Order-preserving int64 surrogate of a string: the first 7 UTF-8
-    bytes, zero-padded, read big-endian. Monotone w.r.t. the UTF-8
-    binary order Spark compares strings in (fixed-width BE prefix), so
-    bucket(surr(lo)) <= bucket(surr(k)) <= bucket(surr(hi)) whenever
-    lo <= k <= hi — prefix collisions only widen the candidate set."""
-    return F.conv(F.rpad(F.hex(F.substring(c.cast("binary"), 1, 7)),
-                         14, "0"), 16, 10).cast("long")
-
-
-def _bucketed_block_prune(blocks: DataFrame, bounds: tuple[str, str],
-                          kind: str, probe: DataFrame,
-                          k_dom: "F.Column",
-                          grid_min_blocks: int = _LJ_GRID_MIN_BLOCKS
-                          ) -> DataFrame:
-    """Keep the blocks whose zone-bound interval may contain a probe
-    key. Large tables (>= ``grid_min_blocks`` blocks) use an EQUI-join
-    on coarse key-domain buckets (the containment check is the
-    residual condition of a BroadcastHashJoin — never a nested loop
-    over O(blocks x keys)); tiny tables keep the direct
-    range-condition semi-join, whose nested loop over metadata rows is
-    cheaper than the grid's extra exchanges. See lookup_join."""
-    blo, bhi = F.col(bounds[0]), F.col(bounds[1])
-    # strategy and grid both come from the block index: its block
-    # count, and the origin and mean span of the bounds in the
-    # surrogate domain (string keys through the Python twin of
-    # _str_surrogate). Any (origin, width) is correct — both sides
-    # bucket with the same formula and the containment residual is
-    # exact — so they only steer how much the grid prunes.
-    ix = _BlockIndex.of(blocks, desc=False)
-    if len(ix) < grid_min_blocks:
-        kd = F.col("_kd")
-        return blocks.join(
-            F.broadcast(probe.select(k_dom.alias("_kd"))),
-            blo.isNull() | ((blo <= kd) & (bhi >= kd)), "left_semi")
-    surr = str_prefix_long if kind == K_STR else int
-    spans = [(surr(lo), surr(hi))
-             for lo, hi in (ix.skey if kind == K_STR else ix.key)
-             if lo is not None and hi is not None]
-    if not spans or max(hi for _, hi in spans) \
-            - min(lo for lo, _ in spans) >= (1 << 62):
-        # no usable bounds anywhere (or a pathological span that would
-        # overflow the shifted grid): pruning is an optimization only
-        return blocks
-    a = min(lo for lo, _ in spans)
-    w = 1 + sum(hi - lo for lo, hi in spans) // len(spans)
-    if kind == K_STR:
-        blo_s, bhi_s = _str_surrogate(blo), _str_surrogate(bhi)
-        k_surr = _str_surrogate(k_dom)
-    else:
-        blo_s, bhi_s, k_surr = blo, bhi, k_dom
-    meta = blocks.select(
-        "bucket", "block_idx", blo.alias("_lo"), bhi.alias("_hi"),
-        blo_s.alias("_los"), bhi_s.alias("_his"))
-    bkt = lambda c: F.expr(f"(({c}) - {a}L) div {w}L")
-    spanned = meta.withColumn("_b0", bkt("_los")) \
-                  .withColumn("_b1", bkt("_his"))
-    prunable = (F.col("_b0").isNotNull() & F.col("_b1").isNotNull()
-                & (F.col("_b1") - F.col("_b0") < _LJ_SPAN_CAP))
-    probe_b = F.broadcast(
-        probe.select(k_dom.alias("_kd"), k_surr.alias("_ks"))
-             .withColumn("_kbkt", bkt("_ks")))
-    ids = (spanned.where(prunable)
-           .withColumn("_bkt", F.explode(F.sequence("_b0", "_b1")))
-           .join(probe_b, (F.col("_bkt") == F.col("_kbkt"))
-                 & (F.col("_lo") <= F.col("_kd"))
-                 & (F.col("_hi") >= F.col("_kd")), "left_semi")
-           .select("bucket", "block_idx"))
-    keep_all = spanned.where(~prunable | prunable.isNull()) \
-        .select("bucket", "block_idx")
-    cand_ids = ids.union(keep_all).distinct()
-    return blocks.join(F.broadcast(cand_ids),
-                       ["bucket", "block_idx"], "left_semi")
-
-
 def lookup_join(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                 key_col: str, keys: DataFrame,
-                columns: Optional[list[str]] = None,
-                grid_min_blocks: int = _LJ_GRID_MIN_BLOCKS) -> DataFrame:
-    """Distributed IN: fetch the rows whose lead key appears in a keys
-    DATAFRAME — :func:`lookup_in` without ever collecting the probe set
-    to the driver. Two broadcast joins, zero shuffles of table data:
-
-    1. *block prune*: the (deduplicated, broadcast) keys range-join the
-       block metadata on the zone bounds (``key_lo <= k <= key_hi``,
-       lexicographic ``key_slo/key_shi`` for string keys); a left-semi
-       join keeps each candidate block once however many keys it may
-       hold. NULL bounds keep the block — pruning is never a
-       correctness filter.
-    2. *exact match*: surviving blocks decode (only ``columns`` +
-       the key), then a broadcast left-semi join on the decoded key
-       keeps exactly the probed rows.
-
-    The probe side must be broadcastable (an entity list, not a second
-    fact table — for fact-to-fact joins decode and use a regular join).
-    The keys column must have the key's type; integer-domain keys
-    compare in the int64 codec domain (ts as epoch-micros, date as
-    days — the same domain the bounds are stored in).
-
-    The block prune is SIZE-GATED (``grid_min_blocks``): at or above
-    the gate, probe keys and block bound intervals are both mapped to
-    COARSE BUCKETS of a shared key-domain grid (string keys through an
-    order-preserving 7-byte big-endian prefix surrogate), the bucket
-    is the equi key of a BroadcastHashJoin and the true containment
-    check rides along as the residual condition, so the prune costs
-    O(blocks x spanned_buckets) hash probes instead of O(blocks x
-    keys) comparisons — the 100 TB path (10^7 blocks x 10^5 keys
-    would be 10^12 nested-loop compares). Wide blocks (> _LJ_SPAN_CAP
-    buckets — they overlap nearly any probe anyway) and blocks
-    without bounds skip straight to the candidate set; the walk runs
-    on a metadata projection, reduces to a (bucket, block_idx)
-    candidate-id set, and joins back broadcast, so the blocks table
-    itself never shuffles. BELOW the gate the direct range-condition
-    semi-join wins: its nested loop touches <= grid_min_blocks
-    metadata rows and costs no extra exchange — strategy switching by
-    table size, the same move AQE makes for joins."""
+                columns: Optional[list[str]] = None) -> DataFrame:
+    """Distributed IN: the rows whose lead key is in the first column
+    of a keys DATAFRAME, as ``columns`` (all when None). Its distinct
+    non-null keys are read in the key's comparison domain (int64, ts
+    as epoch-micros, date as days, or the string) and answered by
+    :func:`lookup_in`, so the blocks table is never joined or
+    shuffled. The keys must be an entity list, not a second fact
+    table: they are held in the driver, as a broadcast join's relation
+    is (BroadcastExchange collects it there)."""
     kind = dict(schema_kinds)[key_col]
     if kind not in (K_STR, K_TS, K_DATE, K_I8, K_I16, K_I32, K_I64,
                     K_BOOL):
         raise ValueError(
             f"lookup_join does not support lead-key kind {kind!r}")
-    bounds = ("key_slo", "key_shi") if kind == K_STR \
-        else ("key_lo", "key_hi")
-    probe = F.broadcast(keys.select(keys.columns[0])
-                        .withColumnRenamed(keys.columns[0], "_probe_k")
-                        .distinct())
-    kc = F.col("_probe_k")
-    k_dom = {K_STR: kc.cast("string"),
-             K_TS: F.unix_micros(kc.cast("timestamp")),
-             K_DATE: F.datediff(kc.cast("date"), F.lit("1970-01-01"))
-             }.get(kind, kc.cast("long"))
-    cand = _bucketed_block_prune(blocks, bounds, kind, probe, k_dom,
-                                 grid_min_blocks) \
-        if bounds[0] in blocks.columns else blocks
-    decode_cols = columns
-    if columns is not None and key_col not in columns:
-        decode_cols = [key_col] + columns
-    dec = decode_df(cand, schema_kinds, columns=decode_cols)
-    out = dec.join(probe, dec[key_col] == F.col("_probe_k"), "left_semi")
-    if columns is not None and key_col not in columns:
-        out = out.select(*columns)
-    return out
+    kc = _q(keys.columns[0])
+    k_dom = {K_STR: f"CAST({kc} AS STRING)",
+             K_TS: f"unix_micros(CAST({kc} AS TIMESTAMP))",
+             K_DATE: f"unix_date(CAST({kc} AS DATE))"
+             }.get(kind, f"CAST({kc} AS BIGINT)")
+    values = keys.selectExpr(f"{k_dom} AS k").distinct().dropna() \
+        .toArrow().column(0).to_pylist()
+    if not values:
+        return _scan(blocks, schema_kinds, None, [], [], columns)
+    return lookup_in(blocks, schema_kinds, key_col, values, columns)
 
 
 def _topk_threshold(walk, k: int):

@@ -398,28 +398,38 @@ def decode_str_block(blob: bytes, n: int) -> pd.Series:
     return decode_str_block_arrow(blob, n).to_pandas()
 
 
-def str_block_eq_indices(blob: bytes, n: int, value) -> np.ndarray:
-    """Row indices where the block equals ``value`` (a str, or a
-    list/tuple of str for the IN form), touching as little data as the
-    codec allows: DICT blocks compare the (small) dictionary and scan
-    only the int code stream for the matching code set; RLE blocks
-    compare the dictionary and expand only the matching RUNS into
-    index ranges (non-matching rows never materialize in any form);
-    PLAIN/FSST/WSDICT decode and compare C++-side. The equality-probe
-    analogue of the reference's find
-    (`/root/reference/oroch/integer_array.h:192-208`) for string
-    payloads."""
-    tag = blob[0]
-    values = list(value) if isinstance(value, (list, tuple)) else [value]
+def in_sorted(x: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """Mask of the entries of ``x`` equal to one of ``values``, which
+    ascend: one binary search per entry, so the set is never hashed or
+    rebuilt per block. A NaN entry matches nothing."""
+    if not len(values):
+        return np.zeros(len(x), dtype=bool)
+    pos = np.minimum(np.searchsorted(values, x), len(values) - 1)
+    return values[pos] == x
 
-    def _dict_hits(dict_arr: pa.Array) -> np.ndarray:
-        m = pc.is_in(dict_arr, value_set=pa.array(values,
-                                                  type=dict_arr.type))
-        return np.flatnonzero(m.to_numpy(zero_copy_only=False))
+
+def str_block_eq_indices(blob: bytes, n: int, value) -> np.ndarray:
+    """Row indices where the block equals ``value`` (a str, or for the
+    IN form an ascending sequence of str), touching as little data as
+    the codec allows: DICT blocks search the (small) dictionary and
+    scan only the int code stream for the matching code set; RLE
+    blocks search the dictionary and expand only the matching RUNS
+    into index ranges (non-matching rows never materialize in any
+    form); PLAIN/FSST/WSDICT decode and search every row
+    (:func:`in_sorted`). The equality-probe analogue of the
+    reference's find (`/root/reference/oroch/integer_array.h:192-208`)
+    for string payloads."""
+    tag = blob[0]
+    values = np.asarray([value] if isinstance(value, str) else value,
+                        dtype=object)
+
+    def _hits(arr: pa.Array) -> np.ndarray:  # blocks hold no null
+        return np.flatnonzero(in_sorted(arr.to_numpy(zero_copy_only=False),
+                                        values))
 
     if tag == DICT_STR:
         dict_arr, pos = _read_dict_section(blob, 1)
-        hits = _dict_hits(dict_arr)
+        hits = _hits(dict_arr)
         if not len(hits):
             return np.empty(0, dtype=np.int64)
         codes = ic.decode_block(blob[pos:], n, width=4)
@@ -431,7 +441,7 @@ def str_block_eq_indices(blob: bytes, n: int, value) -> np.ndarray:
         rl_blob, pos = _read_sized(blob, pos)
         run_len = ic.decode_block(rl_blob, nruns, width=4)
         dict_arr, pos = _read_dict_section(blob, pos)
-        hits = _dict_hits(dict_arr)
+        hits = _hits(dict_arr)
         if not len(hits):
             return np.empty(0, dtype=np.int64)
         run_idx = ic.decode_block(blob[pos:], nruns, width=4)
@@ -442,10 +452,7 @@ def str_block_eq_indices(blob: bytes, n: int, value) -> np.ndarray:
             return np.empty(0, dtype=np.int64)
         return np.concatenate([np.arange(starts[r], starts[r] + run_len[r])
                                for r in hit])
-    arr = decode_str_block_arrow(blob, n)
-    m = pc.is_in(arr, value_set=pa.array(values, type=arr.type))
-    return np.flatnonzero(pc.fill_null(m, False)
-                          .to_numpy(zero_copy_only=False))
+    return _hits(decode_str_block_arrow(blob, n))
 
 
 def str_block_value_counts(blob: bytes, n: int

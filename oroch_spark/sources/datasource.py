@@ -126,7 +126,7 @@ from pyspark.sql.datasource import (
 )
 
 from .. import engine
-from ..engine import _KeyPred
+from ..engine import _InSet, _KeyPred
 
 SIDECAR = "_oroch_table.json"
 _BATCH_DIR = "_batches"   # streaming sink's per-batch manifests
@@ -348,7 +348,7 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                 # stay row-level only.
                 if isinstance(g, EqualTo):
                     pred.neq = (pred.neq or set()) | {d}
-                    raw.append(("neq", (d,)))
+                    raw.append(("neq", _InSet((d,))))
                 else:
                     raw.append(("nseq", (d,)))
                 accepted.append(f)
@@ -358,7 +358,7 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                     unsupported.append(f)
                     continue
                 pred.neq = (pred.neq or set()) | set(ds)
-                raw.append(("neq", tuple(ds)))
+                raw.append(("neq", _InSet(ds)))
                 accepted.append(f)
             elif isinstance(g, EqualNullSafe):  # value is None
                 raw.append(("notnull", None))
@@ -386,16 +386,16 @@ def _translate(filters: list["Filter"], cols_ok: set[str]):
                 continue
             pred.values = [d] if pred.values is None \
                 else [x for x in pred.values if x == d]
-            raw.append(("in", (d,)))
+            raw.append(("in", _InSet((d,))))
             accepted.append(f)
         elif isinstance(f, In):
             ds = [_domain_of(v) for v in f.value]
             if any(d is None for d in ds):
                 unsupported.append(f)
                 continue
-            pred.values = ds if pred.values is None \
-                else [x for x in pred.values if x in set(ds)]
-            raw.append(("in", tuple(ds)))
+            pred.values = sorted(set(ds) if pred.values is None
+                                 else set(pred.values) & set(ds))
+            raw.append(("in", _InSet(ds)))
             accepted.append(f)
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual,
                             LessThan, LessThanOrEqual)):
@@ -1312,14 +1312,19 @@ def stream_sink_blocks(spark, path: str, as_of_batch: int | None = None):
     ``as_of_batch`` time-travels: only batches <= it are visible —
     batch manifests double as immutable snapshots (the Iceberg
     as-of-snapshot read against this table layout)."""
-    from pyspark.sql import functions as F
-
     batches = []
     for mf in _manifest_paths(path):
         with open(mf) as f:
             batches.append(json.load(f))
     if as_of_batch is not None:
         batches = [b for b in batches if b["batch_id"] <= as_of_batch]
+    return _batch_blocks(spark, path, batches)
+
+
+def _batch_blocks(spark, path: str, batches: list[dict]):
+    """The blocks of the sink's manifests ``batches``, by batch id."""
+    from pyspark.sql import functions as F
+
     pairs = [(f, b["batch_id"]) for b in batches for f in b["files"]]
     if not pairs:
         raise FileNotFoundError(f"no committed stream batches in {path}")
@@ -1372,9 +1377,10 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
 
     Compaction may run WHILE the stream keeps committing: the version
     swap happens under the sink's write lock against a re-listed
-    manifest set, so a batch committed during the (long, unlocked)
-    re-encode survives — it simply isn't folded this round. Readers
-    are safe any time."""
+    manifest set, and only the manifests listed at the start fold, so
+    a batch committed after that listing (during the long, unlocked
+    re-encode, say) survives — it simply isn't folded this round.
+    Readers are safe any time."""
     from pyspark.sql import functions as F
 
     from ..streaming import incremental as inc
@@ -1404,12 +1410,9 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
     if not folded_mans:
         raise ValueError(f"nothing to compact below "
                          f"batch {retain_from_batch} in {path}")
-    as_of = None if retain_from_batch is None else retain_from_batch - 1
-    blocks = stream_sink_blocks(spark, path, as_of_batch=as_of)
-    top = blocks.agg({"batch_id": "max"}).collect()[0][0]
-    if top is None:
-        raise ValueError(f"nothing to compact in {path}: the folded "
-                         "batches hold no committed rows")
+    # fold the listed manifests only: the publish keeps later batches
+    blocks = _batch_blocks(spark, path, [m for _, m in folded_mans])
+    top = max(int(m["batch_id"]) for _, m in folded_mans)
     keep_tomb = tombstone_col is not None and retain_from_batch is not None
     if latest_wins:
         rows = inc.read_latest(spark, None, kinds, key_cols,

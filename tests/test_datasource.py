@@ -899,6 +899,41 @@ def test_null_tests_on_legacy_descriptors(dsspark, tmp_path):
         assert back.filter(cond).count() == src.filter(cond).count() > 0
 
 
+def test_is_null_on_a_legacy_nullable_bin_column(dsspark, tmp_path):
+    """A nullable bin column whose descriptor has ``z`` but no ``nc``
+    sends its blocks to the row evaluator, which answers IS NULL and
+    IS NOT NULL from the validity bitmap alone (a bin value is not
+    comparable): ``null_count`` and ``format("oroch")`` count what the
+    source counts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "legacy_bin")
+    src = dsspark.range(0, 3000).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 7 == 0, None)
+        .otherwise(F.col("id").cast("string").cast("binary")).alias("b"))
+    src.coalesce(1).write.format("oroch").mode("overwrite") \
+        .option("key_cols", "k").option("block_rows", "512").save(path)
+    for f in glob.glob(os.path.join(path, "*.parquet")):
+        t = pq.read_table(f)
+        descs = [json.dumps({"cols": [
+            {k: v for k, v in c.items() if not (k == "nc" and c["n"] == "b")}
+            for c in json.loads(d)["cols"]]}) for d in t["desc"].to_pylist()]
+        assert descs != t["desc"].to_pylist()
+        pq.write_table(t.set_column(t.schema.get_field_index("desc"),
+                                    "desc", pa.array(descs)), f)
+    kinds = ds.read_sidecar(path)["kinds"]
+    n_null = src.filter(F.col("b").isNull()).count()
+    assert n_null == 429
+    got = engine.null_count(dsspark.read.parquet(path), kinds, "b")
+    assert got.first().n_nulls == n_null
+    back = dsspark.read.format("oroch").load(path)
+    for cond in (F.col("b").isNull(), F.col("b").isNotNull(),
+                 F.col("b").isNull() & (F.col("k") < 1000)):
+        assert back.filter(cond).count() == src.filter(cond).count() > 0
+
+
 def test_read_of_a_file_rewritten_since_planning_raises(dsspark, tmp_path):
     """A partition names rows of a row group by position; when its file
     is rewritten between planning and the read, the read raises an

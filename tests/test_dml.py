@@ -549,3 +549,26 @@ def test_small_frames_are_local_relations(spark, sink):
     assert "LocalTableScan" in plan
     assert {r.k: r._change_type for r in feed.collect()} \
         == {k: "insert" for k in range(20)}
+
+
+def test_compact_folds_only_the_manifests_it_listed(spark, sink,
+                                                    monkeypatch):
+    """A batch committed between compact_sink's manifest listing and
+    its read of the folded blocks is neither folded nor lost: it stays
+    live on its own, so a plain read holds its row once."""
+    real, fired = ds.read_sidecar, []
+
+    def commit_then_read(path):
+        if not fired:  # once, right after compact_sink lists manifests
+            fired.append(dml.upsert(spark, sink, spark.createDataFrame(
+                [Row(k=100, v="late", score=1)], SCHEMA)))
+        return real(path)
+
+    monkeypatch.setattr(ds, "read_sidecar", commit_then_read)
+    man = ds.compact_sink(spark, sink, n_buckets=2, latest_wins=False)
+    monkeypatch.undo()
+    read = lambda: spark.read.format("oroch").load(sink)
+    assert read().filter("k = 100").count() == 1
+    assert read().count() == 20 + 1 + 1
+    late = fired[0]["batch_id"]
+    assert man["batch_id"] < late and late in dml._batch_ids(sink)

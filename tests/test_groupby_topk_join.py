@@ -159,41 +159,47 @@ def test_lookup_join_projection(spark, events):
     assert got and got[0].asDict().keys() == {"user_id"}
 
 
-def test_lookup_join_prunes_blocks(spark):
-    """The bucketed prune must keep only blocks whose range can
-    contain a probe key: single sorted bucket, 16 disjoint blocks,
-    two point keys in the same block -> 1 candidate."""
+def test_lookup_join_prunes_blocks(spark, monkeypatch):
+    """The block index keeps only blocks whose range can contain a
+    probe key: single sorted bucket, 16 disjoint blocks, two point keys
+    in the same block -> 1 kept block reaches the scan."""
     src = spark.createDataFrame([Row(k=i, v=i) for i in range(4096)])
     blocks = engine.encode_df(src, ["k"], n_buckets=1,
                               block_rows=256).persist()
-    total = blocks.count()
+    assert blocks.count() == 16
+    kept, scan = [], engine._scan
+
+    def spy(blocks, schema_kinds, ix, keep, *a, **kw):
+        kept.append(list(keep))
+        return scan(blocks, schema_kinds, ix, keep, *a, **kw)
+
+    monkeypatch.setattr(engine, "_scan", spy)
     keys = spark.createDataFrame([Row(k=1), Row(k=2)])
-    probe = F.broadcast(keys.selectExpr("k AS _probe_k").distinct())
-    for gate in (0, 10**9):   # grid path AND direct-semi path
-        cand = engine._bucketed_block_prune(
-            blocks, ("key_lo", "key_hi"), "i64", probe,
-            F.col("_probe_k").cast("long"), grid_min_blocks=gate).count()
-        assert total == 16 and cand == 1, gate
+    got = engine.lookup_join(blocks, engine.column_kinds(src.schema), "k",
+                             keys).collect()
+    assert len(kept) == 1 and len(kept[0]) == 1
+    assert sorted((r.k, r.v) for r in got) == [(1, 1), (2, 2)]
     blocks.unpersist()
 
 
 def test_lookup_join_plan_has_no_nested_loop(spark):
-    """Round-4 plan pin: ABOVE the size gate (here: 1250 blocks >
-    _LJ_GRID_MIN_BLOCKS with the default gate), a large probe list
-    must NOT prune via BroadcastNestedLoopJoin (O(blocks x keys));
-    the bucket grid turns it into BroadcastHashJoins, and the blocks
-    table never shuffles."""
+    """A large probe list over 1,250 blocks: the exact answer, and the
+    blocks table is neither joined nor shuffled — the block index
+    prunes and the row evaluator matches, so the plan has no
+    BroadcastNestedLoopJoin and no Exchange over the blocks scan."""
     src = spark.createDataFrame([Row(k=i, v=i) for i in range(20000)])
+    # checkpointed: the plan shows the blocks as one scan, not the
+    # encode's own exchange
     blocks = engine.encode_df(src, ["k"], n_buckets=2,
-                              block_rows=16).persist()
-    assert blocks.count() >= engine._LJ_GRID_MIN_BLOCKS
+                              block_rows=16).localCheckpoint()
+    assert blocks.count() >= 1250
     kinds = engine.column_kinds(src.schema)
     keys = spark.range(0, 100000, 3).withColumnRenamed("id", "k")
     out = engine.lookup_join(blocks, kinds, "k", keys)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
-    assert out.count() == len(range(0, 20000, 3))
-    blocks.unpersist()
+    assert "Exchange" not in plan and "Join" not in plan
+    assert sorted(r.k for r in out.collect()) == list(range(0, 20000, 3))
 
 
 def test_lookup_join_wide_and_null_bound_blocks_kept(spark):
@@ -227,6 +233,47 @@ def test_lookup_join_string_key(spark):
                                   Row(k="missing")])
     got = engine.lookup_join(blocks, kinds, "name", keys).collect()
     assert sorted(r["v"] for r in got) == [7, 999]
+
+
+def test_lookup_join_key_kinds_match_semi_join(spark, tmp_path):
+    """ts, date, bool, i32 and string lead keys against a plain Spark
+    semi-join: duplicate and null probe keys, a long probe past the
+    i32 range, a projection, and an empty probe (an empty frame with
+    the output schema)."""
+    import datetime as dt
+
+    src = spark.createDataFrame(
+        [(i, f"s{i:03d}", dt.datetime(2024, 1, 1) + dt.timedelta(minutes=7 * i),
+          dt.date(2020, 1, 1) + dt.timedelta(days=i), i % 3 == 0, i * 10)
+         for i in range(300)],
+        "i int, s string, ts timestamp, d date, b boolean, v long")
+    kinds = engine.column_kinds(src.schema)
+    t0, d0 = dt.datetime(2024, 1, 1), dt.date(2020, 1, 1)
+    cases = [
+        ("i", "k bigint", [5, 5, None, 299, 2 ** 40, -(2 ** 40), -7], None),
+        ("s", "k string", ["s005", "s005", None, "s299", "zzz"], ["v"]),
+        ("ts", "k timestamp", [t0, t0, None, t0 + dt.timedelta(minutes=70),
+                               t0 + dt.timedelta(minutes=71)], ["i", "ts"]),
+        ("d", "k date", [d0 + dt.timedelta(days=9), None,
+                         d0 + dt.timedelta(days=9), d0 - dt.timedelta(days=1)],
+         None),
+        ("b", "k boolean", [True, None, True], ["v"]),
+    ]
+    for key, ddl, probe, cols in cases:
+        path = str(tmp_path / key)
+        engine.encode_df(src, [key], n_buckets=2, block_rows=32) \
+            .write.mode("overwrite").parquet(path)
+        blocks = spark.read.parquet(path)
+        keys = spark.createDataFrame([(p,) for p in probe], ddl)
+        exp = src.join(keys, src[key] == keys["k"], "left_semi")
+        if cols is not None:
+            exp = exp.select(*cols)
+        for k in (keys, keys.filter("k IS NULL")):
+            got = engine.lookup_join(blocks, kinds, key, k, columns=cols)
+            assert got.schema == exp.schema, key
+            want = sorted(map(tuple, exp.collect())) if k is keys else []
+            assert sorted(map(tuple, got.collect())) == want, key
+            assert want or k is not keys
 
 
 # --- topk_key --------------------------------------------------------------

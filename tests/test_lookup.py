@@ -140,3 +140,75 @@ def test_lookup_nullable_huge_int64_keys_exact(spark):
     assert len(got) == 1 and got[0]["v"] == "b"
     got = engine.lookup_in(blocks, kinds, "k", [a, b]).collect()
     assert sorted(r["v"] for r in got) == ["a", "b"]
+
+
+def test_large_in_lists_match_brute_force(spark, tmp_path):
+    """20,000-value IN lists through ``lookup_in`` (on each lead key)
+    and ``format("oroch")`` ``isin`` and NOT IN (on every column of one
+    table) keep exactly the rows a Python brute force keeps under
+    Spark's semantics (a null row never passes; NaN IN (.., NaN) does):
+    non-nullable string columns in dictionary and plain blocks, a
+    nullable string column, an int column and a float column with NaN
+    and nulls."""
+    import re
+
+    from oroch_spark.kernels import strings as sc
+    from oroch_spark.sources import datasource as ds
+
+    src = spark.range(4000).selectExpr(
+        "id AS k", "concat('c', id % 40) AS sd",
+        "concat('u', (id * 7919) % 100003) AS sp",
+        "CASE WHEN id % 5 = 0 THEN NULL ELSE concat('n', id % 300) END AS sn",
+        "CASE WHEN id % 11 = 0 THEN double('NaN') WHEN id % 13 = 0 "
+        "THEN NULL ELSE id / 4.0 END AS f")
+    kinds = engine.column_kinds(src.schema)
+    probes = {"k": list(range(-10000, 30000, 2)),
+              "sd": [f"c{j}" for j in range(1, 40000, 2)],
+              "sp": [f"u{j}" for j in range(0, 200000, 10)],
+              "sn": [f"n{j}" for j in range(0, 40000, 2)],
+              "f": list(range(0, 20000))}
+    assert all(len(v) == 20000 for v in probes.values())
+    rows = src.toArrow()
+    codecs = {c: sc.encode_str_block(rows[c].combine_chunks()[:256])[1]
+              .codec for c in ("sd", "sp")}
+    assert codecs == {"sd": sc.DICT_STR, "sp": sc.PLAIN_STR}
+    cols = rows.to_pydict()
+
+    def brute(c, vals, negate=False):
+        s, nan = set(vals), any(v != v for v in vals)
+        return sorted(k for k, x in zip(cols["k"], cols[c]) if x is not None
+                      and (x in s or nan and x != x) != negate)
+
+    def sql_in(c, vals):
+        lits = ", ".join(f"'{v}'" if isinstance(v, str)
+                         else "double('NaN')" if v != v else str(v)
+                         for v in vals)
+        return f"{c} IN ({lits})"
+
+    def ks(df):
+        return sorted(r.k for r in df.select("k").collect())
+
+    for c, vals in probes.items():
+        exp = brute(c, vals)
+        assert 0 < len(exp) < 4000, c
+        path = str(tmp_path / f"lead_{c}")
+        engine.encode_df(src, [c], n_buckets=2, block_rows=256) \
+            .write.mode("overwrite").parquet(path)
+        got = engine.lookup_in(spark.read.parquet(path), kinds, c, vals,
+                               columns=["k"])
+        assert ks(got) == exp, c
+
+    ds.register(spark)
+    path = str(tmp_path / "oroch")
+    src.coalesce(1).write.format("oroch").mode("overwrite") \
+        .option("key_cols", "k").option("block_rows", "256").save(path)
+    probes["f"] = [v / 4.0 for v in range(19999)] + [float("nan")]
+    for c, vals in probes.items():
+        for negate in (False, True):
+            cond = sql_in(c, vals)
+            got = spark.read.format("oroch").load(path) \
+                .filter(f"NOT ({cond})" if negate else cond)
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            # the reader runs every IN but the float one (Spark's)
+            assert bool(re.search(r"\bFilter\b", plan)) == (c == "f"), c
+            assert ks(got) == brute(c, vals, negate), (c, negate)

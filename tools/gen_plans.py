@@ -220,25 +220,18 @@ def main() -> None:
             engine.column_kinds(events.schema), "user_id", 2, 8,
             "event_id"))))
 
-    sections.append((
-        "lookup_join (distributed IN: bucket-grid prune, no nested loop)",
-        "The keys DataFrame is broadcast, never collected. The block "
-        "prune equi-joins coarse key-domain buckets (BroadcastHashJoin; "
-        "containment is the residual condition) on a metadata "
-        "projection, reduces to a (bucket, block_idx) candidate-id set, "
-        "and joins back broadcast; semi-join #2 exact-matches the "
-        "decoded key. No BroadcastNestedLoopJoin anywhere; the blocks "
-        "table never shuffles. The grid's origin and width come from "
-        "the block index. (Grid forced here — tables under "
-        "engine._LJ_GRID_MIN_BLOCKS blocks, like this sf0.01 one, "
-        "deliberately keep the direct range semi-join: its nested loop "
-        "over <=1024 metadata rows is cheaper than three extra "
-        "exchanges. This plan is the 10^6+-block path.)",
-        plan_of(engine.lookup_join(
-            spark.read.parquet(bdir),
-            engine.column_kinds(events.schema), "event_id",
+    bare_and_other(
+        "lookup_join (the probe's distinct keys answered as lookup_in)",
+        "One job reads the keys' distinct values to the driver (an "
+        "entity list, as a broadcast join's relation is). The block "
+        "index keeps the blocks whose bounds hold a key; they fit one "
+        "input split, so the select kernel runs in-process.",
+        "The mapInArrow select kernel matches the kept blocks' rows: "
+        "no join and no exchange over the blocks table.",
+        bdir, lambda b: engine.lookup_join(
+            b, ev_kinds, "event_id",
             events.filter(F.col("event_type") == "signup")
-            .select("event_id"), grid_min_blocks=0))))
+            .select("event_id")))
 
     sections.append((
         "topk_key (ORDER BY key LIMIT k, zone-pruned; bare scan, "
