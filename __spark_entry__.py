@@ -228,8 +228,8 @@ def _q_agg_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed IN (`engine.lookup_join`): a keys DATAFRAME's
-    distinct keys (an entity list, read once into the driver as a
-    broadcast join's relation would be) answered as `lookup_in` — the
+    distinct keys (an entity list, read once into the driver)
+    answered as `lookup_in` — the
     block index prunes, the row evaluator matches — the batched lookup
     an entity-fetch makes at 100 TB."""
     src = _read(spark, sf_dir, "events")

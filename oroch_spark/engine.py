@@ -27,9 +27,10 @@ Scale design (the 10^12-turn story):
 - **No collect() of table rows** in the data path. Query plans are
   built with two bounded planning reads: ``zorder_key``'s one
   min/max row and the top-k threshold (at most k ``(n, bound)``
-  metadata rows, never a payload); ``lookup_join`` holds its probe's
-  distinct keys, as a broadcast join would. The resume path's
-  pending-bucket id list is bounded by n_buckets.
+  metadata rows, never a payload); ``lookup_join`` collects its
+  probe's distinct keys, so its probe must be an entity list (33,334
+  keys is the largest measured). The resume path's pending-bucket id
+  list is bounded by n_buckets.
 - **Block index**: against a bare parquet scan of a persisted blocks
   table, the point-query builders read its non-payload columns on the
   driver (``_BlockIndex``, checked against the files on every use),
@@ -1329,8 +1330,7 @@ class _BlockReader:
                 else None
             if kb is not None:
                 for vs in (v for op, v in tests if op == "in"):
-                    hit = sc.str_block_eq_indices(
-                        kb, self.n, vs.searched("string"))
+                    hit = sc.str_block_eq_indices(kb, self.n, vs, vs.arrow)
                     keep &= np.bincount(hit, minlength=self.n) > 0
                 tests = [(op, v) for op, v in tests if op != "in"]
             if not tests:
@@ -1383,9 +1383,7 @@ def _row_test(vals: "pa.Array", op: str, v) -> np.ndarray:
         m = pc.invert(pc.fill_null(
             pc.equal(vals, pa.scalar(v[0], vals.type)), False))
     elif pos == "in":
-        x = vals.fill_null(b"" if vals.type == pa.binary() else 0)
-        m = pa.array(sc.in_sorted(x.to_numpy(zero_copy_only=False),
-                                  v.searched(vals.type)))
+        m = pa.array(sc.in_set(vals, v, v.arrow))
     elif pos == "tok":  # grep -w: v is one [0-9A-Za-z_]+ word
         m = pc.match_substring_regex(
             vals, pattern=f"(^|{_TOKEN_SPLIT_RE}){v}({_TOKEN_SPLIT_RE}|$)")
@@ -1979,29 +1977,36 @@ def _check_agg_kind(op: str, kind: str) -> None:
 # ---------------------------------------------------------------------------
 
 class _InSet(tuple):
-    """The distinct values of an IN or NOT IN test, ascending, as
-    :func:`_stats_overlap` bisects them and the row evaluator searches
-    them (``strings.in_sorted``): no block sorts, hashes or converts
-    the set. Its NumPy forms are built once, where it runs; never
-    pickled."""
+    """The distinct values of an IN or NOT IN test (ints or strs),
+    ascending, as :func:`_stats_overlap` bisects them. A block's rows
+    match only the values inside the block's min..max
+    (``strings.in_set``): no block sorts the set or hashes all of it.
+    Its Arrow form is built once where it runs, never pickled."""
 
     def __new__(cls, values):
         return super().__new__(cls, sorted(set(values)))
 
+    @classmethod
+    def distinct(cls, col: "pa.ChunkedArray") -> "_InSet":
+        """From a pyarrow column of distinct non-null values."""
+        import pyarrow.compute as pc
+
+        return tuple.__new__(cls, col.take(pc.sort_indices(col)).to_pylist())
+
     def __reduce__(self):
         return _InSet, (tuple(self),)
 
-    def searched(self, arrow_type) -> np.ndarray:
-        """The values as the array a column of ``arrow_type`` (as read by
-        :meth:`_BlockReader.codes`; ``"string"`` for a string block's
-        values) is searched in: UTF-8 bytes for binary, else as is."""
-        key = str(arrow_type)
-        if key not in self.__dict__:
-            self.__dict__[key] = np.array(
-                [v.encode() for v in self] if key == "binary" else self,
-                dtype=object if key in ("string", "binary")
-                else arrow_type.to_pandas_dtype())
-        return self.__dict__[key]
+    @property
+    def arrow(self) -> "pa.Array":
+        """The values as a pyarrow array: int64, or large_string as a
+        string block decodes."""
+        import pyarrow as pa
+
+        if "arrow" not in self.__dict__:
+            self.__dict__["arrow"] = pa.array(
+                self, pa.large_string() if self and isinstance(self[0], str)
+                else pa.int64())
+        return self.__dict__["arrow"]
 
 
 @dataclass
@@ -2454,8 +2459,8 @@ class _BlockIndex:
             f"({', '.join(map(_sql_lit, sorted(js)))}))"
             for b, js in sorted(by_bucket.items())) or "FALSE")
 
-    def local(self, blocks: DataFrame,
-              keep: list[int]) -> Optional[list["pa.RecordBatch"]]:
+    def local(self, blocks: DataFrame, keep: list[int],
+              take=None) -> Optional[list["pa.RecordBatch"]]:
         """The ``n``/``desc``/``payload`` of the blocks at positions
         ``keep``, read on the driver for a builder to run its kernel
         in-process, with no Spark job. Only a scanned index reads them,
@@ -2463,9 +2468,11 @@ class _BlockIndex:
         input split: their block-column bytes at most the split size
         Spark would cut this scan into (:func:`_split_bytes`), so the
         driver reads what one task would. Each such row group is read
-        and cut to the kept rows by position. None — take the Spark
-        path — for a collected index, a larger read, or files changed
-        since the index."""
+        and cut to the kept rows by position; ``take``, when given, sees
+        each row group's batches as they are read and stops the read by
+        returning False. None — take the Spark path — for a collected
+        index, a larger read, a stopped one, or files changed since the
+        index."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -2481,7 +2488,10 @@ class _BlockIndex:
             for f, g, rows, _ in where:
                 if f not in pfs:
                     pfs[f] = pq.ParquetFile(self._files[f])
-                out += _read_rows(pfs[f], g, rows).to_batches()
+                got = _read_rows(pfs[f], g, rows).to_batches()
+                if take is not None and not take(got):
+                    return None
+                out += got
             return out
 
         try:
@@ -3106,14 +3116,12 @@ def _column_at_indices(blob: bytes, kind: str, n: int, arrow_type,
 
 
 def _selected(batches, tests: list[tuple]) -> Iterator[tuple]:
-    """``(reader, row positions)`` of each block of ``batches`` with a
-    row that passes the ``(col, _KeyPred)`` row ``tests``
-    (:meth:`_BlockReader.select`)."""
+    """``(reader, row positions)`` of each block of ``batches``: the
+    rows that pass the ``(col, _KeyPred)`` row ``tests``
+    (:meth:`_BlockReader.select`), maybe none."""
     for batch in batches:
         for blk in _read_blocks(batch):
-            idxs = blk.select(tests)
-            if len(idxs):
-                yield blk, idxs
+            yield blk, blk.select(tests)
 
 
 def make_select_fn(tests: list[tuple], arrow_schema_bytes: bytes):
@@ -3129,7 +3137,8 @@ def make_select_fn(tests: list[tuple], arrow_schema_bytes: bytes):
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
         for blk, idxs in _selected(batches, tests):
-            yield blk.batch(out_schema, idxs)
+            if len(idxs):
+                yield blk.batch(out_schema, idxs)
 
     return select_blocks
 
@@ -3142,8 +3151,11 @@ def _scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     nothing is kept; on the driver when :meth:`_BlockIndex.local` reads
     the blocks and at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
     rows pass (the one Arrow batch ``createDataFrame`` makes a
-    partition of: the driver stops selecting once more do, before it
-    fetches a column); else :func:`make_select_fn` in one job."""
+    partition of); else :func:`make_select_fn` in one job. The driver
+    gives up, before it reads the next row group or fetches a column,
+    as soon as the rows passed so far, scaled from the blocks selected
+    to all kept rows, are more than that batch: a wide answer costs it
+    about a block, not a batch, of selection."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     spark = blocks.sparkSession
@@ -3154,26 +3166,24 @@ def _scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     if not keep:
         return _local_df(spark, out_schema)
     arrow = to_arrow_schema(out_schema)
-    got = ix.local(blocks, keep)
-    picks = None if got is None else _upto(_selected(got, tests),
-                                           _batch_rows(spark))
-    if picks is not None:
+    limit, rows = _batch_rows(spark), sum(ix.n[i] for i in keep)
+    picks, seen, hit = [], 0, 0
+
+    def take(batches) -> bool:  # False once the answer looks too wide
+        nonlocal seen, hit
+        for blk, idxs in _selected(batches, tests):
+            seen, hit = seen + blk.n, hit + len(idxs)
+            if hit * rows > limit * seen:
+                return False
+            if len(idxs):
+                picks.append((blk, idxs))
+        return True
+
+    if ix.local(blocks, keep, take) is not None:
         return _arrow_df(spark, out_schema,
                          [blk.batch(arrow, idxs) for blk, idxs in picks])
     fn = make_select_fn(tests, arrow.serialize().to_pybytes())
     return ix.narrow(blocks, keep).mapInArrow(fn, schema=out_schema)
-
-
-def _upto(picks, limit: int) -> Optional[list]:
-    """The ``(reader, row positions)`` ``picks`` as a list; None as
-    soon as they pass ``limit`` rows."""
-    out, n = [], 0
-    for blk, idxs in picks:
-        n += len(idxs)
-        if n > limit:
-            return None
-        out.append((blk, idxs))
-    return out
 
 
 def lookup(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
@@ -3195,18 +3205,20 @@ def lookup_in(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     ``columns`` (all when None), in one pass over the blocks table. The
     probe set is sorted once (:class:`_InSet`): the block index keeps
     the blocks whose bounds hold a value, and each kept block decodes
-    its key column ONCE and binary-searches the set (a string block
-    its dictionary): O(kept blocks x log keys). Extension beyond the
-    reference's single-value ``find`` (`integer_array.h:192-208`) —
-    the shape an analyst's batch entity-fetch takes at 100 TB."""
-    values = [v if isinstance(v, str) else int(v) for v in values]
-    if not values:
-        raise ValueError("lookup_in needs at least one probe value")
-    if len({type(v) for v in values}) > 1:
-        raise ValueError("lookup_in probe values must share one type")
+    its key column ONCE and matches the values inside its own min..max
+    (a string block its dictionary): O(kept blocks x log keys) to find
+    them. Extension beyond the reference's single-value ``find``
+    (`integer_array.h:192-208`) — the shape an analyst's batch
+    entity-fetch takes at 100 TB."""
+    if not isinstance(values, _InSet):  # lookup_join's set is checked
+        values = [v if isinstance(v, str) else int(v) for v in values]
+        if not values:
+            raise ValueError("lookup_in needs at least one probe value")
+        if len({type(v) for v in values}) > 1:
+            raise ValueError("lookup_in probe values must share one type")
+        values = _InSet(values)
     blocks, ix = _indexed(blocks, desc=False)
-    vs = _InSet(values)
-    tests = [(key_col, _KeyPred(values=vs, raw=(("in", vs),)))]
+    tests = [(key_col, _KeyPred(values=values, raw=(("in", values),)))]
     return _scan(blocks, schema_kinds, ix, ix.where(tests, lead=True),
                  tests, columns)
 
@@ -3449,28 +3461,31 @@ def lookup_join(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
                 key_col: str, keys: DataFrame,
                 columns: Optional[list[str]] = None) -> DataFrame:
     """Distributed IN: the rows whose lead key is in the first column
-    of a keys DATAFRAME, as ``columns`` (all when None). Its distinct
-    non-null keys are read in the key's comparison domain (int64, ts
-    as epoch-micros, date as days, or the string) and answered by
-    :func:`lookup_in`, so the blocks table is never joined or
-    shuffled. The keys must be an entity list, not a second fact
-    table: they are held in the driver, as a broadcast join's relation
-    is (BroadcastExchange collects it there)."""
-    kind = dict(schema_kinds)[key_col]
-    if kind not in (K_STR, K_TS, K_DATE, K_I8, K_I16, K_I32, K_I64,
-                    K_BOOL):
-        raise ValueError(
-            f"lookup_join does not support lead-key kind {kind!r}")
-    kc = _q(keys.columns[0])
-    k_dom = {K_STR: f"CAST({kc} AS STRING)",
-             K_TS: f"unix_micros(CAST({kc} AS TIMESTAMP))",
-             K_DATE: f"unix_date(CAST({kc} AS DATE))"
-             }.get(kind, f"CAST({kc} AS BIGINT)")
-    values = keys.selectExpr(f"{k_dom} AS k").distinct().dropna() \
-        .toArrow().column(0).to_pylist()
-    if not values:
+    of a keys DATAFRAME, as ``columns`` (all when None). That column
+    must have the key's type: integral for an integer key (any width:
+    it compares as int64), else boolean, string, timestamp or date.
+    Its distinct non-null keys are read to the driver in the key's
+    comparison domain (int64, ts as epoch-micros, date as days, or the
+    string) and answered by :func:`lookup_in`, so the blocks table is
+    never joined or shuffled. The keys must be an entity list, not a
+    second fact table: the driver holds them as Python values, tens of
+    bytes a key (33,334 keys is the largest probe measured)."""
+    kind, probe = dict(schema_kinds)[key_col], keys.schema.fields[0]
+    fits = {K_STR: T.StringType, K_TS: T.TimestampType,
+            K_DATE: T.DateType, K_BOOL: T.BooleanType,
+            **dict.fromkeys((K_I8, K_I16, K_I32, K_I64), T.IntegralType)}
+    if not isinstance(probe.dataType, fits.get(kind, ())):
+        raise ValueError(f"lookup_join: a {kind} lead key takes no "
+                         f"{probe.dataType.simpleString()} keys column")
+    kc = _q(probe.name)
+    k_dom = {K_STR: kc, K_TS: f"unix_micros({kc})",
+             K_DATE: f"unix_date({kc})"}.get(kind, f"CAST({kc} AS BIGINT)")
+    col = keys.selectExpr(f"{k_dom} AS k").distinct().dropna() \
+        .toArrow().column(0)
+    if not len(col):
         return _scan(blocks, schema_kinds, None, [], [], columns)
-    return lookup_in(blocks, schema_kinds, key_col, values, columns)
+    return lookup_in(blocks, schema_kinds, key_col, _InSet.distinct(col),
+                     columns)
 
 
 def _topk_threshold(walk, k: int):

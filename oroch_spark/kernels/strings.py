@@ -30,6 +30,7 @@ construction.
 """
 from __future__ import annotations
 
+import bisect
 from dataclasses import dataclass
 from typing import Optional
 
@@ -398,34 +399,47 @@ def decode_str_block(blob: bytes, n: int) -> pd.Series:
     return decode_str_block_arrow(blob, n).to_pandas()
 
 
-def in_sorted(x: np.ndarray, values: np.ndarray) -> np.ndarray:
-    """Mask of the entries of ``x`` equal to one of ``values``, which
-    ascend: one binary search per entry, so the set is never hashed or
-    rebuilt per block. A NaN entry matches nothing."""
-    if not len(values):
-        return np.zeros(len(x), dtype=bool)
-    pos = np.minimum(np.searchsorted(values, x), len(values) - 1)
-    return values[pos] == x
+def in_set(arr: pa.Array, values, value_set: pa.Array) -> np.ndarray:
+    """Mask of the entries of ``arr`` equal to one of ``values``
+    (distinct and ascending ints or strs; ``value_set`` holds them as a
+    pyarrow array; a null entry matches nothing): Arrow's ``is_in``
+    against only the values inside ``arr``'s own min..max, found by
+    bisecting ``values``. A large set then costs a block the slice of
+    it that can match, not a hash of every value, and no row becomes a
+    Python object."""
+    mm = pc.min_max(arr)
+    if not values or not mm["min"].is_valid:
+        return np.zeros(len(arr), dtype=bool)
+    lo, hi = (v.decode() if isinstance(v, bytes) else v  # UTF-8 codes
+              for v in (mm["min"].as_py(), mm["max"].as_py()))
+    lo = bisect.bisect_left(values, lo)
+    vs = value_set[lo:bisect.bisect_right(values, hi, lo)]
+    m = pc.is_in(arr, value_set=vs if vs.type == arr.type
+                 else vs.cast(arr.type))
+    return (pc.fill_null(m, False) if arr.null_count else m) \
+        .to_numpy(zero_copy_only=False)
 
 
-def str_block_eq_indices(blob: bytes, n: int, value) -> np.ndarray:
-    """Row indices where the block equals ``value`` (a str, or for the
-    IN form an ascending sequence of str), touching as little data as
-    the codec allows: DICT blocks search the (small) dictionary and
-    scan only the int code stream for the matching code set; RLE
-    blocks search the dictionary and expand only the matching RUNS
-    into index ranges (non-matching rows never materialize in any
-    form); PLAIN/FSST/WSDICT decode and search every row
-    (:func:`in_sorted`). The equality-probe analogue of the
-    reference's find (`/root/reference/oroch/integer_array.h:192-208`)
-    for string payloads."""
+def str_block_eq_indices(blob: bytes, n: int, value,
+                         value_set: Optional[pa.Array] = None) -> np.ndarray:
+    """Row indices where the block equals ``value`` (a str; for the IN
+    form a sequence of str, or with ``value_set`` the distinct
+    ascending values and array :func:`in_set` takes), touching as
+    little data as the codec allows: DICT blocks match the (small) dictionary and scan only the
+    int code stream for the matching code set; RLE blocks match the
+    dictionary and expand only the matching RUNS into index ranges
+    (non-matching rows never materialize in any form);
+    PLAIN/FSST/WSDICT decode and match C++-side. The equality-probe
+    analogue of the reference's find
+    (`/root/reference/oroch/integer_array.h:192-208`) for string
+    payloads."""
     tag = blob[0]
-    values = np.asarray([value] if isinstance(value, str) else value,
-                        dtype=object)
+    if value_set is None:
+        value = sorted({value} if isinstance(value, str) else set(value))
+        value_set = pa.array(value, type=pa.large_string())
 
     def _hits(arr: pa.Array) -> np.ndarray:  # blocks hold no null
-        return np.flatnonzero(in_sorted(arr.to_numpy(zero_copy_only=False),
-                                        values))
+        return np.flatnonzero(in_set(arr, value, value_set))
 
     if tag == DICT_STR:
         dict_arr, pos = _read_dict_section(blob, 1)

@@ -224,6 +224,33 @@ def test_scans_past_one_arrow_batch_run_in_spark(spark, tmp_path, jobs):
                 [i for i in range(rows) if match(i)], name
 
 
+def test_wide_scan_stops_on_the_driver_after_its_first_block(
+        spark, tmp_path, jobs, monkeypatch):
+    """A scan whose answer looks wider than one Arrow batch stops
+    selecting on the driver after its first block (every row of it
+    passes, which scaled to all kept rows is past the batch) and reads
+    no further row group: the Spark job is then the one that selects
+    the blocks, with the exact rows."""
+    rows = engine._batch_rows(spark) + 500
+    path = str(tmp_path / "wide")
+    engine.encode_df(spark.createDataFrame(pa.table(
+        {"k": pa.array(range(rows), pa.int64())})), ["k"], n_buckets=2,
+        block_rows=1024).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert len(scan.inputFiles()) == 2
+    picked, read = [], []
+    select, read_rows = engine._BlockReader.select, engine._read_rows
+    monkeypatch.setattr(engine._BlockReader, "select",
+                        lambda self, p: picked.append(1) or select(self, p))
+    monkeypatch.setattr(engine, "_read_rows",
+                        lambda *a: read.append(1) or read_rows(*a))
+    out = []
+    assert jobs(lambda: out.append(engine.range_scan(
+        scan, [("k", "i64")], "k", 0, rows).collect())) == 1
+    assert sorted(r.k for r in out[0]) == list(range(rows))
+    assert (len(picked), len(read)) == (1, 1)
+
+
 def test_group_count_indexes_no_scan_larger_than_a_split(
         spark, tmp_path, monkeypatch):
     """A scan whose files exceed one input split is counted in Spark

@@ -239,7 +239,7 @@ def test_lookup_join_key_kinds_match_semi_join(spark, tmp_path):
     """ts, date, bool, i32 and string lead keys against a plain Spark
     semi-join: duplicate and null probe keys, a long probe past the
     i32 range, a projection, and an empty probe (an empty frame with
-    the output schema)."""
+    the output schema). A probe of another type raises."""
     import datetime as dt
 
     src = spark.createDataFrame(
@@ -274,6 +274,14 @@ def test_lookup_join_key_kinds_match_semi_join(spark, tmp_path):
             want = sorted(map(tuple, exp.collect())) if k is keys else []
             assert sorted(map(tuple, got.collect())) == want, key
             assert want or k is not keys
+    # a probe not of the key's type raises: Spark would compare 7.5 to
+    # no int key, and a timestamp to a date key only at midnight
+    for key, ddl, p in (("i", "k double", 7.5),
+                        ("d", "k timestamp", t0 + dt.timedelta(hours=5)),
+                        ("s", "k int", 5)):
+        with pytest.raises(ValueError, match="takes no"):
+            engine.lookup_join(spark.read.parquet(str(tmp_path / key)),
+                               kinds, key, spark.createDataFrame([(p,)], ddl))
 
 
 # --- topk_key --------------------------------------------------------------

@@ -223,7 +223,7 @@ def main() -> None:
     bare_and_other(
         "lookup_join (the probe's distinct keys answered as lookup_in)",
         "One job reads the keys' distinct values to the driver (an "
-        "entity list, as a broadcast join's relation is). The block "
+        "entity list). The block "
         "index keeps the blocks whose bounds hold a key; they fit one "
         "input split, so the select kernel runs in-process.",
         "The mapInArrow select kernel matches the kept blocks' rows: "
