@@ -1397,7 +1397,7 @@ def _row_test(vals: "pa.Array", op: str, v) -> np.ndarray:
             else pa.scalar(v, vals.type))
     if pos != op:  # NOT IN and the NOT string tests
         m = pc.invert(m)
-    if op not in ("isnull", "nseq"):
+    if op not in ("isnull", "nseq") and vals.null_count:
         m = pc.and_kleene(m, vals.is_valid())
     return m.to_numpy(zero_copy_only=False)
 
