@@ -402,27 +402,29 @@ def decode_str_block(blob: bytes, n: int) -> pd.Series:
 def in_set(arr: pa.Array, values, value_set: pa.Array) -> np.ndarray:
     """Mask of the entries of ``arr`` equal to one of ``values``
     (distinct and ascending ints or strs; ``value_set`` holds them as a
-    pyarrow array; a null entry matches nothing): Arrow's ``is_in``
-    against only the values inside ``arr``'s own min..max, found by
-    bisecting ``values``. A large set then costs a block the slice of
-    it that can match, not a hash of every value, and no row becomes a
-    Python object. Integer codes take one NumPy binary search instead,
-    cheaper on a small block."""
-    if pa.types.is_integer(arr.type) and len(values):
+    pyarrow array; a null entry matches nothing), with no row made a
+    Python object: integer codes by one NumPy binary search, others by
+    Arrow's ``is_in``. A set larger than the block is cut first to the
+    values inside ``arr``'s own min..max (two bisections of
+    ``values``), so the block hashes only the slice that can match."""
+    if not values:
+        return np.zeros(len(arr), dtype=bool)
+    if pa.types.is_integer(arr.type):
         if arr.null_count:
             return in_set(arr.fill_null(0), values, value_set) \
                 & arr.is_valid().to_numpy(zero_copy_only=False)
         s, x = value_set.to_numpy(), arr.to_numpy()
         return s[np.minimum(np.searchsorted(s, x), len(s) - 1)] == x
-    mm = pc.min_max(arr)
-    if not values or not mm["min"].is_valid:
-        return np.zeros(len(arr), dtype=bool)
-    lo, hi = (v.decode() if isinstance(v, bytes) else v  # UTF-8 codes
-              for v in (mm["min"].as_py(), mm["max"].as_py()))
-    lo = bisect.bisect_left(values, lo)
-    vs = value_set[lo:bisect.bisect_right(values, hi, lo)]
-    m = pc.is_in(arr, value_set=vs if vs.type == arr.type
-                 else vs.cast(arr.type))
+    if len(values) > len(arr):
+        mm = pc.min_max(arr)
+        if not mm["min"].is_valid:
+            return np.zeros(len(arr), dtype=bool)
+        lo, hi = (v.decode() if isinstance(v, bytes) else v  # UTF-8 codes
+                  for v in (mm["min"].as_py(), mm["max"].as_py()))
+        lo = bisect.bisect_left(values, lo)
+        value_set = value_set[lo:bisect.bisect_right(values, hi, lo)]
+    m = pc.is_in(arr, value_set=value_set if value_set.type == arr.type
+                 else value_set.cast(arr.type))
     return (pc.fill_null(m, False) if arr.null_count else m) \
         .to_numpy(zero_copy_only=False)
 
