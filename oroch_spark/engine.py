@@ -1978,10 +1978,10 @@ def _check_agg_kind(op: str, kind: str) -> None:
 
 class _InSet(tuple):
     """The distinct values of an IN or NOT IN test (ints or strs),
-    ascending, as :func:`_stats_overlap` bisects them. A block's rows
-    match only the values inside the block's min..max
-    (``strings.in_set``): no block sorts the set or hashes all of it.
-    Its Arrow form is built once where it runs, never pickled."""
+    ascending, as :func:`_stats_overlap` bisects them and
+    ``strings.in_set`` matches a block's rows against them: no block
+    sorts the set or hashes a large one whole. Its Arrow form is built
+    once where it runs, never pickled."""
 
     def __new__(cls, values):
         return super().__new__(cls, sorted(set(values)))

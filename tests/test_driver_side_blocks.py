@@ -230,14 +230,18 @@ def test_wide_scan_stops_on_the_driver_after_its_first_block(
     selecting on the driver after its first block (every row of it
     passes, which scaled to all kept rows is past the batch) and reads
     no further row group: the Spark job is then the one that selects
-    the blocks, with the exact rows."""
+    the blocks, with the exact rows. The 11 blocks sit in 3 row
+    groups."""
     rows = engine._batch_rows(spark) + 500
     path = str(tmp_path / "wide")
-    engine.encode_df(spark.createDataFrame(pa.table(
-        {"k": pa.array(range(rows), pa.int64())})), ["k"], n_buckets=2,
-        block_rows=1024).write.parquet(path)
+    os.makedirs(path)
+    pq.write_table(engine.encode_df(spark.createDataFrame(pa.table(
+        {"k": pa.array(range(rows), pa.int64())})), ["k"], n_buckets=1,
+        block_rows=1024).toArrow(), os.path.join(path, "blocks.parquet"),
+        row_group_size=4)
     scan = spark.read.parquet(path)
-    assert len(scan.inputFiles()) == 2
+    assert pq.ParquetFile(os.path.join(path, "blocks.parquet")) \
+        .metadata.num_row_groups == 3
     picked, read = [], []
     select, read_rows = engine._BlockReader.select, engine._read_rows
     monkeypatch.setattr(engine._BlockReader, "select",
