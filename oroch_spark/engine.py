@@ -490,8 +490,6 @@ def _encode_column(arr: "pa.Array", kind: str, text_hint: bool,
     if kind == K_STR:
         a = pc.fill_null(arr, "") if nullable else arr
         blob, d = sc.encode_str_block(a, text_hint=text_hint)
-        nbytes = int(sc.arrow_to_bytes(sc.to_string_array(a))[0].sum()) \
-            if n else 0
         desc = {"k": kind, "c": d.codec_name}
         if nullable:
             desc["z"] = 1
@@ -501,14 +499,14 @@ def _encode_column(arr: "pa.Array", kind: str, text_hint: bool,
             # predicates too; declared text (payload) columns skip —
             # min/max of prose isn't a useful pruning domain and the
             # strings would bloat the descriptor
-            mm = pc.min_max(arr)
+            mm = pc.min_max(arr if d.distinct is None else d.distinct)
             # keep desc small: long bounds are widened, not dropped
             # (floor the low / ceil the high — still superset-safe)
             slo, shi = _str_bounds_capped(mm["min"].as_py(),
                                           mm["max"].as_py())
             if shi is not None:
                 desc["slo"], desc["shi"] = slo, shi
-        return (vblob + blob, desc, nbytes + 4 * n,
+        return (vblob + blob, desc, d.raw_bytes + 4 * n,
                 d.ref_total + len(vblob))
     if kind == K_TS:
         ia = arr
@@ -1234,7 +1232,7 @@ class _BlockReader:
     the Arrow buffer would be signed (format ``'b'``) and misread the
     codec tag bytes."""
 
-    __slots__ = ("n", "_cols", "_payload", "_bytes", "_ints")
+    __slots__ = ("n", "_cols", "_payload", "_bytes", "_codes")
 
     def __init__(self, desc, payload, n):
         if isinstance(desc, str):
@@ -1243,7 +1241,11 @@ class _BlockReader:
         self._cols = {d["n"]: d for d in desc["cols"]}
         self._payload = payload
         self._bytes = None
-        self._ints = {}  # non-nullable int64 codes :meth:`codes` decoded
+        # what :meth:`codes` decoded, so that a column a row test read
+        # is never decoded again for the output: int64 NumPy codes of
+        # a non-nullable integer column, the Arrow array of a string or
+        # float column
+        self._codes = {}
 
     def _blob(self, d) -> bytes:
         if self._bytes is None:
@@ -1268,12 +1270,16 @@ class _BlockReader:
         if d is None:
             return pa.nulls(self.n if idxs is None else len(idxs),
                             type=arrow_type)
+        got = self._codes.get(name)
+        if isinstance(got, pa.Array):
+            return (got if idxs is None
+                    else got.take(pa.array(idxs, type=pa.int64()))) \
+                .cast(arrow_type)
         if idxs is None:
             return _decode_column(self._blob(d), d["k"], self.n,
                                   arrow_type, nullable=bool(d.get("z")))
         return _column_at_indices(self._blob(d), d["k"], self.n,
-                                  arrow_type, bool(d.get("z")), idxs,
-                                  self._ints.get(name))
+                                  arrow_type, bool(d.get("z")), idxs, got)
 
     def codes(self, name: str) -> Optional["pa.Array"]:
         """Column ``name`` in its comparison domain, for kernels that
@@ -1289,14 +1295,16 @@ class _BlockReader:
         if d["k"] == K_BIN or d["k"].startswith("arr("):
             raise ValueError(f"{d['k']} column {name!r} is not comparable")
         if d["k"] in (K_STR, K_F64, K_F32):
-            return self.column(name, pa.binary() if d["k"] == K_STR
-                               else pa.float64())
+            if name not in self._codes:
+                self._codes[name] = self.column(
+                    name, pa.binary() if d["k"] == K_STR else pa.float64())
+            return self._codes[name]
         blob, valid = self._blob(d), None
         if d.get("z"):
             valid, blob = _split_validity(blob, self.n)
         ints = ic.decode_block(blob, self.n, width=_INT_WIDTHS.get(d["k"], 8))
         if valid is None:
-            self._ints[name] = ints
+            self._codes[name] = ints
         return pa.array(ints, mask=None if valid is None else ~valid)
 
     def validity(self, name: str) -> Optional["pa.Array"]:
@@ -1317,10 +1325,10 @@ class _BlockReader:
         (:attr:`_KeyPred.raw`) of every ``(col, _KeyPred)`` of
         ``preds``: the one row evaluator. Each column is read once
         (:meth:`codes`, or :meth:`validity` for null tests alone),
-        none once no row is left; an IN on a non-nullable string
-        column matches the dictionary
-        (`strings.str_block_eq_indices`); a column the block predates
-        is all NULL."""
+        none once no row is left; an IN on a non-nullable dictionary-
+        or RLE-coded string column matches the dictionary
+        (`strings.str_block_eq_indices`) without decoding the rows; a
+        column the block predates is all NULL."""
         keep = np.ones(self.n, dtype=bool)
         for col, pred in preds:
             if not keep.any():
@@ -1328,7 +1336,7 @@ class _BlockReader:
             tests = list(pred.raw)
             kb = self.str_blob(col) if any(op == "in" for op, _ in tests) \
                 else None
-            if kb is not None:
+            if kb is not None and kb[0] in (sc.DICT_STR, sc.RLE_STR):
                 for vs in (v for op, v in tests if op == "in"):
                     hit = sc.str_block_eq_indices(kb, self.n, vs, vs.arrow)
                     keep &= np.bincount(hit, minlength=self.n) > 0
@@ -2757,26 +2765,6 @@ def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     return _index_split(blocks, [(key_col, lo, hi)], lead=True)
 
 
-_STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
-    T.StructType([
-        T.StructField("n", T.StringType()),
-        T.StructField("lo", T.LongType()),
-        T.StructField("hi", T.LongType()),
-        T.StructField("s", T.LongType()),
-        T.StructField("bm", T.StringType()),  # base64 Bloom bytes
-        T.StructField("tbm", T.StringType()),  # base64 token Bloom
-        T.StructField("slo", T.StringType()),  # lexicographic bounds
-        T.StructField("shi", T.StringType()),
-        T.StructField("z", T.IntegerType()),   # nullable flag
-        T.StructField("nc", T.LongType()),     # exact null count
-        T.StructField("hll", T.StringType()),  # base64 HLL registers
-        T.StructField("qs", T.StringType()),   # base64 quantile summary
-        T.StructField("qsf", T.StringType()),  # float quantile summary
-        T.StructField("mg", T.StringType()),   # heavy-hitter summary
-    ])))])
-_STATS_DDL = _STATS_JSON_SCHEMA.simpleString()
-
-
 def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
               key_col: str, lo, hi, agg_col: str) -> DataFrame:
     """SUM/MIN/MAX/COUNT of ``agg_col`` over a key range with aggregate
@@ -2792,15 +2780,6 @@ def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     blocks."""
     _check_agg_kind("range_agg", dict(schema_kinds)[agg_col])
     return _index_split(blocks, [(key_col, lo, hi)], agg_col, lead=True)
-
-
-def _col_stats(col: str):
-    """The stats struct of ``col`` from the desc JSON, as a Column; null
-    when the column has no stored stats (legacy block) or is absent
-    from the block entirely (schema evolution) — get, not [0], so the
-    empty match is NULL instead of an ANSI index error."""
-    return F.expr(f"get(filter(from_json(desc, '{_STATS_DDL}').cols, "
-                  f"x -> x.n = {_sql_lit(col)}), 0)")
 
 
 def null_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],

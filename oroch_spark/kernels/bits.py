@@ -15,10 +15,15 @@ independent of host byte order.
 """
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 U64 = np.uint64
 I64 = np.int64
+# shift amounts as NumPy scalars, made once: on a short lane, building
+# the scalar costs about as much as the shift
+_SHIFTS = [U64(s) for s in range(65)]
 
 
 # 16-bit bit-length table: exponents from frexp over the full 16-bit
@@ -59,72 +64,106 @@ def bit_length(u: np.ndarray) -> np.ndarray:
 def pack_bits(u: np.ndarray, nbits: int) -> bytes:
     """Pack each uint64 value into ``nbits`` bits, dense little-endian.
 
-    Values must already fit in ``nbits`` bits (caller masks).
-    Output size: ceil(n*nbits/8) bytes (<= the reference's 16-byte-block
-    size from `oroch/bitpck.h:54-71`, charged by the cost model).
-    """
+    Values must already fit in ``nbits`` bits (see :func:`pack_low_bits`
+    for values that may not). Output size: ceil(n*nbits/8) bytes (<= the
+    reference's 16-byte-block size from `oroch/bitpck.h:54-71`, charged
+    by the cost model)."""
+    return _pack(u, nbits, False)
+
+
+def pack_low_bits(u: np.ndarray, nbits: int) -> bytes:
+    """:func:`pack_bits` of the low ``nbits`` bits of each value (a
+    patched-FOR block's low bits, outliers included): each lane is
+    masked as it is packed, so no masked copy of ``u`` is made."""
+    return _pack(u, nbits, True)
+
+
+def _pack(u: np.ndarray, nbits: int, masked: bool) -> bytes:
     n = len(u)
     if n == 0 or nbits == 0:
         return b""
     # '<u8' pins the wire format to little-endian regardless of host
     # byte order (no-op view on LE hosts, byte-swapping copy on BE)
     u = np.ascontiguousarray(u, dtype="<u8")
-    # little-endian byte view -> per-value bit rows (C-side unpackbits),
-    # keep the low nbits of each row, repack densely. Avoids the
-    # (n x nbits) uint64 shift matrix entirely; only the ceil(nbits/8)
-    # low bytes per value are unpacked (8x less work at plane widths).
-    nb = (nbits + 7) // 8
-    if nbits == 8 * nb:
-        # byte-aligned widths: plain byte slice, no bit ops at all
-        byte_rows = u.view(np.uint8).reshape(n, 8)[:, :nb]
-        return np.ascontiguousarray(byte_rows).tobytes()
+    if nbits % 8 == 0:
+        # byte-aligned widths: the low nbits/8 bytes of each value
+        out = np.empty(n * (nbits // 8), dtype=np.uint8)
+        _store_low_bytes(out, [u], nbits // 8)
+        return out.tobytes()
     # Grouped shift-OR: g = 8/gcd(nbits,8) values pack into exactly
-    # g*nbits/8 bytes; when one group fits a uint64 (g*nbits <= 64 —
-    # every nbits <= 8 plus 10/12/14/20/28), OR the g lanes together
-    # and slice the low bytes per group. Zero-padding the tail group is
-    # bit-identical to the dense stream: pad values contribute 0 bits
-    # and the byte count is truncated to ceil(n*nbits/8) exactly as
-    # packbits would zero-fill the final partial byte.
-    g = 8 // np.gcd(nbits, 8)
-    ngroups = (n + g - 1) // g
-    if ngroups * g != n:
-        up = np.zeros(ngroups * g, dtype="<u8")
-        up[:n] = u
-        u = up
-    lanes = u.reshape(ngroups, g)
+    # gbytes = g*nbits/8 bytes, so whole groups are independent and
+    # byte-aligned. The n // g whole groups pack straight from a view
+    # of the input; the last partial group (< g values) packs as one
+    # Python int, zero above its values. Cut to ceil(n*nbits/8) bytes,
+    # that is exactly how a dense packer zero-fills its final partial
+    # byte. No padded copy of the input is made.
+    g = 8 // math.gcd(nbits, 8)
     gbytes = (g * nbits) // 8
-    if g * nbits <= 64:
-        acc = lanes[:, 0].copy()
-        for k in range(1, g):
-            acc |= lanes[:, k] << U64(k * nbits)
-        out = np.ascontiguousarray(
-            acc.view(np.uint8).reshape(ngroups, 8)[:, :gbytes])
-        return out.reshape(-1)[: (n * nbits + 7) // 8].tobytes()
-    # Multi-lane grouped shift-OR: when one group spans more than a
-    # uint64 (g*nbits in 72..504 bits, i.e. every remaining non-aligned
-    # width), hold the group in ceil(gbytes/8) uint64 lanes. Value k
-    # lands at bit k*nbits: OR into lane bitpos>>6 at shift bitpos&63,
-    # plus the straddle spill into the next lane when it crosses the
-    # lane boundary. g <= 8 vector passes over n/g-length lanes — no
-    # per-bit unpackbits expansion (8x the payload in scratch bytes).
-    nlanes = (gbytes + 7) // 8
-    # accumulate each lane in its own CONTIGUOUS vector (strided |=
-    # into interleaved (ngroups, nlanes) columns measures ~15% slower),
-    # interleave once at the end
-    accs = [np.zeros(ngroups, dtype="<u8") for _ in range(nlanes)]
+    full = n // g
+    out = np.empty(-(-n // g) * gbytes, dtype=np.uint8)
+    if full:
+        _pack_groups(u[:full * g].reshape(full, g), nbits, out, masked)
+    if full * g < n:
+        tail = 0
+        for i, x in enumerate(u[full * g:].tolist()):
+            tail |= (x & ((1 << nbits) - 1)) << (i * nbits)
+        out[full * gbytes:] = np.frombuffer(tail.to_bytes(gbytes, "little"),
+                                            dtype=np.uint8)
+    return out[:(n * nbits + 7) // 8].tobytes()
+
+
+def _pack_groups(lanes: np.ndarray, nbits: int, out: np.ndarray,
+                 masked: bool) -> None:
+    """Pack the (ngroups, g) values ``lanes`` (each lane cut to its low
+    ``nbits`` bits first when ``masked``) into the first
+    ngroups*g*nbits/8 bytes of ``out``. A group is held in
+    ceil(g*nbits/64) uint64 words: value k lands in word bitpos>>6 at
+    shift bitpos&63, plus the straddle spill into the next word when it
+    crosses a word boundary. g <= 8 vector passes over n/g-length
+    lanes, into reused scratch vectors; no per-bit expansion."""
+    ngroups, g = lanes.shape
+    gbytes = (g * nbits) // 8
+    mask = U64((1 << nbits) - 1)
+    # each word in its own CONTIGUOUS row (strided |= into interleaved
+    # (ngroups, nwords) columns measures ~15% slower)
+    words = np.empty(((gbytes + 7) // 8, ngroups), dtype="<u8")
+    tmp = np.empty(ngroups, dtype="<u8")
+    low = np.empty(ngroups, dtype="<u8") if masked else None
+    started = 0  # words written so far
     for k in range(g):
         bitpos = k * nbits
         j, s = bitpos >> 6, bitpos & 63
-        v = lanes[:, k]
-        accs[j] |= v << U64(s)
-        if s + nbits > 64:
-            accs[j + 1] |= v >> U64(64 - s)
-    acc = np.empty((ngroups, nlanes), dtype="<u8")
-    for j in range(nlanes):
-        acc[:, j] = accs[j]
-    out = np.ascontiguousarray(
-        acc.view(np.uint8).reshape(ngroups, 8 * nlanes)[:, :gbytes])
-    return out.reshape(-1)[: (n * nbits + 7) // 8].tobytes()
+        v = np.bitwise_and(lanes[:, k], mask, out=low) if masked \
+            else lanes[:, k]
+        parts = [(j, np.left_shift, s)]
+        if s + nbits > 64:  # straddles into the next word
+            parts.append((j + 1, np.right_shift, 64 - s))
+        for jj, op, sh in parts:
+            if jj < started:  # OR into a word already written
+                op(v, _SHIFTS[sh], out=tmp)
+                words[jj] |= tmp
+            else:  # the first value to reach a word writes it
+                op(v, _SHIFTS[sh], out=words[jj])
+                started = jj + 1
+    _store_low_bytes(out, words, gbytes)
+
+
+def _store_low_bytes(out: np.ndarray, words, gbytes: int) -> None:
+    """Write the low ``gbytes`` bytes of each row of the little-endian
+    ``words`` (word j holds bytes 8j..8j+7) to consecutive
+    ``gbytes``-byte slots of the uint8 array ``out``. One strided store
+    per 8-, 4-, 2- or 1-byte piece of a slot, straight from the words:
+    no (rows x 8) byte matrix is sliced and copied."""
+    rows = len(words[0])
+    b = 0
+    while b < gbytes:
+        w = 8 if gbytes - b >= 8 else 4 if gbytes - b >= 4 \
+            else 2 if gbytes - b >= 2 else 1
+        o = b % 8  # 0, 4 or 6: aligned to w within its word
+        src = words[b // 8].view(f"<u{w}")[o // w::8 // w]
+        np.ndarray((rows,), dtype=f"<u{w}", buffer=out, offset=b,
+                   strides=(gbytes,))[:] = src
+        b += w
 
 
 def unpack_bits(buf: bytes, n: int, nbits: int) -> np.ndarray:
@@ -137,57 +176,31 @@ def unpack_bits(buf: bytes, n: int, nbits: int) -> np.ndarray:
         out_bytes = np.zeros((n, 8), dtype=np.uint8)
         out_bytes[:, :nb] = raw[:n * nb].reshape(n, nb)
         return out_bytes.reshape(-1).view("<u8").astype(U64, copy=False)
-    g = 8 // np.gcd(nbits, 8)
-    if g * nbits <= 64:
-        # Grouped inverse of pack_bits' shift-OR path: g values start
-        # byte-aligned every g*nbits/8 bytes, so ONE 8-byte window per
-        # GROUP covers all g lanes — g x fewer gathers than the
-        # window-per-value path below. Zero padding past the stream
-        # only feeds the sliced-off tail lanes.
+    g = 8 // math.gcd(nbits, 8)
+    if g * nbits <= 64 or nbits <= 41 or nbits >= 58:
+        # Grouped inverse of pack_bits: g values start byte-aligned every
+        # gbytes = g*nbits/8 bytes, so each GROUP's ceil(gbytes/8) words
+        # are read once for all g lanes (g/nwords fewer gathers than a
+        # window per value). Value k spans word bitpos>>6 from shift
+        # bitpos&63, its straddle completed from the next word; the mask
+        # kills bytes past the group. Measured faster than the per-value
+        # path below at nbits <= 41 and at 58..63 (where one 8-byte
+        # window per value cannot hold a value); per-value wins between.
         gbytes = (g * nbits) // 8
         ngroups = (n + g - 1) // g
-        pad = np.zeros(ngroups * gbytes + 8, dtype=np.uint8)
-        m = min(len(raw), ngroups * gbytes)  # tolerate oversized buffers:
-        pad[:m] = raw[:m]  # bytes past the stream never reach a kept lane
-        win = np.lib.stride_tricks.sliding_window_view(pad, 8)
-        offs = np.arange(ngroups, dtype=np.int64) * gbytes
-        w = np.ascontiguousarray(win[offs]).view("<u8").reshape(ngroups)
-        w = w.astype(U64, copy=False)
+        words = _group_words(raw, ngroups, gbytes)
         mask = (U64(1) << U64(nbits)) - U64(1)
         out = np.empty((ngroups, g), dtype=U64)
-        for k in range(g):
-            out[:, k] = (w >> U64(k * nbits)) & mask
-        return out.reshape(-1)[:n]
-    if nbits <= 41 or nbits >= 58:
-        # Multi-lane grouped inverse (pack_bits' multi-lane encoder):
-        # gather nlanes 8-byte windows per g-value GROUP instead of one
-        # window per VALUE — nlanes/g as many gathers. Value k spans
-        # lane bitpos>>6 from shift bitpos&63, straddle completed from
-        # the next lane; the final mask kills bytes past the group.
-        # Measured faster than the per-value path at nbits <= 41 and
-        # at 58..63 (where per-value's 8-byte window cannot hold a
-        # value and the only alternative was the unpackbits expansion,
-        # ~3x slower); per-value wins in between — both kept.
-        gbytes = (g * nbits) // 8
-        nlanes = (gbytes + 7) // 8
-        ngroups = (n + g - 1) // g
-        pad = np.zeros(ngroups * gbytes + 8 * nlanes, dtype=np.uint8)
-        m = min(len(raw), ngroups * gbytes)
-        pad[:m] = raw[:m]
-        win = np.lib.stride_tricks.sliding_window_view(pad, 8)
-        offs = np.arange(ngroups, dtype=np.int64) * gbytes
-        lanes = [np.ascontiguousarray(win[offs + 8 * j]).view("<u8")
-                 .reshape(ngroups).astype(U64, copy=False)
-                 for j in range(nlanes)]
-        mask = ~U64(0) if nbits == 64 else (U64(1) << U64(nbits)) - U64(1)
-        out = np.empty((ngroups, g), dtype=U64)
+        v = np.empty(ngroups, dtype=U64)
+        hi = np.empty(ngroups, dtype=U64)
         for k in range(g):
             bitpos = k * nbits
             j, s = bitpos >> 6, bitpos & 63
-            v = lanes[j] >> U64(s)
+            np.right_shift(words[j], _SHIFTS[s], out=v)
             if s + nbits > 64:
-                v = v | (lanes[j + 1] << U64(64 - s))
-            out[:, k] = v & mask
+                np.left_shift(words[j + 1], _SHIFTS[64 - s], out=hi)
+                v |= hi
+            np.bitwise_and(v, mask, out=out[:, k])
         return out.reshape(-1)[:n]
     # remaining widths (42..57): each value's bits live inside the
     # 8-byte little-endian window that starts at its byte offset
@@ -202,6 +215,34 @@ def unpack_bits(buf: bytes, n: int, nbits: int) -> np.ndarray:
     vals = vals.reshape(n).astype(U64, copy=False)
     shift = (bitpos & 7).view(U64)
     return (vals >> shift) & ((U64(1) << U64(nbits)) - U64(1))
+
+
+def _group_words(raw: np.ndarray, ngroups: int, gbytes: int) -> np.ndarray:
+    """(ceil(gbytes/8), ngroups) uint64: word j of group i is the 8
+    little-endian bytes at ``raw[i*gbytes + 8*j:]``. Groups whose words
+    lie inside ``raw`` are read by strided views of it; only the last
+    few are read from a zero-padded copy of the stream's tail, so the
+    stream is never copied whole. Bytes past a group land above its
+    g*nbits bits, where no kept lane reads them."""
+    nwords = (gbytes + 7) // 8
+    span = 8 * nwords
+    words = np.empty((nwords, ngroups), dtype="<u8")
+    nfit = min(ngroups, (len(raw) - span) // gbytes + 1) \
+        if len(raw) >= span else 0
+
+    def fill(src, lo, hi):
+        for j in range(nwords):
+            words[j, lo:hi] = np.ndarray((hi - lo,), dtype="<u8", buffer=src,
+                                         offset=8 * j, strides=(gbytes,))
+
+    if nfit:
+        fill(raw, 0, nfit)
+    if nfit < ngroups:
+        tail = raw[nfit * gbytes: ngroups * gbytes]
+        pad = np.zeros((ngroups - nfit) * gbytes + span, dtype=np.uint8)
+        pad[:len(tail)] = tail
+        fill(pad, nfit, ngroups)
+    return words
 
 
 def packed_size(n: int, nbits: int) -> int:

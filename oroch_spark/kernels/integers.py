@@ -41,7 +41,8 @@ from typing import Optional
 
 import numpy as np
 
-from .bits import I64, U64, bit_length, pack_bits, packed_size, unpack_bits
+from .bits import (I64, U64, bit_length, pack_bits, pack_low_bits,
+                   packed_size, unpack_bits)
 
 # Codec tags, superset of `oroch/integer_codec.h:46-54`.
 NAUGHT = 0
@@ -96,11 +97,6 @@ def zigzag_decode_scalar(u: int) -> int:
 # varint (`oroch/varint.h`)
 # ---------------------------------------------------------------------------
 
-def varint_nbits_space(nbits) -> "np.ndarray | int":
-    """Bytes for an integer of given bit length (`oroch/varint.h:56-59`)."""
-    return (nbits + 6) // 7
-
-
 def varint_size(u: np.ndarray) -> np.ndarray:
     """Per-value encoded byte count; 0 takes 1 byte (`varint.h:66-72`)."""
     nb = bit_length(u)
@@ -112,30 +108,32 @@ def varint_size(u: np.ndarray) -> np.ndarray:
 def varint_encode(u: np.ndarray) -> bytes:
     """Vectorized LEB128 encode of a uint64 array (`varint.h:74-83`).
 
-    Byte k of every still-active value scatters straight into its
-    final stream position; values whose encoding is complete drop out
-    of the working set each round. Work is O(total output bytes) —
-    one long value no longer inflates a whole (n x maxbytes) scratch
-    matrix the way the previous dense-matrix encoder did."""
+    Round k scatters byte k of every still-active value straight into
+    its final stream position. Values whose encoding is complete drop
+    out of the working set, in the rounds where some do, so the work is
+    O(total output bytes) and one long value never inflates a whole
+    (n x maxbytes) scratch matrix."""
     n = len(u)
     if n == 0:
         return b""
-    wa = np.asarray(u, dtype=U64).copy()
+    wa = np.asarray(u, dtype=U64)
     sz = varint_size(wa)
-    ends = np.cumsum(sz)
+    ends = np.cumsum(sz, dtype=np.int64)
     out = np.empty(int(ends[-1]), dtype=np.uint8)
-    st = (ends - sz).astype(np.int64)
+    pos = ends - sz
     k = 0
-    while len(wa):
-        byte = (wa & U64(0x7F)).astype(np.uint8)
-        cont = sz > (k + 1)
-        out[st + k] = byte | (cont.astype(np.uint8) << 7)
-        if not cont.any():
-            break
-        wa = wa[cont]
-        wa >>= U64(7)
-        sz = sz[cont]
-        st = st[cont]
+    while True:
+        byte = wa.astype(np.uint8)  # low 8 bits
+        byte &= 0x7F
+        more = sz > k + 1
+        byte |= more.view(np.uint8) << np.uint8(7)
+        out[pos] = byte
+        if not more.all():
+            if not more.any():
+                break
+            wa, sz, pos = wa[more], sz[more], pos[more]
+        wa = wa >> U64(7)
+        pos += 1
         k += 1
     return out.tobytes()
 
@@ -301,8 +299,7 @@ def _select_basic(desc: IntDescriptor, vals, u_zig,
 
 def _small_range_hists(vals: np.ndarray, vmin: int, vmax: int,
                        want_zig: bool
-                       ) -> tuple[np.ndarray, Optional[np.ndarray],
-                                  np.ndarray]:
+                       ) -> tuple[np.ndarray, Optional[np.ndarray]]:
     """Derive the selector's bit-length histograms from ONE value
     histogram when the value range is small (dictionary ids, word
     counts, FOR residues, small deltas — the kernel's dominant inputs).
@@ -313,13 +310,15 @@ def _small_range_hists(vals: np.ndarray, vmin: int, vmax: int,
     bit length IS the bit-length histogram. bincount-with-weights sums
     stay exact because every count <= n < 2^53 (float64 integer range).
 
-    Returns (hist_for, hist_zig_or_None, bl_for). Replaces up to five
+    Returns (hist_for, hist_zig_or_None). Replaces up to five
     full-array passes (zigzag transform, two bit_length passes, two
-    bincounts) with one bincount + one table gather.
+    bincounts) with one bincount; a 0-based stream (dictionary ids) is
+    counted as it stands, with no shifted copy.
     """
     rng = vmax - vmin
-    u_for_i = vals - vmin  # exact: result in [0, rng], rng < 2^16
-    hist_vals = np.bincount(u_for_i, minlength=rng + 1)
+    # exact: vals - vmin lies in [0, rng], rng < 2^16
+    hist_vals = np.bincount(vals if vmin == 0 else vals - vmin,
+                            minlength=rng + 1)
     blf_dom = bit_length(np.arange(rng + 1, dtype=U64))
     hist_for = np.bincount(blf_dom, weights=hist_vals,
                            minlength=65).astype(np.int64)
@@ -329,8 +328,7 @@ def _small_range_hists(vals: np.ndarray, vmin: int, vmax: int,
         blz_dom = bit_length(zigzag_encode(vdom))
         hist_zig = np.bincount(blz_dom, weights=hist_vals,
                                minlength=65).astype(np.int64)
-    bl_for = blf_dom[u_for_i]
-    return hist_for, hist_zig, bl_for
+    return hist_for, hist_zig
 
 
 def _small_range_ok(rng: int, n: int) -> bool:
@@ -347,7 +345,7 @@ def select(vals: np.ndarray, width: int = 8, try_delta: bool = False,
 
     ``vals``: int64 array (signed domain; unsigned inputs must fit int64).
     ``_pre``: internal — ``(u_zig_or_None, hist_zig, vmin, vmax)`` already
-    computed by the caller (:func:`_try_delta` derives all four for its
+    computed by the caller (:class:`_Delta` derives all four for its
     gate), so the inner selection doesn't redo those passes. Purely a
     work-reuse handoff: the values are exactly what this function would
     compute itself.
@@ -383,77 +381,92 @@ def select(vals: np.ndarray, width: int = 8, try_delta: bool = False,
 
     # One pass each for the two value transforms + their bit-length
     # histograms; every varint/bitpfr cost below derives from these.
-    # bit_length runs ONCE per transform; the bitpfr sweep reuses
-    # bl_for for its outlier masks instead of re-shifting the data.
     # Small value ranges take the one-bincount fast path (bit-identical
     # by construction — see _small_range_hists).
     if _small_range_ok(vmax - vmin, n):
-        hist_for, hz, bl_for = _small_range_hists(vals, vmin, vmax,
-                                                  want_zig=_pre is None)
+        hist_for, hz = _small_range_hists(vals, vmin, vmax,
+                                          want_zig=_pre is None)
         if _pre is None:
             u_zig, hist_zig = None, hz
     else:
         if _pre is None:
             u_zig = zigzag_encode(vals)
         u_for = vals.view(U64) - U64(vmin & 0xFFFFFFFFFFFFFFFF)
-        bl_for = bit_length(u_for)
         if _pre is None:
             hist_zig = np.bincount(bit_length(u_zig), minlength=65)
-        hist_for = np.bincount(bl_for, minlength=65)
+        hist_for = np.bincount(bit_length(u_for), minlength=65)
     _select_basic(desc, vals, u_zig, vmin, vmax, n, width,
                   hist_zig, hist_for)
 
-    if n >= 5:  # small-input cutoff (`integer_codec.h:271-272`)
-        _select_bitpfr(desc, None, hist_for, vmin, vmax, n, bl_for)
-
-    if try_delta:
-        _try_delta(desc, vals, width)
+    # small-input cutoff (`integer_codec.h:271-272`); the delta
+    # candidate is compared last, as an extension of the reference order
+    delta = _Delta(vals, width) if try_delta and n >= 5 else None
+    if n >= 5:
+        _select_bitpfr(desc, vals, hist_for, vmin, vmax, n, delta)
+    if delta is not None:
+        delta.apply(desc)
 
     return desc
 
 
-def _select_bitpfr(desc: IntDescriptor, u, hist: np.ndarray,
+def _pfr_costs(hist: np.ndarray, n: int, nbits_max: int) -> tuple:
+    """Every per-candidate term of the reference's bitpfr loop except
+    the exact index cost (`integer_codec.h:275-335`), batched over the
+    candidate widths 1..nbits_max-1 from a bit-length histogram:
+    (nbits, values at exactly nbits bits, outliers, low-bits bytes,
+    packed and varint outlier-value bytes, index lower bound).
+    valvar[nbits] = sum_{nb > nbits} ceil((nb - nbits)/7) * hist[nb]
+    (the O(nbits_max^2) inner loop of `integer_codec.h:316-321`,
+    identical sums). The index lower bound (`integer_codec.h:325-335`):
+    packed indices need >= 1 bit each, varint gaps >= 1 byte each —
+    true lower bounds, so skipping on them never skips a winner."""
+    h = hist[:nbits_max + 1].astype(np.int64)
+    nb_i = np.arange(nbits_max + 1, dtype=np.int64)
+    diff = nb_i[None, :] - nb_i[:, None]          # (nbits, nb)
+    vcost = np.where(diff > 0, (diff + 6) // 7, 0)
+    valvar = (vcost @ h)[1:nbits_max]
+    ts = nb_i[1:nbits_max]                        # candidate nbits
+    nout = n - np.cumsum(h)[1:nbits_max]          # outliers per candidate
+    cap_b = 128 // ts
+    basic_data = 16 * ((n + cap_b - 1) // cap_b)  # ref_bitpck_space(n, t)
+    cap_v = 128 // (nbits_max - ts)
+    valpck = np.where(nout > 0, 16 * ((nout + cap_v - 1) // cap_v), 0)
+    indmin = np.minimum(np.where(nout > 0, 16 * ((nout + 127) // 128), 0),
+                        np.maximum(nout, 1))
+    return ts, h[1:nbits_max], nout, basic_data, valpck, valvar, indmin
+
+
+def _select_bitpfr(desc: IntDescriptor, vals: np.ndarray, hist: np.ndarray,
                    vmin: int, vmax: int, n: int,
-                   bl: np.ndarray) -> None:
+                   delta: Optional[_Delta] = None) -> None:
     """The patched-bit-packing histogram sweep (`integer_codec.h:275-383`).
-    ``hist`` is the FOR-transform's bit-length histogram and ``bl`` the
-    per-value bit lengths (both computed once in :func:`select` — the
-    sweep's exact passes derive outlier masks from ``bl`` instead of
-    re-shifting the data; the transformed array itself is not needed)."""
+    ``hist`` is the FOR-transform's bit-length histogram (computed once
+    in :func:`select`). A value is an outlier at ``nbits`` when its FOR
+    residue needs more bits, i.e. when ``vals > vmin + 2^nbits - 1``;
+    the sweep tests that on the values themselves, so neither the
+    residues nor their bit lengths are materialized. The bound never
+    overflows int64: ``nbits`` < the bit length of vmax - vmin, so
+    ``vmin + 2^nbits - 1 < vmax``.
+
+    ``delta``, the delta candidate compared after this sweep: when its
+    lower bound is under every candidate's estimate, its exact cost is
+    taken first and candidates estimated above it are never evaluated.
+    That never changes the pick: a skipped candidate costs more than
+    delta, which then replaces whatever this sweep keeps, and any
+    candidate that would beat or tie delta has an estimate <= delta's
+    cost and is still evaluated."""
     basic_metaspace = 1 + varint_size_scalar(zigzag_encode_scalar(vmin))
     nbits_max = (vmax - vmin).bit_length()
     if nbits_max < 2:
         return
     sel0 = desc.ref_data + desc.ref_meta
 
-    # Every per-candidate term of the reference's scalar loop except
-    # the exact index cost (`integer_codec.h:275-335`) derives from the
-    # histogram — batch them all. valvar[nbits] = sum_{nb > nbits}
-    # ceil((nb - nbits)/7) * hist[nb] (the O(nbits_max^2) inner loop of
-    # `integer_codec.h:316-321`, identical sums).
-    h = hist[:nbits_max + 1].astype(np.int64)
-    nb_i = np.arange(nbits_max + 1, dtype=np.int64)
-    diff = nb_i[None, :] - nb_i[:, None]          # (nbits, nb)
-    vcost = np.where(diff > 0, (diff + 6) // 7, 0)
-    valvar_all = vcost @ h
-
-    ts = nb_i[1:nbits_max]                        # candidate nbits
-    cnt = h[1:nbits_max]
-    nout = n - np.cumsum(h)[1:nbits_max]          # outliers per candidate
-    cap_b = 128 // ts
-    basic_data = 16 * ((n + cap_b - 1) // cap_b)  # ref_bitpck_space(n, t)
+    ts, cnt, nout, basic_data, valpck, valvar, indmin = \
+        _pfr_costs(hist, n, nbits_max)
     nout_u = nout.view(U64)                       # nout >= 0
     extra_meta = 2 + np.maximum(
         (bit_length(nout_u).astype(np.int64) + 6) // 7, 1)
-    cap_v = 128 // (nbits_max - ts)
-    valpck = np.where(nout > 0, 16 * ((nout + cap_v - 1) // cap_v), 0)
-    valvar = valvar_all[1:nbits_max]
     val_data = np.minimum(valpck, valvar)
-    # Index lower bound (`integer_codec.h:325-335`): packed indices
-    # need >= 1 bit each, varint gaps >= 1 byte each — true lower
-    # bounds, so skipping on their min never skips a winning candidate.
-    indmin = np.minimum(np.where(nout > 0, 16 * ((nout + 127) // 128), 0),
-                        np.maximum(nout, 1))
     est = (basic_metaspace + extra_meta + basic_data + val_data + indmin)
 
     # Best-first evaluation in estimate order. The reference iterates
@@ -467,11 +480,14 @@ def _select_bitpfr(desc: IntDescriptor, u, hist: np.ndarray,
     # low-nbits outlier sets the ascending sweep used to materialize
     # first are now never touched.
     live = np.flatnonzero((cnt > 0) & (est < sel0))
+    if delta is not None and len(live) \
+            and delta.lb < int(est[live].min()):
+        live = live[est[live] <= delta.total()]
     if len(live) == 0:
         return
     order = live[np.lexsort((ts[live], est[live]))]
 
-    opos = oblp = None  # nested outlier-position cache
+    opos = ovals = None  # nested outlier-position cache
     cached_t = -1
     best = None  # (required, nbits, val_codec, idx_codec, idx_nbits, i)
     for i in order:
@@ -488,13 +504,14 @@ def _select_bitpfr(desc: IntDescriptor, u, hist: np.ndarray,
         # are delta-1 gaps (offset_codec<size_t,1>, `oroch/bitpfr.h:75-83`).
         # Candidate outlier sets are nested in nbits, so a candidate at
         # larger nbits filters the cached set instead of re-scanning.
+        bound = vmin + (1 << nbits) - 1
         if opos is not None and nbits >= cached_t:
-            keep = oblp > nbits
+            keep = ovals > bound
             opos = opos[keep]
-            oblp = oblp[keep]
+            ovals = ovals[keep]
         else:
-            opos = np.flatnonzero(bl > nbits)
-            oblp = bl[opos]
+            opos = np.flatnonzero(vals > bound)
+            ovals = vals[opos]
         cached_t = nbits
         if len(opos):
             # positions and gaps are non-negative int64 — the U64 view
@@ -578,75 +595,77 @@ def _delta_lower_bound(hist: np.ndarray, n: int, dmin: int,
     maxbits = int(nz[-1]) if len(nz) else 0
     if maxbits <= 2 or len(nz) == 1:
         return 0
-    lb = min(_varint_total_from_hist(hist),
-             ref_bitpck_space(n, maxbits),
-             ref_bitpck_space(n, (dmax - dmin).bit_length()),
-             n)  # varfor floor
-    nout = n - int(hist[0])
-    for nbits in range(1, maxbits):
-        cnt = int(hist[nbits])
-        if cnt:
-            nout -= cnt
-        valpck = ref_bitpck_space(nout, maxbits - nbits)
-        valvar = 0
-        for nb in range(nbits + 1, maxbits + 1):
-            valvar += varint_nbits_space(nb - nbits) * int(hist[nb])
-        indmin = min(ref_bitpck_space(nout, 1), max(nout, 1))
-        lb = min(lb, ref_bitpck_space(n, nbits)
-                 + min(valpck, valvar) + indmin)
-    return lb
+    _, _, _, basic_data, valpck, valvar, indmin = \
+        _pfr_costs(hist, n, maxbits)
+    return min(_varint_total_from_hist(hist),
+               ref_bitpck_space(n, maxbits),
+               ref_bitpck_space(n, (dmax - dmin).bit_length()),
+               n,  # varfor floor
+               int((basic_data + np.minimum(valpck, valvar)
+                    + indmin).min()))
 
 
-def _try_delta(desc: IntDescriptor, vals: np.ndarray, width: int) -> None:
-    """Extension: try (first value + inner selection on consecutive deltas).
+class _Delta:
+    """Extension: the delta candidate (first value + inner selection on
+    consecutive deltas) of one selection.
 
     Built on the reference's offset codec idea (`oroch/offset.h:31-71`) but
     run through full auto-selection; wins on near-monotone sequences (ts,
     turn_idx) that the reference's selector cannot exploit.
 
     Cost compared at reference-model sizes so selection stays deterministic:
-    delta ref cost = varint(zigzag(first)) + inner.ref_total. A cheap
-    histogram lower bound gates the full inner selection: when even the
-    bound cannot beat the already-selected codec (the common case for
-    non-monotone data like word-dictionary ids), the sweep is skipped —
-    the selected codec is bit-identical either way.
+    delta ref cost = varint(zigzag(first)) + inner.ref_total. ``lb`` is a
+    cheap histogram lower bound of that cost: when it cannot beat the
+    selected codec (the common case for non-monotone data like
+    word-dictionary ids), the inner selection never runs — the selected
+    codec is bit-identical either way.
     """
-    n = len(vals)
-    if n < 5:
-        return
-    deltas = _delta_transform(vals, width)
-    first = int(vals[0])
-    meta_lb = varint_size_scalar(zigzag_encode_scalar(first))
-    dmin = int(deltas.min())
-    dmax = int(deltas.max())
-    if _small_range_ok(dmax - dmin, n - 1) and dmin != dmax:
-        # same one-bincount derivation as select's fast path (exact)
-        dh = np.bincount(deltas - dmin, minlength=dmax - dmin + 1)
-        vdom = np.arange(dmin, dmax + 1, dtype=I64)
-        blz_dom = bit_length(zigzag_encode(vdom))
-        hist = np.bincount(blz_dom, weights=dh,
-                           minlength=65).astype(np.int64)
-        u_zig_d = None
-    else:
-        u_zig_d = zigzag_encode(deltas)
-        hist = np.bincount(bit_length(u_zig_d), minlength=65)
-    if meta_lb + _delta_lower_bound(hist, n - 1, dmin, dmax) >= \
-            desc.ref_meta + desc.ref_data:
-        return
-    # hand the gate's transforms to the inner selection — same values
-    # it would recompute (zigzag, histogram, min/max of the deltas)
-    inner = select(deltas, width=width, try_delta=False,
-                   _pre=(u_zig_d, hist, dmin, dmax))
-    meta = meta_lb
-    total = meta + inner.ref_total
-    if total < desc.ref_meta + desc.ref_data:
-        desc.codec = DELTA
-        desc.origin = first
-        desc.nbits = 0
-        desc.noutliers = 0
-        desc.ref_meta = meta
-        desc.ref_data = inner.ref_total
-        desc.inner = inner
+
+    def __init__(self, vals: np.ndarray, width: int):
+        n = len(vals)
+        self.width = width
+        self.deltas = _delta_transform(vals, width)
+        self.first = int(vals[0])
+        self.meta = varint_size_scalar(zigzag_encode_scalar(self.first))
+        dmin = int(self.deltas.min())
+        dmax = int(self.deltas.max())
+        if _small_range_ok(dmax - dmin, n - 1) and dmin != dmax:
+            # same one-bincount derivation as select's fast path (exact)
+            dh = np.bincount(self.deltas - dmin, minlength=dmax - dmin + 1)
+            vdom = np.arange(dmin, dmax + 1, dtype=I64)
+            blz_dom = bit_length(zigzag_encode(vdom))
+            hist = np.bincount(blz_dom, weights=dh,
+                               minlength=65).astype(np.int64)
+            u_zig_d = None
+        else:
+            u_zig_d = zigzag_encode(self.deltas)
+            hist = np.bincount(bit_length(u_zig_d), minlength=65)
+        self.lb = self.meta + _delta_lower_bound(hist, n - 1, dmin, dmax)
+        # the inner selection takes these transforms as they stand —
+        # same values it would recompute (zigzag, histogram, min/max)
+        self._pre = (u_zig_d, hist, dmin, dmax)
+        self.inner: Optional[IntDescriptor] = None
+
+    def total(self) -> int:
+        """The exact reference cost (runs the inner selection once)."""
+        if self.inner is None:
+            self.inner = select(self.deltas, width=self.width,
+                                try_delta=False, _pre=self._pre)
+        return self.meta + self.inner.ref_total
+
+    def apply(self, desc: IntDescriptor) -> None:
+        """Replace the selected codec by delta when strictly cheaper."""
+        if self.lb >= desc.ref_meta + desc.ref_data:
+            return
+        total = self.total()
+        if total < desc.ref_meta + desc.ref_data:
+            desc.codec = DELTA
+            desc.origin = self.first
+            desc.nbits = 0
+            desc.noutliers = 0
+            desc.ref_meta = self.meta
+            desc.ref_data = self.inner.ref_total
+            desc.inner = self.inner
 
 
 # ---------------------------------------------------------------------------
@@ -715,11 +734,11 @@ def encode_payload(vals: np.ndarray, desc: IntDescriptor) -> bytes:
     if c == BITPFR:
         u = _u_for(vals, desc.origin)
         mask = (U64(1) << U64(desc.nbits)) - U64(1)
-        low = pack_bits(u & mask, desc.nbits)
         # one compare pass finds outliers (u > mask == high bits set) —
-        # the full-array `u >> nbits` materialization is avoided; only
-        # the (few) outliers are gathered and shifted
+        # neither the full-array `u >> nbits` nor `u & mask` is made;
+        # only the (few) outliers are gathered and shifted
         oidx = np.flatnonzero(u > mask)  # int64; values non-negative
+        low = pack_low_bits(u, desc.nbits)
         ovals = u[oidx] >> U64(desc.nbits)
         gaps_i = np.empty(len(oidx), dtype=I64)
         if len(oidx):
@@ -733,6 +752,41 @@ def encode_payload(vals: np.ndarray, desc: IntDescriptor) -> bytes:
     if c == DELTA:
         return encode_block(_delta_transform(vals, desc.width), desc.inner)
     raise ValueError(f"bad codec {c}")
+
+
+def payload_size(desc: IntDescriptor) -> int:
+    """Exact length of :func:`encode_payload`'s output for a descriptor
+    :func:`select` returned, from the descriptor alone: a caller can
+    compare candidate layouts and encode only the winner. Varint and
+    verbatim reference sizes are the actual byte counts; a bit-packed
+    stream is charged the reference's 16-byte blocks but written dense,
+    so those parts are recomputed at :func:`packed_size`."""
+    n, c = desc.n, desc.codec
+    if c == NAUGHT:
+        return 0
+    if c in (NORMAL, VARINT, VARFOR):
+        return desc.ref_data
+    if c in (BITPCK, BITFOR):
+        return packed_size(n, desc.nbits)
+    if c == BITPFR:
+        # ref_data = low bits + outlier index + outlier value parts
+        size = desc.ref_data - ref_bitpck_space(n, desc.nbits) \
+            + packed_size(n, desc.nbits)
+        for codec, nbits in ((desc.oidx_codec, desc.oidx_nbits),
+                             (desc.oval_codec, desc.oval_nbits)):
+            if codec == BITPCK:
+                size += packed_size(desc.noutliers, nbits) \
+                    - ref_bitpck_space(desc.noutliers, nbits)
+        return size
+    if c == DELTA:
+        return blob_size(desc.inner)
+    raise ValueError(f"bad codec {c}")
+
+
+def blob_size(desc: IntDescriptor) -> int:
+    """Exact length of :func:`encode_block`'s blob for a selected
+    descriptor: header + payload."""
+    return len(write_header(desc)) + payload_size(desc)
 
 
 def decode_payload(buf: bytes, desc: IntDescriptor) -> np.ndarray:

@@ -72,7 +72,10 @@ class StrDescriptor:
     n: int
     ref_total: int      # plain-at-reference-model cost (budget baseline)
     data_bytes: int     # actual blob size
-    detail: str = ""
+    raw_bytes: int      # UTF-8 bytes of the block's strings
+    # the block's distinct strings, when the selector dictionary-encoded
+    # it (every entry occurs, so their min/max are the block's)
+    distinct: Optional[pa.Array] = None
 
     @property
     def codec_name(self) -> str:
@@ -121,8 +124,7 @@ def arrow_to_bytes(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
                                 count=len(arr) + 1,
                                 offset=4 * arr.offset).astype(np.int64)
     data = np.frombuffer(buf_data, dtype=np.uint8)[offsets[0]:offsets[-1]]
-    lengths = np.diff(offsets)
-    return lengths.astype(np.int64), np.ascontiguousarray(data)
+    return np.diff(offsets), data
 
 
 def series_to_bytes(values) -> tuple[np.ndarray, np.ndarray]:
@@ -141,8 +143,40 @@ def bytes_to_arrow(lengths: np.ndarray, data: np.ndarray) -> pa.Array:
     )
 
 
-def _sized(blob: bytes) -> bytes:
-    return ic.varint_encode_scalar(len(blob)) + blob
+class _IntPart:
+    """An integer sub-sequence of a string blob (lengths, dictionary
+    indices, run lengths) with its selected codec. Its exact blob size
+    is known from the selection, so candidate layouts are compared by
+    size and only the winner's payload is ever encoded."""
+
+    __slots__ = ("vals", "desc", "size")
+
+    def __init__(self, vals: np.ndarray, try_delta: bool = True,
+                 vrange: Optional[tuple] = None):
+        self.vals = np.asarray(vals, dtype=np.int64)
+        self.desc = ic.select(self.vals, width=4, try_delta=try_delta,
+                              vrange=vrange)
+        self.size = ic.blob_size(self.desc)
+
+    def blob(self) -> bytes:
+        return ic.encode_block(self.vals, desc=self.desc)
+
+
+# A candidate blob is a list of pieces: bytes, uint8 arrays (character
+# data, written as they stand) and _IntParts (encoded on demand).
+
+def _sized(part: _IntPart) -> list:
+    return [ic.varint_encode_scalar(part.size), part]
+
+
+def _size(pieces: list) -> int:
+    return sum(p.size if isinstance(p, _IntPart) else len(p)
+               for p in pieces)
+
+
+def _join(pieces: list) -> bytes:
+    return b"".join(p.blob() if isinstance(p, _IntPart) else p
+                    for p in pieces)
 
 
 def _read_sized(buf: bytes, pos: int) -> tuple[bytes, int]:
@@ -150,28 +184,18 @@ def _read_sized(buf: bytes, pos: int) -> tuple[bytes, int]:
     return buf[pos:pos + size], pos + size
 
 
-def _int_blob(vals: np.ndarray, width: int = 4,
-              try_delta: bool = True,
-              vrange: Optional[tuple] = None) -> bytes:
-    # asarray, not astype: the callers already hold int64 arrays and
-    # astype would copy megabytes per block for nothing
-    return ic.encode_block(np.asarray(vals, dtype=np.int64), width=width,
-                           try_delta=try_delta, vrange=vrange)
-
-
 # ---------------------------------------------------------------------------
-# Candidate encoders
+# Candidate layouts
 # ---------------------------------------------------------------------------
 
-def _encode_plain(lengths, data) -> bytes:
-    return bytes([PLAIN_STR]) + _sized(_int_blob(lengths)) + data.tobytes()
+def _plain(len_part: _IntPart, data: np.ndarray) -> list:
+    return [bytes([PLAIN_STR]), *_sized(len_part), data]
 
 
-def _dict_section(dict_arr: pa.Array) -> bytes:
+def _dict_section(dict_arr: pa.Array) -> list:
     dl, dd = arrow_to_bytes(dict_arr)
-    return (ic.varint_encode_scalar(len(dict_arr))
-            + _sized(_int_blob(dl))
-            + dd.tobytes())
+    return [ic.varint_encode_scalar(len(dict_arr)), *_sized(_IntPart(dl)),
+            dd]
 
 
 def _read_dict_section(blob: bytes, pos: int) -> tuple[pa.Array, int]:
@@ -183,40 +207,32 @@ def _read_dict_section(blob: bytes, pos: int) -> tuple[pa.Array, int]:
     return bytes_to_arrow(dlens, ddata), pos + dsize
 
 
-def _encode_dict(codes: np.ndarray, dict_arr: pa.Array,
-                 dsec: Optional[bytes] = None) -> bytes:
+def _dict(codes: np.ndarray, dsec: list, ndict: int) -> list:
     # codes are first-appearance dictionary indices — an unordered
     # stream where the delta wrapper essentially never wins; skipping
     # its 4-pass gate is most of the dict-candidate encode cost.
     # Exact range is known by construction: index 0 goes to the first
     # row and every dictionary entry is referenced, so codes span
     # [0, ndict-1] — no scan passes needed.
-    return (bytes([DICT_STR])
-            + (dsec if dsec is not None else _dict_section(dict_arr))
-            + _int_blob(codes, try_delta=False,
-                        vrange=(0, len(dict_arr) - 1)))
+    return [bytes([DICT_STR]), *dsec,
+            _IntPart(codes, try_delta=False, vrange=(0, ndict - 1))]
 
 
-def _encode_rle(codes: np.ndarray, dict_arr: pa.Array,
-                dsec: Optional[bytes] = None) -> bytes:
+def _rle(codes: np.ndarray, starts: np.ndarray, dsec: list,
+         ndict: int) -> list:
     """RLE over dictionary codes: run lengths + run-value dict indices +
-    the dictionary itself. (Layout change vs v0: run values are dict
-    references, so repeated run values are stored once.)"""
-    boundaries = np.flatnonzero(np.diff(codes) != 0) + 1
-    starts = np.concatenate([[0], boundaries])
-    run_len = np.diff(np.concatenate([starts, [len(codes)]]))
-    run_idx = codes[starts]
+    the dictionary itself, runs starting at ``starts``. (Layout change
+    vs v0: run values are dict references, so repeated run values are
+    stored once.)"""
+    run_len = np.diff(starts, append=len(codes))
     # run_idx spans [0, ndict-1] exactly: every distinct code's first
     # appearance starts a run (its predecessor differs by definition)
-    return (bytes([RLE_STR])
-            + ic.varint_encode_scalar(len(starts))
-            + _sized(_int_blob(run_len))
-            + (dsec if dsec is not None else _dict_section(dict_arr))
-            + _int_blob(run_idx, try_delta=False,
-                        vrange=(0, len(dict_arr) - 1)))
+    return [bytes([RLE_STR]), ic.varint_encode_scalar(len(starts)),
+            *_sized(_IntPart(run_len)), *dsec,
+            _IntPart(codes[starts], try_delta=False, vrange=(0, ndict - 1))]
 
 
-def _encode_wsdict(arr: pa.Array) -> Optional[bytes]:
+def _wsdict(arr: pa.Array) -> list:
     """Word-dictionary codec: split every string on ' ' (C++), dictionary
     the flat word stream (C++ hash), then run the word-id sequence and
     per-string word counts through the Oroch-style integer selector.
@@ -231,17 +247,14 @@ def _encode_wsdict(arr: pa.Array) -> Optional[bytes]:
     lst = pc.split_pattern(arr, " ")
     counts = pc.list_value_length(lst).to_numpy(zero_copy_only=False) \
         .astype(np.int64)
-    flat = pc.list_flatten(lst)
-    denc = pc.dictionary_encode(flat)
+    denc = pc.dictionary_encode(pc.list_flatten(lst))
     ids = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     dict_arr = to_large_string(denc.dictionary)
     # ids span [0, nwords-1] exactly (first-appearance dictionary
     # indices, every entry referenced) — skips the min/max scans
-    return (bytes([WSDICT_STR])
-            + _dict_section(dict_arr)
-            + _sized(_int_blob(counts))
-            + _int_blob(ids, try_delta=False,
-                        vrange=(0, len(dict_arr) - 1)))
+    return [bytes([WSDICT_STR]), *_dict_section(dict_arr),
+            *_sized(_IntPart(counts)),
+            _IntPart(ids, try_delta=False, vrange=(0, len(dict_arr) - 1))]
 
 
 def _decode_wsdict(blob: bytes, n: int, pos: int) -> pa.Array:
@@ -259,17 +272,15 @@ def _decode_wsdict(blob: bytes, n: int, pos: int) -> pa.Array:
     return pc.binary_join(lst, pa.scalar(" ", type=pa.large_string()))
 
 
-def _encode_fsst(lengths, data) -> Optional[bytes]:
+def _fsst(lengths: np.ndarray, data: np.ndarray) -> Optional[list]:
     starts = np.zeros(len(lengths), dtype=np.int64)
     np.cumsum(lengths[:-1], out=starts[1:])
     table = fsst.build_table(data, starts)
     if not table:
         return None
     enc, enc_lens = fsst.encode(data, starts, table)
-    return (bytes([FSST_STR])
-            + fsst.serialize_table(table)
-            + _sized(_int_blob(enc_lens))
-            + enc.tobytes())
+    return [bytes([FSST_STR]), fsst.serialize_table(table),
+            *_sized(_IntPart(enc_lens)), enc]
 
 
 # ---------------------------------------------------------------------------
@@ -283,77 +294,68 @@ def encode_str_block(values, text_hint: bool = False
     ``values``: pa.Array / pa.ChunkedArray / pandas Series / numpy
     object array of str (no nulls). Arrow-native throughout — no
     per-string Python objects. ``text_hint`` forces trying FSST even
-    when gates would skip it.
+    when gates would skip it. Every candidate's exact size is known
+    before its integer payloads are encoded, so only the winner's are.
     """
     arr = to_string_array(values)
     n = len(arr)
     lengths, data = arrow_to_bytes(arr)
-    total_bytes = int(lengths.sum())
+    total_bytes = len(data)
 
     # Reference baseline: plain with lengths at the Oroch model cost.
-    # One selection serves both the budget math and the actual encode
-    # (encode_block would re-run the identical select otherwise).
-    len_desc = ic.select(lengths.astype(np.int64), width=4, try_delta=True)
-    len_blob = ic.encode_block(lengths, desc=len_desc, width=4)
-    plain_size = 1 + ic.varint_size_scalar(len(len_blob)) \
-        + len(len_blob) + total_bytes
-    ref_total = (1 + ic.varint_size_scalar(len_desc.ref_total)
-                 + len_desc.ref_total + total_bytes)
+    # One selection serves both the budget math and the plain candidate.
+    len_part = _IntPart(lengths)
+    ref_total = (1 + ic.varint_size_scalar(len_part.desc.ref_total)
+                 + len_part.desc.ref_total + total_bytes)
+    best = _plain(len_part, data)
+    best_size = _size(best)
+    best_codec = PLAIN_STR
 
-    if n == 0:
-        blob = _encode_plain(lengths, data)
-        return blob, StrDescriptor(PLAIN_STR, 0, ref_total, len(blob))
+    def consider(codec, cand):
+        # strict-less compare in a fixed order (dict, rle, wsdict,
+        # fsst) — mirrors the reference's compare discipline
+        # (`integer_codec.h:405-420`)
+        nonlocal best, best_size, best_codec
+        if cand is not None and _size(cand) < best_size:
+            best, best_size, best_codec = cand, _size(cand), codec
 
-    avg = total_bytes / n
+    avg = total_bytes / n if n else 0.0
     # Long-string blocks (text) skip the dictionary machinery entirely:
     # natural-language blocks essentially never dedup/run, and the C++
     # hash pass over the full character data is pure overhead.
-    try_dict = avg < 32 or not (text_hint or total_bytes >= FSST_MIN_BYTES)
-
-    best: Optional[bytes] = None  # plain materialized lazily
-    best_size = plain_size
-    best_codec = PLAIN_STR
+    try_dict = n > 0 and (avg < 32 or not (text_hint
+                                           or total_bytes >= FSST_MIN_BYTES))
+    u = n  # assumed distinct without a dictionary; only gates FSST
+    dict_arr = None
     if try_dict:
         denc = pc.dictionary_encode(arr)  # C++ hash table; deterministic
         codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
         dict_arr = to_large_string(denc.dictionary)
         u = len(dict_arr)
-        nruns = 1 + int(np.count_nonzero(np.diff(codes)))
-        # Strict-less compare in fixed order (dict, rle, fsst) — mirrors
-        # the reference's compare discipline (`integer_codec.h:405-420`).
+        starts = np.flatnonzero(np.diff(codes, prepend=-1))  # run starts
         gate_dict = (u <= max(1, int(n * DICT_MAX_RATIO)) or u <= 256) \
             and u <= DICT_MAX_ABS
-        gate_rle = nruns <= max(1, int(n * RLE_MAX_RATIO))
-        # dictionary section serialized once for both candidates
+        gate_rle = len(starts) <= max(1, int(n * RLE_MAX_RATIO))
+        # dictionary section selected once for both candidates
         dsec = _dict_section(dict_arr) if (gate_dict or gate_rle) \
             else None
         if gate_dict:
-            cand = _encode_dict(codes, dict_arr, dsec)
-            if len(cand) < best_size:
-                best, best_size, best_codec = cand, len(cand), DICT_STR
+            consider(DICT_STR, _dict(codes, dsec, u))
         if gate_rle:
-            cand = _encode_rle(codes, dict_arr, dsec)
-            if len(cand) < best_size:
-                best, best_size, best_codec = cand, len(cand), RLE_STR
-    else:
-        u = n  # assumed distinct; only affects the FSST gate below
-    if (text_hint or (avg >= FSST_MIN_AVG_LEN
-                      and total_bytes >= FSST_MIN_BYTES
-                      and u > n // 8)):
-        cand = _encode_wsdict(arr)
-        if cand is not None and len(cand) < best_size:
-            best, best_size, best_codec = cand, len(cand), WSDICT_STR
+            consider(RLE_STR, _rle(codes, starts, dsec, u))
+    if n > 0 and (text_hint or (avg >= FSST_MIN_AVG_LEN
+                                and total_bytes >= FSST_MIN_BYTES
+                                and u > n // 8)):
+        consider(WSDICT_STR, _wsdict(arr))
         # FSST is the expensive candidate; try it only while the best
         # so far has not already beaten FSST's practical compression
         # floor on text (deterministic gate — a pure function of sizes)
         if best_size > int(total_bytes * FSST_SKIP_RATIO):
-            cand = _encode_fsst(lengths, data)
-            if cand is not None and len(cand) < best_size:
-                best, best_size, best_codec = cand, len(cand), FSST_STR
+            consider(FSST_STR, _fsst(lengths, data))
 
-    if best is None:
-        best = (bytes([PLAIN_STR]) + _sized(len_blob) + data.tobytes())
-    return best, StrDescriptor(best_codec, n, ref_total, len(best))
+    blob = _join(best)
+    return blob, StrDescriptor(best_codec, n, ref_total, len(blob),
+                               total_bytes, dict_arr)
 
 
 def _from_dict_codes(codes: np.ndarray, dict_arr: pa.Array) -> pa.Array:

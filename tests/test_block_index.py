@@ -32,6 +32,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from oroch_spark import engine
+from desc_stats import col_stats
 
 N = 1000
 RANGES = [(150, 449), (200, 399), (5000, 6000), (-50, 2000)]
@@ -422,7 +423,7 @@ def test_extra_stored_columns_keep_the_cached_index(spark, tmp_path, jobs):
     job."""
     kinds = _kinds(spark)
     path = str(tmp_path / "stat_cols")
-    st = engine._col_stats("v")
+    st = col_stats("v")
     engine.encode_df(
         spark.createDataFrame(_source()), ["k"], n_buckets=1,
         block_rows=100).withColumn("v__lo", st["lo"]) \

@@ -11,6 +11,7 @@ import pytest
 
 import cli
 from oroch_spark import engine, transcripts
+from desc_stats import col_stats
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -140,7 +141,7 @@ def test_cli_bloom_encode_and_scan(spark, src_dir, tmp_path, capsys):
     capsys.readouterr()
     from oroch_spark import engine
     blocks = spark.read.parquet(os.path.join(out, "blocks"))
-    assert blocks.filter(engine._col_stats("tool")["bm"].isNotNull()) \
+    assert blocks.filter(col_stats("tool")["bm"].isNotNull()) \
         .count() == blocks.count()
 
     src = spark.read.parquet(src_dir)
@@ -170,7 +171,7 @@ def test_cli_bloom_encode_and_scan(spark, src_dir, tmp_path, capsys):
                        snapshot_id=None, bloom_cols="tool"))
     capsys.readouterr()
     b2 = spark.read.parquet(os.path.join(out2, "blocks"))
-    assert b2.filter(engine._col_stats("tool")["bm"].isNotNull()) \
+    assert b2.filter(col_stats("tool")["bm"].isNotNull()) \
         .count() == b2.count()
     out3 = str(tmp_path / "encb3")
     cli.cmd_encode(_ns(spark, src=src_dir, out=out3,
@@ -180,7 +181,7 @@ def test_cli_bloom_encode_and_scan(spark, src_dir, tmp_path, capsys):
                        snapshot_id=None, bloom_cols="tool"))
     capsys.readouterr()
     b3 = spark.read.parquet(os.path.join(out3, "blocks"))
-    assert b3.filter(engine._col_stats("tool")["bm"].isNotNull()) \
+    assert b3.filter(col_stats("tool")["bm"].isNotNull()) \
         .count() == b3.count()
 
 

@@ -496,6 +496,39 @@ def test_reader_filter_state_is_per_plan(events_table):
     assert rows == 1000  # the whole sf0.001 events table
 
 
+def test_another_filter_on_a_reused_frame_is_planned_afresh(dsspark,
+                                                          events_table):
+    """A second FILTERED query on the same loaded frame pushes its own
+    filters, so it is planned anew: its rows are its own, never the
+    first query's."""
+    path, src = events_table
+    back = dsspark.read.format("oroch").load(path)
+    assert back.filter("event_id = 100").count() == 1
+    assert back.filter("event_id < 5").count() == 5
+    assert sorted(r.event_id for r in back.filter("event_id < 5")
+                  .select("event_id").collect()) == [0, 1, 2, 3, 4]
+    assert back.filter("event_id >= 990").count() == \
+        src.filter("event_id >= 990").count()
+
+
+@pytest.mark.xfail(strict=True, reason=(
+    "Spark 4.1 caches the scan that a filter pushdown planned on the "
+    "loaded relation (PythonDataSourceV2.setReadInfo) and replays it "
+    "for a later query that pushes no filter, without calling the "
+    "reader; see datasource.register"))
+def test_unfiltered_query_after_a_filtered_one_on_a_reused_frame(
+        dsspark, events_table):
+    """count() and collect() after a filtered count() on the same
+    loaded frame read every row. Strict: it fails while the upstream
+    cache replays the filtered plan, and passes (so this mark must go)
+    once it does not."""
+    path, _ = events_table
+    back = dsspark.read.format("oroch").load(path)
+    assert back.filter("event_id = 100").count() == 1
+    assert back.count() == 1000
+    assert len(back.collect()) == 1000
+
+
 def test_crashed_append_parts_invisible_and_swept(dsspark, tmp_path):
     """A job that died before commit never published its part files:
     the sidecar's committed-file registry hides them from readers, and

@@ -14,6 +14,7 @@ It reads at most what Spark would give one task (the scan's split
 size), and a group count or scan whose answer passes one Arrow batch
 runs in Spark.
 """
+import json
 import math
 import os
 
@@ -299,3 +300,55 @@ def test_local_read_is_bounded_by_sparks_split_size(floats, jobs, spark):
     finally:
         for c in confs:
             spark.conf.unset(c)
+
+
+def test_in_tested_string_column_decodes_once(monkeypatch):
+    """A row test that decoded a column keeps its values for the output:
+    an IN on a plain, FSST or wsdict string column and a range on a
+    float column decode each column of the block exactly once, the
+    tested ones included, and the rows match a brute-force filter."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from oroch_spark.kernels import strings as sc
+
+    n = 3000
+    rng = np.random.default_rng(11)
+    words = np.array(["alpha", "beta", "gamma", "delta", "eps"])
+    tbl = pa.table({
+        "k": np.arange(n, dtype=np.int64),
+        "plain": [f"{x:x}" for x in rng.permutation(1 << 20)[:n]],
+        "url": [f"https://example.com/item/{x:016x}?v=1"
+                for x in rng.integers(0, 2 ** 62, n)],
+        "text": [" ".join(words[rng.integers(0, 5, rng.integers(1, 12))])
+                 for _ in range(n)],
+        "f": rng.normal(size=n),
+    })
+    kinds = engine.arrow_column_kinds(tbl.schema)
+    row = engine._encode_chunk(tbl, 0, 0, kinds, ["k"],
+                               frozenset(["url", "text"]))
+    codecs = {d["n"]: d["c"] for d in json.loads(row["desc"])["cols"]}
+    assert (codecs["plain"], codecs["url"], codecs["text"]) == \
+        ("plain_str", "fsst_str", "wsdict_str")
+    calls = []
+    decode = sc.decode_str_block_arrow
+    monkeypatch.setattr(sc, "decode_str_block_arrow",
+                        lambda blob, m: calls.append(blob) or decode(blob, m))
+    probes = {c: sorted(set(tbl.column(c).to_pylist()[::7]))
+              for c in ("plain", "url", "text")}
+    tests = [(c, engine._KeyPred(values=v,
+                                 raw=(("in", engine._InSet(v)),)))
+             for c, v in probes.items()]
+    tests.append(("f", engine._KeyPred(lo=-1.0, raw=((">=", -1.0),))))
+    blk = engine._BlockReader(row["desc"], pa.scalar(row["payload"]), n)
+    idxs = blk.select(tests)
+    out = blk.batch(tbl.schema, idxs)
+    assert len(calls) == 3  # plain, url, text: once each
+    mask = pc.greater_equal(tbl.column("f"), -1.0)
+    for c, v in probes.items():
+        mask = pc.and_(mask, pc.is_in(tbl.column(c), pa.array(v)))
+    want = tbl.filter(mask)
+    assert len(want) > 0 and out.equals(
+        pa.RecordBatch.from_arrays([want.column(c).combine_chunks()
+                                    for c in tbl.column_names],
+                                   schema=tbl.schema))

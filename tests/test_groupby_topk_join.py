@@ -11,6 +11,7 @@ from pyspark.sql import Row, functions as F
 
 from oroch_spark import engine
 from oroch_spark.kernels import strings as sc
+from desc_stats import col_stats
 
 SF = "/root/testdata/sf0.001"
 
@@ -467,7 +468,7 @@ def test_topk_by_prunes_on_correlated_column(spark):
     blocks = engine.encode_df(src, ["k"], n_buckets=1,
                               block_rows=256).persist()
     try:
-        st = engine._col_stats("ts")
+        st = col_stats("ts")
         meta = blocks.select("bucket", "n", st["lo"].alias("_lo"))
         from pyspark.sql import Window
         w = Window.partitionBy("bucket") \

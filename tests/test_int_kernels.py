@@ -317,8 +317,9 @@ class TestFetch:
 
 
 def test_delta_gate_never_changes_selection():
-    """The histogram lower-bound gate in _try_delta may only SKIP work,
-    never change which codec full computation would pick."""
+    """The histogram lower-bound gate of the delta candidate may only
+    SKIP work, never change which codec full computation would pick
+    (a bound of 0 also takes the delta cost before the bitpfr sweep)."""
     import numpy as np
     from oroch_spark.kernels import integers as ic
 
@@ -429,8 +430,10 @@ def test_small_range_fast_path_is_bit_identical():
 
 
 def test_pack_bits_grouped_path_matches_bitstream():
-    """The grouped shift-OR pack (g values per uint64) must emit the
-    exact dense little-endian bitstream at every width and tail size."""
+    """The grouped shift-OR pack (g values per group) must emit the
+    exact dense little-endian bitstream at every width and at every
+    tail size around whole groups (n = g*k - 1, g*k, g*k + 1), and
+    unpack must read it back."""
     import numpy as np
 
     from oroch_spark.kernels import bits
@@ -448,10 +451,57 @@ def test_pack_bits_grouped_path_matches_bitstream():
         return np.packbits(b.reshape(-1), bitorder="little").tobytes()
 
     rng = np.random.default_rng(7)
-    for nbits in list(range(1, 17)) + [20, 24, 28, 33, 57, 63, 64]:
-        for n in (0, 1, 2, 3, 7, 8, 9, 17, 1000):
-            hi = min((1 << nbits) - 1, 2**63 - 1)
-            u = rng.integers(0, hi + 1, size=n, dtype=np.uint64)
+    for nbits in range(1, 65):
+        g = 8 // int(np.gcd(nbits, 8))
+        mask = np.uint64((1 << nbits) - 1)
+        tails = {g * k + d for k in (1, 3) for d in (-1, 0, 1)}
+        for n in sorted({0, 1, 2, 3, 7, 8, 9, 17, 1000} | tails):
+            u = (rng.integers(0, 2**63, size=n, dtype=np.uint64)
+                 * np.uint64(2) + rng.integers(0, 2, n, dtype=np.uint64))
+            u &= mask
+            if n:  # all-ones values in the first and the last lane
+                u[0] = u[-1] = mask
             got = bits.pack_bits(u, nbits)
             assert got == pack_ref(u, nbits), (nbits, n)
             assert np.array_equal(bits.unpack_bits(got, n, nbits), u)
+            if nbits < 64:
+                # pack_low_bits drops the bits above nbits of any value,
+                # wherever the group that holds it is, and keeps its input
+                wide = u | (rng.integers(0, 2, n).astype(bool)
+                            * ~mask).astype(np.uint64)
+                keep = wide.copy()
+                assert bits.pack_low_bits(wide, nbits) == got, (nbits, n)
+                assert np.array_equal(wide, keep)
+
+
+def test_blob_size_is_the_encoded_length():
+    """blob_size gives, from the selected descriptor alone, the exact
+    length encode_block writes: every codec, both bitpfr sub-codecs,
+    delta wrappers, both widths."""
+    import numpy as np
+    from oroch_spark.kernels import integers as ic
+
+    rng = np.random.default_rng(17)
+    seen = set()
+    for i in range(300):
+        n = int(rng.choice([0, 1, 5, 6, 64, 257, 3000]))
+        b = int(rng.integers(1, 62))
+        v = [rng.integers(0, 1 << b, n),
+             np.where(rng.random(n) < rng.random() * 0.3,
+                      rng.integers(0, 1 << b, n), rng.integers(0, 16, n)),
+             np.cumsum(rng.integers(0, 1 << int(rng.integers(1, 20)), n)),
+             rng.integers(-(1 << b), 1 << b, n),
+             np.full(n, b)][i % 5].astype(np.int64)
+        for width in ((8, 4) if n == 0 or np.abs(v).max() < 2**31
+                      else (8,)):
+            for try_delta in (False, True):
+                d = ic.select(v, width=width, try_delta=try_delta)
+                blob = ic.encode_block(v, desc=d)
+                assert ic.blob_size(d) == len(blob), (i, d.codec_name)
+                seen.add(d.codec_name)
+                if d.codec == ic.BITPFR:
+                    seen.add(("bitpfr", d.oidx_codec, d.oval_codec))
+    assert {"naught", "normal", "varint", "varfor", "bitpck", "bitfor",
+            "bitpfr", "delta"} <= seen
+    assert {("bitpfr", ic.BITPCK, ic.VARINT),
+            ("bitpfr", ic.VARINT, ic.BITPCK)} & seen

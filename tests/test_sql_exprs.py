@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import Window, functions as F
 
 from oroch_spark import engine
+from desc_stats import STATS_SCHEMA
 
 ODD = "'\\`é—"  # quote, backslash, backtick and non-ASCII text
 N_ROWS = 1000
@@ -106,7 +107,7 @@ def _ref_int_domain(kind, col):
 
 def _ref_stats(col):
     return F.get(F.filter(
-        F.from_json(F.col("desc"), engine._STATS_JSON_SCHEMA)["cols"],
+        F.from_json(F.col("desc"), STATS_SCHEMA)["cols"],
         lambda c: c["n"] == F.lit(col)), 0)
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from oroch_spark import engine
 from oroch_spark.kernels import integers as ic
+from desc_stats import col_stats
 
 
 def _interior(blocks, lo, hi):
@@ -222,7 +223,7 @@ def test_scan_where_secondary_zone_map(spark):
                      & (F.col("event_id") <= 160))
     assert sorted(r.event_id for r in got.collect()) \
         == sorted(r.event_id for r in exp.collect())
-    st = engine._col_stats("event_id")
+    st = col_stats("event_id")
     keep = (st["lo"].isNull() | st["hi"].isNull()
             | ((st["lo"] <= 160) & (st["hi"] >= 100)))
     assert blocks.filter(keep).count() < blocks.count()
@@ -242,7 +243,7 @@ def test_scan_where_materialized_stats_pushdown(spark, tmp_path,
     Spark, the kept blocks' ids are a parquet PushedFilter."""
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     kinds = engine.column_kinds(src.schema)
-    st = engine._col_stats("event_id")
+    st = col_stats("event_id")
     blocks = engine.encode_df(src, ["ts"], n_buckets=1, block_rows=128) \
         .withColumn("event_id__lo", st["lo"]) \
         .withColumn("event_id__hi", st["hi"])
@@ -275,7 +276,7 @@ def test_scan_where_string_column(spark):
         == sorted(r.event_id for r in exp.collect())
     assert got.count() > 0
     # a range below every value prunes all blocks
-    st = engine._col_stats("event_type")
+    st = col_stats("event_type")
     keep = (st["slo"].isNull() | st["shi"].isNull()
             | ((st["slo"] <= "aaa") & (st["shi"] >= "a")))
     assert blocks.filter(keep).count() == 0
@@ -319,7 +320,7 @@ def test_count_where_matches_source_and_uses_metadata(spark):
         .collect()[0].n_rows
     exp = src.filter(F.col("event_id").between(100, 400)).count()
     assert got == exp > 0
-    st = engine._col_stats("event_id")
+    st = col_stats("event_id")
     contained = blocks.filter(
         F.coalesce((st["lo"] >= 100) & (st["hi"] <= 400),
                    F.lit(False))).count()

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oroch_spark import engine
+from desc_stats import col_stats
 
 
 def _morton_scalar(vals: list[int], bits: int) -> int:
@@ -76,7 +77,7 @@ def test_zorder_roundtrip_and_secondary_pruning(spark):
 
         # pruning: fraction of blocks kept for a 10%-of-domain range
         def kept(blocks, col, lo, hi):
-            st = engine._col_stats(col)
+            st = col_stats(col)
             keep = (st["lo"].isNull() | st["hi"].isNull()
                     | ((st["lo"] <= hi) & (st["hi"] >= lo)))
             return blocks.filter(keep).count(), blocks.count()
@@ -141,7 +142,7 @@ def test_zorder_string_column_roundtrip_and_pruning(spark):
         assert engine.checksum_df(engine.decode_df(zb, kinds)) \
             == engine.checksum_df(src)
         total = zb.count()
-        st = engine._col_stats("conv_id")
+        st = col_stats("conv_id")
         keep_s = zb.filter(
             st["slo"].isNull() | st["shi"].isNull()
             | ((st["slo"] <= "conv-00000039")
