@@ -1419,8 +1419,7 @@ def _read_blocks(batch) -> Iterator[_BlockReader]:
         yield _BlockReader(descs[i], payloads[i], ns[i])
 
 
-def make_decode_fn(arrow_schema_bytes: bytes,
-                   passthrough: tuple[str, ...] = ()):
+def make_decode_fn(arrow_schema_bytes: bytes):
     """mapInArrow kernel: each encoded block row expands to its rows.
     No shuffle — blocks decode independently (SURVEY.md §3.2). The
     target arrow schema (incl. Spark's timestamp tz convention) is
@@ -1430,20 +1429,15 @@ def make_decode_fn(arrow_schema_bytes: bytes,
     the target schema — each column's blob is located by its (offset,
     length) in the block descriptor, so unrequested columns' bytes are
     never touched (the block-format analogue of parquet column
-    pruning).
-
-    ``passthrough`` names BLOCK-level metadata columns (e.g. the
-    streaming ``batch_id``) replicated onto every decoded row — the
-    mechanism the merge-on-read reader uses to rank row versions."""
+    pruning)."""
 
     def decode_blocks(batches) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
         for batch in batches:
-            for i, blk in enumerate(_read_blocks(batch)):
-                yield blk.batch(out_schema, passthrough={
-                    p: batch.column(p)[i] for p in passthrough})
+            for blk in _read_blocks(batch):
+                yield blk.batch(out_schema)
 
     return decode_blocks
 
@@ -1876,37 +1870,38 @@ def encode_df_staged(df: DataFrame, key_cols: list[str], staging_dir: str,
 
 
 def decode_df(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-              columns: Optional[list[str]] = None,
-              passthrough: Optional[list[str]] = None) -> DataFrame:
+              columns: Optional[list[str]] = None) -> DataFrame:
     """Decode the blocks table back to rows. ``columns`` selects a
     projection: only those columns' blobs are decoded (located by the
     descriptor offsets — the rest of each payload is never touched),
-    so a 2-column read of a 50-column table pays for 2 columns.
-    ``passthrough`` appends block-level metadata columns of the blocks
-    table (e.g. ``batch_id``), replicated onto every decoded row."""
-    out_schema, fn = _decoder(schema_kinds, columns, {
-        p: blocks.schema[p].dataType for p in passthrough or ()})
+    so a 2-column read of a 50-column table pays for 2 columns."""
+    out_schema, fn = _decoder(schema_kinds, columns)
     return blocks.mapInArrow(fn, schema=out_schema)
 
 
 def _decoder(schema_kinds: list[tuple[str, str]],
-             columns: Optional[list[str]] = None,
-             passthrough: Optional[dict] = None):
+             columns: Optional[list[str]] = None):
     """:func:`decode_df`'s output schema and :func:`make_decode_fn`
-    kernel: the ``columns`` projection (or every column), then the
-    ``passthrough`` block columns, by name and Spark type."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    kernel: the ``columns`` projection, or every column."""
     if columns is not None:
         by_name = dict(schema_kinds)
         schema_kinds = [(c, by_name[c]) for c in columns]
-    passthrough = passthrough or {}
-    out_schema = T.StructType(
-        [T.StructField(n, spark_type_of(k)) for n, k in schema_kinds]
-        + [T.StructField(p, t) for p, t in passthrough.items()])
-    return out_schema, make_decode_fn(
-        to_arrow_schema(out_schema).serialize().to_pybytes(),
-        passthrough=tuple(passthrough))
+    return _row_schema(schema_kinds), make_decode_fn(
+        _schema_bytes(schema_kinds))
+
+
+def _row_schema(schema_kinds: list[tuple[str, str]]) -> T.StructType:
+    """The Spark schema that rows of ``schema_kinds`` decode to."""
+    return T.StructType([T.StructField(n, spark_type_of(k))
+                         for n, k in schema_kinds])
+
+
+def _schema_bytes(schema_kinds: list[tuple[str, str]]) -> bytes:
+    """:func:`_row_schema`'s Arrow form (Spark's timestamp time-zone
+    convention included), serialized for a worker to rebuild."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(_row_schema(schema_kinds)).serialize().to_pybytes()
 
 
 def roundtrip_df(df: DataFrame, key_cols: list[str], **kw) -> DataFrame:
@@ -2584,6 +2579,143 @@ def _range_tests(preds: list[tuple]) -> list[tuple]:
         tests.append((c, _KeyPred(lo=lo, hi=hi,
                                   raw=((">=", lo), ("<=", hi)))))
     return tests
+
+
+# ---------------------------------------------------------------------------
+# Latest-wins
+# ---------------------------------------------------------------------------
+# One resolver for every latest-wins reader (``format("oroch")``'s
+# latest mode, ``compact_sink``, ``dml.table_changes``,
+# ``incremental.read_latest``): versions of a key are blocks files
+# tagged with a batch id, and the newest batch wins — Oroch's one
+# insert-then-re-encode rule (`integer_array.h:216-245`) as a read.
+
+_LATEST_RANGES = 32  # lead-key ranges a resolve is cut into, at most
+
+
+def _planned(file: str, stats: tuple, row_group: int,
+             rows: list[int]) -> "pa.Table":
+    """The planned blocks of one row group, read only while ``file``
+    still has the ``stats`` it was planned on: a file rewritten since
+    raises, so no read decodes blocks its plan did not keep."""
+    import pyarrow.parquet as pq
+
+    got = _stable([file], (stats,), lambda: _read_rows(
+        pq.ParquetFile(file), row_group, rows))
+    if got is None:
+        raise OSError(f"{file} changed since this read was planned; "
+                      "retry the read")
+    return got
+
+
+def latest_plan(pairs: list[tuple[str, int]], key_cols: list[str],
+                kind_of: dict, preds: Optional[dict] = None) -> list[tuple]:
+    """Plan a latest-wins resolve of the blocks files ``pairs``, each
+    ``(file, batch id)`` (a base snapshot's at -1), on their block
+    index alone: the lead-key domain is cut at the kept blocks' lows
+    into at most :data:`_LATEST_RANGES` ranges, each given every kept
+    block whose bounds overlap it, so all versions of a key land in
+    one range. The NULL lead key is one key, owned by the first range,
+    which also gets every block that may hold it. A block without
+    bounds collapses the plan to one range (correct, not parallel).
+    ``preds``, by column, are KEY filters: a block they prune holds no
+    version of a key they keep. Per range ``(lo, hi, items)``: ``lo``
+    inclusive, ``hi`` exclusive, None when open; ``items`` the row
+    groups ``(file, stats, row group, rows, batch id)`` to read."""
+    if not pairs:
+        return []
+    ix = _BlockIndex.load([f for f, _ in pairs])
+    if ix is None:
+        raise OSError("the files of a latest-wins read kept changing "
+                      "while it was planned; retry it")
+    lead = key_cols[0]
+    keep = ix.keep(lambda i: all(ix.admits(i, c, p, kind_of[c], c == lead)
+                                 for c, p in (preds or {}).items()))
+    bounds = [ix.bounds(i, "" if kind_of[lead] == K_STR else 0)
+              for i in keep]
+    edges = [None, None]
+    if len(keep) > 1 and not any(None in b for b in bounds):
+        los = sorted(lo for lo, _ in bounds)
+        n = min(_LATEST_RANGES, len(keep))
+        edges = [None] + sorted({los[len(los) * i // n]
+                                 for i in range(1, n)}) + [None]
+    plan = []
+    for rlo, rhi in zip(edges, edges[1:]):
+        items = [(ix._files[f], ix._stats[f], g, rows, pairs[f][1])
+                 for f, g, rows, _ in ix.placed(
+                     [i for i, (lo, hi) in zip(keep, bounds)
+                      if (rhi is None or lo < rhi)
+                      and (rlo is None or hi >= rlo)
+                      or rlo is None and ix.nulls(i, lead) != 0])]
+        if items:
+            plan.append((rlo, rhi, items))
+    return plan
+
+
+def latest_rows(part: tuple, key_cols: list[str], schema: "pa.Schema",
+                preds: tuple = ()) -> "pa.Table":
+    """The newest version of every key of one :func:`latest_plan`
+    range ``part``: its blocks' rows that the ``(col, _KeyPred)`` row
+    tests ``preds`` select, decoded as ``schema`` plus the int64
+    ``_batch_id`` of their file (an engine-internal name, so no table
+    column collides) and cut to the range's keys; then one
+    vectorized sort by key and descending batch and a group-boundary
+    scan keep each key's first row — no Python per row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lo, hi, items = part
+    full = schema.append(pa.field("_batch_id", pa.int64()))
+    tbl = pa.Table.from_batches(
+        [blk.batch(full, idxs, passthrough={"_batch_id": bid})
+         for file, stats, rg, rows, bid in items
+         for blk in _read_blocks(_planned(file, stats, rg, rows))
+         if len(idxs := blk.select(list(preds)))], full)
+    key = tbl.column(key_cols[0])
+    if (lo, hi) != (None, None):
+        m = pc.is_valid(key) if hi is None \
+            else pc.less(key, pa.scalar(hi, key.type))
+        tbl = tbl.filter(  # the first range owns the NULL key
+            pc.or_kleene(m, pc.is_null(key)) if lo is None
+            else pc.and_(m, pc.greater_equal(key, pa.scalar(lo, key.type))))
+    tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[
+        *((k, "ascending") for k in key_cols), ("_batch_id", "descending")]))
+    n = tbl.num_rows
+    first = np.zeros(n, dtype=bool)
+    first[:1] = True
+    for k in key_cols if n > 1 else ():  # row i starts a key group iff
+        col = tbl.column(k).combine_chunks()  # any key column differs
+        a, b = col.slice(1), col.slice(0, n - 1)
+        same = pc.or_(pc.fill_null(pc.equal(a, b), False),
+                      pc.and_(pc.is_null(a), pc.is_null(b)))
+        first[1:] |= pc.invert(same).to_numpy(zero_copy_only=False)
+    return tbl.filter(pa.array(first))
+
+
+def latest_df(spark, pairs: list[tuple[str, int]],
+              schema_kinds: list[tuple[str, str]],
+              key_cols: list[str]) -> DataFrame:
+    """The newest version of every key of the blocks files ``pairs``
+    (:func:`latest_plan`) as rows of ``schema_kinds`` plus the
+    ``_batch_id`` they come from: one task per planned range, the plan
+    in the closure of a bare ``spark.range`` (as :func:`_encode_files`
+    pulls its files), so the plan holds no Exchange."""
+    out = _row_schema(schema_kinds).add("_batch_id", T.LongType())
+    plan = latest_plan(pairs, key_cols, dict(schema_kinds))
+    if not plan:
+        return _local_df(spark, out)
+    schema_bytes = _schema_bytes(schema_kinds)
+
+    def resolve(batches) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
+        for task in batches:
+            for i in task.column("id").to_pylist():
+                yield from latest_rows(plan[i], key_cols, schema).to_batches()
+
+    return spark.range(0, len(plan), 1, numPartitions=len(plan)) \
+        .mapInArrow(resolve, schema=out)
 
 
 def _longs(*names: str) -> T.StructType:

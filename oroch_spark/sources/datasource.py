@@ -44,7 +44,10 @@ decoded rows with
   kept blocks' lead-key lows, each range-partition reads every kept
   block overlapping it, and the merge is one
   vectorized Arrow sort + group-boundary scan per partition — the
-  declarative face of ``streaming/incremental.read_latest``. In
+  engine's one latest-wins resolver (``engine.latest_plan`` /
+  ``latest_rows``), which ``compact_sink``, ``dml.table_changes``
+  and ``incremental.read_latest`` run too; NULL lead keys resolve as
+  one key. In
   latest-wins mode only KEY-column filters push down (the key decides
   group membership, so pruning by key keeps every version of every
   surviving key — the fast path for point lookups on upsert tables);
@@ -267,13 +270,6 @@ def read_sidecar(path: str) -> dict:
     return doc
 
 
-def _arrow_schema_bytes(kinds: list[tuple[str, str]]) -> bytes:
-    from pyspark.sql.pandas.types import to_arrow_schema
-    st = T.StructType(
-        [T.StructField(n, engine.spark_type_of(k)) for n, k in kinds])
-    return to_arrow_schema(st).serialize().to_pybytes()
-
-
 # ---------------------------------------------------------------------------
 # Filter translation
 # ---------------------------------------------------------------------------
@@ -480,17 +476,14 @@ class _RGPartition(InputPartition):
 
 
 class _MergePartition(InputPartition):
-    """One lead-key range of a latest-wins read: every kept block whose
-    bounds overlap [lo, hi) — so the partition holds ALL candidate
-    versions of its keys and can resolve latest-wins locally, without
-    a shuffle (the Python DataSource API cannot express one)."""
+    """One lead-key range of a latest-wins read (``engine.latest_plan``):
+    every kept block that may hold a version of its keys, so the range
+    resolves latest-wins locally, without a shuffle (the Python
+    DataSource API cannot express one)."""
 
-    def __init__(self, lo, hi, items: list,
-                 preds: Optional[dict] = None):
-        self.lo = lo            # None = open below
-        self.hi = hi            # None = open above (last range)
-        self.items = items      # [(file, stats, row_group, rows, batch)]
-        self.preds = preds or {}  # per-query pushed KEY filters
+    def __init__(self, part: tuple, preds: dict):
+        self.part = part    # (lo, hi, items) of engine.latest_plan
+        self.preds = preds  # per-query pushed KEY filters
 
 
 _VERSION_FILE = "_VERSION.json"
@@ -620,10 +613,9 @@ class OrochReader(DataSourceReader):
         ab = options.get("as_of_batch")
         self.as_of = int(ab) if ab is not None else None
         self.tombstone = options.get("tombstone_col") or None
-        self.merge_parts = int(options.get("merge_partitions", 32))
         self.kinds = _reader_view_kinds(options, kinds)
         self.kind_of = dict(kinds)
-        self.schema_bytes = _arrow_schema_bytes(self.kinds)
+        self.schema_bytes = engine._schema_bytes(self.kinds)
         # committed streaming-sink view: when the directory carries
         # batch manifests, only manifest-named files are the table
         # (uncommitted attempts stay invisible); batch ids feed
@@ -669,8 +661,8 @@ class OrochReader(DataSourceReader):
             unknown = need - set(self.kind_of)
             if unknown:
                 raise ValueError(f"unknown columns {sorted(unknown)}")
-            self.dec_kinds = [kv for kv in kinds if kv[0] in need]
-            self.dec_schema_bytes = _arrow_schema_bytes(self.dec_kinds)
+            self.dec_schema_bytes = engine._schema_bytes(
+                [kv for kv in kinds if kv[0] in need])
         self.preds: dict[str, _KeyPred] = {}
 
     # -- pushdown ----------------------------------------------------------
@@ -737,71 +729,21 @@ class OrochReader(DataSourceReader):
         # filtering later unfiltered queries (observed r3 defect).
         preds, self.preds = self.preds, {}
         if self.latest:
-            return self._merge_partitions(preds)
-        files, ix, keep = self._plan(preds)
-        if not keep:
-            # Never return an empty plan: when the pushed predicates
-            # prune EVERY block (e.g. a range filter beyond the table's
-            # key domain), Spark still launches one task and hands
-            # read() a None partition — read() treats a file-less
-            # partition as an empty scan.
-            return [_RGPartition(None, -1, {})]
-        return [_RGPartition(files[f][0], g, preds, ix._stats[f], rows)
-                for f, g, rows, _ in ix.placed(keep)]
-
-    def _merge_partitions(self, preds: dict) -> list[InputPartition]:
-        """Latest-wins planning: split the lead-key domain into ranges
-        at the kept blocks' lows (driver-side, block index only) and
-        give each range every kept block whose bounds overlap it. All
-        versions of a key land in exactly one partition, so the merge
-        is partition-local — merge-on-read without a shuffle. A pushed
-        KEY predicate prunes merge-safely: a block with no matching key
-        holds no version of a surviving key. A block without bounds
-        collapses the plan to a single partition (correct, not
-        parallel)."""
-        files, ix, keep = self._plan(preds)
-        if not keep:
-            # all blocks pruned (or empty table): same empty-scan
-            # sentinel as the plain planner — Spark would otherwise
-            # call read(None) on an empty plan
-            return [_RGPartition(None, -1, {})]
-        bounds = [ix.bounds(i, "" if self.kind_of[self.key_col] == "str"
-                            else 0) for i in keep]
-        edges = [None, None]
-        if len(keep) > 1 and self.merge_parts > 1 \
-                and not any(None in b for b in bounds):
-            los = sorted(lo for lo, _ in bounds)
-            nparts = min(self.merge_parts, len(keep))
-            edges = [None] + sorted({los[len(los) * i // nparts]
-                                     for i in range(1, nparts)}) + [None]
-        parts = []
-        for rlo, rhi in zip(edges, edges[1:]):
-            items = [(files[f][0], ix._stats[f], g, rows, files[f][1])
-                     for f, g, rows, _ in ix.placed(
-                         [i for i, (lo, hi) in zip(keep, bounds)
-                          if (rhi is None or lo < rhi)
-                          and (rlo is None or hi >= rlo)])]
-            if items:
-                parts.append(_MergePartition(rlo, rhi, items, preds))
-        return parts
+            parts = [_MergePartition(part, preds) for part in
+                     engine.latest_plan(self._files(), self.key_cols,
+                                        self.kind_of, preds)]
+        else:
+            files, ix, keep = self._plan(preds)
+            parts = [_RGPartition(files[f][0], g, preds, ix._stats[f], rows)
+                     for f, g, rows, _ in (ix.placed(keep) if keep else ())]
+        # Never return an empty plan: when the pushed predicates prune
+        # EVERY block (e.g. a range filter beyond the table's key
+        # domain), Spark still launches one task and hands read() a
+        # None partition — read() treats a file-less partition as an
+        # empty scan.
+        return parts or [_RGPartition(None, -1, {})]
 
     # -- execution ---------------------------------------------------------
-    @staticmethod
-    def _planned(file: str, stats: tuple, row_group: int,
-                 rows: list[int]) -> "pa.Table":
-        """The planned blocks of one row group, read only while
-        ``file`` still has the ``stats`` it was planned on: a file
-        rewritten since raises, so no read decodes blocks its plan did
-        not keep."""
-        import pyarrow.parquet as pq
-
-        got = engine._stable([file], (stats,), lambda: engine._read_rows(
-            pq.ParquetFile(file), row_group, rows))
-        if got is None:
-            raise OSError(f"{file} changed since this read was planned; "
-                          "retry the read")
-        return got
-
     def read(self, partition) -> Iterator:
         if partition is None:
             return  # Spark's stand-in task for an empty plan
@@ -812,69 +754,26 @@ class OrochReader(DataSourceReader):
             return  # empty-scan sentinel (every block pruned)
         yield from engine.make_select_fn(
             list(partition.preds.items()), self.schema_bytes)(
-            self._planned(partition.file, partition.stats,
-                          partition.row_group, partition.rows).to_batches())
+            engine._planned(partition.file, partition.stats,
+                            partition.row_group, partition.rows).to_batches())
 
     def _read_merge(self, part: _MergePartition) -> Iterator:
-        """Latest-wins execution for one key range: decode the planned
-        blocks' rows the pushed KEY filters select (every version of a
-        key shares it), keep only this range's rows, and resolve
-        max-batch-id-wins per key with one vectorized sort +
-        group-boundary scan — no Python per row."""
-        import numpy as np
+        """Latest-wins execution for one key range
+        (``engine.latest_rows``), minus deleted keys, as the view's
+        columns."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        dec_schema = pa.ipc.read_schema(
-            pa.py_buffer(self.dec_schema_bytes))
-        full_schema = dec_schema.append(pa.field("__b", pa.int64()))
-        batches = [blk.batch(full_schema, idxs, passthrough={"__b": int(bid)})
-                   for file, stats, rg, rows, bid in part.items
-                   for blk in engine._read_blocks(
-                       self._planned(file, stats, rg, rows))
-                   if len(idxs := blk.select(list(part.preds.items())))]
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)
-        key = tbl.column(self.key_col)
-        if key.null_count:
-            raise ValueError(
-                "latest_wins requires a non-null lead key (upsert keys "
-                "are identifiers; a NULL key has no latest version)")
-        mask = None
-        if part.lo is not None:
-            mask = pc.greater_equal(key, pa.scalar(part.lo,
-                                                   type=key.type))
-        if part.hi is not None:
-            m = pc.less(key, pa.scalar(part.hi, type=key.type))
-            mask = m if mask is None else pc.and_(mask, m)
-        if mask is not None:
-            tbl = tbl.filter(mask)
-        if tbl.num_rows == 0:
-            return
-        order = [(k, "ascending") for k in self.key_cols] \
-            + [("__b", "descending")]
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=order))
-        n = tbl.num_rows
-        first = np.zeros(n, dtype=bool)
-        first[0] = True
-        for k in self.key_cols:   # row i starts a key group iff any
-            col = tbl.column(k).combine_chunks()  # key col differs
-            if n == 1:
-                break
-            a, b = col.slice(1), col.slice(0, n - 1)
-            same = pc.fill_null(pc.equal(a, b), False)
-            both_null = pc.and_(pc.is_null(a), pc.is_null(b))
-            first[1:] |= pc.invert(pc.or_(same, both_null)) \
-                .to_numpy(zero_copy_only=False)
-        tbl = tbl.filter(pa.array(first))
+        tbl = engine.latest_rows(
+            part.part, self.key_cols,
+            pa.ipc.read_schema(pa.py_buffer(self.dec_schema_bytes)),
+            tuple(part.preds.items()))
         if self.tombstone:
-            tomb = pc.fill_null(tbl.column(self.tombstone), False)
-            tbl = tbl.filter(pc.invert(tomb))
+            tbl = tbl.filter(pc.invert(pc.fill_null(
+                tbl.column(self.tombstone), False)))
         out_schema = pa.ipc.read_schema(pa.py_buffer(self.schema_bytes))
-        out = pa.table({f.name: tbl.column(f.name)
-                        for f in out_schema}).cast(out_schema)
-        yield from out.to_batches()
+        yield from pa.table({f.name: tbl.column(f.name) for f in out_schema}) \
+            .cast(out_schema).to_batches()
 
 
 # ---------------------------------------------------------------------------
@@ -1150,8 +1049,7 @@ class OrochStreamWriter(DataSourceStreamArrowWriter):
     ``sources.dml`` commits batches between (or during) stream runs;
     a replayed epoch reuses its ledger id. Append-only (the streaming
     contract): re-sent keys appear once per batch until compaction;
-    read with latest-wins via
-    ``incremental.read_latest(..., inc_blocks=stream_sink_blocks(...))``.
+    read with latest-wins via ``option("latest_wins", "true")``.
 
     Single-writer per sink directory, like any file-based streaming
     sink."""
@@ -1305,27 +1203,18 @@ def stream_sink_blocks(spark, path: str, as_of_batch: int | None = None):
     each tagged with its micro-batch id (the exactly-once view: files
     not named by a batch manifest — aborted or in-flight attempts —
     are invisible). Driver-side work is manifest JSON only,
-    O(batches); block bytes stay executor-side. Feed the result to
-    ``incremental.read_latest(inc_blocks=...)`` for latest-wins
-    reads, or ``engine.decode_df`` for the raw append-only view.
+    O(batches), and the file-to-batch map is a broadcast local
+    relation; block bytes stay executor-side. Feed the result to
+    ``engine.decode_df`` for the raw append-only view; the latest-wins
+    view is ``option("latest_wins", "true")``, which resolves the same
+    manifest files with ``engine.latest_plan`` and no shuffle.
 
     ``as_of_batch`` time-travels: only batches <= it are visible —
     batch manifests double as immutable snapshots (the Iceberg
     as-of-snapshot read against this table layout)."""
-    batches = []
-    for mf in _manifest_paths(path):
-        with open(mf) as f:
-            batches.append(json.load(f))
-    if as_of_batch is not None:
-        batches = [b for b in batches if b["batch_id"] <= as_of_batch]
-    return _batch_blocks(spark, path, batches)
-
-
-def _batch_blocks(spark, path: str, batches: list[dict]):
-    """The blocks of the sink's manifests ``batches``, by batch id."""
     from pyspark.sql import functions as F
 
-    pairs = [(f, b["batch_id"]) for b in batches for f in b["files"]]
+    pairs = _sink_manifest_files(path, as_of_batch)
     if not pairs:
         raise FileNotFoundError(f"no committed stream batches in {path}")
     blocks = spark.read.parquet(*[os.path.join(path, f)
@@ -1383,8 +1272,6 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
     Readers are safe any time."""
     from pyspark.sql import functions as F
 
-    from ..streaming import incremental as inc
-
     bdir = os.path.join(path, _BATCH_DIR)
     old_manifests = _manifest_paths(path)
     # sidecar read AFTER the manifest listing: delete_where updates
@@ -1411,13 +1298,17 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
         raise ValueError(f"nothing to compact below "
                          f"batch {retain_from_batch} in {path}")
     # fold the listed manifests only: the publish keeps later batches
-    blocks = _batch_blocks(spark, path, [m for _, m in folded_mans])
+    pairs = [(os.path.join(path, f), int(m["batch_id"]))
+             for _, m in folded_mans for f in m["files"]]
+    if not pairs:
+        raise FileNotFoundError(f"no committed stream batches in {path}")
     top = max(int(m["batch_id"]) for _, m in folded_mans)
     keep_tomb = tombstone_col is not None and retain_from_batch is not None
     if latest_wins:
-        rows = inc.read_latest(spark, None, kinds, key_cols,
-                               inc_blocks=blocks,
-                               tombstone_col=tombstone_col)
+        rows = engine.latest_df(spark, pairs, kinds, key_cols)
+        if tombstone_col is not None:  # deleted keys fold away
+            rows = rows.filter(~F.coalesce(F.col(tombstone_col),
+                                           F.lit(False)))
         if keep_tomb:
             rows = rows.withColumn(
                 tombstone_col, F.lit(False))  # survivors: not deleted
@@ -1425,7 +1316,8 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
         else:
             out_kinds = [kv for kv in kinds if kv[0] != tombstone_col]
     else:
-        rows = engine.decode_df(blocks, kinds)
+        rows = engine.decode_df(
+            spark.read.parquet(*[f for f, _ in pairs]), kinds)
         out_kinds = kinds
     tmp_dir = os.path.join(path, f".compact-{uuid.uuid4().hex}")
     text_cols = [n for n, k in out_kinds if k == "str"]
@@ -1511,7 +1403,7 @@ class OrochStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict, kinds: list[tuple[str, str]]):
         self.path = options["path"]
         self.kinds = kinds
-        self.schema_bytes = _arrow_schema_bytes(kinds)
+        self.schema_bytes = engine._schema_bytes(kinds)
 
     def _manifests(self) -> dict[int, list[str]]:
         out = {}

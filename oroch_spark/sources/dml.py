@@ -50,7 +50,7 @@ import time
 import uuid
 from typing import Optional
 
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
 from .. import engine
 from .datasource import (
@@ -61,7 +61,6 @@ from .datasource import (
     _publish_version,
     _write_lock,
     read_sidecar,
-    stream_sink_blocks,
     write_sidecar,
 )
 
@@ -205,9 +204,8 @@ def upsert(spark, path: str, df, n_buckets: int = 8,
     df = _conform(df, kinds).cache()
     try:
         # latest-wins totality rests on per-batch key uniqueness
-        # (incremental.read_latest ranks by batch id alone): two
-        # versions of a key in ONE batch would resolve
-        # nondeterministically
+        # (engine.latest_rows ranks by batch id alone): two versions
+        # of a key in ONE batch would resolve nondeterministically
         dup = (df.groupBy(*key_cols).count()
                .filter(F.col("count") > 1).limit(1).collect())
         if dup:
@@ -264,7 +262,8 @@ def delete_where(spark, path: str, predicate: str,
             return {"batch_id": None, "files": [], "n_deleted": 0}
         if tombstone_col not in by_name:
             # schema evolution: older blocks null-fill the new column
-            # at decode; read_latest treats missing as "not deleted".
+            # at decode; every latest-wins read treats missing as
+            # "not deleted".
             # MERGE under the lock from a fresh sidecar read — writing
             # back our pre-lock copy would stomp a concurrent
             # evolution (another delete_where's tombstone column, a
@@ -328,30 +327,28 @@ def table_changes(spark, path: str, from_batch: int,
     ``readStream.format("oroch")`` (push, exactly-once); this is the
     batch pull for reconciliation jobs and audits.
 
-    Scale shape: one key shuffle over the CHANGED batches only (the
-    range filter prunes on the block ``batch_id`` column before any
-    payload decode) + a key-projected read of the ``from_batch``
-    version for existence — base payload columns are never decoded."""
-    from pyspark.sql import Window
+    NULL keys are one key, as every latest-wins read resolves them.
 
-    from ..streaming import incremental as inc
-
+    Scale shape: the batches are chosen by manifest before any file is
+    read; the changed rows are the engine's latest-wins resolve of the
+    CHANGED batches' files (no shuffle), and key existence is a
+    key-projected resolve of the ``from_batch`` version — base
+    payload columns are never decoded. One join marks the changes."""
     _require_sink(path)
     doc = read_sidecar(path)
     kinds, key_cols = doc["kinds"], doc["key_cols"]
-    blocks = stream_sink_blocks(spark, path)
+    mans = []
+    for m in _manifest_paths(path):
+        with open(m) as f:
+            mans.append((os.path.basename(m), json.load(f)))
     if to_batch is None:
-        ids = _batch_ids(path)
-        if not ids:
+        if not mans:
             raise FileNotFoundError(f"no committed batches in {path}")
-        to_batch = max(ids)
+        to_batch = max(int(d["batch_id"]) for _, d in mans)
     if to_batch <= from_batch:
         raise ValueError(f"empty change range ({from_batch}, {to_batch}]")
-    comp_floors = []
-    for m in _manifest_paths(path):
-        if os.path.basename(m).startswith("compact-"):
-            with open(m) as f:
-                comp_floors.append(int(json.load(f)["batch_id"]))
+    comp_floors = [int(d["batch_id"]) for name, d in mans
+                   if name.startswith("compact-")]
     if comp_floors and 0 <= from_batch < max(comp_floors):
         # the table state as of from_batch is gone: those batches
         # were folded into one manifest carrying the top folded id,
@@ -366,66 +363,64 @@ def table_changes(spark, path: str, from_batch: int,
             f"horizon {max(comp_floors)}: that version is no longer "
             "resolvable. Compact with retain_from_batch to keep CDC "
             "history, or read from the horizon forward")
-    rng = blocks.filter((F.col("batch_id") > from_batch)
-                        & (F.col("batch_id") <= to_batch))
-    changed = engine.decode_df(rng, kinds, passthrough=["batch_id"])
-    w = (Window.partitionBy(*key_cols)
-         .orderBy(F.col("batch_id").desc()))
-    changed = (changed.withColumn("_rn", F.row_number().over(w))
-               .filter(F.col("_rn") == 1).drop("_rn"))
-    # key existence as of from_batch: latest-wins over the base range,
-    # decoding ONLY key (+ tombstone) columns
-    if from_batch >= 0:
-        # a tombstone column the schema has not evolved yet cannot be
-        # decoded (and nothing can be deleted) — resolve without it
-        tomb_known = tombstone_col if tombstone_col in dict(kinds) \
-            else None
-        base_kinds = [kv for kv in kinds
-                      if kv[0] in key_cols or kv[0] == tomb_known]
-        base_blocks = blocks.filter(F.col("batch_id") <= from_batch)
-        base = inc.read_latest(
-            spark, None, base_kinds, key_cols,
-            inc_blocks=base_blocks,
-            tombstone_col=tomb_known).select(*key_cols)
-    else:
-        base = engine._local_df(spark, T.StructType([
-            T.StructField(c, engine.spark_type_of(dict(kinds)[c]))
-            for c in key_cols]))
-    existed = base.withColumn("_existed", F.lit(True))
-    out = changed.join(existed, key_cols, "left")
-    if tombstone_col and tombstone_col in dict(kinds):
-        is_del = F.coalesce(F.col(tombstone_col), F.lit(False))
-    else:  # table never evolved a tombstone column: nothing deletes
-        is_del = F.lit(False)
-    out = (out.withColumn(
-        "_change_type",
-        F.when(is_del, F.lit("delete"))
-         .when(F.col("_existed").isNotNull(), F.lit("update_postimage"))
-         .otherwise(F.lit("insert")))
-        # a delete of a key that never existed changes nothing
-        .filter(~((F.col("_change_type") == "delete")
-                  & F.col("_existed").isNull()))
-        .drop("_existed"))
-    if tombstone_col and tombstone_col in dict(kinds):
-        out = out.drop(tombstone_col)
-    out = out.withColumnRenamed("batch_id", "_commit_batch")
+
+    def latest(lo: int, hi: int, cols: list[tuple[str, str]]):
+        """The latest-wins rows of ``cols`` over batches (lo, hi]."""
+        return engine.latest_df(spark, [
+            (os.path.join(path, f), int(d["batch_id"])) for _, d in mans
+            if lo < int(d["batch_id"]) <= hi for f in d["files"]],
+            cols, key_cols)
+
+    # a tombstone column the schema has not evolved yet cannot be
+    # decoded, and nothing can have been deleted
+    tomb = tombstone_col if tombstone_col in dict(kinds) else None
+    is_del = F.coalesce(F.col(tomb), F.lit(False)) if tomb else F.lit(False)
+    changed = latest(from_batch, to_batch, kinds)
+    # key existence as of from_batch: latest-wins over the base range
+    # (none from -1), decoding ONLY key (+ tombstone) columns
+    base = latest(-1, from_batch, [kv for kv in kinds if kv[0]
+                                   in key_cols or kv[0] == tomb]) \
+        .filter(~is_del).select(*key_cols)
+    out = (_join_keys(changed, base.withColumn("_existed", F.lit(True)),
+                      key_cols, "left")
+           .withColumn("_change_type",
+                       F.when(is_del, F.lit("delete"))
+                        .when(F.col("_existed").isNotNull(),
+                              F.lit("update_postimage"))
+                        .otherwise(F.lit("insert")))
+           # a delete of a key that never existed changes nothing
+           .filter(~((F.col("_change_type") == "delete")
+                     & F.col("_existed").isNull()))
+           .drop("_existed")
+           .withColumnRenamed("_batch_id", "_commit_batch"))
+    if tomb:
+        out = out.drop(tomb)
     if include_preimage and from_batch >= 0:
-        tomb_known = tombstone_col if tombstone_col in dict(kinds) \
-            else None
-        pre_src = inc.read_latest(
-            spark, None, kinds, key_cols, inc_blocks=base_blocks,
-            tombstone_col=tomb_known)
-        if tomb_known:
-            pre_src = pre_src.drop(tomb_known)
+        pre_src = latest(-1, from_batch, kinds).filter(~is_del).drop(
+            "_batch_id", *([tomb] if tomb else []))
         touched = (out.filter(F.col("_change_type") != "insert")
                    .select(*key_cols, "_commit_batch", "_change_type"))
-        pre = (pre_src.join(touched, key_cols)
+        pre = (_join_keys(pre_src, touched, key_cols, "inner")
                .withColumn("_change_type", F.when(
                    F.col("_change_type") == "delete",
                    F.lit("delete_preimage"))
                    .otherwise(F.lit("update_preimage"))))
         out = out.unionByName(pre.select(*out.columns))
     return out
+
+
+def _join_keys(left, right, key_cols: list[str], how: str):
+    """``left`` joined ``how`` to ``right`` on ``key_cols`` with NULL
+    equal to NULL (latest-wins resolves a NULL key as one key): the
+    key columns first, then ``left``'s other columns and ``right``'s."""
+    keys = [f"_key{i}" for i in range(len(key_cols))]
+    j = left.join(
+        right.select(*[F.col(c).alias(k) for c, k in zip(key_cols, keys)],
+                     *[c for c in right.columns if c not in key_cols]),
+        [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(key_cols, keys)],
+        how)
+    return j.select(*key_cols, *[c for c in j.columns
+                                 if c not in key_cols and c not in keys])
 
 
 def vacuum(path: str, older_than_s: float = 3600.0,

@@ -10,17 +10,18 @@ state; compaction (re-blocking small increments) is a batch job reusing
 
 Append-only contract (the manifest contract for the reference's
 ``integer_array::insert`` analogue, `/root/reference/oroch/
-integer_array.h:216-245`): increments land as NEW snapshot blocks —
-there is no merge-on-read or upsert. Rows re-sent for an existing
-(conv_id, turn_idx) appear in BOTH the base snapshot and the increment
-until ``engine.recompact`` rewrites them; readers that need
-latest-wins semantics must dedup on the stable key (max batch_id wins)
-or read post-compaction snapshots. This is the standard
-immutable-table trade: the reference pays a ripple re-encode per
-insert, this engine pays a periodic compaction batch instead.
+integer_array.h:216-245`): increments land as NEW snapshot blocks, and
+a row re-sent for an existing (conv_id, turn_idx) is an upsert.
+Both versions stay on disk until ``engine.recompact`` rewrites them;
+:func:`read_latest` merges them on read, keeping per stable key the
+row of the highest batch id (the engine's one latest-wins resolver,
+``engine.latest_df``). This is the standard immutable-table trade:
+the reference pays a ripple re-encode per insert, this engine pays a
+merge on read and a periodic compaction batch instead.
 """
 from __future__ import annotations
 
+import glob
 import os
 from typing import Optional
 
@@ -74,64 +75,41 @@ def read_stream_blocks(spark, out_dir: str) -> DataFrame:
             .parquet(os.path.join(out_dir, "blocks_stream")))
 
 
-def read_latest(spark, out_dir: Optional[str],
+def read_latest(spark, out_dir: str,
                 schema_kinds: list[tuple[str, str]],
                 key_cols: list[str],
-                base_blocks: Optional[DataFrame] = None,
-                tombstone_col: Optional[str] = None,
-                inc_blocks: Optional[DataFrame] = None) -> DataFrame:
+                base_dir: Optional[str] = None,
+                tombstone_col: Optional[str] = None) -> DataFrame:
     """Merge-on-read / latest-wins reader: the append-only contract
-    above, made executable. Decodes the streaming increments (each row
-    tagged with its micro-batch id via decode passthrough) plus an
-    optional base snapshot (rank -1, i.e. older than every increment)
-    and keeps exactly one row per stable key — the one from the
-    highest batch_id. Within a single batch the key is unique by the
-    encode contract (a micro-batch is one consistent snapshot of its
-    keys), so the ranking is total.
+    above, made executable. Keeps exactly one row per stable key of
+    the ``encode_stream`` increments under ``out_dir`` — the one from
+    the highest batch id, read off each file's ``blocks_stream/b<id>/``
+    directory — with the blocks files of an optional base snapshot
+    directory ``base_dir`` ranked -1, older than every increment.
+    Within a single batch the key is unique by the encode contract (a
+    micro-batch is one consistent snapshot of its keys), so the
+    ranking is total.
 
     ``tombstone_col`` names an optional boolean column (encoded like
     any other bool) marking the row as a DELETE of its key — the
     equality-delete analogue of Iceberg merge-on-read: a deleted key's
     newest row wins the ranking and is then dropped, so the key
     disappears from the view even though the base row is still on
-    disk (until recompaction rewrites it). The base snapshot may
-    predate the tombstone column; missing => not deleted.
+    disk (until recompaction rewrites it). Blocks that predate the
+    tombstone column read it as null, per block: not deleted.
 
-    Scale shape: one hash shuffle on the stable key (the same key the
-    blocks are bucketed by) + a per-key top-1 — the standard
-    merge-on-read cost, paid only until ``engine.recompact`` folds the
-    increments into right-sized base blocks.
-
-    ``inc_blocks`` overrides where the increments come from (any blocks
-    DataFrame carrying a ``batch_id`` column — e.g. the committed view
-    of a ``writeStream.format("oroch")`` sink from
-    ``sources.datasource.stream_sink_blocks``); by default they are
-    read from ``out_dir/blocks_stream`` (the ``encode_stream``
-    layout)."""
-    from pyspark.sql import Window
-
-    if inc_blocks is None:
-        inc_blocks = read_stream_blocks(spark, out_dir)
-    inc = engine.decode_df(inc_blocks, schema_kinds,
-                           passthrough=["batch_id"])
-    rows = inc
-    if base_blocks is not None:
-        # decode the base with the FULL schema: blocks written before
-        # the tombstone column was born null-fill it per block (decode
-        # schema evolution), and the coalesce below reads null as
-        # "not deleted". Probing one block's desc to decide for the
-        # whole base would misread a heterogeneous base (pre- and
-        # post-evolution blocks mixed): whichever block the probe
-        # happened to hit would decide for all, False-filling genuine
-        # tombstones in the newer blocks.
-        base = engine.decode_df(base_blocks, schema_kinds) \
-            .withColumn("batch_id", F.lit(-1).cast("long"))
-        rows = base.unionByName(inc)
-    w = Window.partitionBy(*key_cols).orderBy(F.col("batch_id").desc())
-    out = (rows.withColumn("_rn", F.row_number().over(w))
-               .filter(F.col("_rn") == 1)
-               .drop("_rn", "batch_id"))
+    Scale shape: ``engine.latest_df`` — key ranges planned on the
+    block index, each resolved by one task with no shuffle, paid
+    only until ``engine.recompact`` folds the increments into
+    right-sized base blocks."""
+    pairs = [(f, int(os.path.basename(d)[1:]))
+             for d in glob.glob(os.path.join(out_dir, "blocks_stream", "b*"))
+             for f in sorted(glob.glob(os.path.join(d, "*.parquet")))]
+    if base_dir is not None:
+        pairs = [(f, -1) for f in sorted(
+            glob.glob(os.path.join(base_dir, "*.parquet")))] + pairs
+    out = engine.latest_df(spark, pairs, schema_kinds, key_cols)
     if tombstone_col is not None:
         out = (out.filter(~F.coalesce(F.col(tombstone_col), F.lit(False)))
                   .drop(tombstone_col))
-    return out
+    return out.drop("_batch_id")

@@ -7,14 +7,17 @@ import time
 import pytest
 from pyspark.sql import Row
 
+from oroch_spark import engine
 from oroch_spark.sources import datasource as ds
 from oroch_spark.sources import dml
+
+from latest_model import latest_model, model_rows, sorted_rows
 
 
 SCHEMA = "k long, v string, score long"
 
 
-def _mk_sink(spark, td, rows_batches):
+def _mk_sink(spark, td, rows_batches, block_rows=65536):
     """Build a sink via the real writeStream path, one source file per
     micro-batch (maxFilesPerTrigger=1 => one committed batch each)."""
     ds.register(spark)
@@ -28,6 +31,7 @@ def _mk_sink(spark, td, rows_batches):
          .option("maxFilesPerTrigger", "1").parquet(srcdir + "/*")
          .writeStream.format("oroch")
          .option("path", path).option("key_cols", "k")
+         .option("block_rows", str(block_rows))
          .option("checkpointLocation", str(td / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(180)
@@ -572,3 +576,68 @@ def test_compact_folds_only_the_manifests_it_listed(spark, sink,
     assert read().count() == 20 + 1 + 1
     late = fired[0]["batch_id"]
     assert man["batch_id"] < late and late in dml._batch_ids(sink)
+
+
+def test_null_lead_key_is_one_key(spark, tmp_path):
+    """A NULL lead key is one key to every latest-wins reader: upserted
+    in a later batch, its newest version alone is what the read, the
+    change feed and a compaction see — as the brute-force model says,
+    across a plan of several key ranges."""
+    path = _mk_sink(spark, tmp_path, [
+        [Row(k=None, v="n0", score=0)]
+        + [Row(k=i, v=f"v{i}", score=i) for i in range(12)],
+        [Row(k=None, v="n1", score=1), Row(k=3, v="v3b", score=33),
+         Row(k=20, v="new", score=2)],
+    ], block_rows=4)
+    kinds, cols = ds.read_sidecar(path)["kinds"], ["k", "v", "score"]
+    assert len(engine.latest_plan(
+        [(os.path.join(path, f), b)
+         for f, b in ds._sink_manifest_files(path)],
+        ["k"], dict(kinds))) > 1
+    model = latest_model(spark, path, kinds, ["k"])
+    assert model[(None,)][1]["v"] == "n1" and len(model) == 14
+    read = (spark.read.format("oroch").option("latest_wins", "true")
+            .load(path))
+    assert sorted_rows(read.select(*cols).collect()) == \
+        model_rows(model, cols)
+    base = latest_model(spark, path, kinds, ["k"], as_of_batch=0)
+    feed = dml.table_changes(spark, path, from_batch=0).collect()
+    assert {(r.k,): (r._change_type, r._commit_batch, r.v)
+            for r in feed} == {
+        k: ("update_postimage" if k in base else "insert", b, row["v"])
+        for k, (b, row) in model.items() if b > 0}
+    ds.compact_sink(spark, path, n_buckets=2)
+    assert sorted_rows(spark.read.format("oroch").load(path)
+                       .select(*cols).collect()) == model_rows(model, cols)
+
+
+def _exchanges(df) -> int:
+    """Exchange nodes in ``df``'s physical plan."""
+    return df._jdf.queryExecution().executedPlan().toString() \
+        .count("Exchange")
+
+
+def test_latest_wins_plans_no_exchange(spark, sink):
+    """The resolver's DataFrame is one narrow map over planned key
+    ranges: no shuffle, no broadcast."""
+    df = engine.latest_df(
+        spark, [(os.path.join(sink, f), b)
+                for f, b in ds._sink_manifest_files(sink)],
+        ds.read_sidecar(sink)["kinds"], ["k"])
+    assert _exchanges(df) == 0
+    assert df.count() == 20
+
+
+def test_compact_sink_plans_one_exchange(spark, sink, monkeypatch):
+    """A latest-wins compaction shuffles once: ``encode_df``'s bucket
+    repartition. The resolve before it adds none."""
+    real, plans = engine.encode_df, []
+
+    def spy(df, *a, **kw):
+        out = real(df, *a, **kw)
+        plans.append(_exchanges(out))
+        return out
+
+    monkeypatch.setattr(engine, "encode_df", spy)
+    ds.compact_sink(spark, sink, n_buckets=2)
+    assert plans == [1]

@@ -10,7 +10,8 @@ from pyspark.sql import Row, functions as F
 
 from oroch_spark import engine
 from oroch_spark.sources import datasource as ds
-from oroch_spark.streaming import incremental as inc
+
+from latest_model import latest_model, model_rows, sorted_rows
 
 SCHEMA = "conv_id string, turn_idx int, text string"
 KINDS = [("conv_id", "str"), ("turn_idx", "i32"), ("text", "str")]
@@ -70,12 +71,18 @@ def test_committed_view_and_batch_ids(spark, sink):
 
 
 def test_latest_wins_read(spark, sink):
-    blocks = ds.stream_sink_blocks(spark, sink)
-    latest = inc.read_latest(spark, None, KINDS,
-                             ["conv_id", "turn_idx"], inc_blocks=blocks)
+    keys = ["conv_id", "turn_idx"]
+    latest = engine.latest_df(
+        spark, [(os.path.join(sink, f), b)
+                for f, b in ds._sink_manifest_files(sink)], KINDS, keys)
     assert latest.count() == 150
     got = latest.filter("conv_id = 'c1' AND turn_idx = 0").collect()
     assert [r["text"] for r in got] == ["UPDATED"]
+    # every row, and the batch it won from, as the brute-force model
+    cols = keys + ["text"]
+    assert sorted_rows(latest.select(*cols, "_batch_id").collect()) == \
+        sorted_rows([*(row[c] for c in cols), b] for b, row
+                    in latest_model(spark, sink, KINDS, keys).values())
 
 
 def test_orphan_files_invisible(spark, sink):
@@ -157,10 +164,8 @@ def test_compact_sink(spark, tmp_path):
          .trigger(availableNow=True).start())
     q.awaitTermination(180)
 
-    before = inc.read_latest(
-        spark, None, KINDS, ["conv_id", "turn_idx"],
-        inc_blocks=ds.stream_sink_blocks(spark, sink2)) \
-        .orderBy("conv_id", "turn_idx").toPandas()
+    keys = ["conv_id", "turn_idx"]
+    before = latest_model(spark, sink2, KINDS, keys)
     man = ds.compact_sink(spark, sink2, n_buckets=2, block_rows=64)
     assert man["batch_id"] == 1 and man["compacted"]
     mans = ds._manifest_paths(sink2)
@@ -173,14 +178,11 @@ def test_compact_sink(spark, tmp_path):
                if os.path.basename(m) not in (ds._VERSION_FILE,
                                               ds._TXN_FILE)]
     assert sorted(on_disk) == sorted(mans)
-    after = inc.read_latest(
-        spark, None, KINDS, ["conv_id", "turn_idx"],
-        inc_blocks=ds.stream_sink_blocks(spark, sink2)) \
-        .orderBy("conv_id", "turn_idx").toPandas()
-    assert before.equals(after)
+    after = latest_model(spark, sink2, KINDS, keys)
+    cols = keys + ["text"]
+    assert model_rows(before, cols) == model_rows(after, cols)
     assert spark.read.format("oroch").load(sink2).count() == 150
-    assert after[(after.conv_id == "c1")
-                 & (after.turn_idx == 0)].text.iloc[0] == "UPDATED"
+    assert after[("c1", 0)][1]["text"] == "UPDATED"
 
 
 # ---------------------------------------------------------------------------
@@ -208,12 +210,11 @@ def test_latest_wins_option(spark, sink):
     assert load().count() == 150
     got = load().filter("conv_id = 'c1' AND turn_idx = 0").collect()
     assert [r["text"] for r in got] == ["UPDATED"]
-    # matches the library merge exactly
-    exp = inc.read_latest(spark, None, KINDS, ["conv_id", "turn_idx"],
-                          inc_blocks=ds.stream_sink_blocks(spark, sink))
+    # matches the brute-force model exactly
     cols = ["conv_id", "turn_idx", "text"]
-    assert sorted(map(tuple, load().select(*cols).collect())) == \
-        sorted(map(tuple, exp.select(*cols).collect()))
+    exp = latest_model(spark, sink, KINDS, ["conv_id", "turn_idx"])
+    assert sorted_rows(load().select(*cols).collect()) == \
+        model_rows(exp, cols)
 
 
 def test_latest_wins_filter_never_resurrects_stale(spark, sink):

@@ -116,7 +116,7 @@ def test_read_latest_with_base_snapshot(spark, tmp_path):
 
     latest = incremental.read_latest(
         spark, out_dir, kinds, ["conv_id", "turn_idx"],
-        base_blocks=spark.read.parquet(base_dir))
+        base_dir=base_dir)
     assert latest.count() == df.count()
     key = (F.col("conv_id") == "conv-00000001") & (F.col("turn_idx") == 0)
     assert latest.filter(key).first().text == "v2"
@@ -166,8 +166,7 @@ def test_read_latest_tombstone_delete(spark, tmp_path):
 
     latest = incremental.read_latest(
         spark, out_dir, kinds, ["conv_id", "turn_idx"],
-        base_blocks=spark.read.parquet(base_dir),
-        tombstone_col="deleted")
+        base_dir=base_dir, tombstone_col="deleted")
     assert "deleted" not in latest.columns
     assert latest.filter(kill).count() == 0          # deleted key gone
     assert latest.filter(edit).first().text == "v2"  # upsert wins
@@ -192,18 +191,20 @@ def test_read_latest_heterogeneous_base_keeps_tombstones(spark, tmp_path):
     new = spark.createDataFrame(
         [Row(k=3, v="c", dead=False), Row(k=4, v="d", dead=True)],
         "k long, v string, dead boolean")
-    b_old = engine.encode_df(old, ["k"], n_buckets=1, block_rows=16)
-    b_new = engine.encode_df(new, ["k"], n_buckets=1, block_rows=16)
-    base = b_old.unionByName(b_new)
-    inc = engine.encode_df(
+    base_dir = str(tmp_path / "base")
+    out_dir = str(tmp_path / "out")
+    for part in (old, new):
+        engine.encode_df(part, ["k"], n_buckets=1, block_rows=16) \
+            .write.mode("append").parquet(base_dir)
+    engine.encode_df(
         spark.createDataFrame([Row(k=5, v="e", dead=False)],
                               "k long, v string, dead boolean"),
         ["k"], n_buckets=1, block_rows=16).withColumn(
-            "batch_id", F.lit(0).cast("long"))
-    out = incremental.read_latest(spark, None, kinds, ["k"],
-                                  base_blocks=base,
-                                  tombstone_col="dead",
-                                  inc_blocks=inc)
+            "batch_id", F.lit(0).cast("long")) \
+        .write.parquet(os.path.join(out_dir, "blocks_stream", "b0"))
+    out = incremental.read_latest(spark, out_dir, kinds, ["k"],
+                                  base_dir=base_dir,
+                                  tombstone_col="dead")
     got = {r["k"]: r["v"] for r in out.collect()}
     # k=4's tombstone held (the bug: a probe hitting the OLD block
     # False-filled it and resurrected the key); k=1/2 null -> alive
