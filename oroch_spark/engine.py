@@ -2619,18 +2619,19 @@ def latest_plan(pairs: list[tuple[str, int]], key_cols: list[str],
     which also gets every block that may hold it. A block without
     bounds collapses the plan to one range (correct, not parallel).
     ``preds``, by column, are KEY filters: a block they prune holds no
-    version of a key they keep. Per range ``(lo, hi, items)``: ``lo``
-    inclusive, ``hi`` exclusive, None when open; ``items`` the row
-    groups ``(file, stats, row group, rows, batch id)`` to read."""
+    version of a key they keep; ``desc`` is read for them, or for the
+    null counts of several ranges that may read a NULL key. Per range
+    ``(lo, hi, items)``: ``lo`` inclusive, ``hi`` exclusive, None when
+    open; ``items`` the row groups ``(file, stats, row group, rows,
+    batch id)`` to read."""
     if not pairs:
         return []
-    ix = _BlockIndex.load([f for f, _ in pairs])
-    if ix is None:
-        raise OSError("the files of a latest-wins read kept changing "
-                      "while it was planned; retry it")
-    lead = key_cols[0]
-    keep = ix.keep(lambda i: all(ix.admits(i, c, p, kind_of[c], c == lead)
-                                 for c, p in (preds or {}).items()))
+    files, lead, preds = [f for f, _ in pairs], key_cols[0], preds or {}
+    need = any(c != lead or p.nullish for c, p in preds.items())
+    nulls = lead not in preds or not preds[lead].rejects_null
+    ix = _BlockIndex.load(files, need)
+    keep = [] if ix is None else ix.keep(lambda i: all(
+        ix.admits(i, c, p, kind_of[c], c == lead) for c, p in preds.items()))
     bounds = [ix.bounds(i, "" if kind_of[lead] == K_STR else 0)
               for i in keep]
     edges = [None, None]
@@ -2639,6 +2640,10 @@ def latest_plan(pairs: list[tuple[str, int]], key_cols: list[str],
         n = min(_LATEST_RANGES, len(keep))
         edges = [None] + sorted({los[len(los) * i // n]
                                  for i in range(1, n)}) + [None]
+    if ix is None or len(edges) > 2 and nulls and not need \
+            and _BlockIndex.load(files) is not ix:  # the null counts
+        raise OSError("the files of a latest-wins read kept changing "
+                      "while it was planned; retry it")
     plan = []
     for rlo, rhi in zip(edges, edges[1:]):
         items = [(ix._files[f], ix._stats[f], g, rows, pairs[f][1])
@@ -2646,38 +2651,43 @@ def latest_plan(pairs: list[tuple[str, int]], key_cols: list[str],
                      [i for i, (lo, hi) in zip(keep, bounds)
                       if (rhi is None or lo < rhi)
                       and (rlo is None or hi >= rlo)
-                      or rlo is None and ix.nulls(i, lead) != 0])]
+                      or rlo is None and nulls
+                      and ix.nulls(i, lead) != 0])]
         if items:
             plan.append((rlo, rhi, items))
     return plan
 
 
 def latest_rows(part: tuple, key_cols: list[str], schema: "pa.Schema",
-                preds: tuple = ()) -> "pa.Table":
+                preds: tuple = (),
+                tombstone: Optional[str] = None) -> "pa.Table":
     """The newest version of every key of one :func:`latest_plan`
-    range ``part``: its blocks' rows that the ``(col, _KeyPred)`` row
-    tests ``preds`` select, decoded as ``schema`` plus the int64
-    ``_batch_id`` of their file (an engine-internal name, so no table
-    column collides) and cut to the range's keys; then one
-    vectorized sort by key and descending batch and a group-boundary
-    scan keep each key's first row — no Python per row."""
+    range ``part``, but those whose newest row is a ``tombstone`` (a
+    bool column, null for no): per block the rows that the ``(col,
+    _KeyPred)`` row tests ``preds`` select and whose lead key is in
+    the range (the first also owns NULL), decoded as ``schema`` plus
+    the int64 ``_batch_id`` of their file (no table column is named
+    ``_``); then one vectorized sort by key and descending batch and
+    a group-boundary scan keep each key's first row."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     lo, hi, items = part
     full = schema.append(pa.field("_batch_id", pa.int64()))
-    tbl = pa.Table.from_batches(
-        [blk.batch(full, idxs, passthrough={"_batch_id": bid})
-         for file, stats, rg, rows, bid in items
-         for blk in _read_blocks(_planned(file, stats, rg, rows))
-         if len(idxs := blk.select(list(preds)))], full)
-    key = tbl.column(key_cols[0])
-    if (lo, hi) != (None, None):
-        m = pc.is_valid(key) if hi is None \
-            else pc.less(key, pa.scalar(hi, key.type))
-        tbl = tbl.filter(  # the first range owns the NULL key
-            pc.or_kleene(m, pc.is_null(key)) if lo is None
-            else pc.and_(m, pc.greater_equal(key, pa.scalar(lo, key.type))))
+    got = []
+    for file, stats, rg, rows, bid in items:
+        for blk in _read_blocks(_planned(file, stats, rg, rows)):
+            idxs = blk.select(list(preds))
+            # lo <= key < hi; a NULL key is never >= v, so only the
+            # first range (lo None) keeps it
+            for v, inside in ((lo, True), (hi, False)):
+                if v is not None and len(idxs):
+                    idxs = idxs[_row_test(blk.codes(key_cols[0]), ">=", v)
+                                [idxs] == inside]
+            if len(idxs):
+                got.append(blk.batch(full, idxs,
+                                     passthrough={"_batch_id": bid}))
+    tbl = pa.Table.from_batches(got, full)
     tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[
         *((k, "ascending") for k in key_cols), ("_batch_id", "descending")]))
     n = tbl.num_rows
@@ -2689,17 +2699,20 @@ def latest_rows(part: tuple, key_cols: list[str], schema: "pa.Schema",
         same = pc.or_(pc.fill_null(pc.equal(a, b), False),
                       pc.and_(pc.is_null(a), pc.is_null(b)))
         first[1:] |= pc.invert(same).to_numpy(zero_copy_only=False)
-    return tbl.filter(pa.array(first))
+    tbl = tbl.filter(pa.array(first))
+    return tbl if tombstone is None else tbl.filter(pc.invert(
+        pc.fill_null(tbl.column(tombstone), False)))
 
 
 def latest_df(spark, pairs: list[tuple[str, int]],
               schema_kinds: list[tuple[str, str]],
-              key_cols: list[str]) -> DataFrame:
-    """The newest version of every key of the blocks files ``pairs``
-    (:func:`latest_plan`) as rows of ``schema_kinds`` plus the
-    ``_batch_id`` they come from: one task per planned range, the plan
-    in the closure of a bare ``spark.range`` (as :func:`_encode_files`
-    pulls its files), so the plan holds no Exchange."""
+              key_cols: list[str],
+              tombstone: Optional[str] = None) -> DataFrame:
+    """:func:`latest_rows` of the blocks files ``pairs`` as rows of
+    ``schema_kinds`` plus ``_batch_id``: one task per range of their
+    :func:`latest_plan`, the plan in the closure of a bare
+    ``spark.range`` (as :func:`_encode_files` pulls its files), so the
+    plan holds no Exchange."""
     out = _row_schema(schema_kinds).add("_batch_id", T.LongType())
     plan = latest_plan(pairs, key_cols, dict(schema_kinds))
     if not plan:
@@ -2712,7 +2725,8 @@ def latest_df(spark, pairs: list[tuple[str, int]],
         schema = pa.ipc.read_schema(pa.py_buffer(schema_bytes))
         for task in batches:
             for i in task.column("id").to_pylist():
-                yield from latest_rows(plan[i], key_cols, schema).to_batches()
+                yield from latest_rows(plan[i], key_cols, schema,
+                                       tombstone=tombstone).to_batches()
 
     return spark.range(0, len(plan), 1, numPartitions=len(plan)) \
         .mapInArrow(resolve, schema=out)

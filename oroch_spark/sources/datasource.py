@@ -35,24 +35,23 @@ decoded rows with
   reads), so decode scales out to however many executors the cluster
   has — no driver-side decode.
 - **streaming-sink awareness**: a directory carrying ``_batches/``
-  manifests reads as its COMMITTED view (uncommitted attempt files
-  are invisible — the sink's exactly-once contract now holds for
-  batch readers too), ``option("as_of_batch", n)`` time-travels to
-  batches <= n, and ``option("latest_wins", "true")`` (+ optional
+  manifests reads as its COMMITTED view (uncommitted attempt files are
+  invisible — the sink's exactly-once contract now holds for batch
+  readers too), ``option("as_of_batch", n)`` time-travels to batches
+  <= n, and ``option("latest_wins", "true")`` (+ optional
   ``option("tombstone_col", c)``) resolves max-batch-id-wins per key
   WITHOUT a shuffle: the lead-key domain splits into ranges at the
   kept blocks' lead-key lows, each range-partition reads every kept
-  block overlapping it, and the merge is one
-  vectorized Arrow sort + group-boundary scan per partition — the
-  engine's one latest-wins resolver (``engine.latest_plan`` /
-  ``latest_rows``), which ``compact_sink``, ``dml.table_changes``
-  and ``incremental.read_latest`` run too; NULL lead keys resolve as
-  one key. In
-  latest-wins mode only KEY-column filters push down (the key decides
-  group membership, so pruning by key keeps every version of every
-  surviving key — the fast path for point lookups on upsert tables);
-  any other pre-merge filter could resurrect a stale version, so
-  Spark applies those on the merged view.
+  block overlapping it, and the merge is one vectorized Arrow sort +
+  group-boundary scan per partition — the engine's one latest-wins
+  resolver (``engine.latest_plan`` / ``latest_rows``), which
+  ``compact_sink``, ``dml.table_changes`` and
+  ``incremental.read_latest`` run too; NULL lead keys resolve as one
+  key. In latest-wins mode only KEY-column filters push down (the key
+  decides group membership, so pruning by key keeps every version of
+  every surviving key — the fast path for point lookups on upsert
+  tables); any other pre-merge filter could resurrect a stale version,
+  so Spark applies those on the merged view.
 - **projection** via ``option("columns", "a,b")``: only the named
   columns' blobs are decoded (the descriptor's (offset, length) slices
   — the block-format analogue of parquet column pruning). The Python
@@ -545,13 +544,19 @@ def _write_txn(path: str, txn: dict) -> None:
     os.replace(tmp, os.path.join(bdir, _TXN_FILE))
 
 
-def _sink_batch_ids(path: str) -> list[int]:
-    """Batch ids of every committed (version-visible) manifest."""
+def _manifests(path: str) -> list[tuple[str, dict]]:
+    """``(path, document)`` of every committed (version-visible)
+    manifest of a sink directory."""
     out = []
     for mf in _manifest_paths(path):
         with open(mf) as f:
-            out.append(int(json.load(f)["batch_id"]))
+            out.append((mf, json.load(f)))
     return out
+
+
+def _sink_batch_ids(path: str) -> list[int]:
+    """Batch ids of every committed (version-visible) manifest."""
+    return [int(d["batch_id"]) for _, d in _manifests(path)]
 
 
 def _sink_manifest_files(path: str, as_of_batch: Optional[int] = None):
@@ -559,13 +564,9 @@ def _sink_manifest_files(path: str, as_of_batch: Optional[int] = None):
     view — files not named by a manifest (aborted or in-flight write
     attempts) are invisible, the sink's exactly-once contract. With
     ``as_of_batch`` only batches <= it are visible (time travel)."""
-    out = []
-    for mf in _manifest_paths(path):
-        with open(mf) as f:
-            doc = json.load(f)
-        if as_of_batch is None or int(doc["batch_id"]) <= as_of_batch:
-            out += [(f, int(doc["batch_id"])) for f in doc["files"]]
-    return out
+    return [(f, int(d["batch_id"])) for _, d in _manifests(path)
+            if as_of_batch is None or int(d["batch_id"]) <= as_of_batch
+            for f in d["files"]]
 
 
 def _projected_kinds(options: dict,
@@ -635,20 +636,14 @@ class OrochReader(DataSourceReader):
             # latest-wins merge needs the key + batch id, and reads
             # the tombstone marker even though it is not output
             if self.tombstone and self.tombstone not in self.kind_of:
-                # the tombstone column is born when the first
-                # delete_where evolves the schema; before any delete
-                # committed, nothing is tombstoned — read as plain
-                # latest-wins instead of failing on a column the
-                # delete path itself would create (a uniformly
-                # configured reader must work on a not-yet-deleted
-                # table). Guard the race with a concurrent
-                # delete_where: our kinds came from a sidecar read
-                # that PRECEDED the manifest listing above, so a
-                # delete committing in between could be in our pinned
-                # snapshot while our schema predates it (its sidecar
-                # update happens-before its manifest publish). A fresh
-                # sidecar read taken now, after the listing, decides
-                # loudly instead of surfacing deleted keys as rows.
+                # the tombstone column is born with the first
+                # delete_where: before it, nothing is deleted, so read
+                # plain latest-wins. Our kinds came from a sidecar read
+                # BEFORE the manifest listing above, so a delete
+                # committed in between (sidecar first, then manifest)
+                # may be in our snapshot: a fresh sidecar read, taken
+                # after the listing, raises instead of surfacing
+                # deleted keys as rows.
                 fresh = dict(read_sidecar(self.path).get("kinds", []))
                 if self.tombstone in fresh:
                     raise ValueError(
@@ -681,12 +676,9 @@ class OrochReader(DataSourceReader):
             # Everything else stays with Spark, applied post-merge.
             cols_ok = {c for c in self.key_cols
                        if self.kind_of.get(c) in _PRUNABLE_KINDS}
-            accepted, unsupported, preds = _translate(filters, cols_ok)
-            self.preds = preds
-            return iter(unsupported)
-        cols_ok = {n for n, k in self.kinds if k in _PRUNABLE_KINDS}
-        accepted, unsupported, preds = _translate(filters, cols_ok)
-        self.preds = preds
+        else:
+            cols_ok = {n for n, k in self.kinds if k in _PRUNABLE_KINDS}
+        _, unsupported, self.preds = _translate(filters, cols_ok)
         return iter(unsupported)
 
     def _files(self) -> list[tuple[str, Optional[int]]]:
@@ -762,15 +754,11 @@ class OrochReader(DataSourceReader):
         (``engine.latest_rows``), minus deleted keys, as the view's
         columns."""
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         tbl = engine.latest_rows(
             part.part, self.key_cols,
             pa.ipc.read_schema(pa.py_buffer(self.dec_schema_bytes)),
-            tuple(part.preds.items()))
-        if self.tombstone:
-            tbl = tbl.filter(pc.invert(pc.fill_null(
-                tbl.column(self.tombstone), False)))
+            tuple(part.preds.items()), self.tombstone)
         out_schema = pa.ipc.read_schema(pa.py_buffer(self.schema_bytes))
         yield from pa.table({f.name: tbl.column(f.name) for f in out_schema}) \
             .cast(out_schema).to_batches()
@@ -1273,10 +1261,13 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
     from pyspark.sql import functions as F
 
     bdir = os.path.join(path, _BATCH_DIR)
-    old_manifests = _manifest_paths(path)
+    # fold the manifests listed here only: the publish keeps later ones
+    folded_mans = [(mf, d) for mf, d in _manifests(path)
+                   if retain_from_batch is None
+                   or int(d["batch_id"]) < retain_from_batch]
     # sidecar read AFTER the manifest listing: delete_where updates
     # the sidecar before publishing its manifest, so any delete batch
-    # in old_manifests is guaranteed visible in this sidecar read
+    # listed above is guaranteed visible in this sidecar read
     doc = read_sidecar(path)
     kinds, key_cols = doc["kinds"], doc["key_cols"]
     if tombstone_col is not None and tombstone_col not in dict(kinds):
@@ -1285,19 +1276,9 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
         # nothing was ever deleted from (same contract as the
         # latest-wins reader and dml.table_changes)
         tombstone_col = None
-    retained, folded_mans = [], []
-    for mf in old_manifests:
-        with open(mf) as f:
-            man_doc = json.load(f)
-        if retain_from_batch is not None \
-                and int(man_doc["batch_id"]) >= retain_from_batch:
-            retained.append(os.path.basename(mf))
-        else:
-            folded_mans.append((mf, man_doc))
     if not folded_mans:
         raise ValueError(f"nothing to compact below "
                          f"batch {retain_from_batch} in {path}")
-    # fold the listed manifests only: the publish keeps later batches
     pairs = [(os.path.join(path, f), int(m["batch_id"]))
              for _, m in folded_mans for f in m["files"]]
     if not pairs:
@@ -1305,10 +1286,8 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
     top = max(int(m["batch_id"]) for _, m in folded_mans)
     keep_tomb = tombstone_col is not None and retain_from_batch is not None
     if latest_wins:
-        rows = engine.latest_df(spark, pairs, kinds, key_cols)
-        if tombstone_col is not None:  # deleted keys fold away
-            rows = rows.filter(~F.coalesce(F.col(tombstone_col),
-                                           F.lit(False)))
+        rows = engine.latest_df(spark, pairs, kinds, key_cols,
+                                tombstone_col)  # deleted keys fold away
         if keep_tomb:
             rows = rows.withColumn(
                 tombstone_col, F.lit(False))  # survivors: not deleted
@@ -1348,7 +1327,7 @@ def compact_sink(spark, path: str, n_buckets: int = 32,
     # THE publish: one rename swaps the whole manifest set — under the
     # table's write lock, and against a RE-LISTED manifest set: a
     # stream batch committed while the (long, unlocked) re-encode ran
-    # is not in `retained` from the pre-scan and must survive the swap
+    # is not among the folded manifests and must survive the swap
     with _write_lock(path):
         os.replace(tmp, os.path.join(bdir, man_name))
         current = {os.path.basename(m) for m in _manifest_paths(path)}

@@ -58,6 +58,7 @@ from .datasource import (
     _TXN_FILE,
     _VERSION_FILE,
     _manifest_paths,
+    _manifests,
     _publish_version,
     _write_lock,
     read_sidecar,
@@ -337,13 +338,10 @@ def table_changes(spark, path: str, from_batch: int,
     _require_sink(path)
     doc = read_sidecar(path)
     kinds, key_cols = doc["kinds"], doc["key_cols"]
-    mans = []
-    for m in _manifest_paths(path):
-        with open(m) as f:
-            mans.append((os.path.basename(m), json.load(f)))
+    mans = [(os.path.basename(m), d) for m, d in _manifests(path)]
+    if not mans:
+        raise FileNotFoundError(f"no committed batches in {path}")
     if to_batch is None:
-        if not mans:
-            raise FileNotFoundError(f"no committed batches in {path}")
         to_batch = max(int(d["batch_id"]) for _, d in mans)
     if to_batch <= from_batch:
         raise ValueError(f"empty change range ({from_batch}, {to_batch}]")
@@ -364,23 +362,25 @@ def table_changes(spark, path: str, from_batch: int,
             "resolvable. Compact with retain_from_batch to keep CDC "
             "history, or read from the horizon forward")
 
-    def latest(lo: int, hi: int, cols: list[tuple[str, str]]):
-        """The latest-wins rows of ``cols`` over batches (lo, hi]."""
-        return engine.latest_df(spark, [
-            (os.path.join(path, f), int(d["batch_id"])) for _, d in mans
-            if lo < int(d["batch_id"]) <= hi for f in d["files"]],
-            cols, key_cols)
-
     # a tombstone column the schema has not evolved yet cannot be
     # decoded, and nothing can have been deleted
     tomb = tombstone_col if tombstone_col in dict(kinds) else None
-    is_del = F.coalesce(F.col(tomb), F.lit(False)) if tomb else F.lit(False)
-    changed = latest(from_batch, to_batch, kinds)
+
+    def latest(lo: int, hi: int, cols: list[tuple[str, str]], drop=tomb):
+        """The latest-wins rows of ``cols`` over batches (lo, hi], but
+        the keys the tombstone column ``drop`` deletes."""
+        return engine.latest_df(spark, [
+            (os.path.join(path, f), int(d["batch_id"])) for _, d in mans
+            if lo < int(d["batch_id"]) <= hi for f in d["files"]],
+            cols, key_cols, drop)
+
+    changed = latest(from_batch, to_batch, kinds, drop=None)
     # key existence as of from_batch: latest-wins over the base range
     # (none from -1), decoding ONLY key (+ tombstone) columns
     base = latest(-1, from_batch, [kv for kv in kinds if kv[0]
                                    in key_cols or kv[0] == tomb]) \
-        .filter(~is_del).select(*key_cols)
+        .select(*key_cols)
+    is_del = F.coalesce(F.col(tomb), F.lit(False)) if tomb else F.lit(False)
     out = (_join_keys(changed, base.withColumn("_existed", F.lit(True)),
                       key_cols, "left")
            .withColumn("_change_type",
@@ -391,12 +391,10 @@ def table_changes(spark, path: str, from_batch: int,
            # a delete of a key that never existed changes nothing
            .filter(~((F.col("_change_type") == "delete")
                      & F.col("_existed").isNull()))
-           .drop("_existed")
+           .drop("_existed", *([tomb] if tomb else []))
            .withColumnRenamed("_batch_id", "_commit_batch"))
-    if tomb:
-        out = out.drop(tomb)
     if include_preimage and from_batch >= 0:
-        pre_src = latest(-1, from_batch, kinds).filter(~is_del).drop(
+        pre_src = latest(-1, from_batch, kinds).drop(
             "_batch_id", *([tomb] if tomb else []))
         touched = (out.filter(F.col("_change_type") != "insert")
                    .select(*key_cols, "_commit_batch", "_change_type"))

@@ -11,18 +11,19 @@ state; compaction (re-blocking small increments) is a batch job reusing
 Append-only contract (the manifest contract for the reference's
 ``integer_array::insert`` analogue, `/root/reference/oroch/
 integer_array.h:216-245`): increments land as NEW snapshot blocks, and
-a row re-sent for an existing (conv_id, turn_idx) is an upsert.
-Both versions stay on disk until ``engine.recompact`` rewrites them;
+a row re-sent for an existing (conv_id, turn_idx) is an upsert. Both
+versions stay on disk until ``engine.recompact`` rewrites them;
 :func:`read_latest` merges them on read, keeping per stable key the
 row of the highest batch id (the engine's one latest-wins resolver,
-``engine.latest_df``). This is the standard immutable-table trade:
-the reference pays a ripple re-encode per insert, this engine pays a
-merge on read and a periodic compaction batch instead.
+``engine.latest_df``). This is the standard immutable-table trade: the
+reference pays a ripple re-encode per insert, this engine pays a merge
+on read and a periodic compaction batch instead.
 """
 from __future__ import annotations
 
 import glob
 import os
+import re
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -85,10 +86,11 @@ def read_latest(spark, out_dir: str,
     the ``encode_stream`` increments under ``out_dir`` — the one from
     the highest batch id, read off each file's ``blocks_stream/b<id>/``
     directory — with the blocks files of an optional base snapshot
-    directory ``base_dir`` ranked -1, older than every increment.
-    Within a single batch the key is unique by the encode contract (a
-    micro-batch is one consistent snapshot of its keys), so the
-    ranking is total.
+    directory ``base_dir`` (``encode_job``'s ``bucket=N/`` partitions
+    included) ranked -1, older than every increment. A directory with
+    no parquet file raises. Within a single batch the key is unique by
+    the encode contract (a micro-batch is one consistent snapshot of
+    its keys), so the ranking is total.
 
     ``tombstone_col`` names an optional boolean column (encoded like
     any other bool) marking the row as a DELETE of its key — the
@@ -98,18 +100,21 @@ def read_latest(spark, out_dir: str,
     disk (until recompaction rewrites it). Blocks that predate the
     tombstone column read it as null, per block: not deleted.
 
-    Scale shape: ``engine.latest_df`` — key ranges planned on the
-    block index, each resolved by one task with no shuffle, paid
-    only until ``engine.recompact`` folds the increments into
-    right-sized base blocks."""
-    pairs = [(f, int(os.path.basename(d)[1:]))
-             for d in glob.glob(os.path.join(out_dir, "blocks_stream", "b*"))
-             for f in sorted(glob.glob(os.path.join(d, "*.parquet")))]
-    if base_dir is not None:
-        pairs = [(f, -1) for f in sorted(
-            glob.glob(os.path.join(base_dir, "*.parquet")))] + pairs
-    out = engine.latest_df(spark, pairs, schema_kinds, key_cols)
-    if tombstone_col is not None:
-        out = (out.filter(~F.coalesce(F.col(tombstone_col), F.lit(False)))
-                  .drop(tombstone_col))
-    return out.drop("_batch_id")
+    Scale shape: ``engine.latest_df`` (no shuffle), paid only until
+    ``engine.recompact`` folds the increments into base blocks."""
+
+    def files(d: str) -> list[str]:  # as Spark lists them: no _ or .
+        return sorted(f for f in glob.glob(os.path.join(
+            d, "**", "*.parquet"), recursive=True) if not any(
+                p[0] in "_." for p in os.path.relpath(f, d).split(os.sep)))
+
+    inc = os.path.join(out_dir, "blocks_stream")
+    pairs = [(f, int(d[1:])) for d in sorted(os.listdir(inc))
+             if re.fullmatch(r"b\d+", d) for f in files(os.path.join(inc, d))]
+    base = [(f, -1) for f in files(base_dir)] if base_dir else []
+    if not pairs or base_dir and not base:
+        raise FileNotFoundError(
+            f"no parquet file under {base_dir if pairs else inc}")
+    out = engine.latest_df(spark, base + pairs, schema_kinds, key_cols,
+                           tombstone_col)
+    return out.drop("_batch_id", *([tombstone_col] if tombstone_col else []))

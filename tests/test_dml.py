@@ -641,3 +641,64 @@ def test_compact_sink_plans_one_exchange(spark, sink, monkeypatch):
     monkeypatch.setattr(engine, "encode_df", spy)
     ds.compact_sink(spark, sink, n_buckets=2)
     assert plans == [1]
+
+
+def test_latest_ranges_partition_the_keys(spark, tmp_path):
+    """Each planned range resolves only its own keys, cut per block
+    before the sort (the first range also owns NULL), and together
+    the ranges give the brute-force model's rows."""
+    import pyarrow as pa
+
+    path = _mk_sink(spark, tmp_path, [
+        [Row(k=None, v="n0", score=0)]
+        + [Row(k=i, v=f"v{i}", score=i) for i in range(16)],
+        [Row(k=i, v=f"w{i}", score=-i) for i in range(0, 16, 3)],
+    ], block_rows=4)
+    kinds, cols = ds.read_sidecar(path)["kinds"], ["k", "v", "score"]
+    plan = engine.latest_plan(
+        [(os.path.join(path, f), b)
+         for f, b in ds._sink_manifest_files(path)], ["k"], dict(kinds))
+    assert len(plan) > 2
+    schema = pa.ipc.read_schema(pa.py_buffer(engine._schema_bytes(kinds)))
+    got = []
+    for i, part in enumerate(plan):
+        lo, hi, _ = part
+        rows = engine.latest_rows(part, ["k"], schema).to_pylist()
+        for r in rows:
+            if r["k"] is None:
+                assert i == 0
+            else:
+                assert (lo is None or r["k"] >= lo) \
+                    and (hi is None or r["k"] < hi)
+        got += [[r[c] for c in cols] for r in rows]
+    assert sorted_rows(got) == model_rows(
+        latest_model(spark, path, kinds, ["k"]), cols)
+
+
+def test_latest_plan_reads_desc_only_for_null_counts(spark, sink):
+    """A latest-wins plan parses no block descriptor when no NULL key
+    can be read: a pushed lead-key test that rejects NULL (a point
+    lookup) plans on the bounds alone; without one, a plan of several
+    ranges reads the null counts that place the NULL key."""
+    pairs = [(os.path.join(sink, f), b)
+             for f, b in ds._sink_manifest_files(sink)]
+    files, kinds = [f for f, _ in pairs], dict(ds.read_sidecar(sink)["kinds"])
+    engine._indexes.clear()
+    eq5 = engine._KeyPred(lo=5, hi=5, raw=((">=", 5), ("<=", 5)))
+    assert len(engine.latest_plan(pairs, ["k"], kinds, {"k": eq5})) > 1
+    ix = engine._BlockIndex.load(files, False)
+    assert ix.desc is None and ix._cols is None
+    engine.latest_plan(pairs, ["k"], kinds)
+    assert engine._BlockIndex.load(files, False) is ix and (
+        ix.desc is not None or ix._cols is not None)
+
+
+def test_table_changes_without_batches_raises(spark, tmp_path):
+    """A sink with no committed batch has no change feed, whatever
+    ``to_batch`` says."""
+    path = str(tmp_path / "t")
+    os.makedirs(os.path.join(path, ds._BATCH_DIR))
+    ds.write_sidecar(path, [("k", "i64"), ("v", "str")], ["k"])
+    for to in (None, 3):
+        with pytest.raises(FileNotFoundError, match="no committed"):
+            dml.table_changes(spark, path, -1, to_batch=to)

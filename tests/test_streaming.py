@@ -243,3 +243,42 @@ def test_encode_stream_batch_dirs_are_idempotent(spark, tmp_path):
     (enc.withColumn("batch_id", F.lit(0))
         .write.mode("overwrite").parquet(bdir))
     assert incremental.read_stream_blocks(spark, out_dir).count() == n1
+
+
+def test_read_latest_partitioned_base_and_missing_dirs(spark, tmp_path):
+    """A base written by ``checkpoint.encode_job`` (``bucket=N/``
+    partition directories) is read whole under the increments; a
+    base or stream directory with no parquet file raises instead of
+    reading as empty."""
+    from pyspark.sql import Row, functions as F
+
+    from oroch_spark import checkpoint
+
+    kinds = [("k", "i64"), ("v", "str")]
+    job = str(tmp_path / "job")
+    checkpoint.encode_job(
+        spark, spark.createDataFrame([Row(k=i, v=f"b{i}") for i in range(40)],
+                                     "k long, v string"),
+        job, ["k"], "s0", n_buckets=4, block_rows=8)
+    base_dir = os.path.join(job, "blocks")
+    assert any(d.startswith("bucket=") for d in os.listdir(base_dir))
+    out_dir = str(tmp_path / "out")
+    engine.encode_df(
+        spark.createDataFrame([Row(k=3, v="new"), Row(k=99, v="n99")],
+                              "k long, v string"),
+        ["k"], n_buckets=1, block_rows=16).withColumn(
+            "batch_id", F.lit(0).cast("long")) \
+        .write.parquet(os.path.join(out_dir, "blocks_stream", "b0"))
+    out = incremental.read_latest(spark, out_dir, kinds, ["k"],
+                                  base_dir=base_dir)
+    assert {r["k"]: r["v"] for r in out.collect()} == {
+        **{i: f"b{i}" for i in range(40)}, 3: "new", 99: "n99"}
+    os.makedirs(tmp_path / "empty")
+    for kw in ({"base_dir": str(tmp_path / "missing")},
+               {"base_dir": str(tmp_path / "empty")},
+               {"out_dir": str(tmp_path / "empty")},
+               {"out_dir": str(tmp_path / "missing")}):
+        with pytest.raises(FileNotFoundError):
+            incremental.read_latest(spark, kw.get("out_dir", out_dir),
+                                    kinds, ["k"], base_dir=kw.get(
+                                        "base_dir", base_dir))
